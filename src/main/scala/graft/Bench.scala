@@ -34,14 +34,6 @@ import scala.collection.immutable.ListMap
   */
 object Bench {
 
-  /** Outlier re-time policy (VERDICT r07 #3), pure for unit testing: a
-    * first timing above 2× the same-box prior is re-timed twice more and
-    * the MEDIAN of 3 reported — machine-state outliers (page cache, JIT,
-    * GC alignment) stop masquerading as plan regressions. The query is
-    * flagged REGRESSED when even the median exceeds 2× the prior: slow on
-    * all three back-to-back timings is sustained, not noise (VERDICT r09
-    * #5). Returns (reported seconds, regressed).
-    */
   /** A sustained excursion below this many seconds is never FLAGGED as a
     * regression (the median-of-3 de-noise still applies): on this
     * hardware sub-second queries jitter past 2× on scheduler noise alone
@@ -71,14 +63,16 @@ object Bench {
     */
   val DriftSampleFactor = 1.5
 
-  def settle(prior: Option[Double], first: Double,
-             retime: () => Double): (Double, Boolean) =
-    settleSamples(prior, first, retime) match {
-      case (t, r, _) => (t, r)
-    }
-
-  /** [[settle]] plus the raw samples, so a flagged regression can log all
-    * three timings — one inflated timing among three tells a different
+  /** Outlier re-time policy (VERDICT r07 #3), pure for unit testing: a
+    * first timing above 2× the same-box prior is re-timed twice more and
+    * the MEDIAN of 3 reported — machine-state outliers (page cache, JIT,
+    * GC alignment) stop masquerading as plan regressions. The query is
+    * flagged REGRESSED when even the median exceeds 2× the prior: slow on
+    * all three back-to-back timings is sustained, not noise (VERDICT r09
+    * #5). Returns (reported seconds, regressed, raw samples).
+    *
+    * The samples let a flagged regression log all three timings — one
+    * inflated timing among three tells a different
     * diagnosis story (transient machine state caught by the median) than
     * three inflated ones (degraded sweep context), and BENCH_r09's 13.1 s
     * q_pagerank was only diagnosable because the judge knew it was a
@@ -202,39 +196,6 @@ object Bench {
     (v, prior > 0 && v > 2 * prior && v >= RegressFloorSec)
   }
 
-  /** Prior-arming context gate (VERDICT r17 #2): `nextPriors` refuses
-    * degraded timings, but the r17 priors were armed from a sweep whose
-    * own probes showed contamination (32-wide 0.607→0.923 s vs the ~0.50
-    * box-class norm, steal 3.66 %) — an 8 % baseline ratchet on unchanged
-    * plans. Arming now additionally requires the sweep's probe channels
-    * at BOTH ends to sit inside tolerance of the recorded quiet-box class
-    * norms (BASELINE.md: 1-thread ≈ 0.43 s, wide ≈ 0.44–0.50 s) and the
-    * sweep steal% to be basis points, not percents. A vetoed sweep keeps
-    * the previous priors verbatim and stamps the artifact
-    * `"priors_armed":false` with the veto reason — context-elevated
-    * timings stay published (value/value_inband) but never become the
-    * baseline. Bootstrap exception: with NO existing priors there is
-    * nothing to carry, so a first sweep on a box arms regardless (its
-    * numbers are the only same-box evidence there is);
-    * SPARK_GRAFT_ARM_FORCE=1 overrides for deliberate re-baselining.
-    */
-  val Probe1TNorm = 0.43
-  val ProbeWideNorm = 0.50
-  val ArmProbeTolerance = 1.3
-  val ArmStealMaxPct = 2.0
-
-  def probesCleanForArming(probe1t: Double, probeWide: Double,
-                           stealPct: Double): Boolean =
-    probe1t <= Probe1TNorm * ArmProbeTolerance &&
-      probeWide <= ProbeWideNorm * ArmProbeTolerance &&
-      (stealPct < 0 || stealPct <= ArmStealMaxPct)
-
-  /** (priors to write, armed?) — see [[probesCleanForArming]]. */
-  def armPriors(clean: Boolean, fresh: Map[String, Double],
-                old: Map[String, Double],
-                force: Boolean = false): (Map[String, Double], Boolean) =
-    if (clean || force || old.isEmpty) (fresh, true) else (old, false)
-
   /** Segmented sweep (VERDICT r17 #3): one global 1500 s budget made the
     * degraded tail all-or-nothing — the instant it expired, EVERY
     * remaining query ran cold (135/310 in r17), and one latent-stall JVM
@@ -257,132 +218,6 @@ object Bench {
     if (remainingQueries <= 0 || remainingBudget <= 0) 0.0
     else remainingBudget *
       (math.min(segmentQueries, remainingQueries).toDouble / remainingQueries)
-
-  /** (ΔGC collections, ΔGC millis) source — cumulative across all
-    * collectors; callers snapshot around a timed region. */
-  def gcTotals(): (Long, Long) = {
-    import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-      .asScala.foldLeft((0L, 0L)) { case ((c, t), b) =>
-        (c + math.max(0L, b.getCollectionCount),
-          t + math.max(0L, b.getCollectionTime))
-      }
-  }
-
-  /** Flag-time stall evidence (VERDICT r17 #4): the 42–300× in-band stall
-    * events have so far been adjudicated but never root-caused — the
-    * contention experiment refuted proportional CPU sharing, so the
-    * mechanism is either JVM-internal (GC wall, safepoint, codegen/
-    * classload storm) or host-level (PSI stall). Captured at the moment a
-    * >4× flag fires, BEFORE the fresh-context rerun tears the evidence
-    * down: /proc/pressure lines (host: some/full stall shares), GC
-    * collector totals plus the flagged query's own ΔGC (JVM: a
-    * multi-second collection wall shows up here), a thread-state
-    * histogram and the top frame of up to 8 RUNNABLE/BLOCKED worker
-    * threads (the r16 NettyRpcEnv.FileDownloadChannel signature was
-    * exactly such a frame). One compact line per flag, stored under
-    * `stall_evidence` in bench_full.json.
-    */
-  def stallEvidence(gcAtQueryStart: (Long, Long)): String = {
-    def psi(kind: String): String =
-      try new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"/proc/pressure/$kind")), "UTF-8")
-        .trim.replace('\n', ';').replaceAll("\\s+", " ")
-      catch { case _: Throwable => "n/a" }
-    val (gc0c, gc0t) = gcAtQueryStart
-    val (gc1c, gc1t) = gcTotals()
-    val tmx = java.lang.management.ManagementFactory.getThreadMXBean
-    val infos = tmx.getThreadInfo(tmx.getAllThreadIds, 4)
-      .filter(_ != null).toSeq
-    val hist = infos.groupBy(_.getThreadState.toString).toSeq.sortBy(_._1)
-      .map { case (s, a) => s"$s=${a.size}" }.mkString(",")
-    val hot = infos
-      .filter(i => i.getThreadState == Thread.State.RUNNABLE ||
-        i.getThreadState == Thread.State.BLOCKED)
-      .filter(_.getStackTrace.nonEmpty)
-      .filterNot(_.getThreadName.startsWith("main"))
-      .take(8)
-      .map { i =>
-        val f = i.getStackTrace.head
-        s"${i.getThreadName}@${f.getClassName}.${f.getMethodName}"
-      }.mkString("|")
-    s"psi_cpu=${psi("cpu")} psi_io=${psi("io")} psi_mem=${psi("memory")} " +
-      s"gc_run=${gc1c - gc0c}/${gc1t - gc0t}ms gc_total=$gc1c/${gc1t}ms " +
-      s"threads=$hist" + (if (hot.nonEmpty) s" hot=$hot" else "")
-  }
-
-  // CPU probe DCE sink — the JIT must not elide the probe loop
-  @volatile private var probeSink = 0L
-
-  /** Fixed single-thread CPU probe (VERDICT r10 #3): a sequential
-    * xorshift-mix loop whose wall-clock tracks effective single-core
-    * speed. Run BEFORE and AFTER the sweep and recorded in the bench
-    * JSON line, so a throttle-inflated sweep carries its own in-band
-    * evidence: the triage work measured this box running ~20–25 % slower
-    * immediately after sustained 32-thread load (BASELINE.md round-10
-    * notes) — `probe_after / probe_before ≳ 1.2` says "the box, not the
-    * plan". Sequential dependency defeats vectorization; median of 3
-    * after a JIT warm pass defeats compilation noise.
-    */
-  def cpuProbe(): Double = {
-    def once(n: Int): Double = {
-      val t0 = System.nanoTime()
-      var x = 0x9E3779B97F4A7C15L
-      var i = 0
-      while (i < n) {
-        x = x * 6364136223846793005L + 1442695040888963407L
-        x ^= (x >>> 33)
-        i += 1
-      }
-      probeSink += x
-      (System.nanoTime() - t0) / 1e9
-    }
-    once(20000000) // JIT warm
-    Seq(once(200000000), once(200000000), once(200000000)).sorted.apply(1)
-  }
-
-  /** Probe thread width: the sweep's own parallelism (local[32] ⇒ 32),
-    * capped by the hardware — a wider probe than cores would inflate on a
-    * QUIET box and tell nothing.
-    */
-  def probeWidth: Int =
-    math.min(32, Runtime.getRuntime.availableProcessors)
-
-  /** N-thread CPU probe (VERDICT r11 #1): the r11 sweep's 1-thread probe
-    * read 0.94 ("box fine") while 0.55 s queries drew 43–64 s samples —
-    * a box can be saturated at 32-wide parallelism yet give one probe
-    * thread a full core. This probe runs the SAME fixed sequential loop
-    * on [[probeWidth]] threads simultaneously and reports the wall-clock
-    * until ALL finish: on a quiet ≥N-core box that equals the 1-thread
-    * time; external load that steals cores from a 32-wide sweep inflates
-    * it proportionally. Median of 3 (threads re-created per trial; the
-    * loop is already JIT-warm from [[cpuProbe]], which callers run
-    * first).
-    */
-  def cpuProbeWide(threads: Int = probeWidth): Double = {
-    def trial(): Double = {
-      val sinks = new java.util.concurrent.atomic.AtomicLong(0L)
-      val ts = (0 until threads).map { t =>
-        new Thread(() => {
-          var x = 0x9E3779B97F4A7C15L + t
-          var i = 0
-          while (i < 200000000) {
-            x = x * 6364136223846793005L + 1442695040888963407L
-            x ^= (x >>> 33)
-            i += 1
-          }
-          sinks.addAndGet(x)
-          ()
-        })
-      }
-      val t0 = System.nanoTime()
-      ts.foreach(_.start())
-      ts.foreach(_.join())
-      probeSink += sinks.get()
-      (System.nanoTime() - t0) / 1e9
-    }
-    Seq(trial(), trial(), trial()).sorted.apply(1)
-  }
 
   /** 1-minute load average from /proc/loadavg — sampled at sweep start,
     * sweep end, and at every REGRESSED flag, so a contended sweep's
@@ -440,6 +275,77 @@ object Bench {
     */
   val GcEvery = 16
 
+  private def jstr(s: String): String =
+    "\"" + s.flatMap {
+      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
+    } + "\""
+  private def fmt(v: Double): String =
+    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+  private def jmap(ts: Map[String, Double]): String =
+    ts.map { case (k, v) => s"${jstr(k)}:${fmt(v)}" }.mkString("{", ",", "}")
+
+  /** One sweep record. `value`, `n_queries` and `failed` always describe
+    * the whole sweep (`times`, `errors`); `ts` is the per-query map written
+    * (`omitted` more left out) and at most `maxErrors` errors of `errLen`
+    * chars are written. `inband` goes right after `value`, `extra` right
+    * before `sf`.
+    */
+  def recordLine(times: Map[String, Double], errors: Map[String, String],
+                 sfDir: String, inband: String, extra: String)(
+      ts: Map[String, Double] = times, omitted: Int = 0,
+      maxErrors: Int = Int.MaxValue, errLen: Int = 200): String = {
+    val es = errors.take(maxErrors)
+      .map { case (k, v) => s"${jstr(k)}:${jstr(v.take(errLen))}" }
+      .mkString("{", ",", "}")
+    val eo = if (errors.size > maxErrors)
+      s""","errors_omitted":${errors.size - maxErrors}""" else ""
+    val om = if (omitted > 0) s""","queries_omitted":$omitted""" else ""
+    s"""{"metric":"total","value":${fmt(times.values.sum)}$inband,"unit":"sec","n_queries":${times.size},"queries":${jmap(ts)}$om,"errors":$es$eo,"failed":${errors.size}$extra,"sf":"$sfDir"}"""
+  }
+
+  /** The harness that invokes this keeps only the last ~2000 characters of
+    * stdout, and sbt appends a "[success] Total time..." trailer after us —
+    * a JSON line longer than ~1800 chars gets its head truncated and never
+    * parses.
+    */
+  val MaxLine = 1700
+
+  /** The stdout contract line: [[recordLine]] of the whole sweep when it
+    * fits in [[MaxLine]]. Full per-query detail always goes to
+    * bench_full.json; the printed line degrades to the slowest-K queries
+    * if the full map would overflow the window ("value" stays the
+    * all-query total either way).
+    */
+  def contractLine(times: Map[String, Double], errors: Map[String, String],
+                   sfDir: String, inband: String, extra: String): String = {
+    def line(ts: Map[String, Double], omitted: Int, maxErrors: Int,
+             errLen: Int): String =
+      recordLine(times, errors, sfDir, inband, extra)(ts, omitted, maxErrors, errLen)
+    val fullLine = recordLine(times, errors, sfDir, inband, extra)()
+    if (fullLine.length <= MaxLine) fullLine
+    else {
+      val bySlow = times.toSeq.sortBy(-_._2)
+      // shrink the error payload first (failure runs can overflow on
+      // errors alone), then keep the slowest k queries that still fit
+      var k = bySlow.length
+      var cand = line(times, 0, maxErrors = 5, errLen = 80)
+      while (cand.length > MaxLine && k > 0) {
+        k -= 1
+        cand = line(ListMap(bySlow.take(k).sortBy(_._1): _*),
+          times.size - k, maxErrors = 5, errLen = 80)
+      }
+      // k can bottom out at 0 with the line still too long (fixed
+      // overhead + 5 truncated errors alone can exceed the window —
+      // ADVICE r07): degrade to a minimal line that always fits, so
+      // the printed contract line never gets head-truncated into
+      // unparseable JSON
+      if (cand.length > MaxLine)
+        cand = line(ListMap.empty, times.size, maxErrors = 1, errLen = 40)
+      cand
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     var spark = Sessions.local("graft-bench")
@@ -480,31 +386,13 @@ object Bench {
     // cleanup) without paying the other 100 queries' wall-clock.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // SPARK_GRAFT_BENCH_TIER=rep: the documented representative tier
-    // (SparkEntry.repTier — heavies + watch-list + family reps) for
-    // mid-round iteration sweeps. Unset → the FULL surface; round-close
-    // and driver sweeps stay full (BASELINE.md policy).
-    val tier = sys.env.get("SPARK_GRAFT_BENCH_TIER")
-    val all = (only, tier) match {
-      case (Some(sel), t) =>
-        // ADVICE r15: ONLY + TIER set together used to silently ignore the
-        // tier — an operator expecting the rep tier got the ONLY subset
-        // with no warning. Reject the ambiguous combination outright.
-        require(t.isEmpty,
-          "SPARK_GRAFT_BENCH_ONLY and SPARK_GRAFT_BENCH_TIER are mutually " +
-            "exclusive: unset one (ONLY is a diagnosis allowlist, TIER a " +
-            "named subset)")
+    val all = only match {
+      case Some(sel) =>
         val missing = sel -- SparkEntry.benchQueries.toSet
         require(missing.isEmpty, s"unknown bench queries: ${missing.mkString(",")}")
         System.err.println(s"[bench] SUBSET of ${sel.size} queries (diagnosis mode)")
         SparkEntry.benchQueries.filter(sel)
-      case (None, Some("rep")) =>
-        System.err.println(
-          s"[bench] representative tier: ${SparkEntry.repTier.size} queries")
-        SparkEntry.benchQueries.filter(SparkEntry.repTier.toSet)
-      case (None, Some(other)) =>
-        throw new IllegalArgumentException(s"unknown bench tier: $other")
-      case (None, None) => SparkEntry.benchQueries
+      case None => SparkEntry.benchQueries
     }
     val names = seed match {
       case Some(s) =>
@@ -512,16 +400,6 @@ object Bench {
         new scala.util.Random(s).shuffle(all)
       case None => all
     }
-
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      } + "\""
-    def fmt(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    def jmap(ts: Map[String, Double]): String =
-      ts.map { case (k, v) => s"${jstr(k)}:${fmt(v)}" }.mkString("{", ",", "}")
 
     var times = ListMap.empty[String, Double]
     var errors = ListMap.empty[String, String]
@@ -557,13 +435,9 @@ object Bench {
       ran += 1
       if (ran % GcEvery == 0) System.gc() // between timed regions
     }
-    val probeBefore = cpuProbe()
-    val probeWideBefore = cpuProbeWide()
     val loadBefore = loadAvg1m()
     val jiffiesBefore = cpuJiffies()
     var loadAtFlag = ListMap.empty[String, Double]
-    System.err.println(f"[bench] cpu probe before sweep: $probeBefore%.3f s " +
-      f"(${probeWidth}-wide: $probeWideBefore%.3f s, load $loadBefore%.2f)")
     // Wall-clock budget backstop (VERDICT r15 #1: the driver killed the
     // r15 sweep at its own timeout, leaving the round's official artifact
     // dark). Once the sweep's elapsed time crosses the budget, remaining
@@ -597,12 +471,10 @@ object Bench {
         (s"""{"metric":"total","value":${fmt(times.values.sum)},"unit":"sec","n_queries":${times.size},"partial":true,"queries":${jmap(times)},"failed":${errors.size},"sf":"$sfDir"}""" + "\n")
           .getBytes("UTF-8"))
       catch { case _: Throwable => () }
-    // Stall-adjudication record (VERDICT r17 #1) + flag-time evidence
-    // (VERDICT r17 #4): names in adjudication order, the raw stalled
-    // settled value each replaced, and the flag-moment JVM/host digest.
+    // Stall-adjudication record (VERDICT r17 #1): names in adjudication
+    // order and the raw stalled settled value each replaced.
     var adjudicatedNames = List.empty[String]
     var rawFirst = ListMap.empty[String, Double]
-    var stallEv = ListMap.empty[String, String]
     // Segmented sweep (VERDICT r17 #3) — see [[SegmentSize]]: each
     // segment gets a fresh SparkSession and a proportional slice of the
     // remaining budget; overruns degrade only the segment's own tail.
@@ -620,7 +492,6 @@ object Bench {
           val degraded = segElapsed > slice
           if (degraded) degradedNames ::= name
           if (!degraded) runOnce(name) // warm-up, untimed
-          val gc0 = gcTotals()
           var (t, isRegressed, samples) =
             if (degraded) {
               val j0 = cpuJiffies()
@@ -635,14 +506,13 @@ object Bench {
             } else settleSamples(prior.get(name), timedRun(name), () => timedRun(name))
           // In-band auto-adjudication (VERDICT r17 #1): a settled value
           // past 4× its armed prior gets ONE fresh-context confirmation —
-          // evidence captured first, then session teardown, re-warm, one
-          // timed run; the better number is published with the marker.
+          // session teardown, re-warm, one timed run; the better number is
+          // published with the marker.
           if (!degraded && needsAdjudication(prior.get(name), t) &&
               adjudicatedNames.size < MaxAdjudications) {
-            stallEv += name -> stallEvidence(gc0)
             System.err.println(f"[bench] $name in-band ${t}%.2f s > " +
               f"${AdjudicateFactor}%.0fx prior ${prior(name)}%.2f s — " +
-              s"adjudicating in a fresh context; ${stallEv(name)}")
+              "adjudicating in a fresh context")
             restartSession(s"adjudicate $name")
             try {
               runOnce(name) // fresh warm-up
@@ -672,8 +542,6 @@ object Bench {
               f"; load ${loadAtFlag(name)}%.2f; $stateLine")
           }
           times += name -> t
-          if (sys.env.contains("SPARK_GRAFT_BENCH_TRACE"))
-            System.err.println(f"[trace] $name%-22s $t%7.2f s  $stateLine")
         } catch {
           case e: Throwable =>
             errors += name -> Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
@@ -732,14 +600,10 @@ object Bench {
         (if (adjudicatedNames.isEmpty) ""
          else s""","adjudicated":${adjudicatedNames.size}""")
     val seedJson = seed.map(s => s""","seed":$s""").getOrElse("")
-    // post-sweep probes: ran after every timed region (including the
-    // end-of-sweep re-measures), so probe_after/probe_before (1-thread)
-    // and probe_wide_* (32-wide, VERDICT r11 #1 — the 1-thread probe
-    // exonerated a box whose 32-wide sweep was starved) are the in-band
-    // contention evidence for THIS sweep's numbers, alongside Δsteal
-    // from /proc/stat and the 1-min loadavg pair.
-    val probeAfter = cpuProbe()
-    val probeWideAfter = cpuProbeWide()
+    // post-sweep host channels: read after every timed region (including
+    // the end-of-sweep re-measures), so Δsteal from /proc/stat and the
+    // 1-min loadavg pair are the in-band contention evidence for THIS
+    // sweep's numbers.
     val loadAfter = loadAvg1m()
     val jiffiesAfter = cpuJiffies()
     val stealPct =
@@ -747,16 +611,10 @@ object Bench {
         100.0 * (jiffiesAfter._1 - jiffiesBefore._1) /
           (jiffiesAfter._2 - jiffiesBefore._2)
       else -1.0
-    System.err.println(f"[bench] cpu probe after sweep: $probeAfter%.3f s " +
-      f"(before: $probeBefore%.3f s, ratio ${probeAfter / probeBefore}%.2f); " +
-      f"${probeWidth}-wide $probeWideAfter%.3f s " +
-      f"(before: $probeWideBefore%.3f s); load $loadBefore%.2f → " +
-      f"$loadAfter%.2f; steal $stealPct%.2f%%")
-    val probeJson =
-      s""","probe_before":${fmt(probeBefore)},"probe_after":${fmt(probeAfter)}""" +
-        s""","probe_wide_before":${fmt(probeWideBefore)}""" +
-        s""","probe_wide_after":${fmt(probeWideAfter)}""" +
-        s""","load_before":${fmt(loadBefore)},"load_after":${fmt(loadAfter)}""" +
+    System.err.println(f"[bench] load $loadBefore%.2f → $loadAfter%.2f; " +
+      f"steal $stealPct%.2f%%")
+    val hostJson =
+      s""","load_before":${fmt(loadBefore)},"load_after":${fmt(loadAfter)}""" +
         s""","steal_pct":${fmt(stealPct)}"""
     // Self-adjudicating headline (VERDICT r16 #1): `value` stays the
     // all-query total (backward-compatible), but the 2x gate is computed
@@ -768,24 +626,7 @@ object Bench {
     val inbandJson =
       if (degradedNames.isEmpty) ""
       else s""","value_inband":${fmt(valInband)},"n_inband":${inbandCount(times, degradedSet)},"value_degraded":${fmt(valDegraded)}"""
-    def line(ts: Map[String, Double], omitted: Int,
-             maxErrors: Int = Int.MaxValue, errLen: Int = 200,
-             extra: String = ""): String = {
-      val es = errors.take(maxErrors)
-        .map { case (k, v) => s"${jstr(k)}:${jstr(v.take(errLen))}" }
-        .mkString("{", ",", "}")
-      val eo = if (errors.size > maxErrors)
-        s""","errors_omitted":${errors.size - maxErrors}""" else ""
-      val om = if (omitted > 0) s""","queries_omitted":$omitted""" else ""
-      s"""{"metric":"total","value":${fmt(times.values.sum)}$inbandJson,"unit":"sec","n_queries":${times.size},"queries":${jmap(ts)}$om,"errors":$es$eo,"failed":${errors.size}$regressedJson$seedJson$probeJson$extra,"sf":"$sfDir"}"""
-    }
-    // The harness that invokes this keeps only the last ~2000 characters of
-    // stdout, and sbt appends a "[success] Total time..." trailer after us —
-    // a JSON line longer than ~1800 chars gets its head truncated and never
-    // parses. Full per-query detail always goes to bench_full.json; the
-    // printed line degrades to the slowest-K queries if the full map would
-    // overflow that window ("value" stays the all-query total either way).
-    val fullLine = line(times, 0)
+    val extra = regressedJson + seedJson + hostJson
     try {
       // the FILE additionally carries next-round priors ("queries" stays
       // the measured truth; "priors" is what the next sweep compares to —
@@ -816,73 +657,24 @@ object Bench {
           s""","load_at_degraded":${jmap(loadAtDegraded)}""" +
           s""","steal_at_degraded":${jmap(stealAtDegraded)}"""
       // the adjudication record (VERDICT r17 #1): which in-band entries
-      // were auto-confirmed in a fresh context, the raw stalled value
-      // each replaced, and the flag-moment JVM/host evidence (#4)
+      // were auto-confirmed in a fresh context and the raw stalled value
+      // each replaced
       val adjJson =
         if (adjudicatedNames.isEmpty) ""
         else s""","stall_adjudicated":${adjudicatedNames.reverse.map(jstr).mkString("[", ",", "]")},"raw_first":${jmap(rawFirst)}"""
-      val evJson =
-        if (stallEv.isEmpty) ""
-        else s""","stall_evidence":${stallEv.map { case (k, v) =>
-          s"${jstr(k)}:${jstr(v.take(700))}"
-        }.mkString("{", ",", "}")}"""
       val segJson = s""","segments":${segments.size},"session_restarts":$restarts"""
-      // prior-arming context gate (VERDICT r17 #2): elevated-context
-      // sweeps publish their numbers but never arm them as the baseline
-      val freshPriors = nextPriors(times, prior, regressed.toSet, degradedSet)
-      val armClean = probesCleanForArming(probeBefore, probeWideBefore, -1.0) &&
-        probesCleanForArming(probeAfter, probeWideAfter, stealPct)
-      val (priorsOut, armed) = armPriors(armClean, freshPriors, prior,
-        force = sys.env.get("SPARK_GRAFT_ARM_FORCE").contains("1"))
-      if (!armed && only.isEmpty && tier.isEmpty) System.err.println(
-        f"[bench] priors NOT armed — probe context outside quiet-box norms " +
-          f"(1t $probeBefore%.3f→$probeAfter%.3f s vs ≤${Probe1TNorm * ArmProbeTolerance}%.3f, " +
-          f"wide $probeWideBefore%.3f→$probeWideAfter%.3f s vs ≤${ProbeWideNorm * ArmProbeTolerance}%.3f, " +
-          f"steal $stealPct%.2f%% vs ≤$ArmStealMaxPct%.1f); previous priors carried")
-      val armJson = s""","priors_armed":$armed""" +
-        (if (armed) ""
-         else s""","arming_veto":${jstr(
-           f"context-elevated, not armed: probes 1t $probeBefore%.3f->$probeAfter%.3f wide " +
-             f"$probeWideBefore%.3f->$probeWideAfter%.3f steal $stealPct%.2f%% vs norms " +
-             f"1t<=${Probe1TNorm * ArmProbeTolerance}%.3f wide<=${ProbeWideNorm * ArmProbeTolerance}%.3f " +
-             f"steal<=$ArmStealMaxPct%.1f; previous priors carried")}""")
-      // tier sweeps are subsets too: letting one write bench_full.json
-      // would replace the full surface's 300+ armed priors with the
-      // tier's 68 — only a FULL sweep may re-arm
-      if (only.isEmpty && tier.isEmpty) java.nio.file.Files.write(
+      val priorsOut = nextPriors(times, prior, regressed.toSet, degradedSet)
+      if (only.isEmpty) java.nio.file.Files.write(
         java.nio.file.Paths.get("bench_full.json"),
-        (line(times, 0, extra =
-          s""","priors":${jmap(priorsOut)},"priors_cpus":$benchCpus$armJson$segJson$adjJson$evJson$samplesJson$loadFlagJson$degradedJson""")
+        (recordLine(times, errors, sfDir, inbandJson, extra +
+          s""","priors":${jmap(priorsOut)},"priors_cpus":$benchCpus$segJson$adjJson$samplesJson$loadFlagJson$degradedJson""")()
           + "\n").getBytes("UTF-8"))
       // a completed sweep must not leave a stale partial behind to shadow
       // the final artifact (ADVICE r16)
       java.nio.file.Files.deleteIfExists(
         java.nio.file.Paths.get("bench_partial.json"))
     } catch { case _: Throwable => () } // best-effort; the stdout line is the contract
-    val MaxLine = 1700
-    val printed =
-      if (fullLine.length <= MaxLine) fullLine
-      else {
-        val bySlow = times.toSeq.sortBy(-_._2)
-        // shrink the error payload first (failure runs can overflow on
-        // errors alone), then keep the slowest k queries that still fit
-        var k = bySlow.length
-        var cand = line(times, 0, maxErrors = 5, errLen = 80)
-        while (cand.length > MaxLine && k > 0) {
-          k -= 1
-          cand = line(ListMap(bySlow.take(k).sortBy(_._1): _*),
-            times.size - k, maxErrors = 5, errLen = 80)
-        }
-        // k can bottom out at 0 with the line still too long (fixed
-        // overhead + 5 truncated errors alone can exceed the window —
-        // ADVICE r07): degrade to a minimal line that always fits, so
-        // the printed contract line never gets head-truncated into
-        // unparseable JSON
-        if (cand.length > MaxLine)
-          cand = line(ListMap.empty, times.size, maxErrors = 1, errLen = 40)
-        cand
-      }
-    println(printed)
+    println(contractLine(times, errors, sfDir, inbandJson, extra))
     spark.stop()
     if (errors.nonEmpty) sys.exit(1)
   }

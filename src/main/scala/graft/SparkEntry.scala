@@ -42,55 +42,10 @@ object SparkEntry {
       CorpusStatsQueries.oracles ++
       ExtensionQueries.oracles
 
-  /** Queries Bench times — ALL of them, in stable name order (see
-    * BASELINE.md for the recorded full-sweep gate number and the
-    * run-variance note; don't restate the count or seconds here, they
-    * change every round). Full sweeps remain the round-close policy;
-    * [[repTier]] is the mid-round iteration subset. */
+  /** Queries Bench times — ALL of them, in stable name order. A full sweep
+    * is the only protocol; `SPARK_GRAFT_BENCH_ONLY` narrows it to named
+    * queries for diagnosis and never rewrites bench_full.json. BASELINE.md
+    * holds the recorded full-sweep number and how to read the artifact;
+    * the count and seconds are not restated here. */
   def benchQueries: Seq[String] = queries.keys.toSeq.sorted
-
-  /** Representative bench tier (round 15, VERDICT r14 #6) — the subset
-    * `SPARK_GRAFT_BENCH_TIER=rep` sweeps while iterating mid-round, once
-    * the full surface outgrew minutes-scale. Composition, from the
-    * round-14 rested sweep (`bench_rested_r14.json`):
-    *   - every query whose rested median was ≥ 1.2 s (the heavies — they
-    *     carried 119 s of the 235 s full-sweep total), and
-    *   - the cross-round watch-list (queries with a drift or flag history
-    *     whose priors deserve a reading every sweep), and
-    *   - one fast representative per family whose heavies are all in
-    *     already (word-count, TPC-H shapes, minhash/simhash dedup legs).
-    * Membership is NAMES, not thresholds, so a tier sweep is comparable
-    * across rounds until the list is deliberately revised; full-sweep
-    * priors stay armed by the round-close policy (BASELINE.md).
-    */
-  def repTier: Seq[String] = Seq(
-    // heavies ≥ 1.2 s rested (r14)
-    "q_audio_meta", "q_sssp", "q_knn_accuracy", "q_knn_ci", "q_kcore",
-    "q_nb_domain", "q_nb_calibration", "q_audio_neardup", "q_dedup_rep",
-    "q_neardup_jaccard", "q_label_prop", "q_dedup_inflation",
-    "q_dedup_cc_hist", "q_quantile_sweep", "q_dedup_clusters",
-    "q_video_frames", "q_containment_sketch", "q_containment", "q_ols2",
-    "q_partial_corr", "q_split_leakfree", "q_bootstrap_ci", "q_pca_power",
-    "q_ndcg", "q_nb_domain_map", "q_degree_assort", "q_maxsim",
-    "q_tok_fertility", "q_pagerank", "q_contam_severity", "q_lsh_recall",
-    "q_pagerank_full", "q_cluster_elbow", "q_dedup_venn", "q_sim_histogram",
-    "q_adamic_adar", "q_basket_lift", "q_corr", "q_bfs", "q_modularity",
-    "q_semdedup", "q_bpe_compression", "q_pq_codes", "q_percentiles",
-    "q_bpe_segment", "q_nb_prf", "q_simpson", "q_knn_ivf",
-    "q_image_neardup", "q_ann_recall", "q_spearman", "q_js_divergence",
-    "q_math_fns", "q_band_sweep", "q_ppl_buckets", "q_hits", "q_regression",
-    // watch-list (drift/flag history)
-    "q_agg_variants", "q_minhash_acc", "q_source_overlap", "q_knn_brute",
-    "q_split_balance",
-    // fast per-family representatives
-    "wc_words", "q_tpch_q3", "q_tpch_q5", "q_tpch_q18",
-    "q_neardup_minhash", "q_simhash",
-    // r16 additions: the decode heavies that postdate the r14 tier cut,
-    // and the two new gated queries (DPP star join, inter-frame RLE8)
-    "q_avi_frames", "q_rle_delta_frames", "q_star_dpp",
-    // r17 addition: the left-semi (subquery-IN) DPP topology
-    "q_star_dpp_in",
-    // r18 addition: the production AutoBits ANN form (spec-gated)
-    "q_knn_auto",
-  )
 }

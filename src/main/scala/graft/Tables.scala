@@ -14,15 +14,12 @@ object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
-  /** Ceiling below which [[parTable]] widens an unsplittable scan —
-    * overridable for experiments via SPARK_GRAFT_PAR_SCAN_BYTES. 256 MiB
+  /** Ceiling below which [[parTable]] widens an unsplittable scan. 256 MiB
     * ≈ one production scan split: any table bigger than that has enough
     * row groups/files for Spark's own byte-range splitting, so the
     * repartition never exists at real scale.
     */
-  private lazy val ParScanMaxBytes: Long =
-    sys.env.get("SPARK_GRAFT_PAR_SCAN_BYTES").map(_.trim.toLong)
-      .getOrElse(256L * 1024 * 1024)
+  private val ParScanMaxBytes: Long = 256L * 1024 * 1024
 
   /** [[table]] plus unsplittable-small-scan parallelization (optimization
     * guide §2.5: "one huge unsplittable file … repartition immediately

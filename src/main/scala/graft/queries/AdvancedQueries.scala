@@ -797,10 +797,10 @@ object AdvancedQueries {
     // cost is Σ basket², bounded by basket size not corpus size, and
     // every join is keyed — no all-pairs anywhere. Top-100 by lift.
     // Bucketed-layout flag (VERDICT r15 #6): with
-    // spark.graft.bucketedFacts=1 (or SPARK_GRAFT_BUCKETED=1) the
-    // self-join reads a write-once l_orderkey-bucketed copy of the
-    // projected distinct relation (Layout.ensureBucketedRead), so the
-    // join's input exchange vanishes — the ShuffleVolumeSpec-measured
+    // spark.graft.bucketedFacts=1 the self-join reads a write-once
+    // l_orderkey-bucketed copy of the projected distinct relation
+    // (Layout.ensureBucketedRead), so the join's input exchange
+    // vanishes — the ShuffleVolumeSpec-measured
     // −24 %/−34 % shuffle bytes applied to the production chain. Default
     // OFF: the oracle row and cross-round bench priors read the flat
     // fixture; the flag-on path is gated for equality + plan shape in
@@ -817,8 +817,7 @@ object AdvancedQueries {
         .select("l_orderkey", "l_partkey").distinct()
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val li =
-        if (s.conf.getOption("spark.graft.bucketedFacts")
-            .orElse(sys.env.get("SPARK_GRAFT_BUCKETED")).contains("1")) {
+        if (s.conf.getOption("spark.graft.bucketedFacts").contains("1")) {
           val sf = new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9]", "_")
           graft.ops.Layout.ensureBucketedRead(s, li0,
             s"li_pairs_bucketed_$sf", s"target/fixtures/li_pairs_bucketed_$sf",

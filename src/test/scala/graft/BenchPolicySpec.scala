@@ -1,10 +1,14 @@
 package graft
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.scalatest.funsuite.AnyFunSuite
+import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
 
 /** The bench outlier/prior policy is pure — test it without a session:
-  * re-time only past 2× the prior, flag sustained regressions, and never
-  * let a confirmed regression become its own baseline (VERDICT r09 #5).
+  * re-time only past 2× the prior, flag sustained regressions, never let
+  * a confirmed regression become its own baseline (VERDICT r09 #5), and
+  * keep the printed stdout line parseable inside the kept stdout tail.
   */
 class BenchPolicySpec extends AnyFunSuite {
 
@@ -16,13 +20,13 @@ class BenchPolicySpec extends AnyFunSuite {
 
   test("no prior, under the sampling floor: first timing reported, no re-time") {
     val (re, n) = counting(99.0, 99.0)
-    assert(Bench.settle(None, 0.7, re) === ((0.7, false)))
+    assert(Bench.settleSamples(None, 0.7, re) === ((0.7, false, Seq(0.7))))
     assert(n() === 0)
   }
 
   test("within 2x of prior and under the floor: no re-time") {
     val (re, n) = counting(99.0, 99.0)
-    assert(Bench.settle(Some(0.6), 0.9, re) === ((0.9, false)))
+    assert(Bench.settleSamples(Some(0.6), 0.9, re) === ((0.9, false, Seq(0.9))))
     assert(n() === 0)
   }
 
@@ -46,7 +50,7 @@ class BenchPolicySpec extends AnyFunSuite {
     assert(n() === 0)
     // improvements are in-band too
     val (re2, n2) = counting(99.0)
-    assert(Bench.settle(Some(3.0), 1.4, re2) === ((1.4, false)))
+    assert(Bench.settleSamples(Some(3.0), 1.4, re2) === ((1.4, false, Seq(1.4))))
     assert(n2() === 0)
   }
 
@@ -56,7 +60,8 @@ class BenchPolicySpec extends AnyFunSuite {
     // 1.5× prior) re-times anyway and the median exceeds 2× the prior →
     // flagged, not silent
     val (re, _) = counting(3.3, 3.1)
-    assert(Bench.settle(Some(1.5), 2.9, re) === ((3.1, true)))
+    assert(Bench.settleSamples(Some(1.5), 2.9, re) ===
+      ((3.1, true, Seq(2.9, 3.3, 3.1))))
   }
 
   test("sub-second movers past 2x prior draw the confirmation samples") {
@@ -72,21 +77,24 @@ class BenchPolicySpec extends AnyFunSuite {
   test("first timing past 2x, median recovers: de-noised, not regressed") {
     // 13.0 then 1.8, 2.2 → median 2.2, under 2×2.0
     val (re, n) = counting(1.8, 2.2)
-    assert(Bench.settle(Some(2.0), 13.0, re) === ((2.2, false)))
+    assert(Bench.settleSamples(Some(2.0), 13.0, re) ===
+      ((2.2, false, Seq(13.0, 1.8, 2.2))))
     assert(n() === 2)
   }
 
   test("median still past 2x: reported AND flagged regressed") {
     // the r9 q_pagerank shape: slow on all three back-to-back timings
     val (re, _) = counting(13.3, 12.9)
-    assert(Bench.settle(Some(2.0), 13.1, re) === ((13.1, true)))
+    assert(Bench.settleSamples(Some(2.0), 13.1, re) ===
+      ((13.1, true, Seq(13.1, 13.3, 12.9))))
   }
 
   test("sub-second excursions de-noise via the median but never flag") {
     // the q_pivot shape: 0.20 s prior, ~0.5 s sustained — scheduler noise
     // territory (RegressFloorSec), not a regression worth a flag/retry
     val (re, n) = counting(0.48, 0.49)
-    assert(Bench.settle(Some(0.20), 0.50, re) === ((0.49, false)))
+    assert(Bench.settleSamples(Some(0.20), 0.50, re) ===
+      ((0.49, false, Seq(0.50, 0.48, 0.49))))
     assert(n() === 2)
   }
 
@@ -94,7 +102,8 @@ class BenchPolicySpec extends AnyFunSuite {
     // ≥2 s still samples (the band is priorless by design) but a
     // degenerate prior can never produce a flag
     val (re, n) = counting(13.2, 12.8)
-    assert(Bench.settle(Some(0.0), 13.0, re) === ((13.0, false)))
+    assert(Bench.settleSamples(Some(0.0), 13.0, re) ===
+      ((13.0, false, Seq(13.0, 13.2, 12.8))))
     assert(n() === 2)
   }
 
@@ -173,36 +182,6 @@ class BenchPolicySpec extends AnyFunSuite {
     assert(Bench.parsePriors(txt, "/d/sf0.1", 32) === Map.empty)
   }
 
-  test("probe width is bounded by the sweep parallelism and the hardware") {
-    assert(Bench.probeWidth >= 1)
-    assert(Bench.probeWidth <= 32)
-    assert(Bench.probeWidth <= Runtime.getRuntime.availableProcessors)
-  }
-
-  test("wide probe measures wall-clock for the full thread group") {
-    // VERDICT r11 #1: the group must not finish faster than one member's
-    // sequential work could — a 2-thread trial on any box takes at least
-    // as long as the per-thread loop alone would on an infinite machine
-    val t = Bench.cpuProbeWide(threads = 2)
-    assert(t > 0.0 && t.isFinite)
-  }
-
-  test("representative tier names real queries, no dups, sane size") {
-    val tier = SparkEntry.repTier
-    val unknown = tier.filterNot(SparkEntry.queries.keySet)
-    assert(unknown.isEmpty, s"repTier names missing queries: $unknown")
-    assert(tier.distinct.size === tier.size, "repTier has duplicates")
-    // composition contract: heavies + watch-list + family reps land in a
-    // band a mid-round sweep can run in a few minutes; a tier that creeps
-    // toward the full surface defeats its purpose
-    assert(tier.size >= 50 && tier.size <= 90, s"tier size ${tier.size}")
-    // the cross-round watch-list must stay in — its priors need a reading
-    // every sweep
-    Seq("q_neardup_jaccard", "q_pagerank", "q_agg_variants",
-        "q_minhash_acc", "q_source_overlap")
-      .foreach(w => assert(tier.contains(w), s"watch-list $w missing"))
-  }
-
   test("inbandCount partitions exactly what value_inband sums") {
     // ADVICE r17: a degraded query whose timed run THREW is in the
     // degraded name list but absent from times — `times.size - deg.size`
@@ -239,34 +218,6 @@ class BenchPolicySpec extends AnyFunSuite {
     assert(Bench.adjudicate(1.0, 9.0, 1.6) === ((1.6, false)))
   }
 
-  test("prior arming is vetoed when the sweep's probe context is elevated") {
-    // VERDICT r17 #2 — the r17 rested close (wide 0.653 s end probe,
-    // steal 1.17%) sat outside the 0.50-class norm and still armed,
-    // ratcheting the baseline 8%; the gate now refuses it
-    assert(!Bench.probesCleanForArming(0.43, 0.653, 1.17))
-    // the r16 pristine close (0.434 / 0.478, steal ~0) arms
-    assert(Bench.probesCleanForArming(0.434, 0.478, 0.03))
-    // contended driver sweep (r17: wide 0.923, steal 3.66%) is vetoed
-    // on both channels
-    assert(!Bench.probesCleanForArming(0.43, 0.923, 3.66))
-    assert(!Bench.probesCleanForArming(0.43, 0.49, 3.66))
-    // unreadable steal (-1 sentinel) doesn't veto on its own
-    assert(Bench.probesCleanForArming(0.43, 0.49, -1.0))
-  }
-
-  test("armPriors carries old priors on veto, arms on clean/bootstrap/force") {
-    val fresh = Map("q_a" -> 1.2, "q_new" -> 0.7)
-    val old = Map("q_a" -> 1.0)
-    assert(Bench.armPriors(clean = true, fresh, old) === ((fresh, true)))
-    // veto: previous priors verbatim — elevated numbers never baseline
-    assert(Bench.armPriors(clean = false, fresh, old) === ((old, false)))
-    // bootstrap: no old priors → the first sweep's numbers arm regardless
-    assert(Bench.armPriors(clean = false, fresh, Map.empty) === ((fresh, true)))
-    // deliberate re-baseline override
-    assert(Bench.armPriors(clean = false, fresh, old, force = true) ===
-      ((fresh, true)))
-  }
-
   test("segment slices are proportional with automatic rollover") {
     // VERDICT r17 #3: 310 queries, 1500 s — the first 20-query segment
     // gets its proportional share
@@ -285,14 +236,6 @@ class BenchPolicySpec extends AnyFunSuite {
     assert(Bench.segmentSlice(100.0, 0, 20) === 0.0)
   }
 
-  test("stall evidence digest is compact and never throws") {
-    val ev = Bench.stallEvidence(Bench.gcTotals())
-    assert(ev.contains("psi_cpu=") && ev.contains("gc_run=") &&
-      ev.contains("threads="))
-    // one line, bounded enough for a JSON string field
-    assert(!ev.contains("\n"))
-  }
-
   test("host evidence readers degrade, never throw") {
     // on this CI box both are readable; the contract on any box is
     // "number or the documented sentinel", never an exception
@@ -300,5 +243,43 @@ class BenchPolicySpec extends AnyFunSuite {
     assert(l >= 0.0 || l === -1.0)
     val (steal, total) = Bench.cpuJiffies()
     assert((steal >= 0L && total > 0L) || (steal === -1L && total === -1L))
+  }
+
+  test("contract line: 312 queries and 312 long errors fit the window and parse") {
+    // the invoking harness keeps only the stdout tail, so the printed line
+    // must stay within MaxLine and parse, while value / n_queries / failed
+    // still describe the WHOLE sweep; the queries kept are the slowest
+    val times = ListMap((0 until 312).map(i =>
+      f"q_$i%03d" -> 0.125 * (i % 8 + 1)): _*)
+    val errors = ListMap((0 until 312).map(i =>
+      f"q_err_$i%03d" -> ("boom \"quoted\" \\ path\nline " * 40 + i)): _*)
+    val line = Bench.contractLine(times, errors, "/d/sf0.1", inband = "",
+      extra = ""","regressed":["q_007"],"seed":7""")
+    assert(line.length <= Bench.MaxLine)
+    val js = new ObjectMapper().readTree(line)
+    assert(js.get("metric").asText === "total")
+    assert(js.get("value").asDouble === times.values.sum)
+    assert(js.get("unit").asText === "sec")
+    assert(js.get("n_queries").asInt === 312)
+    assert(js.get("failed").asInt === 312)
+    assert(js.get("sf").asText === "/d/sf0.1")
+    assert(js.get("seed").asInt === 7)
+    val kept = js.get("queries").fieldNames.asScala.toSet
+    assert(kept.nonEmpty)
+    assert(kept.size + js.get("queries_omitted").asInt === 312)
+    assert(kept.map(times).min >= times.removedAll(kept).values.max)
+    assert(js.get("errors").size + js.get("errors_omitted").asInt === 312)
+  }
+
+  test("contract line: a record that fits is printed whole") {
+    val times = ListMap("q_b" -> 2.5, "q_a" -> 1.25)
+    val errors = ListMap("q_c" -> "bad \"input\"")
+    val inband = ""","value_inband":1.250,"n_inband":1,"value_degraded":2.500"""
+    val line = Bench.contractLine(times, errors, "/d/sf0.1", inband, "")
+    assert(line === Bench.recordLine(times, errors, "/d/sf0.1", inband, "")())
+    assert(line === """{"metric":"total","value":3.750,"value_inband":1.250,""" +
+      """"n_inband":1,"value_degraded":2.500,"unit":"sec","n_queries":2,""" +
+      """"queries":{"q_b":2.500,"q_a":1.250},"errors":{"q_c":"bad \"input\""},""" +
+      """"failed":1,"sf":"/d/sf0.1"}""")
   }
 }
