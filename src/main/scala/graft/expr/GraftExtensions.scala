@@ -3,7 +3,8 @@ package graft.expr
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-import org.apache.spark.sql.types.IntegerType
+import org.apache.spark.sql.types.{IntegerType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Registers the engine's native expressions with a SparkSession via the
   * public `spark.sql.extensions` mechanism — the supported way to add
@@ -60,6 +61,19 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           case Seq(h, Literal(w: Int, IntegerType)) => WinnowMins(h, w)
           case _ => throw new IllegalArgumentException(
             "winnow_mins expects (array<bigint>, literal int w)")
+        }
+      }))
+
+    ext.injectFunction((
+      new FunctionIdentifier("lower_tokens"),
+      new ExpressionInfo(classOf[LowerTokens].getName, "lower_tokens"),
+      (children: Seq[Expression]) => {
+        children match {
+          case Seq(t) => LowerTokens(t, LowerTokens.Default)
+          case Seq(t, Literal(ds: UTF8String, StringType)) =>
+            LowerTokens(t, LowerTokens.normalize(ds.toString))
+          case _ => throw new IllegalArgumentException(
+            "lower_tokens expects (string[, literal string delimiters])")
         }
       }))
 

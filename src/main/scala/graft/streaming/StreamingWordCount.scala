@@ -19,9 +19,9 @@ object StreamingWordCount {
     * streaming frame (complete-mode sinks may sort; see the spec).
     */
   def counts(text: DataFrame, textCol: String = "value",
-             splitRegex: String = Tokenizer.DefaultSplitRegex): DataFrame =
+             delimiters: Set[Char] = Tokenizer.DefaultDelimiters): DataFrame =
     text.select(explode(
-        Tokenizer.lowerTokens(col(textCol), splitRegex)).as("word"))
+        Tokenizer.lowerTokens(col(textCol), delimiters)).as("word"))
       .groupBy("word")
       .agg(count(lit(1)).as("cnt"))
 

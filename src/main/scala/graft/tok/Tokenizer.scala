@@ -16,10 +16,12 @@ import org.apache.spark.sql.functions._
   *   - counting is case-insensitive and keys are emitted lowercased
   *     (`hash_map.c:25-28`) — exposed here as [[lowerTokens]].
   *
-  * Implementation is Spark-first: the delimiter set is compiled once, at plan
-  * time, into a Java-regex character class that Catalyst constant-folds into
-  * the codegen'd `split`. There is no per-row interpretation of the config
-  * (the reference rescans its delimiter array per byte, `tokenizer.c:37-45`).
+  * Implementation is Spark-first: [[lowerTokens]] is the native
+  * `lower_tokens` expression ([[graft.expr.LowerTokens]]), which turns the
+  * delimiter set into a 256-entry table once, at plan time, and lowercases
+  * and splits each row in one pass over its bytes. There is no per-row
+  * interpretation of the config (the reference rescans its delimiter array
+  * per byte, `tokenizer.c:37-45`).
   */
 object Tokenizer {
 
@@ -46,7 +48,9 @@ object Tokenizer {
   /** Compile a delimiter set into a `[...]+` regex character class, escaping
     * the chars that are special inside a Java/RE2 class (`\ ^ ] [ -`).
     * `-` is emitted last (position makes it literal), `^` never first.
-    * The same pattern string is valid for DuckDB's RE2 (oracle parity).
+    * The same pattern string is valid for DuckDB's RE2: the oracle SQL
+    * tokenizes with it, and [[graft.ops.TextAnalysis.normalize]] collapses
+    * delimiter runs with it.
     */
   def charClassRegex(delims: Set[Char]): String = {
     require(delims.nonEmpty, "empty delimiter set")
@@ -61,20 +65,17 @@ object Tokenizer {
     "[" + body + (if (dash.nonEmpty) "-" else "") + "]+"
   }
 
-  /** The default split regex — the full 38-char reference delimiter set. */
+  /** The default split regex — the full 36-char reference delimiter set. */
   val DefaultSplitRegex: String = charClassRegex(DefaultDelimiters)
 
-  /** Split a string column into an array of non-empty tokens.
-    * Equivalent of the `next_word` loop: maximal non-delimiter runs, empty
-    * tokens suppressed. Pure `functions._` → whole-stage codegen.
+  /** Lowercased non-empty tokens of a string column, for case-insensitive
+    * counting (`hash_map.c:27-28`): the `next_word` loop's maximal
+    * non-delimiter runs, empty tokens suppressed. Equal to
+    * `filter(split(lower(text), charClassRegex(delimiters)), length > 0)`.
+    * C `tolower` is ASCII; we define the semantics as UTF-8 lower
+    * (documented divergence, SURVEY §2.4 — identical on ASCII input).
+    * Delimiters must be at most U+00FF (bytes of a config file are).
     */
-  def tokens(text: Column, splitRegex: String = DefaultSplitRegex): Column =
-    filter(split(text, splitRegex), t => length(t) > lit(0))
-
-  /** Tokens case-folded for case-insensitive counting (`hash_map.c:27-28`).
-    * C `tolower` is ASCII; we define the semantics as UTF-8 lower (documented
-    * divergence, SURVEY §2.4 — identical on ASCII input).
-    */
-  def lowerTokens(text: Column, splitRegex: String = DefaultSplitRegex): Column =
-    tokens(lower(text), splitRegex)
+  def lowerTokens(text: Column, delimiters: Set[Char] = DefaultDelimiters): Column =
+    call_function("lower_tokens", text, lit(delimiters.mkString))
 }

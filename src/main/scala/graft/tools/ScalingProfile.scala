@@ -7,9 +7,8 @@ import org.apache.spark.sql.SparkSession
   * of MPI word count over a fixed multi-GB corpus, ≈15× at 16 physical
   * cores; weak-scaling efficiency ≈0.90 — Documentation.md §3 in the
   * reference repo). This main (a) synthesizes a fixed corpus of 64 MB
-  * text files under `target/scaling` (replicating the reference's
-  * `words.txt` plus the testdata document bodies until the requested
-  * size), then (b) times the full tokenize→count→sort pipeline at a
+  * text files under `target/scaling` (replicating the testdata document
+  * bodies until the requested size), then (b) times the full tokenize→count→sort pipeline at a
   * ladder of local[N] widths, one fresh SparkSession per width.
   * Speedup/efficiency are reported against the FIRST width in the
   * ladder (and labelled with it — pass 1 first for a true-serial
@@ -55,15 +54,9 @@ object ScalingProfile {
     }
     if (!complete) {
       java.nio.file.Files.createDirectories(dir)
-      val seedPaths = Seq(
-        "/root/reference/words.txt").map(java.nio.file.Paths.get(_))
-        .filter(java.nio.file.Files.isReadable(_))
+      // seed: the testdata document bodies (read-only input; output
+      // stays under target/)
       val seed = new StringBuilder
-      seedPaths.foreach { p =>
-        seed.append(new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
-      }
-      // widen the vocabulary beyond words.txt with the testdata docs, if
-      // present (read-only input; output stays under target/)
       val docs = java.nio.file.Paths.get("/root/testdata/sf0.01/documents.parquet")
       if (java.nio.file.Files.exists(docs)) {
         val spark = SparkSession.builder().master("local[4]")
@@ -76,8 +69,7 @@ object ScalingProfile {
       }
       val block = seed.toString.getBytes("UTF-8")
       require(block.nonEmpty,
-        "no seed material: neither /root/reference/words.txt nor the " +
-          "testdata documents are readable — cannot synthesize a corpus")
+        s"no seed material: $docs is not readable — cannot synthesize a corpus")
       val repsPerFile = math.max(1, (perFile / block.length).toInt)
       for (i <- 0 until nFiles) {
         val f = dir.resolve(f"part-$i%04d.txt")
@@ -133,9 +125,7 @@ object ScalingProfile {
       spark.sparkContext.setLogLevel("WARN")
       try {
         def run(): Unit =
-          graft.wc.WordCount.fromText(
-              spark.read.text(files.take(take): _*), "value",
-              graft.tok.Tokenizer.DefaultSplitRegex)
+          graft.wc.WordCount.fromText(spark.read.text(files.take(take): _*), "value")
             .write.mode("overwrite").format("noop").save()
         run()
         val t0 = System.nanoTime(); run()

@@ -9,9 +9,13 @@ import graft.tok.Tokenizer
   * (`/root/reference/word_count_mpi.c:391-443`; pipeline decomposition
   * SURVEY §2.1 O1–O11) — rebuilt as a declarative Catalyst plan:
   *
-  *   FileScan → Generate(explode(split(lower))) → Filter →
+  *   FileScan → Generate(explode(lower_tokens)) →
   *   HashAggregate(partial) → Exchange(hash(word)) → HashAggregate(final) →
   *   Exchange(range) → Sort
+  *
+  * `lower_tokens` ([[graft.expr.LowerTokens]]) lowercases and splits each
+  * line in one native pass and never emits an empty token, so no filter
+  * sits between the generator and the partial aggregate.
   *
   * Everything the reference hand-builds (byte-range splits ±1
   * `word_count_mpi.c:246-255`, split-boundary word repair `:296-322`,
@@ -44,8 +48,8 @@ object WordCount {
     * (matches the reference's `strcmp` sort, `cell.c:18-20`).
     */
   def fromText(df: DataFrame, textCol: String,
-               splitRegex: String = Tokenizer.DefaultSplitRegex): DataFrame =
-    df.select(explode(Tokenizer.lowerTokens(col(textCol), splitRegex)).as("word"))
+               delimiters: Set[Char] = Tokenizer.DefaultDelimiters): DataFrame =
+    df.select(explode(Tokenizer.lowerTokens(col(textCol), delimiters)).as("word"))
       .groupBy("word")
       .agg(count(lit(1)).as("cnt"))
       .orderBy("word")
@@ -57,22 +61,19 @@ object WordCount {
     * reference hand-rolls (SURVEY §2.1 O2/O3).
     */
   def fromDirectory(spark: SparkSession, path: String,
-                    delimiterFile: Option[String] = None): DataFrame = {
-    val regex = delimiterFile
-      .map(f => Tokenizer.charClassRegex(Tokenizer.delimitersFromFile(f)))
-      .getOrElse(Tokenizer.DefaultSplitRegex)
-    fromText(spark.read.text(path), "value", regex)
-  }
+                    delimiterFile: Option[String] = None): DataFrame =
+    fromText(spark.read.text(path), "value",
+      delimiterFile.map(Tokenizer.delimitersFromFile).getOrElse(Tokenizer.DefaultDelimiters))
 
   /** Per-file word counts — keeps the lineage the reference discards
     * (`input_file_name()` instead of the concatenated-corpus view).
     */
   def perFile(spark: SparkSession, path: String,
-              splitRegex: String = Tokenizer.DefaultSplitRegex): DataFrame =
+              delimiters: Set[Char] = Tokenizer.DefaultDelimiters): DataFrame =
     spark.read.text(path)
       .select(input_file_name().as("file"), col("value"))
       .select(col("file"),
-        explode(Tokenizer.lowerTokens(col("value"), splitRegex)).as("word"))
+        explode(Tokenizer.lowerTokens(col("value"), delimiters)).as("word"))
       .groupBy("file", "word")
       .agg(count(lit(1)).as("cnt"))
       .orderBy("file", "word")

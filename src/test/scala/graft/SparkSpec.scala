@@ -31,6 +31,24 @@ abstract class SparkSpec extends AnyFunSuite {
     java.nio.file.Files.write(dir.resolve(name),
       content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
+  /** Runs `body` with the given session confs set, restoring the old
+    * values after (the session is shared across suites). */
+  def withConf[T](confs: (String, String)*)(body: => T): T = {
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** Confs for generated evaluation (whole-stage codegen, no interpreted
+    * fallback) or for interpreted evaluation. */
+  def codegenConfs(codegen: Boolean): Seq[(String, String)] = Seq(
+    "spark.sql.codegen.wholeStage" -> codegen.toString,
+    "spark.sql.codegen.factoryMode" -> (if (codegen) "CODEGEN_ONLY" else "NO_CODEGEN"))
+
   /** Every physical node of an executed plan, unwrapping AQE and
     * recursing into subqueries — delegates to the ONE shared walker
     * ([[graft.ops.Plans.collectNodes]]; a per-suite copy once dropped the

@@ -33,27 +33,32 @@ class SqlSurfaceSpec extends SparkSpec {
     // single-quoted strings): double them, then escape quotes
     val re = graft.tok.Tokenizer.DefaultSplitRegex
       .replace("\\", "\\\\").replace("'", "\\'")
-    val viaSql = spark.sql(
+    def viaSql(tokens: String) = spark.sql(
       s"""SELECT word, count(*) AS cnt
           FROM documents
-          LATERAL VIEW explode(filter(split(lower(text), '$re'),
-                                      x -> length(x) > 0)) t AS word
+          LATERAL VIEW explode($tokens) t AS word
           GROUP BY word ORDER BY word""")
       .as[(String, Long)].collect().toSeq
     val viaDf = graft.wc.WordCount
       .fromText(spark.table("documents"), "text")
       .as[(String, Long)].collect().toSeq
-    assert(viaSql === viaDf)
+    assert(viaDf.nonEmpty)
+    assert(viaSql("lower_tokens(text)") === viaDf)
+    assert(viaSql(s"filter(split(lower(text), '$re'), x -> length(x) > 0)") === viaDf)
   }
 
   test("native extension functions are first-class SQL functions") {
     val r = spark.sql(
       """SELECT simhash60(array(1L, 2L, 3L)) AS sh,
                 minhash_sig(array(7L), 3) AS mh,
-                ngram_hashes(array(1L, 2L, 3L), 2) AS ng""").head()
+                ngram_hashes(array(1L, 2L, 3L), 2) AS ng,
+                lower_tokens('The QUICK, brown-Fox') AS lt,
+                lower_tokens('a,b|C', '|') AS ltd""").head()
     assert(r.getLong(0) >= 0)
     assert(r.getSeq[Long](1).length === 3)
     assert(r.getSeq[Long](2).length === 2)
+    assert(r.getSeq[String](3) === Seq("the", "quick", "brown", "fox"))
+    assert(r.getSeq[String](4) === Seq("a,b", "c"))
   }
 
   test("window + subquery via SQL") {

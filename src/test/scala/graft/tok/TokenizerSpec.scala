@@ -10,9 +10,9 @@ import org.apache.spark.sql.functions._
 class TokenizerSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tokensOf(s: String, regex: String = Tokenizer.DefaultSplitRegex): Seq[String] =
+  private def tokensOf(s: String, delims: Set[Char] = Tokenizer.DefaultDelimiters): Seq[String] =
     Seq(s).toDF("t")
-      .select(Tokenizer.tokens(col("t"), regex).as("toks"))
+      .select(Tokenizer.lowerTokens(col("t"), delims).as("toks"))
       .as[Seq[String]].head()
 
   test("delimiter set is exactly whitespace + the 32 distinct config bytes") {
@@ -22,11 +22,15 @@ class TokenizerSpec extends SparkSpec {
   }
 
   test("default config delimiters byte-match the reference delimiters.txt") {
-    val ref = java.nio.file.Paths.get("/root/reference/delimiters.txt")
-    assume(java.nio.file.Files.exists(ref), "reference checkout not present")
-    val bytes = java.nio.file.Files.readAllBytes(ref)
+    // the file's 34 bytes (SURVEY §2.1 O5), no trailing newline
+    val bytes = "[][!\"#$%&'()*+,./:;<=>?@\\^_`|{}~-]"
+      .getBytes(java.nio.charset.StandardCharsets.US_ASCII)
     assert(bytes.length === 34) // [ and ] listed twice in the file
     assert(bytes.map(b => (b & 0xff).toChar).toSet === Tokenizer.DefaultConfigDelimiters)
+    val dir = tempDir("delimsRef")
+    java.nio.file.Files.write(dir.resolve("delimiters.txt"), bytes)
+    assert(Tokenizer.delimitersFromFile(dir.resolve("delimiters.txt").toString) ===
+      Tokenizer.DefaultDelimiters)
   }
 
   test("every one of the 36 delimiters splits a word pair (per-byte table)") {
@@ -60,11 +64,11 @@ class TokenizerSpec extends SparkSpec {
   test("charClassRegex escapes class-special chars and is valid Java regex") {
     val tricky = Set('\\', '^', ']', '[', '-', 'a')
     val re = Tokenizer.charClassRegex(tricky)
-    // compiles, and splits exactly on those chars
+    // compiles, and matches exactly those chars
     val p = java.util.regex.Pattern.compile(re)
     assert(p.matcher("\\^][-a").matches())
     assert(!p.matcher("b").find())
-    assert(tokensOf("x\\y^z]w[v-u", re) === Seq("x", "y", "z", "w", "v", "u"))
+    assert(tokensOf("x\\y^z]w[v-u", tricky) === Seq("x", "y", "z", "w", "v", "u"))
   }
 
   test("charClassRegex rejects an empty delimiter set") {
@@ -77,7 +81,6 @@ class TokenizerSpec extends SparkSpec {
     val ds = Tokenizer.delimitersFromFile(dir.resolve("d.txt").toString)
     assert(ds === Set(' ', '\t', '\n', '\r', '@', '#'))
     // a char NOT in this set (e.g. comma) must not split
-    val re = Tokenizer.charClassRegex(ds)
-    assert(tokensOf("a,b@c d", re) === Seq("a,b", "c", "d"))
+    assert(tokensOf("a,b@c d", ds) === Seq("a,b", "c", "d"))
   }
 }

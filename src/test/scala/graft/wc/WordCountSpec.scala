@@ -107,27 +107,35 @@ class WordCountSpec extends SparkSpec {
     assert(content === "Word,Count\na,2\nb,1\nc,1\n")
   }
 
-  test("golden end-to-end: CSV over the reference's own words.txt corpus") {
-    // /root/reference/words.txt is the corpus the reference repo ships
-    // (116,877 words, one per line, UTF-8 with accented vowels). Ground
-    // truth is an independent single-threaded JVM count below — a direct
-    // byte-walk over the delimiter SET, sharing no code with the engine's
-    // regex/split/aggregate pipeline — byte-compared against the CSV sink.
-    val src = java.nio.file.Paths.get("/root/reference/words.txt")
-    assume(java.nio.file.Files.isReadable(src))
-    val dir = tempDir("golden")
-    java.nio.file.Files.copy(src, dir.resolve("words.txt"))
-    val out = tempDir("goldenOut").resolve("res").toString
-    WordCount.writeCsv(WordCount.fromDirectory(spark, dir.toString), out)
-    val part = new java.io.File(out).listFiles()
-      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".csv"))
-      .head
-    val produced = new String(
-      java.nio.file.Files.readAllBytes(part.toPath),
-      java.nio.charset.StandardCharsets.UTF_8)
+  /** A deterministic stand-in for the reference's `words.txt`: accented
+    * vowels, hyphen/apostrophe words, every one of the 36 delimiters in
+    * runs of 1–3, LF and CRLF line ends, and 10,000-byte tokens. */
+  private def goldenCorpus(seed: Int, lines: Int): String = {
+    val rnd = new scala.util.Random(seed)
+    val words = Vector("naïve", "Café", "ÀÉÎÕÜ", "über", "Straße", "àèìòù", "ÁÉÍÓÚ",
+      "d'acqua", "l'été", "well-known", "rock'n'roll", "Hello", "WORLD", "MiXeD",
+      "2026", "x1", "señor", "ÑANDÚ")
+    val delims = graft.tok.Tokenizer.DefaultDelimiters.toVector.sorted
+    val sb = new StringBuilder
+    for (i <- 0 until lines) {
+      for (k <- 0 until 1 + rnd.nextInt(10)) {
+        if (k > 0) (0 to rnd.nextInt(3)).foreach(_ => sb.append(delims(rnd.nextInt(delims.size))))
+        sb.append(words(rnd.nextInt(words.size)))
+      }
+      if (i % 1000 == 7) sb.append(' ').append("Ab" * 5000).append(' ').append("É" * 5000)
+      sb.append(if (rnd.nextBoolean()) "\r\n" else "\n")
+    }
+    delims.foreach(d => sb.append("w").append(d)) // every delimiter at least once
+    sb.toString
+  }
 
-    val text = new String(java.nio.file.Files.readAllBytes(src),
-      java.nio.charset.StandardCharsets.UTF_8)
+  private lazy val golden: (java.nio.file.Path, String) = {
+    val files = Seq("words.txt" -> goldenCorpus(1, 4000), "more.txt" -> goldenCorpus(2, 1500))
+    val dir = tempDir("golden")
+    files.foreach { case (name, text) => writeFile(dir, name, text) }
+    // Ground truth is an independent single-threaded JVM count — a direct
+    // walk over the delimiter SET, sharing no code with the engine's
+    // tokenizer/aggregate pipeline. Each file is its own byte stream.
     val delims = graft.tok.Tokenizer.DefaultDelimiters
     val counts = scala.collection.mutable.HashMap.empty[String, Long]
     val sb = new StringBuilder
@@ -136,18 +144,51 @@ class WordCountSpec extends SparkSpec {
       counts.update(w, counts.getOrElse(w, 0L) + 1L)
       sb.clear()
     }
-    text.foreach(c => if (delims.contains(c)) flush() else sb.append(c))
-    flush()
-    // 116,877 lines, and the delimiter set splits hyphen/apostrophe words
-    // (d'acqua → d, acqua), so the token total under reference semantics
-    // can only be ≥ the line count. The walker is the ground truth (the
-    // engine is byte-compared against it below); a pinned exact total
-    // would break on any upstream change to the read-only corpus even
-    // though the engine is correct, so only sanity-bound it here.
-    assert(counts.values.sum >= 116877L, "at least one token per corpus line")
-    val expected = "Word,Count\n" +
-      counts.toSeq.sortBy(_._1).map { case (w, c) => s"$w,$c\n" }.mkString
-    assert(produced === expected)
+    files.foreach { case (_, text) =>
+      text.foreach(c => if (delims.contains(c)) flush() else sb.append(c))
+      flush()
+    }
+    // the delimiter set splits hyphen/apostrophe words (d'acqua → d, acqua)
+    assert(counts.contains("acqua") && counts.contains("rock") && !counts.contains("well-known"))
+    assert(counts.contains("ab" * 5000) && counts.contains("é" * 5000))
+    assert(counts.values.sum >= 5500L, "at least one token per corpus line")
+    dir -> ("Word,Count\n" + counts.toSeq.sortBy(_._1).map { case (w, c) => s"$w,$c\n" }.mkString)
+  }
+
+  for (codegen <- Seq(true, false))
+    test(s"golden end-to-end: CSV over a generated words corpus (codegen=$codegen)") {
+      val (dir, expected) = golden
+      val out = tempDir("goldenOut").resolve("res").toString
+      withConf(codegenConfs(codegen): _*) {
+        WordCount.writeCsv(WordCount.fromDirectory(spark, dir.toString), out)
+      }
+      val part = new java.io.File(out).listFiles()
+        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".csv"))
+        .head
+      val produced = new String(
+        java.nio.file.Files.readAllBytes(part.toPath),
+        java.nio.charset.StandardCharsets.UTF_8)
+      assert(produced === expected)
+    }
+
+  test("fromDirectory plans one native lower_tokens, no split, no filter lambda, generator in codegen") {
+    val dir = tempDir("planShape")
+    writeFile(dir, "a.txt", "Plan shape, please")
+    val df = WordCount.fromDirectory(spark, dir.toString)
+    df.collect()
+    val exprs = collectPlanNodes(df.queryExecution.executedPlan).flatMap(_.expressions)
+      .flatMap(_.collect { case e => e })
+    assert(exprs.exists(_.isInstanceOf[graft.expr.LowerTokens]))
+    assert(!exprs.exists(e => e.isInstanceOf[org.apache.spark.sql.catalyst.expressions.StringSplit] ||
+      e.isInstanceOf[org.apache.spark.sql.catalyst.expressions.ArrayFilter] ||
+      e.isInstanceOf[org.apache.spark.sql.catalyst.expressions.LambdaFunction]))
+    // no codegen fallback left: the generator joins the partial aggregate's
+    // whole-stage-codegen stage
+    assert(collectPlanNodes(df.queryExecution.executedPlan).exists {
+      case w: org.apache.spark.sql.execution.WholeStageCodegenExec =>
+        w.child.exists(_.isInstanceOf[org.apache.spark.sql.execution.GenerateExec])
+      case _ => false
+    })
   }
 
   test("empty input dir yields an empty result (engine side of exit-1 contract)") {
