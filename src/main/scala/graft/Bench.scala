@@ -424,14 +424,7 @@ object Bench {
       // so a FAILED query's partial caches don't leak into every
       // later query's memory — while the timed run still reuses the
       // warm-up's cache (unchanged per-query semantics).
-      spark.catalog.clearCache()
-      // ...and clearCache only covers the SQL cache manager:
-      // localCheckpoint RDDs are RDD-level persists that otherwise sit
-      // in block-manager memory until ContextCleaner gets a GC (class
-      // doc) — release them explicitly, blocking so the next query
-      // starts from a deterministic storage state
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      Sessions.releaseCaches(spark)
       ran += 1
       if (ran % GcEvery == 0) System.gc() // between timed regions
     }

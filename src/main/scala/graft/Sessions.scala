@@ -108,6 +108,19 @@ object Sessions {
     localDir.fold(b)(d => b.config("spark.local.dir", d))
   }
 
+  /** Drops everything a query run persisted, so the next query starts from
+    * a clean storage state. `catalog.clearCache()` empties only the SQL
+    * cache manager; `localCheckpoint` RDDs (dedup components, BPE rounds,
+    * dangling PageRank) are RDD-level persists that would otherwise hold
+    * block-manager memory until ContextCleaner sees a GC (see [[Bench]]).
+    * The unpersist blocks, so the release is complete on return.
+    */
+  def releaseCaches(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = true))
+  }
+
   def local(appName: String): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = builder(appName, cpus).getOrCreate()

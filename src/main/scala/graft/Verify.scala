@@ -22,8 +22,8 @@ object Verify {
       // branch reuse (Dedup, Similarity — see their scaladocs); their
       // lifetime contract is "until the caller clears", and this harness
       // is the caller: drop them so a 60+-query sweep doesn't accumulate
-      // every query's cache (ADVICE r04).
-      spark.catalog.clearCache()
+      // every query's cache (ADVICE r04), nor its localCheckpoint RDDs.
+      Sessions.releaseCaches(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

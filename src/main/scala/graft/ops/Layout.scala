@@ -74,7 +74,7 @@ object Layout {
     *
     * Bucketing metadata lives in the session catalog (`saveAsTable` —
     * Spark's bucket layout has no parquet-level footprint), so the
-    * co-located plan needs the table read via [[bucketedTable]], not a
+    * co-located plan needs the table read via `spark.table(table)`, not a
     * bare `spark.read.parquet(path)`; a production deployment records it
     * in the shared metastore/table format once at write time.
     */
@@ -86,61 +86,6 @@ object Layout {
       .bucketBy(buckets, bucketCol).option("path", path)
     (if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*)
      else w).saveAsTable(table)
-  }
-
-  /** Catalog read of a [[writeBucketed]] table — the form whose scan
-    * carries the bucket `HashPartitioning` into planning. */
-  def bucketedTable(spark: org.apache.spark.sql.SparkSession,
-                    table: String): DataFrame = spark.table(table)
-
-  /** Bucketed-table read with write-once derivation (VERDICT r15 #6 — the
-    * production wiring of the [[writeBucketed]] lever): return `table` as
-    * a bucket-aware scan, deriving it from `df` on first touch. Three
-    * states:
-    *  - table registered in this session's catalog → read it;
-    *  - bucketed files exist at `path` from an earlier JVM (the catalog is
-    *    in-memory, registrations die with the session) → re-attach them
-    *    with `CREATE TABLE … CLUSTERED BY … LOCATION` — bucket ids live in
-    *    the file names, so the re-attached scan keeps its
-    *    HashPartitioning;
-    *  - nothing yet → [[writeBucketed]] from `df` (the pay-once ingest
-    *    shuffle).
-    * A production deployment does the third step once at ingest into a
-    * shared metastore and only ever takes the first.
-    */
-  def ensureBucketedRead(spark: org.apache.spark.sql.SparkSession,
-                         df: => DataFrame, table: String, rawPath: String,
-                         bucketCol: String, buckets: Int,
-                         srcFp: String): DataFrame =
-      deriveLock.synchronized {
-    // absolutize: saveAsTable resolves a RELATIVE option("path") against
-    // the WAREHOUSE dir, not the cwd — the files then land at
-    // spark-warehouse/<path> while the filesystem marker checks read
-    // <path>, so the reuse branch never fires (found r17: every JVM
-    // silently re-derived, and the fingerprint stamp failed on the
-    // missing dir)
-    val path = new java.io.File(rawPath).getAbsolutePath
-    // ADVICE r16: the _SUCCESS marker alone can't see a regenerated
-    // source — a stale derived copy would silently serve old data. The
-    // caller passes a fingerprint of the SOURCE files ([[srcFingerprint]])
-    // and a mismatch forces re-derivation (and drops a catalog entry
-    // registered against the stale files).
-    val filesOk = java.nio.file.Files.exists(
-      java.nio.file.Paths.get(path, "_SUCCESS")) && fpMatches(path, srcFp)
-    if (spark.catalog.tableExists(table) && !filesOk)
-      spark.sql(s"DROP TABLE $table")
-    if (!spark.catalog.tableExists(table)) {
-      if (filesOk) {
-        val ddlCols = spark.read.parquet(path).schema.toDDL
-        spark.sql(s"CREATE TABLE $table ($ddlCols) USING parquet " +
-          s"CLUSTERED BY ($bucketCol) SORTED BY ($bucketCol) " +
-          s"INTO $buckets BUCKETS LOCATION '$path'")
-      } else {
-        writeBucketed(df, table, path, bucketCol, buckets, Seq(bucketCol))
-        writeFp(path, srcFp)
-      }
-    }
-    spark.table(table)
   }
 
   /** Write `df` partitioned by `partCol` to `path` ONCE (skipped when the
@@ -156,9 +101,8 @@ object Layout {
   def ensurePartitioned(df: => DataFrame, rawPath: String,
                         partCol: String, srcFp: String): String =
       deriveLock.synchronized {
-    // absolute for the same reason as [[ensureBucketedRead]] (plain
-    // df.write does resolve relative paths against the cwd, but the
-    // returned path is consumed by spark.read from arbitrary callers)
+    // absolute: the returned path is consumed by spark.read from
+    // arbitrary callers, whatever their cwd
     val path = new java.io.File(rawPath).getAbsolutePath
     // re-derive when the SOURCE fingerprint moved, not just when the
     // marker is missing (ADVICE r16 — regenerated fixtures must not be
@@ -181,8 +125,7 @@ object Layout {
     * fingerprints identically instead of forcing a spurious re-derive;
     * nanosecond mtimes shrink the same-millisecond in-place-regeneration
     * blind spot (ADVICE r17). Stamped into the derived dir as
-    * `_GRAFT_SRC_FP`; [[ensurePartitioned]]/[[ensureBucketedRead]]
-    * re-derive on mismatch.
+    * `_GRAFT_SRC_FP`; [[ensurePartitioned]] re-derives on mismatch.
     */
   def srcFingerprint(paths: String*): String = {
     import scala.jdk.CollectionConverters._

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.IntegerType
 import graft.Tables
 import graft.functions.{Exact, Hashes}
+import OracleSql._
 
 /** Window / date-time / JSON / array / string / math function surface
   * (SURVEY §2.2 rows "Window functions", "Date/time", "Array/map/JSON",
@@ -28,11 +29,11 @@ object AnalyticQueries {
   private def tn(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.table(s, dir, name)
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Seq[Query] = Seq(
     // ── Window: ranking ─────────────────────────────────────────────────
     // Top-3 customers per market segment by balance. row_number (not rank):
     // the tiebreak on custkey makes it deterministic.
-    "q_window_rank" -> ((s, dir) => {
+    Query("q_window_rank", ((s, dir) => {
       val w = Window.partitionBy(col("c_mktsegment"))
         .orderBy(desc("c_acctbal"), asc("c_custkey"))
       t(s, dir, "customer")
@@ -41,8 +42,14 @@ object AnalyticQueries {
         .select(col("c_mktsegment"), col("rn"), col("c_custkey"), col("c_acctbal"))
         .orderBy("c_mktsegment", "rn")
     }),
+      """SELECT c_mktsegment, rn, c_custkey, c_acctbal FROM (
+           SELECT c_mktsegment, c_custkey, c_acctbal,
+             row_number() OVER (PARTITION BY c_mktsegment
+                                ORDER BY c_acctbal DESC, c_custkey ASC) AS rn
+           FROM customer)
+         WHERE rn <= 3 ORDER BY c_mktsegment, rn"""),
     // ── Window: analytic (lag) ──────────────────────────────────────────
-    "q_window_lag" -> ((s, dir) => {
+    Query("q_window_lag", ((s, dir) => {
       val w = Window.partitionBy(col("o_custkey"))
         .orderBy(asc("o_orderdate"), asc("o_orderkey"))
       tn(s, dir, "orders")
@@ -50,8 +57,12 @@ object AnalyticQueries {
           coalesce(lag(col("o_totalprice"), 1).over(w), lit(-1.0)).as("prev_price"))
         .orderBy("o_orderkey")
     }),
+      """SELECT o_orderkey, o_custkey,
+            COALESCE(lag(o_totalprice, 1) OVER (PARTITION BY o_custkey
+              ORDER BY o_orderdate ASC, o_orderkey ASC), -1.0) AS prev_price
+         FROM orders ORDER BY o_orderkey"""),
     // ── Window: explicit frame (running sum) ────────────────────────────
-    "q_window_frame" -> ((s, dir) => {
+    Query("q_window_frame", ((s, dir) => {
       val w = Window.partitionBy(col("o_custkey"))
         .orderBy(asc("o_orderdate"), asc("o_orderkey"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -61,6 +72,12 @@ object AnalyticQueries {
             .cast("double"), 4).as("running_total"))
         .orderBy("o_orderkey")
     }),
+      """SELECT o_orderkey, o_custkey,
+            ROUND(CAST(SUM(CAST(o_totalprice AS DECIMAL(28,10))) OVER (
+              PARTITION BY o_custkey ORDER BY o_orderdate ASC, o_orderkey ASC
+              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE), 4)
+              AS running_total
+         FROM orders ORDER BY o_orderkey"""),
 
     // ── Window: distribution functions (percent_rank/cume_dist/nth) ─────
     // Per market segment: each customer's balance percentile standing,
@@ -68,7 +85,7 @@ object AnalyticQueries {
     // every row (nth_value over the full frame). The (c_acctbal, c_custkey)
     // total order pins every tie; doubles are k/(n−1)-style exact ratios of
     // small ints — identical in both engines.
-    "q_window_dist" -> ((s, dir) => {
+    Query("q_window_dist", ((s, dir) => {
       val ord = Window.partitionBy(col("c_mktsegment"))
         .orderBy(desc("c_acctbal"), asc("c_custkey"))
       val full = ord.rowsBetween(Window.unboundedPreceding,
@@ -80,21 +97,37 @@ object AnalyticQueries {
           nth_value(col("c_acctbal"), 3).over(full).as("third_bal"))
         .orderBy("c_mktsegment", "pct_rank", "c_custkey")
     }),
+      """SELECT c_mktsegment, c_custkey, c_acctbal,
+           ROUND(percent_rank() OVER w, 6) AS pct_rank,
+           ROUND(cume_dist() OVER w, 6) AS cume,
+           nth_value(c_acctbal, 3) OVER (w ROWS BETWEEN UNBOUNDED PRECEDING
+                                         AND UNBOUNDED FOLLOWING) AS third_bal
+         FROM customer
+         WINDOW w AS (PARTITION BY c_mktsegment
+                      ORDER BY c_acctbal DESC, c_custkey ASC)
+         ORDER BY c_mktsegment, pct_rank, c_custkey"""),
 
     // ── Date/time ───────────────────────────────────────────────────────
     // Hourly event rollup; ts arrives as ns → µs via Tables.events.
-    "q_events_hourly" -> ((s, dir) =>
+    Query("q_events_hourly", ((s, dir) =>
       Tables.events(s, dir)
         .groupBy(date_trunc("hour", col("ts")).cast("timestamp_ntz").as("hour"))
         .agg(count(lit(1)).as("cnt"), Exact.roundSum(col("value")).as("sum_value"))
         .orderBy("hour")),
-    "q_orders_monthly" -> ((s, dir) =>
+      s"""SELECT date_trunc('hour', ts) AS hour, count(*) AS cnt,
+            ${oSum("value", "sum_value")}
+          FROM events GROUP BY 1 ORDER BY hour"""),
+    Query("q_orders_monthly", ((s, dir) =>
       t(s, dir, "orders")
         .groupBy(
           year(col("o_orderdate")).as("o_year"),
           month(col("o_orderdate")).as("o_month"))
         .agg(count(lit(1)).as("cnt"), Exact.roundSum(col("o_totalprice")).as("total"))
         .orderBy("o_year", "o_month")),
+      s"""SELECT CAST(year(o_orderdate) AS INT) AS o_year,
+            CAST(month(o_orderdate) AS INT) AS o_month,
+            count(*) AS cnt, ${oSum("o_totalprice", "total")}
+          FROM orders GROUP BY 1, 2 ORDER BY o_year, o_month"""),
 
     // ── Fano factor (burstiness) per event type ─────────────────────────
     // Dispersion index of hourly event counts: F = var/mean over the
@@ -105,7 +138,7 @@ object AnalyticQueries {
     // the NON-ZERO buckets only (Σx, Σx² are unchanged by zero rows; n is
     // the grid size), so no gap-fill join is needed. Exact int64 moments;
     // one double chain per type.
-    "q_fano" -> ((s, dir) => {
+    Query("q_fano", ((s, dir) => {
       val hours = Tables.events(s, dir)
         .select(col("event_type"),
           expr("unix_micros(cast(ts as timestamp)) div 3600000000")
@@ -127,6 +160,29 @@ object AnalyticQueries {
           round(varr / mean, 6).as("fano"))
         .orderBy("event_type")
     }),
+      """WITH perh AS (
+           SELECT event_type, epoch_us(ts) // 3600000000 AS h,
+             CAST(count(*) AS BIGINT) AS c
+           FROM events GROUP BY 1, 2),
+         span AS (
+           SELECT CAST(max(h) - min(h) + 1 AS BIGINT) AS n_hours
+           FROM perh),
+         m AS (
+           SELECT event_type, CAST(SUM(c) AS BIGINT) AS sx,
+             CAST(SUM(c * c) AS BIGINT) AS sxx
+           FROM perh GROUP BY 1),
+         k AS (
+           SELECT event_type, n_hours, sx,
+             CAST(sx AS DOUBLE) / CAST(n_hours AS DOUBLE) AS mean0,
+             CAST(sxx AS DOUBLE) / CAST(n_hours AS DOUBLE)
+               - (CAST(sx AS DOUBLE) / CAST(n_hours AS DOUBLE))
+               * (CAST(sx AS DOUBLE) / CAST(n_hours AS DOUBLE)) AS var0
+           FROM m, span)
+         SELECT event_type, n_hours, sx AS n_events,
+           ROUND(mean0, 6) AS mean_per_hour,
+           ROUND(var0, 6) AS var_per_hour,
+           ROUND(var0 / mean0, 6) AS fano
+         FROM k ORDER BY event_type"""),
 
     // ── New-vs-returning mix per week (acquisition read) ────────────────
     // Per ISO-ish week (epoch-day div 7): events and actives split by
@@ -138,7 +194,7 @@ object AnalyticQueries {
     // size threshold picks broadcast when it fits and a shuffle join
     // when it doesn't (VERDICT r13 #1 — never force-broadcast a relation
     // that grows with the corpus).
-    "q_new_returning" -> ((s, dir) => {
+    Query("q_new_returning", ((s, dir) => {
       val ev = Tables.events(s, dir, widen = false)
         .select(col("user_id"),
           expr("unix_micros(cast(ts as timestamp)) div 604800000000")
@@ -157,6 +213,18 @@ object AnalyticQueries {
             .as("new_share"))
         .orderBy("wk")
     }),
+      """WITH ev AS (
+           SELECT user_id, epoch_us(ts) // 604800000000 AS wk FROM events),
+         f AS (SELECT user_id, min(wk) AS wk0 FROM ev GROUP BY 1)
+         SELECT wk, CAST(count(*) AS BIGINT) AS n_events,
+           CAST(count(DISTINCT ev.user_id) AS BIGINT) AS n_users,
+           CAST(count(DISTINCT CASE WHEN wk = wk0 THEN ev.user_id END)
+             AS BIGINT) AS n_new_users,
+           ROUND(CAST(count(DISTINCT CASE WHEN wk = wk0 THEN ev.user_id END)
+               AS DOUBLE)
+             / count(DISTINCT ev.user_id), 6) AS new_share
+         FROM ev JOIN f USING (user_id)
+         GROUP BY wk ORDER BY wk"""),
 
     // ── Wilcoxon signed-rank (paired two-sample test, exact midranks) ───
     // The PAIRED member of the rank family (q_mannwhitney is the
@@ -168,7 +236,7 @@ object AnalyticQueries {
     // uses Ranks.globalCumWeight over the per-|d| grouped relation — the
     // distributed order-statistics kernel, NOT a constant-key window, so
     // the rank pass survives a customer count that grows with the data.
-    "q_wilcoxon" -> ((s, dir) => {
+    Query("q_wilcoxon", ((s, dir) => {
       val dec = "decimal(30,10)"
       val diffs = t(s, dir, "orders")
         .groupBy(col("o_custkey"))
@@ -198,6 +266,26 @@ object AnalyticQueries {
             sqrt((col("n") * (col("n") + 1L) * (lit(2L) * col("n") + 1L))
               .cast("double") / 6.0), 6).as("z"))
     }),
+      """WITH d0 AS (
+           SELECT o_custkey,
+             SUM(CAST(CASE WHEN month(o_orderdate) <= 6 THEN o_totalprice
+                 ELSE 0.0 END AS DECIMAL(30,10)))
+             - SUM(CAST(CASE WHEN month(o_orderdate) > 6 THEN o_totalprice
+                 ELSE 0.0 END AS DECIMAL(30,10))) AS d
+           FROM orders GROUP BY 1),
+         dd AS (SELECT d FROM d0 WHERE d <> 0),
+         grp AS (SELECT abs(d) AS absd, CAST(count(*) AS BIGINT) AS c,
+             CAST(SUM(CASE WHEN d > 0 THEN 1 ELSE 0 END) AS BIGINT) AS p
+           FROM dd GROUP BY 1),
+         cum AS (SELECT absd, c, p, SUM(c) OVER (ORDER BY absd) AS cc,
+             SUM(c) OVER () AS n FROM grp),
+         st AS (SELECT CAST(max(n) AS BIGINT) AS n,
+             CAST(SUM(p * (2*cc - c + 1)) AS BIGINT) AS w2_plus FROM cum)
+         SELECT n AS n_pairs, w2_plus,
+           ROUND(CAST(w2_plus - n*(n+1)//2 AS DOUBLE)
+             / sqrt(CAST(n*(n+1)*(2*n+1) AS DOUBLE) / CAST(6 AS DOUBLE)), 6)
+             AS z
+         FROM st"""),
 
     // ── Empirical-Bayes rate shrinkage (beta-binomial, MoM prior) ───────
     // Per-part return rate shrunk toward the corpus prior — the estimator
@@ -208,7 +296,7 @@ object AnalyticQueries {
     // posterior mean (k+α)/(n+α+β) close in fixed IEEE chains rounded 6.
     // One keyed aggregate + the 1-row prior crossJoin — the q_mi scalar
     // pattern; nothing data-scale crosses the driver.
-    "q_eb_shrinkage" -> ((s, dir) => {
+    Query("q_eb_shrinkage", ((s, dir) => {
       val li = t(s, dir, "lineitem")
         .groupBy(col("l_partkey"))
         .agg(count(lit(1)).as("n_items"),
@@ -234,6 +322,25 @@ object AnalyticQueries {
             .as("rate_eb"))
         .orderBy("l_partkey")
     }),
+      """WITH li AS (SELECT l_partkey, CAST(count(*) AS BIGINT) AS n_items,
+             CAST(SUM(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END)
+               AS BIGINT) AS n_returns
+           FROM lineitem GROUP BY 1),
+         lr AS (SELECT *, ROUND(CAST(n_returns AS DOUBLE) / n_items, 6)
+             AS rate FROM li),
+         pri AS (SELECT CAST(count(*) AS BIGINT) AS g,
+             SUM(CAST(rate AS DECIMAL(12,6))) AS s1,
+             SUM(CAST(rate AS DECIMAL(12,6)) * CAST(rate AS DECIMAL(12,6)))
+               AS s2 FROM lr),
+         pp AS (SELECT g, CAST(s1 AS DOUBLE)/g AS m,
+             (CAST(s2 AS DOUBLE)
+               - CAST(s1 AS DOUBLE)*CAST(s1 AS DOUBLE)/g) / (g - 1) AS v
+           FROM pri),
+         pr AS (SELECT m,
+             m*(CAST(1 AS DOUBLE)-m)/v - CAST(1 AS DOUBLE) AS ab FROM pp)
+         SELECT l_partkey, n_items, n_returns, rate AS rate_raw,
+           ROUND((n_returns + m*ab) / (n_items + ab), 6) AS rate_eb
+         FROM lr CROSS JOIN pr ORDER BY l_partkey"""),
 
     // ── Session-gap sensitivity sweep (the 30-min-timeout audit) ────────
     // How session counts move with the inactivity threshold — the table
@@ -244,7 +351,7 @@ object AnalyticQueries {
     // users + gaps > g), so the sweep costs one pass regardless of
     // threshold count. Exact micros; doubles only at the events/session
     // edge.
-    "q_session_gap_sweep" -> ((s, dir) => {
+    Query("q_session_gap_sweep", ((s, dir) => {
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts"), col("event_id"))
       val us = expr("unix_micros(cast(ts as timestamp))")
@@ -266,6 +373,26 @@ object AnalyticQueries {
             .as("events_per_session"))
         .orderBy("gap_s")
     }),
+      """WITH g AS (SELECT user_id,
+            epoch_us(ts) - lag(epoch_us(ts)) OVER (PARTITION BY user_id
+              ORDER BY ts, event_id) AS gap
+          FROM events),
+         a AS (SELECT CAST(count(*) AS BIGINT) AS n_events,
+            CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
+            CAST(SUM(CASE WHEN gap > 900000000 THEN 1 ELSE 0 END)
+              AS BIGINT) AS b900,
+            CAST(SUM(CASE WHEN gap > 1800000000 THEN 1 ELSE 0 END)
+              AS BIGINT) AS b1800,
+            CAST(SUM(CASE WHEN gap > 3600000000 THEN 1 ELSE 0 END)
+              AS BIGINT) AS b3600
+          FROM g)
+         SELECT t.gap_s, t.ns AS n_sessions,
+           ROUND(CAST(a.n_events AS DOUBLE) / t.ns, 6)
+             AS events_per_session
+         FROM a, LATERAL (VALUES (900, n_users + b900),
+           (1800, n_users + b1800), (3600, n_users + b3600))
+           AS t(gap_s, ns)
+         ORDER BY t.gap_s"""),
 
     // ── Difference-in-differences (observational causal read) ───────────
     // The two-group pre/post estimator the experimentation tier lacks
@@ -277,7 +404,7 @@ object AnalyticQueries {
     // squares quantized by one deterministic double product), means and
     // variances close in fixed IEEE chains — one keyed aggregate over the
     // filtered events is all the data-scale work.
-    "q_did" -> ((s, dir) => {
+    Query("q_did", ((s, dir) => {
       val dec = "decimal(30,10)"
       val ev = Tables.events(s, dir)
         .where(col("event_type").isin("click", "view"))
@@ -312,6 +439,36 @@ object AnalyticQueries {
       one.select(round(eff, 6).as("did_effect"), round(se, 6).as("se"),
         round(eff / se, 6).as("t_stat"))
     }),
+      """WITH ev AS (SELECT (event_type = 'click') AS treated, value,
+            epoch_us(ts) // 604800000000 AS w
+          FROM events WHERE event_type IN ('click', 'view')),
+         sp AS (SELECT (min(w) + max(w)) // 2 AS wmid FROM ev),
+         cells AS (SELECT treated, (w > wmid) AS post,
+             CAST(count(*) AS BIGINT) AS n,
+             SUM(CAST(value AS DECIMAL(30,10))) AS s,
+             SUM(CAST(value * value AS DECIMAL(30,10))) AS ss
+           FROM ev CROSS JOIN sp GROUP BY 1, 2),
+         g AS (SELECT treated, post,
+             CAST(s AS DOUBLE) / n AS m,
+             ((CAST(ss AS DOUBLE)
+               - CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / n) / (n - 1)) / n
+               AS vn
+           FROM cells),
+         one AS (SELECT
+             max(CASE WHEN treated AND post THEN m END) AS mtp,
+             max(CASE WHEN treated AND NOT post THEN m END) AS mt0,
+             max(CASE WHEN NOT treated AND post THEN m END) AS mcp,
+             max(CASE WHEN NOT treated AND NOT post THEN m END) AS mc0,
+             max(CASE WHEN treated AND post THEN vn END) AS vtp,
+             max(CASE WHEN treated AND NOT post THEN vn END) AS vt0,
+             max(CASE WHEN NOT treated AND post THEN vn END) AS vcp,
+             max(CASE WHEN NOT treated AND NOT post THEN vn END) AS vc0
+           FROM g)
+         SELECT ROUND((mtp - mt0) - (mcp - mc0), 6) AS did_effect,
+           ROUND(sqrt(vtp + vt0 + vcp + vc0), 6) AS se,
+           ROUND(((mtp - mt0) - (mcp - mc0))
+             / sqrt(vtp + vt0 + vcp + vc0), 6) AS t_stat
+         FROM one"""),
 
     // ── MASE: seasonal-naive forecast accuracy per event type ───────────
     // Is yesterday-same-hour a better predictor than last-hour — the
@@ -321,7 +478,7 @@ object AnalyticQueries {
     // h₀+24 horizon, from exact integer absolute-error sums. MASE < 1 ⇒
     // daily seasonality carries real signal for that type. Bounded-type
     // ordered windows over the dense series; one divide chain per row.
-    "q_mase" -> ((s, dir) => {
+    Query("q_mase", ((s, dir) => {
       val perH = Tables.events(s, dir)
         .select(col("event_type"),
           expr("unix_micros(cast(ts as timestamp)) div 3600000000")
@@ -354,6 +511,32 @@ object AnalyticQueries {
             .as("mase"))
         .orderBy("event_type")
     }),
+      """WITH perh AS (SELECT event_type, epoch_us(ts) // 3600000000 AS h,
+            CAST(count(*) AS BIGINT) AS c
+          FROM events GROUP BY 1, 2),
+         span AS (SELECT min(h) AS h0, max(h) AS h1 FROM perh),
+         dense AS (SELECT t.event_type, s.h0, g.h, COALESCE(p.c, 0) AS c
+           FROM (SELECT DISTINCT event_type FROM perh) t
+           CROSS JOIN span s
+           CROSS JOIN (SELECT unnest(generate_series(
+             (SELECT h0 FROM span), (SELECT h1 FROM span))) AS h) g
+           LEFT JOIN perh p ON p.event_type = t.event_type AND p.h = g.h),
+         e AS (SELECT event_type, h, h0, c,
+             lag(c, 1) OVER (PARTITION BY event_type ORDER BY h) AS c1,
+             lag(c, 24) OVER (PARTITION BY event_type ORDER BY h) AS c24
+           FROM dense),
+         a AS (SELECT event_type,
+             CAST(SUM(CASE WHEN h >= h0 + 24 THEN abs(c - c1) END)
+               AS BIGINT) AS sae1,
+             CAST(SUM(CASE WHEN h >= h0 + 24 THEN abs(c - c24) END)
+               AS BIGINT) AS sae24,
+             CAST(SUM(CASE WHEN h >= h0 + 24 THEN 1 END) AS BIGINT) AS nh
+           FROM e GROUP BY 1)
+         SELECT event_type, nh AS n_hours,
+           ROUND(CAST(sae1 AS DOUBLE) / nh, 6) AS mae_naive,
+           ROUND(CAST(sae24 AS DOUBLE) / nh, 6) AS mae_seasonal,
+           ROUND(CAST(sae24 AS DOUBLE) / CAST(sae1 AS DOUBLE), 6) AS mase
+         FROM a ORDER BY event_type"""),
 
     // ── Theil–Sen robust trend of monthly revenue ───────────────────────
     // The median-of-pairwise-slopes trend estimator — immune to the
@@ -364,7 +547,7 @@ object AnalyticQueries {
     // closes via percentile (↔ quantile_cont, the q_percentiles
     // portability result). Slopes are one fixed IEEE chain each
     // (decimal diffs cast double, divided once).
-    "q_theil_sen" -> ((s, dir) => {
+    Query("q_theil_sen", ((s, dir) => {
       val m = t(s, dir, "orders")
         .groupBy(expr("unix_micros(cast(o_orderdate as timestamp))" +
           " div 2629800000000").as("m")) // 30.4375-day civil months
@@ -378,6 +561,16 @@ object AnalyticQueries {
         .crossJoin(broadcast(m.agg(count(lit(1)).as("n_months"))))
         .select(col("n_months"), col("n_pairs"), col("med_slope"))
     }),
+      """WITH m AS (SELECT epoch_us(o_orderdate) // 2629800000000 AS m,
+            SUM(CAST(o_totalprice AS DECIMAL(30,10))) AS rev
+          FROM orders GROUP BY 1),
+         p AS (SELECT CAST(b.rev - a.rev AS DOUBLE)
+             / CAST(b.m - a.m AS DOUBLE) AS slope
+           FROM m a JOIN m b ON a.m < b.m),
+         ag AS (SELECT CAST(count(*) AS BIGINT) AS n_pairs,
+           ROUND(quantile_cont(slope, 0.5), 6) AS med_slope FROM p),
+         nm AS (SELECT CAST(count(*) AS BIGINT) AS n_months FROM m)
+         SELECT n_months, n_pairs, med_slope FROM ag CROSS JOIN nm"""),
 
     // ── Mann–Kendall trend test on the same monthly series ──────────────
     // The nonparametric trend TEST next to q_theil_sen's estimate:
@@ -387,7 +580,7 @@ object AnalyticQueries {
     // continuity-corrected z in one piecewise IEEE chain. Positive z =
     // monotone growth at the chosen confidence; the seasonality-robust
     // health check a revenue dashboard runs before claiming a trend.
-    "q_mk_trend" -> ((s, dir) => {
+    Query("q_mk_trend", ((s, dir) => {
       val m = t(s, dir, "orders")
         .groupBy(expr("unix_micros(cast(o_orderdate as timestamp))" +
           " div 2629800000000").as("m"))
@@ -408,6 +601,20 @@ object AnalyticQueries {
               (col("s") + 1L).cast("double") / sqrt(varS))
             .otherwise(lit(0.0)), 6).as("z"))
     }),
+      """WITH m AS (SELECT epoch_us(o_orderdate) // 2629800000000 AS m,
+            SUM(CAST(o_totalprice AS DECIMAL(30,10))) AS rev
+          FROM orders GROUP BY 1),
+         st AS (SELECT CAST(SUM(CASE WHEN b.rev > a.rev THEN 1
+             WHEN b.rev < a.rev THEN -1 ELSE 0 END) AS BIGINT) AS s
+           FROM m a JOIN m b ON a.m < b.m),
+         nm AS (SELECT CAST(count(*) AS BIGINT) AS n FROM m)
+         SELECT n AS n_months, s,
+           ROUND(CASE WHEN s > 0 THEN CAST(s - 1 AS DOUBLE)
+               / sqrt(CAST(n*(n-1)*(2*n+5) AS DOUBLE) / CAST(18 AS DOUBLE))
+             WHEN s < 0 THEN CAST(s + 1 AS DOUBLE)
+               / sqrt(CAST(n*(n-1)*(2*n+5) AS DOUBLE) / CAST(18 AS DOUBLE))
+             ELSE CAST(0 AS DOUBLE) END, 6) AS z
+         FROM st CROSS JOIN nm"""),
 
     // ── Window: ntile quartiles per segment ─────────────────────────────
     // The bucket-assignment window (ntile) closing the ranking-family
@@ -415,7 +622,7 @@ object AnalyticQueries {
     // segment (total order via the custkey tiebreak — ntile's extra-row
     // placement is deterministic only under one), then rolled up to the
     // (segment, quartile) design table with the decimal-exact mean.
-    "q_window_ntile" -> ((s, dir) => {
+    Query("q_window_ntile", ((s, dir) => {
       val w = Window.partitionBy(col("c_mktsegment"))
         .orderBy(desc("c_acctbal"), asc("c_custkey"))
       t(s, dir, "customer")
@@ -426,6 +633,14 @@ object AnalyticQueries {
             / count(lit(1)), 6).as("avg_bal"))
         .orderBy("c_mktsegment", "quartile")
     }),
+      """WITH q AS (SELECT c_mktsegment, c_acctbal,
+            ntile(4) OVER (PARTITION BY c_mktsegment
+              ORDER BY c_acctbal DESC, c_custkey ASC) AS quartile
+          FROM customer)
+         SELECT c_mktsegment, quartile, CAST(count(*) AS BIGINT) AS n_cust,
+           ROUND(CAST(SUM(CAST(c_acctbal AS DECIMAL(28,10))) AS DOUBLE)
+             / count(*), 6) AS avg_bal
+         FROM q GROUP BY 1, 2 ORDER BY 1, 2"""),
 
     // ── Per-brand discount elasticity (grouped closed-form OLS) ─────────
     // q_ols2 fits ONE global regression; this is the grouped sibling —
@@ -435,7 +650,7 @@ object AnalyticQueries {
     // (nΣxy − ΣxΣy)/(nΣx² − (Σx)²) and the intercept close in fixed IEEE
     // chains rounded 6. One keyed part join (brand is part-side metadata)
     // + one keyed aggregate — the scan cost IS the query.
-    "q_price_elasticity" -> ((s, dir) => {
+    Query("q_price_elasticity", ((s, dir) => {
       val x = col("l_discount").cast("decimal(12,6)")
       val y = col("l_quantity").cast("decimal(12,2)")
       val g = t(s, dir, "lineitem")
@@ -457,6 +672,25 @@ object AnalyticQueries {
             .as("intercept"))
         .orderBy("p_brand")
     }),
+      """WITH g AS (SELECT p.p_brand, CAST(count(*) AS BIGINT) AS n,
+            SUM(CAST(l_discount AS DECIMAL(12,6))) AS sx,
+            SUM(CAST(l_quantity AS DECIMAL(12,2))) AS sy,
+            SUM(CAST(CAST(l_discount AS DECIMAL(12,6))
+              * CAST(l_quantity AS DECIMAL(12,2)) AS DECIMAL(28,10)))
+              AS sxy,
+            SUM(CAST(CAST(l_discount AS DECIMAL(12,6))
+              * CAST(l_discount AS DECIMAL(12,6)) AS DECIMAL(28,10)))
+              AS sxx
+          FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
+          GROUP BY 1)
+         SELECT p_brand, n,
+           ROUND(CAST(n*sxy - sx*sy AS DOUBLE)
+             / CAST(n*sxx - sx*sx AS DOUBLE), 6) AS slope,
+           ROUND((CAST(sy AS DOUBLE)
+             - (CAST(n*sxy - sx*sy AS DOUBLE)
+                / CAST(n*sxx - sx*sx AS DOUBLE)) * CAST(sx AS DOUBLE))
+             / n, 6) AS intercept
+         FROM g ORDER BY p_brand"""),
 
     // ── Hill tail-index estimator (how heavy is the heavy tail) ─────────
     // The power-law exponent of customer revenue from the top-k order
@@ -466,7 +700,7 @@ object AnalyticQueries {
     // dashboards and uniform samplers break. The top-(k+1) cut is a
     // TakeOrdered (k-row, no global sort); the reference quantile rides
     // a 1-row crossJoin; ln terms quantize DECIMAL(30,10) before the sum.
-    "q_hill_tail" -> ((s, dir) => {
+    Query("q_hill_tail", ((s, dir) => {
       val k = 100
       val top = t(s, dir, "orders")
         .groupBy(col("o_custkey"))
@@ -491,6 +725,26 @@ object AnalyticQueries {
           round(col("xref"), 4).as("x_kplus1"),
           round(col("k").cast("double") / col("s"), 6).as("hill_alpha"))
     }),
+      """WITH cust AS (
+           SELECT o_custkey,
+             CAST(SUM(CAST(o_totalprice AS DECIMAL(28,10))) AS DOUBLE) AS x
+           FROM orders GROUP BY 1),
+         top AS (
+           SELECT o_custkey, x FROM cust
+           ORDER BY x DESC, o_custkey LIMIT 101),
+         ranked AS (
+           SELECT x, row_number() OVER (ORDER BY x DESC, o_custkey) AS rn
+           FROM top),
+         ref AS (SELECT x AS xref FROM ranked WHERE rn = 101),
+         s AS (
+           SELECT CAST(count(*) AS BIGINT) AS k,
+             CAST(SUM(CAST(ln(x / xref) AS DECIMAL(30,10))) AS DOUBLE)
+               AS s,
+             xref
+           FROM ranked, ref WHERE rn <= 100 GROUP BY xref)
+         SELECT k, ROUND(xref, 4) AS x_kplus1,
+           ROUND(CAST(k AS DOUBLE) / s, 6) AS hill_alpha
+         FROM s"""),
 
     // ── Conditional transition entropy (how predictable is behavior) ────
     // H(next event type | current) over per-user event bigrams, next to
@@ -499,7 +753,7 @@ object AnalyticQueries {
     // q_markov_chain's raw matrix. Transitions from one user-keyed lead()
     // window; cells are ≤ types² rows; per-cell −(c/N)·ln(c/tot) terms
     // quantize DECIMAL(30,10); totals ride 1-row crossJoins.
-    "q_transition_entropy" -> ((s, dir) => {
+    Query("q_transition_entropy", ((s, dir) => {
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts_us"), col("event_id"))
       val cells = Tables.events(s, dir)
@@ -531,6 +785,37 @@ object AnalyticQueries {
           round(col("h_marg"), 6).as("h_marg"),
           round(col("h_marg") - col("h_cond"), 6).as("info_gain"))
     }),
+      """WITH e AS (
+           SELECT user_id, event_id, event_type,
+             CAST(epoch_us(ts) AS BIGINT) AS ts_us
+           FROM events),
+         p AS (
+           SELECT event_type AS cur,
+             lead(event_type) OVER (PARTITION BY user_id
+                                    ORDER BY ts_us, event_id) AS nxt
+           FROM e),
+         cells AS (
+           SELECT cur, nxt, CAST(count(*) AS BIGINT) AS c
+           FROM p WHERE nxt IS NOT NULL GROUP BY 1, 2),
+         ct AS (SELECT cur, CAST(SUM(c) AS BIGINT) AS tc
+                FROM cells GROUP BY 1),
+         nt AS (SELECT nxt, CAST(SUM(c) AS BIGINT) AS tn
+                FROM cells GROUP BY 1),
+         tot AS (SELECT CAST(SUM(c) AS BIGINT) AS n FROM cells),
+         hc AS (
+           SELECT CAST(SUM(CAST(0.0 - CAST(c AS DOUBLE) / n
+               * ln(CAST(c AS DOUBLE) / tc) AS DECIMAL(30,10))) AS DOUBLE)
+             AS h_cond
+           FROM cells JOIN ct USING (cur) CROSS JOIN tot),
+         hm AS (
+           SELECT CAST(SUM(CAST(0.0 - CAST(tn AS DOUBLE) / n
+               * ln(CAST(tn AS DOUBLE) / n) AS DECIMAL(30,10))) AS DOUBLE)
+             AS h_marg
+           FROM nt CROSS JOIN tot)
+         SELECT n AS n_transitions, ROUND(h_cond, 6) AS h_cond,
+           ROUND(h_marg, 6) AS h_marg,
+           ROUND(h_marg - h_cond, 6) AS info_gain
+         FROM tot, hc, hm"""),
 
     // ── Gaps-and-islands: consecutive-active-day streaks ────────────────
     // The classic islands pattern (and the engagement metric behind
@@ -539,7 +824,7 @@ object AnalyticQueries {
     // a run, strictly decreasing across a gap — then the corpus-wide
     // streak-length histogram. Day indices are exact epoch-day int64;
     // the only window is user-keyed; output is ≤ max-streak rows.
-    "q_streaks" -> ((s, dir) => {
+    Query("q_streaks", ((s, dir) => {
       val days = Tables.events(s, dir)
         .select(col("user_id"),
           expr("unix_micros(cast(ts as timestamp)) div 86400000000")
@@ -556,6 +841,19 @@ object AnalyticQueries {
           count_distinct(col("user_id")).as("n_users"))
         .orderBy("len")
     }),
+      """WITH days AS (
+           SELECT DISTINCT user_id, epoch_us(ts) // 86400000000 AS d
+           FROM events),
+         runs AS (
+           SELECT user_id, d - row_number() OVER (PARTITION BY user_id
+             ORDER BY d) AS isl
+           FROM days),
+         lens AS (
+           SELECT user_id, isl, CAST(count(*) AS BIGINT) AS len
+           FROM runs GROUP BY 1, 2)
+         SELECT len, CAST(count(*) AS BIGINT) AS n_streaks,
+           CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
+         FROM lens GROUP BY len ORDER BY len"""),
 
     // ── Calendar-aligned growth (MoM / YoY) ─────────────────────────────
     // The report every revenue dashboard opens with: monthly revenue next
@@ -566,7 +864,7 @@ object AnalyticQueries {
     // the month relation is aggregate-scale, so the joins broadcast at
     // any corpus size. Revenue sums decimal-exact; the pct chains are one
     // double expression from the exact sums, rounded at the edge.
-    "q_yoy" -> ((s, dir) => {
+    Query("q_yoy", ((s, dir) => {
       val m = tn(s, dir, "orders")
         .groupBy((year(col("o_orderdate")) * 12 + month(col("o_orderdate"))
           - 1).as("mix"))
@@ -587,6 +885,21 @@ object AnalyticQueries {
         .orderBy("mix")
         .drop("mix")
     }),
+      """WITH m AS (
+           SELECT year(o_orderdate) * 12 + month(o_orderdate) - 1 AS mix,
+             sum(CAST(o_totalprice AS DECIMAL(28,10))) AS rev
+           FROM orders GROUP BY 1)
+         SELECT CAST(c.mix // 12 AS INT) AS o_year,
+           CAST(c.mix % 12 + 1 AS INT) AS o_month,
+           ROUND(CAST(c.rev AS DOUBLE), 4) AS revenue,
+           ROUND((CAST(c.rev AS DOUBLE) / CAST(p.rev AS DOUBLE) - 1) * 100,
+             4) AS mom_pct,
+           ROUND((CAST(c.rev AS DOUBLE) / CAST(y.rev AS DOUBLE) - 1) * 100,
+             4) AS yoy_pct
+         FROM m c
+         JOIN m p ON c.mix = p.mix + 1
+         JOIN m y ON c.mix = y.mix + 12
+         ORDER BY c.mix"""),
 
     // ── SCD2 history build (validity intervals from an event stream) ────
     // The warehouse dimension-history derivation: per user, collapse the
@@ -595,7 +908,7 @@ object AnalyticQueries {
     // change relation; the open row (valid_to NULL) is current. Two
     // windows over the same (ts, event_id)-pinned per-user order — one
     // exchange on user_id. Bounded to user_id < 20 for the gate output.
-    "q_scd2" -> ((s, dir) => {
+    Query("q_scd2", ((s, dir) => {
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts"), col("event_id"))
       val changes = Tables.events(s, dir).where(col("user_id") < 20)
@@ -610,6 +923,20 @@ object AnalyticQueries {
           col("valid_to_raw").isNull.as("is_current"))
         .orderBy("user_id", "valid_from")
     }),
+      """WITH c AS (
+           SELECT user_id, ts, event_id, event_type,
+             lag(event_type) OVER (PARTITION BY user_id
+                                   ORDER BY ts, event_id) AS prev
+           FROM events WHERE user_id < 20),
+         ch AS (
+           SELECT user_id, ts, event_id, event_type FROM c
+           WHERE prev IS NULL OR prev <> event_type)
+         SELECT user_id, event_type AS state, ts AS valid_from,
+           lead(ts) OVER (PARTITION BY user_id
+                          ORDER BY ts, event_id) AS valid_to,
+           lead(ts) OVER (PARTITION BY user_id
+                          ORDER BY ts, event_id) IS NULL AS is_current
+         FROM ch ORDER BY user_id, valid_from"""),
 
     // ── Incremental view maintenance: merge(agg(old), agg(new)) ─────────
     // The day-partitioned rollup identity (Ivm.mergeAggregates): aggregate
@@ -617,7 +944,7 @@ object AnalyticQueries {
     // oracle computes the DIRECT full aggregate, so the gate is the
     // cross-engine proof the incremental path answers exactly the batch
     // question. Sums ride as decimals (additive-exact), min/max combine.
-    "q_ivm_merge" -> ((s, dir) => {
+    Query("q_ivm_merge", ((s, dir) => {
       val ev = Tables.events(s, dir).select(col("event_type"),
         date_trunc("day", col("ts")).cast("timestamp_ntz").as("day"),
         col("value"))
@@ -637,13 +964,20 @@ object AnalyticQueries {
           col("min_v"), col("max_v"))
         .orderBy("event_type", "day")
     }),
+      // the DIRECT full aggregate — merged partials must equal it exactly
+      """SELECT event_type, CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
+           count(*) AS cnt,
+           ROUND(CAST(SUM(CAST(value AS DECIMAL(28,10))) AS DOUBLE), 4)
+             AS sum_value,
+           min(value) AS min_v, max(value) AS max_v
+         FROM events GROUP BY 1, 2 ORDER BY event_type, day"""),
 
     // ── Hourly event-volume anomalies (ops-monitoring member) ───────────
     // Per event type, each hour's count robust-z-scored against the
     // type's median/MAD (q_outliers' portable percentile pair, applied to
     // a time series) — the "did ingestion hiccup at 3am" table. Hourly
     // counts are a group-count relation; everything after runs on it.
-    "q_events_anomaly" -> ((s, dir) => {
+    Query("q_events_anomaly", ((s, dir) => {
       val hourly = Tables.events(s, dir)
         .groupBy(col("event_type"),
           date_trunc("hour", col("ts")).cast("timestamp_ntz").as("hour"))
@@ -655,6 +989,30 @@ object AnalyticQueries {
           col("z"), col("is_outlier"))
         .orderBy("event_type", "hour")
     }),
+      // the q_outliers median/MAD mirror over per-type hourly counts
+      """WITH hourly AS (
+            SELECT event_type, date_trunc('hour', ts) AS hour,
+              CAST(count(*) AS DOUBLE) AS x
+            FROM events GROUP BY 1, 2),
+          med AS (
+            SELECT event_type, ROUND(quantile_cont(x, 0.5), 6) AS med
+            FROM hourly GROUP BY 1),
+          dev AS (
+            SELECT h.event_type, h.hour, h.x, m.med,
+              ABS(h.x - m.med) AS adev
+            FROM hourly h JOIN med m USING (event_type)),
+          mad AS (
+            SELECT event_type, ROUND(quantile_cont(adev, 0.5), 6) AS mad
+            FROM dev GROUP BY 1),
+          z AS (
+            SELECT d.hour, d.event_type, d.x, d.med, m.mad,
+              CASE WHEN m.mad = 0 THEN NULL
+                   ELSE ROUND((d.x - d.med) / (1.4826 * m.mad), 6)
+              END AS z
+            FROM dev d JOIN mad m USING (event_type))
+          SELECT hour, event_type, CAST(x AS BIGINT) AS n_events, med, mad,
+            z, COALESCE(ABS(z) > 3, FALSE) AS is_outlier
+          FROM z ORDER BY event_type, hour"""),
     // ── Time-weighted average value (TWAP) per event type ───────────────
     // The temporal mean that matters when observations mark STATE CHANGES
     // rather than samples: each event's value holds until the user's next
@@ -666,7 +1024,7 @@ object AnalyticQueries {
     // DECIMAL(30,6) so the sums are shuffle-order-exact. One window + one
     // aggregate; at 100 TB the user-keyed window is the only data-scale
     // exchange.
-    "q_twap" -> ((s, dir) => {
+    Query("q_twap", ((s, dir) => {
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts_us"), col("event_id"))
       val dec = "decimal(30,6)"
@@ -687,12 +1045,31 @@ object AnalyticQueries {
           round(col("sw") / lit(1000000.0), 4).as("value_seconds"))
         .orderBy("event_type")
     }),
+      """WITH e AS (
+           SELECT user_id, event_id, event_type, value,
+             epoch_us(ts) AS ts_us
+           FROM events),
+         d AS (
+           SELECT event_type, value,
+             lead(ts_us) OVER (PARTITION BY user_id
+                               ORDER BY ts_us, event_id) - ts_us AS dt_us
+           FROM e)
+         SELECT event_type, CAST(count(*) AS BIGINT) AS n_intervals,
+           CAST(SUM(dt_us) AS BIGINT) AS dur_us,
+           ROUND(CAST(SUM(CAST(value * CAST(dt_us AS DOUBLE)
+                 AS DECIMAL(30,6))) AS DOUBLE)
+             / CAST(SUM(dt_us) AS DOUBLE), 6) AS twap,
+           ROUND(CAST(SUM(CAST(value * CAST(dt_us AS DOUBLE)
+                 AS DECIMAL(30,6))) AS DOUBLE) / 1000000.0, 4)
+             AS value_seconds
+         FROM d WHERE dt_us IS NOT NULL
+         GROUP BY 1 ORDER BY event_type"""),
 
     // Batch session windows (gap 10 min) — DuckDB has no session_window, so
     // the oracle derives sessions relationally (lag → new-session flag →
     // running sum as session id), which also documents the semantics:
     // a gap ≥ the timeout starts a new session; window end = last ts + gap.
-    "q_sessions" -> ((s, dir) =>
+    Query("q_sessions", ((s, dir) =>
       Tables.events(s, dir)
         .groupBy(session_window(col("ts"), "10 minutes").as("s"), col("user_id"))
         .agg(count(lit(1)).as("n_events"))
@@ -701,6 +1078,23 @@ object AnalyticQueries {
           col("s.end").cast("timestamp_ntz").as("session_end"),
           col("n_events"))
         .orderBy("user_id", "session_start")),
+      """WITH x AS (
+           SELECT user_id, ts,
+             CASE WHEN lag(ts) OVER w IS NULL
+                    OR ts - lag(ts) OVER w >= INTERVAL 10 MINUTE
+                  THEN 1 ELSE 0 END AS new_s
+           FROM events
+           WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
+         y AS (
+           SELECT user_id, ts,
+             SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts
+                              ROWS UNBOUNDED PRECEDING) AS sid
+           FROM x)
+         SELECT user_id, min(ts) AS session_start,
+           max(ts) + INTERVAL 10 MINUTE AS session_end,
+           count(*) AS n_events
+         FROM y GROUP BY user_id, sid
+         ORDER BY user_id, session_start"""),
 
     // ── Interval-overlap join: sessions × error-burst windows ───────────
     // The third temporal-join family member (IntervalJoin.overlapJoin,
@@ -710,7 +1104,7 @@ object AnalyticQueries {
     // interval sides are real derived relations, Catalyst broadcasts the
     // small one by size. overlap_secs is the exact micros/1e6 division —
     // identical IEEE op in both engines, no rounding needed.
-    "q_interval_join" -> ((s, dir) => {
+    Query("q_interval_join", ((s, dir) => {
       val ev = Tables.events(s, dir)
       val sess = ev
         .groupBy(session_window(col("ts"), "10 minutes").as("s"), col("user_id"))
@@ -732,6 +1126,40 @@ object AnalyticQueries {
           col("n_errors"), col("overlap_secs"))
         .orderBy("user_id", "session_start", "w_start")
     }),
+      // Sessions CTE shared verbatim with q_sessions (the gate that proves
+      // the relational derivation equals session_window); the overlap join
+      // itself is the plain range predicate — the engine's binning is an
+      // execution strategy, not a semantic.
+      """WITH x AS (
+           SELECT user_id, ts,
+             CASE WHEN lag(ts) OVER w IS NULL
+                    OR ts - lag(ts) OVER w >= INTERVAL 10 MINUTE
+                  THEN 1 ELSE 0 END AS new_s
+           FROM events
+           WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
+         y AS (
+           SELECT user_id, ts,
+             SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts
+                              ROWS UNBOUNDED PRECEDING) AS sid
+           FROM x),
+         sess AS (
+           SELECT user_id, min(ts) AS session_start,
+             max(ts) + INTERVAL 10 MINUTE AS session_end
+           FROM y GROUP BY user_id, sid),
+         bursts AS (
+           SELECT date_trunc('hour', ts) AS w_start,
+             date_trunc('hour', ts) + INTERVAL 1 HOUR AS w_end,
+             count(*) AS n_errors
+           FROM events WHERE event_type = 'error'
+           GROUP BY 1 HAVING count(*) >= 7)
+         SELECT s.user_id, s.session_start, s.session_end, b.w_start,
+           b.n_errors,
+           (epoch_us(least(s.session_end, b.w_end))
+            - epoch_us(greatest(s.session_start, b.w_start))) / 1000000.0
+             AS overlap_secs
+         FROM sess s JOIN bursts b
+           ON s.session_start < b.w_end AND b.w_start < s.session_end
+         ORDER BY s.user_id, s.session_start, b.w_start"""),
 
     // ── Per-user burst coverage (interval-algebra rollup) ───────────────
     // The aggregation half of the interval family: what fraction of each
@@ -740,7 +1168,7 @@ object AnalyticQueries {
     // the output edge), overlap segments disjoint because burst windows
     // are disjoint hours. Sessions relation persisted: the coverage and
     // total legs both read it.
-    "q_burst_coverage" -> ((s, dir) => {
+    Query("q_burst_coverage", ((s, dir) => {
       val ev = Tables.events(s, dir)
       val sess = ev
         .groupBy(session_window(col("ts"), "10 minutes").as("s"), col("user_id"))
@@ -775,13 +1203,60 @@ object AnalyticQueries {
             / col("sess_us"), 6).as("coverage"))
         .orderBy("user_id")
     }),
+      // sessions CTE shared with q_sessions/q_interval_join; exact micros
+      // (epoch_us) throughout, seconds only at the output edge.
+      """WITH x AS (
+           SELECT user_id, ts,
+             CASE WHEN lag(ts) OVER w IS NULL
+                    OR ts - lag(ts) OVER w >= INTERVAL 10 MINUTE
+                  THEN 1 ELSE 0 END AS new_s
+           FROM events
+           WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
+         y AS (
+           SELECT user_id, ts,
+             SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts
+                              ROWS UNBOUNDED PRECEDING) AS sid
+           FROM x),
+         sess AS (
+           SELECT user_id, min(ts) AS session_start,
+             max(ts) + INTERVAL 10 MINUTE AS session_end
+           FROM y GROUP BY user_id, sid),
+         bursts AS (
+           SELECT date_trunc('hour', ts) AS w_start,
+             date_trunc('hour', ts) + INTERVAL 1 HOUR AS w_end
+           FROM events WHERE event_type = 'error'
+           GROUP BY 1 HAVING count(*) >= 7),
+         ov AS (
+           SELECT s.user_id,
+             epoch_us(least(s.session_end, b.w_end))
+               - epoch_us(greatest(s.session_start, b.w_start)) AS ov_us
+           FROM sess s JOIN bursts b
+             ON s.session_start < b.w_end AND b.w_start < s.session_end),
+         ovu AS (
+           SELECT user_id, count(*) AS n_overlaps,
+             CAST(sum(ov_us) AS BIGINT) AS ov_us
+           FROM ov GROUP BY 1),
+         tot AS (
+           SELECT user_id, count(*) AS n_sessions,
+             CAST(sum(epoch_us(session_end) - epoch_us(session_start))
+               AS BIGINT) AS sess_us
+           FROM sess GROUP BY 1)
+         SELECT t.user_id, t.n_sessions,
+           COALESCE(o.n_overlaps, 0) AS n_overlaps,
+           ROUND(CAST(t.sess_us AS DOUBLE) / 1000000.0, 6) AS sess_secs,
+           ROUND(CAST(COALESCE(o.ov_us, 0) AS DOUBLE) / 1000000.0, 6)
+             AS ov_secs,
+           ROUND(CAST(COALESCE(o.ov_us, 0) AS DOUBLE) / t.sess_us, 6)
+             AS coverage
+         FROM tot t LEFT JOIN ovu o USING (user_id)
+         ORDER BY user_id"""),
 
     // ── Ordered funnel: signup → first later click → first later purchase
     // Per-user staged conversion — the event-sequencing query a product
     // warehouse runs constantly. Two conditional-min aggregations chained
     // through left joins (each stage's timestamp must be strictly after
     // the previous stage's); stage = how far the user got (1–3).
-    "q_funnel" -> ((s, dir) => {
+    Query("q_funnel", ((s, dir) => {
       val ev = Tables.events(s, dir)
       val su = ev.where(col("event_type") === "signup")
         .groupBy(col("user_id")).agg(min(col("ts")).as("signup_ts"))
@@ -801,12 +1276,31 @@ object AnalyticQueries {
             + when(col("purchase_ts").isNotNull, 1).otherwise(0)).as("stage"))
         .orderBy("user_id")
     }),
+      """WITH su AS (
+           SELECT user_id, min(ts) AS signup_ts FROM events
+           WHERE event_type = 'signup' GROUP BY 1),
+         c AS (
+           SELECT su.user_id, su.signup_ts,
+             min(CASE WHEN e.ts > su.signup_ts THEN e.ts END) AS click_ts
+           FROM su LEFT JOIN events e
+             ON e.user_id = su.user_id AND e.event_type = 'click'
+           GROUP BY 1, 2),
+         p AS (
+           SELECT c.user_id, c.signup_ts, c.click_ts,
+             min(CASE WHEN e.ts > c.click_ts THEN e.ts END) AS purchase_ts
+           FROM c LEFT JOIN events e
+             ON e.user_id = c.user_id AND e.event_type = 'purchase'
+           GROUP BY 1, 2, 3)
+         SELECT user_id, signup_ts, click_ts, purchase_ts,
+           1 + CASE WHEN click_ts IS NOT NULL THEN 1 ELSE 0 END
+             + CASE WHEN purchase_ts IS NOT NULL THEN 1 ELSE 0 END AS stage
+         FROM p ORDER BY user_id"""),
 
     // ── DAU/WAU stickiness (product-analytics staple) ───────────────────
     // Per calendar week: weekly actives, average daily actives, and the
     // DAU/WAU stickiness ratio. Daily/weekly distincts are two keyed
     // aggregates; the weekly average runs over the ≤7-row day counts.
-    "q_dau_wau" -> ((s, dir) => {
+    Query("q_dau_wau", ((s, dir) => {
       val ev = Tables.events(s, dir).select(
         date_trunc("week", col("ts")).cast("timestamp_ntz").as("week"),
         date_trunc("day", col("ts")).cast("timestamp_ntz").as("day"),
@@ -826,6 +1320,25 @@ object AnalyticQueries {
           col("stickiness"))
         .orderBy("week")
     }),
+      """WITH e AS (
+           SELECT CAST(date_trunc('week', ts) AS TIMESTAMP) AS week,
+             CAST(date_trunc('day', ts) AS TIMESTAMP) AS day, user_id
+           FROM events),
+         dau AS (
+           SELECT week, day, count(DISTINCT user_id) AS dau
+           FROM e GROUP BY 1, 2),
+         wau AS (
+           SELECT week, count(DISTINCT user_id) AS wau
+           FROM e GROUP BY 1),
+         wk AS (
+           SELECT week, count(*) AS n_days,
+             ROUND(CAST(SUM(CAST(dau AS DECIMAL(28,10))) AS DOUBLE)
+               / count(*), 6) AS avg_dau
+           FROM dau GROUP BY 1)
+         SELECT wk.week, wk.n_days, wk.avg_dau, wau.wau,
+           ROUND(wk.avg_dau / wau.wau, 6) AS stickiness
+         FROM wk JOIN wau USING (week)
+         ORDER BY week"""),
 
     // ── RFM quintile segmentation (the classic customer cube) ───────────
     // Per customer: recency (days from last order to the corpus max
@@ -833,7 +1346,7 @@ object AnalyticQueries {
     // each ntile(5)-scored over a tie-pinned total order; segment counts
     // per (r, f, m) cell. Three windows over the customer-count relation
     // + one rollup — nothing fact-scale after the first aggregate.
-    "q_rfm" -> ((s, dir) => {
+    Query("q_rfm", ((s, dir) => {
       val o = t(s, dir, "orders")
       val maxD = o.agg(max(col("o_orderdate")).as("max_d"))
       val per = o.groupBy(col("o_custkey"))
@@ -859,11 +1372,32 @@ object AnalyticQueries {
         .agg(count(lit(1)).as("n_customers"))
         .orderBy("r_q", "f_q", "m_q")
     }),
+      """WITH per AS (
+           SELECT o_custkey, max(o_orderdate) AS last_d,
+             count(*) AS freq,
+             ROUND(CAST(SUM(CAST(o_totalprice AS DECIMAL(28,10)))
+               AS DOUBLE), 4) AS monetary
+           FROM orders GROUP BY 1),
+         mx AS (SELECT max(o_orderdate) AS max_d FROM orders),
+         rfm AS (
+           SELECT o_custkey,
+             date_diff('day', CAST(last_d AS DATE), CAST(max_d AS DATE))
+               AS recency,
+             freq, monetary
+           FROM per CROSS JOIN mx),
+         scored AS (
+           SELECT o_custkey,
+             ntile(5) OVER (ORDER BY recency ASC, o_custkey ASC) AS r_q,
+             ntile(5) OVER (ORDER BY freq DESC, o_custkey ASC) AS f_q,
+             ntile(5) OVER (ORDER BY monetary DESC, o_custkey ASC) AS m_q
+           FROM rfm)
+         SELECT r_q, f_q, m_q, count(*) AS n_customers
+         FROM scored GROUP BY 1, 2, 3 ORDER BY r_q, f_q, m_q"""),
 
     // ── Weekly cohort retention matrix ──────────────────────────────────
     // cohort week (user's first event) × activity week → distinct users:
     // the classic retention triangle. Two aggregations + one keyed join.
-    "q_cohort" -> ((s, dir) => {
+    Query("q_cohort", ((s, dir) => {
       val ev = Tables.events(s, dir)
       val first = ev.groupBy(col("user_id"))
         .agg(date_trunc("week", min(col("ts"))).cast("timestamp_ntz")
@@ -876,9 +1410,19 @@ object AnalyticQueries {
         .agg(count(lit(1)).as("n_users"))
         .orderBy("cohort_week", "week")
     }),
+      """WITH f AS (
+           SELECT user_id, date_trunc('week', min(ts)) AS cohort_week
+           FROM events GROUP BY 1),
+         a AS (
+           SELECT DISTINCT user_id, date_trunc('week', ts) AS week
+           FROM events)
+         SELECT CAST(f.cohort_week AS TIMESTAMP) AS cohort_week,
+           CAST(a.week AS TIMESTAMP) AS week, count(*) AS n_users
+         FROM f JOIN a ON f.user_id = a.user_id
+         GROUP BY 1, 2 ORDER BY cohort_week, week"""),
 
     // ── JSON (get_json_object + from_json) ──────────────────────────────
-    "q_events_props" -> ((s, dir) =>
+    Query("q_events_props", ((s, dir) =>
       t(s, dir, "events")
         .select(
           get_json_object(col("props"), "$.k").cast(IntegerType).as("k_path"),
@@ -889,9 +1433,13 @@ object AnalyticQueries {
         .groupBy(col("k_path"), col("k_struct"))
         .agg(count(lit(1)).as("cnt"), Exact.roundSum(col("value")).as("sum_value"))
         .orderBy("k_path")),
+      s"""SELECT CAST(json_extract_string(props, '$$.k') AS INT) AS k_path,
+            CAST(json_extract_string(props, '$$.k') AS INT) AS k_struct,
+            count(*) AS cnt, ${oSum("value", "sum_value")}
+          FROM events GROUP BY 1, 2 ORDER BY k_path"""),
 
     // ── Array functions over tokenized text ─────────────────────────────
-    "q_array_fns" -> ((s, dir) => {
+    Query("q_array_fns", ((s, dir) => {
       val toks = graft.tok.Tokenizer.lowerTokens(col("text"))
       // try_element_at: ANSI mode errors on out-of-bounds element_at, but a
       // zero-token doc must yield NULL (= the oracle's list[1] on empty)
@@ -903,9 +1451,19 @@ object AnalyticQueries {
           try_element_at(sort_array(toks, asc = false), lit(1)).as("last_token"))
         .orderBy("doc_id")
     }),
+      s"""SELECT doc_id,
+            CAST(len(toks) AS INT) AS n_tokens,
+            CAST(len(list_distinct(toks)) AS INT) AS n_distinct,
+            list_sort(toks)[1] AS first_token,
+            list_sort(toks)[-1] AS last_token
+          FROM (SELECT doc_id,
+                  list_filter(string_split_regex(lower(text), '$Re'),
+                              x -> x <> '') AS toks
+                FROM documents)
+          ORDER BY doc_id"""),
 
     // ── String functions ────────────────────────────────────────────────
-    "q_string_fns" -> ((s, dir) =>
+    Query("q_string_fns", ((s, dir) =>
       t(s, dir, "part")
         .select(col("p_partkey"),
           upper(col("p_name")).as("uname"),
@@ -915,6 +1473,13 @@ object AnalyticQueries {
           concat_ws("/", col("p_type"), col("p_brand")).as("type_brand"),
           regexp_replace(col("p_name"), "[aeiou]", "_").as("devoweled"))
         .orderBy("p_partkey")),
+      """SELECT p_partkey, upper(p_name) AS uname,
+            substring(p_name, 1, 4) AS prefix,
+            CAST(length(p_name) AS INT) AS len,
+            CAST(regexp_extract(p_brand, '[0-9]+') AS INT) AS brand_num,
+            concat_ws('/', p_type, p_brand) AS type_brand,
+            regexp_replace(p_name, '[aeiou]', '_', 'g') AS devoweled
+         FROM part ORDER BY p_partkey"""),
 
     // ── Math functions ──────────────────────────────────────────────────
     // Plain Tables.table, NOT the widened parTable scan: this is the one
@@ -926,7 +1491,7 @@ object AnalyticQueries {
     // order and flips the hash with identical row multisets (caught by
     // the r18 oracle sweep: 14k misaligned positions, multiset diff 0).
     // Single unsplittable scan → sort keeps both engines in file order.
-    "q_math_fns" -> ((s, dir) =>
+    Query("q_math_fns", ((s, dir) =>
       Tables.table(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_linenumber"),
           round(sqrt(col("l_extendedprice")), 6).as("sqrt_price"),
@@ -936,6 +1501,14 @@ object AnalyticQueries {
           abs(col("l_discount") - lit(0.05)).as("abs_disc"),
           pmod(col("l_orderkey"), lit(97L)).as("key_mod"))
         .orderBy("l_orderkey", "l_linenumber")),
+      """SELECT l_orderkey, l_linenumber,
+            ROUND(sqrt(l_extendedprice), 6) AS sqrt_price,
+            ROUND(ln(l_extendedprice + 1.0), 6) AS ln_price,
+            CAST(ceil(l_quantity / 7.0) AS BIGINT) AS qty_ceil,
+            CAST(floor(l_quantity / 7.0) AS BIGINT) AS qty_floor,
+            abs(l_discount - 0.05) AS abs_disc,
+            l_orderkey % 97 AS key_mod
+         FROM lineitem ORDER BY l_orderkey, l_linenumber"""),
 
     // ── Portable Pearson correlation via decimal moment sums ────────────
     // Built-in corr() accumulates covariance in shuffle order (engine- and
@@ -944,7 +1517,7 @@ object AnalyticQueries {
     // double expression — r is bit-identical at any partitioning and the
     // oracle replays the same formula. x·y multiplies in double BEFORE
     // the decimal cast (the q_doc_entropy portable weighted-sum shape).
-    "q_corr" -> ((s, dir) => {
+    Query("q_corr", ((s, dir) => {
       val dec = "decimal(30,10)"
       t(s, dir, "lineitem")
         .groupBy(col("l_returnflag"))
@@ -964,13 +1537,30 @@ object AnalyticQueries {
             .as("r"))
         .orderBy("l_returnflag")
     }),
+      """WITH m AS (
+            SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n,
+              CAST(SUM(CAST(l_quantity AS DECIMAL(30,10))) AS DOUBLE) AS sx,
+              CAST(SUM(CAST(l_extendedprice AS DECIMAL(30,10))) AS DOUBLE)
+                AS sy,
+              CAST(SUM(CAST(l_quantity * l_extendedprice AS DECIMAL(30,10)))
+                   AS DOUBLE) AS sxy,
+              CAST(SUM(CAST(l_quantity * l_quantity AS DECIMAL(30,10)))
+                   AS DOUBLE) AS sxx,
+              CAST(SUM(CAST(l_extendedprice * l_extendedprice
+                            AS DECIMAL(30,10))) AS DOUBLE) AS syy
+            FROM lineitem GROUP BY l_returnflag)
+          SELECT l_returnflag, n,
+            ROUND((CAST(n AS DOUBLE) * sxy - sx * sy)
+                  / (sqrt(CAST(n AS DOUBLE) * sxx - sx * sx)
+                     * sqrt(CAST(n AS DOUBLE) * syy - sy * sy)), 6) AS r
+          FROM m ORDER BY l_returnflag"""),
 
     // ── Per-group OLS regression (slope/intercept) ──────────────────────
     // Least-squares fit of price on quantity from the same five decimal
     // moment sums as q_corr — the portable sibling of regr_slope/
     // regr_intercept (whose built-in accumulation is shuffle-order-
     // dependent). slope = (nΣxy−ΣxΣy)/(nΣxx−Σx²); b = (Σy−slope·Σx)/n.
-    "q_regression" -> ((s, dir) => {
+    Query("q_regression", ((s, dir) => {
       val dec = "decimal(30,10)"
       t(s, dir, "lineitem")
         .groupBy(col("l_returnflag"))
@@ -990,6 +1580,25 @@ object AnalyticQueries {
             / col("n").cast("double"), 6).as("intercept"))
         .orderBy("l_returnflag")
     }),
+      // the unrounded slope feeds the intercept on both sides (rounding it
+      // first would double-round the composite)
+      """WITH m AS (
+            SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n,
+              CAST(SUM(CAST(l_quantity AS DECIMAL(30,10))) AS DOUBLE) AS sx,
+              CAST(SUM(CAST(l_extendedprice AS DECIMAL(30,10))) AS DOUBLE)
+                AS sy,
+              CAST(SUM(CAST(l_quantity * l_extendedprice AS DECIMAL(30,10)))
+                   AS DOUBLE) AS sxy,
+              CAST(SUM(CAST(l_quantity * l_quantity AS DECIMAL(30,10)))
+                   AS DOUBLE) AS sxx
+            FROM lineitem GROUP BY l_returnflag),
+          k AS (
+            SELECT *, (CAST(n AS DOUBLE) * sxy - sx * sy)
+                      / (CAST(n AS DOUBLE) * sxx - sx * sx) AS slope
+            FROM m)
+          SELECT l_returnflag, n, ROUND(slope, 6) AS slope,
+            ROUND((sy - slope * sx) / CAST(n AS DOUBLE), 6) AS intercept
+          FROM k ORDER BY l_returnflag"""),
 
     // ── Spearman rank correlation (tie-corrected, distributed-exact) ────
     // The monotone-association read Pearson can't give: correlation of
@@ -1001,7 +1610,7 @@ object AnalyticQueries {
     // DECIMAL(19,0)² so nothing overflows at any corpus size). Two
     // rankings joined back on the row id (keyed), one moment aggregate,
     // one IEEE chain at the edge.
-    "q_spearman" -> ((s, dir) => {
+    Query("q_spearman", ((s, dir) => {
       val base = t(s, dir, "lineitem")
         .select(col("l_quantity"), col("l_extendedprice"),
           (col("l_orderkey") * 10L + col("l_linenumber")).as("rid"))
@@ -1033,6 +1642,36 @@ object AnalyticQueries {
             sqrt(nd * col("svv") - col("sv") * col("sv"))), 6)
           .as("spearman_rho"))
     }),
+      // rank() = min-rank on ties; doubled midrank = 2·rank + cnt − 1.
+      """WITH b AS (
+            SELECT l_quantity AS q, l_extendedprice AS p,
+              l_orderkey * 10 + l_linenumber AS rid
+            FROM lineitem),
+          ur AS (
+            SELECT rid, 2 * rank() OVER (ORDER BY q)
+              + count(*) OVER (PARTITION BY q) - 1 AS u
+            FROM b),
+          vr AS (
+            SELECT rid, 2 * rank() OVER (ORDER BY p)
+              + count(*) OVER (PARTITION BY p) - 1 AS v
+            FROM b),
+          m AS (
+            SELECT CAST(count(*) AS BIGINT) AS n,
+              CAST(SUM(CAST(u AS DECIMAL(30,0))) AS DOUBLE) AS su,
+              CAST(SUM(CAST(v AS DECIMAL(30,0))) AS DOUBLE) AS sv,
+              CAST(SUM(CAST(u AS DECIMAL(19,0)) * CAST(v AS DECIMAL(19,0)))
+                AS DOUBLE) AS suv,
+              CAST(SUM(CAST(u AS DECIMAL(19,0)) * CAST(u AS DECIMAL(19,0)))
+                AS DOUBLE) AS suu,
+              CAST(SUM(CAST(v AS DECIMAL(19,0)) * CAST(v AS DECIMAL(19,0)))
+                AS DOUBLE) AS svv
+            FROM ur JOIN vr USING (rid))
+          SELECT n,
+            ROUND((CAST(n AS DOUBLE) * suv - su * sv)
+              / (sqrt(CAST(n AS DOUBLE) * suu - su * su)
+                * sqrt(CAST(n AS DOUBLE) * svv - sv * sv)), 6)
+              AS spearman_rho
+          FROM m"""),
 
     // ── Cramér's V (categorical × categorical association) ──────────────
     // The contingency-strength read between two categorical columns
@@ -1042,7 +1681,7 @@ object AnalyticQueries {
     // second scan); the grid is a marginal×marginal crossJoin (≤ r·c
     // rows at any corpus size — the q_split_balance pattern) and per-cell
     // χ² terms quantize DECIMAL(30,6) before the sum.
-    "q_cramers_v" -> ((s, dir) => {
+    Query("q_cramers_v", ((s, dir) => {
       val cells = t(s, dir, "lineitem")
         .groupBy(col("l_returnflag").as("rf"),
           month(col("l_shipdate")).as("mo"))
@@ -1071,6 +1710,39 @@ object AnalyticQueries {
               least(col("r") - 1, col("c") - 1).cast("double"))), 6)
             .as("cramers_v"))
     }),
+      """WITH cells AS (
+            SELECT l_returnflag AS rf, month(l_shipdate) AS mo,
+              CAST(count(*) AS BIGINT) AS o
+            FROM lineitem GROUP BY 1, 2),
+          rm AS (SELECT rf, CAST(SUM(o) AS BIGINT) AS rsum
+                 FROM cells GROUP BY 1),
+          cm AS (SELECT mo, CAST(SUM(o) AS BIGINT) AS csum
+                 FROM cells GROUP BY 1),
+          tot AS (SELECT CAST(SUM(o) AS BIGINT) AS n,
+                    CAST(count(DISTINCT rf) AS BIGINT) AS r,
+                    CAST(count(DISTINCT mo) AS BIGINT) AS c
+                  FROM cells),
+          grid AS (
+            SELECT rm.rf, cm.mo, rm.rsum, cm.csum,
+              coalesce(cells.o, 0) AS o
+            FROM rm CROSS JOIN cm
+            LEFT JOIN cells ON cells.rf = rm.rf AND cells.mo = cm.mo),
+          x AS (
+            SELECT CAST(SUM(CAST(
+                (CAST(o AS DOUBLE) - CAST(rsum AS DOUBLE)
+                   * CAST(csum AS DOUBLE) / CAST(n AS DOUBLE))
+                * (CAST(o AS DOUBLE) - CAST(rsum AS DOUBLE)
+                   * CAST(csum AS DOUBLE) / CAST(n AS DOUBLE))
+                / (CAST(rsum AS DOUBLE) * CAST(csum AS DOUBLE)
+                   / CAST(n AS DOUBLE))
+              AS DECIMAL(30,6))) AS DOUBLE) AS chi2
+            FROM grid, tot)
+          SELECT n, r, c,
+            ROUND(chi2, 6) AS chi2,
+            (r - 1) * (c - 1) AS dof,
+            ROUND(sqrt(chi2 / (CAST(n AS DOUBLE)
+              * CAST(least(r - 1, c - 1) AS DOUBLE))), 6) AS cramers_v
+          FROM x, tot"""),
 
     // ── Theil inequality index with between/within decomposition ────────
     // How concentrated is customer revenue, and does the concentration
@@ -1085,7 +1757,7 @@ object AnalyticQueries {
     // broadcast hint (VERDICT r13 #1): customer grows with sf, so AQE's
     // size threshold owns the side choice; at 100× it becomes a keyed
     // shuffle join instead of a forced multi-GB broadcast.
-    "q_theil" -> ((s, dir) => {
+    Query("q_theil", ((s, dir) => {
       val dec = "decimal(30,10)"
       val cust = t(s, dir, "orders")
         .groupBy(col("o_custkey"))
@@ -1116,6 +1788,36 @@ object AnalyticQueries {
           round(col("tsum") / col("n").cast("double") - col("bsum"), 6)
             .as("t_within"))
     }),
+      """WITH cust AS (
+            SELECT o.o_custkey,
+              CAST(SUM(CAST(o_totalprice AS DECIMAL(30,10))) AS DOUBLE)
+                AS x,
+              c.c_nationkey
+            FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
+            GROUP BY o.o_custkey, c.c_nationkey),
+          gl AS (
+            SELECT CAST(count(*) AS BIGINT) AS n,
+              CAST(SUM(CAST(x AS DECIMAL(30,10))) AS DOUBLE) AS xt
+            FROM cust),
+          tt AS (
+            SELECT CAST(SUM(CAST((x / (xt / CAST(n AS DOUBLE)))
+                * ln(x / (xt / CAST(n AS DOUBLE))) AS DECIMAL(30,6)))
+              AS DOUBLE) AS tsum
+            FROM cust, gl),
+          nat AS (
+            SELECT c_nationkey, CAST(count(*) AS BIGINT) AS ng,
+              CAST(SUM(CAST(x AS DECIMAL(30,10))) AS DOUBLE) AS xg
+            FROM cust GROUP BY 1),
+          tb AS (
+            SELECT CAST(SUM(CAST((xg / xt)
+                * ln((xg / CAST(ng AS DOUBLE)) / (xt / CAST(n AS DOUBLE)))
+                AS DECIMAL(30,6))) AS DOUBLE) AS bsum
+            FROM nat, gl)
+          SELECT gl.n AS n_customers,
+            ROUND(tsum / CAST(gl.n AS DOUBLE), 6) AS t_total,
+            ROUND(bsum, 6) AS t_between,
+            ROUND(tsum / CAST(gl.n AS DOUBLE) - bsum, 6) AS t_within
+          FROM gl, tt, tb"""),
 
     // ── Simpson's-paradox audit (overall vs pooled-within slope) ────────
     // The aggregation trap detector: the OLS slope of price on quantity
@@ -1126,7 +1828,7 @@ object AnalyticQueries {
     // moment sums kept IN decimal so the global sums are exact folds of
     // the group sums); per-group centered moments are one double chain
     // each, quantized DECIMAL(30,6) before the group-count-scale sum.
-    "q_simpson" -> ((s, dir) => {
+    Query("q_simpson", ((s, dir) => {
       val dec = "decimal(30,10)"
       val g = t(s, dir, "lineitem")
         .groupBy(col("l_returnflag"))
@@ -1161,6 +1863,37 @@ object AnalyticQueries {
           (col("slope_overall") * col("slope_within") >= 0)
             .as("same_sign"))
     }),
+      """WITH g AS (
+            SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n,
+              SUM(CAST(l_quantity AS DECIMAL(30,10))) AS sx,
+              SUM(CAST(l_extendedprice AS DECIMAL(30,10))) AS sy,
+              SUM(CAST(l_quantity * l_extendedprice AS DECIMAL(30,10)))
+                AS sxy,
+              SUM(CAST(l_quantity * l_quantity AS DECIMAL(30,10))) AS sxx
+            FROM lineitem GROUP BY 1),
+          a AS (
+            SELECT CAST(SUM(n) AS BIGINT) AS n,
+              CAST(SUM(sx) AS DOUBLE) AS tsx,
+              CAST(SUM(sy) AS DOUBLE) AS tsy,
+              CAST(SUM(sxy) AS DOUBLE) AS tsxy,
+              CAST(SUM(sxx) AS DOUBLE) AS tsxx,
+              CAST(SUM(CAST((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
+                  - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
+                / CAST(n AS DOUBLE) AS DECIMAL(30,6))) AS DOUBLE) AS wxy,
+              CAST(SUM(CAST((CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
+                  - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
+                / CAST(n AS DOUBLE) AS DECIMAL(30,6))) AS DOUBLE) AS wxx
+            FROM g),
+          s AS (
+            SELECT n,
+              ROUND((CAST(n AS DOUBLE) * tsxy - tsx * tsy)
+                / (CAST(n AS DOUBLE) * tsxx - tsx * tsx), 6)
+                AS slope_overall,
+              ROUND(wxy / wxx, 6) AS slope_within
+            FROM a)
+          SELECT n, slope_overall, slope_within,
+            slope_overall * slope_within >= 0 AS same_sign
+          FROM s"""),
 
     // ── Two-feature OLS (normal equations, closed form) ─────────────────
     // Multiple regression the declarative way: price on (quantity,
@@ -1170,7 +1903,7 @@ object AnalyticQueries {
     // produces the nine decimal-exact moment sums; the solve is a pure
     // 1-row double chain, so the plan is a scan + map-side-combined
     // aggregate at any scale — no iterations, no driver matrix library.
-    "q_ols2" -> ((s, dir) => {
+    Query("q_ols2", ((s, dir) => {
       val dec = "decimal(30,10)"
       val m = t(s, dir, "lineitem").agg(
         count(lit(1)).as("n"),
@@ -1206,6 +1939,46 @@ object AnalyticQueries {
           .as("intercept"),
         round((b1 * c1y + b2 * c2y) / cyy, 6).as("r2"))
     }),
+      // same nine decimal moment sums; Cramer solve is one double chain.
+      """WITH m AS (
+            SELECT CAST(count(*) AS BIGINT) AS n,
+              CAST(SUM(CAST(l_quantity AS DECIMAL(30,10))) AS DOUBLE) AS s1,
+              CAST(SUM(CAST(l_discount AS DECIMAL(30,10))) AS DOUBLE) AS s2,
+              CAST(SUM(CAST(l_extendedprice AS DECIMAL(30,10))) AS DOUBLE)
+                AS sy,
+              CAST(SUM(CAST(l_quantity * l_quantity AS DECIMAL(30,10)))
+                   AS DOUBLE) AS s11,
+              CAST(SUM(CAST(l_quantity * l_discount AS DECIMAL(30,10)))
+                   AS DOUBLE) AS s12,
+              CAST(SUM(CAST(l_discount * l_discount AS DECIMAL(30,10)))
+                   AS DOUBLE) AS s22,
+              CAST(SUM(CAST(l_quantity * l_extendedprice AS DECIMAL(30,10)))
+                   AS DOUBLE) AS s1y,
+              CAST(SUM(CAST(l_discount * l_extendedprice AS DECIMAL(30,10)))
+                   AS DOUBLE) AS s2y,
+              CAST(SUM(CAST(l_extendedprice * l_extendedprice
+                   AS DECIMAL(30,10))) AS DOUBLE) AS syy
+            FROM lineitem),
+          c AS (
+            SELECT n,
+              s1, s2, sy,
+              CAST(n AS DOUBLE) * s11 - s1 * s1 AS c11,
+              CAST(n AS DOUBLE) * s12 - s1 * s2 AS c12,
+              CAST(n AS DOUBLE) * s22 - s2 * s2 AS c22,
+              CAST(n AS DOUBLE) * s1y - s1 * sy AS c1y,
+              CAST(n AS DOUBLE) * s2y - s2 * sy AS c2y,
+              CAST(n AS DOUBLE) * syy - sy * sy AS cyy
+            FROM m),
+          b AS (
+            SELECT n, s1, s2, sy, c1y, c2y, cyy,
+              (c1y * c22 - c2y * c12) / (c11 * c22 - c12 * c12) AS b1,
+              (c11 * c2y - c12 * c1y) / (c11 * c22 - c12 * c12) AS b2
+            FROM c)
+          SELECT n, ROUND(b1, 6) AS b_quantity, ROUND(b2, 6) AS b_discount,
+            ROUND((sy - b1 * s1 - b2 * s2) / CAST(n AS DOUBLE), 6)
+              AS intercept,
+            ROUND((b1 * c1y + b2 * c2y) / cyy, 6) AS r2
+          FROM b"""),
 
     // ── Partial correlation (x ⟂ y given z) ─────────────────────────────
     // Does quantity relate to price AFTER controlling for discount — the
@@ -1214,7 +1987,7 @@ object AnalyticQueries {
     // Pearsons, all from ONE aggregate's decimal moment sums (the q_ols2
     // nine). A gap between r_xy and r_xy·z is the q_simpson read in
     // correlation form.
-    "q_partial_corr" -> ((s, dir) => {
+    Query("q_partial_corr", ((s, dir) => {
       val dec = "decimal(30,10)"
       val m = t(s, dir, "lineitem").agg(
         count(lit(1)).as("n"),
@@ -1249,6 +2022,43 @@ object AnalyticQueries {
           sqrt((lit(1.0) - rxz * rxz) * (lit(1.0) - ryz * ryz)), 6)
           .as("r_xy_given_z"))
     }),
+      """WITH m AS (
+            SELECT CAST(count(*) AS BIGINT) AS n,
+              CAST(SUM(CAST(l_quantity AS DECIMAL(30,10))) AS DOUBLE) AS sx,
+              CAST(SUM(CAST(l_extendedprice AS DECIMAL(30,10))) AS DOUBLE)
+                AS sy,
+              CAST(SUM(CAST(l_discount AS DECIMAL(30,10))) AS DOUBLE) AS sz,
+              CAST(SUM(CAST(l_quantity * l_extendedprice AS DECIMAL(30,10)))
+                AS DOUBLE) AS sxy,
+              CAST(SUM(CAST(l_quantity * l_discount AS DECIMAL(30,10)))
+                AS DOUBLE) AS sxz,
+              CAST(SUM(CAST(l_extendedprice * l_discount AS DECIMAL(30,10)))
+                AS DOUBLE) AS syz,
+              CAST(SUM(CAST(l_quantity * l_quantity AS DECIMAL(30,10)))
+                AS DOUBLE) AS sxx,
+              CAST(SUM(CAST(l_extendedprice * l_extendedprice
+                AS DECIMAL(30,10))) AS DOUBLE) AS syy,
+              CAST(SUM(CAST(l_discount * l_discount AS DECIMAL(30,10)))
+                AS DOUBLE) AS szz
+            FROM lineitem),
+          k AS (
+            SELECT n,
+              (CAST(n AS DOUBLE) * sxy - sx * sy)
+                / (sqrt(CAST(n AS DOUBLE) * sxx - sx * sx)
+                  * sqrt(CAST(n AS DOUBLE) * syy - sy * sy)) AS rxy,
+              (CAST(n AS DOUBLE) * sxz - sx * sz)
+                / (sqrt(CAST(n AS DOUBLE) * sxx - sx * sx)
+                  * sqrt(CAST(n AS DOUBLE) * szz - sz * sz)) AS rxz,
+              (CAST(n AS DOUBLE) * syz - sy * sz)
+                / (sqrt(CAST(n AS DOUBLE) * syy - sy * sy)
+                  * sqrt(CAST(n AS DOUBLE) * szz - sz * sz)) AS ryz
+            FROM m)
+          SELECT n, ROUND(rxy, 6) AS r_xy, ROUND(rxz, 6) AS r_xz,
+            ROUND(ryz, 6) AS r_yz,
+            ROUND((rxy - rxz * ryz)
+              / sqrt((CAST(1 AS DOUBLE) - rxz * rxz)
+                * (CAST(1 AS DOUBLE) - ryz * ryz)), 6) AS r_xy_given_z
+          FROM k"""),
 
     // ── Equi-width histogram per group ──────────────────────────────────
     // 10 buckets of doc length per language: per-group min/max broadcast
@@ -1261,14 +2071,24 @@ object AnalyticQueries {
     // (n_chars, doc_id) total order (Profile.equiDepthHistogram) — the
     // companion of q_histogram's equi-width form; at 100 TB the exact
     // ntile swaps for approx_percentile cut points (scaladoc).
-    "q_histogram_eqdepth" -> ((s, dir) =>
+    Query("q_histogram_eqdepth", ((s, dir) =>
       graft.ops.Profile.equiDepthHistogram(
           t(s, dir, "documents").select(col("lang"), col("n_chars"),
             col("doc_id")),
           "lang", "n_chars", "doc_id", buckets = 8)
         .orderBy("lang", "bucket")),
+      // ntile remainder rule (first buckets take the extra row) is the same
+      // in both engines; the (n_chars, doc_id) total order pins membership.
+      """SELECT lang, ntile_b AS bucket, count(*) AS n,
+           min(n_chars) AS lo, max(n_chars) AS hi
+         FROM (
+           SELECT lang, n_chars,
+             ntile(8) OVER (PARTITION BY lang
+                            ORDER BY n_chars, doc_id) AS ntile_b
+           FROM documents)
+         GROUP BY lang, ntile_b ORDER BY lang, bucket"""),
 
-    "q_histogram" -> ((s, dir) => {
+    Query("q_histogram", ((s, dir) => {
       val d = t(s, dir, "documents").select(col("lang"), col("n_chars"))
       val stats = d.groupBy(col("lang"))
         .agg(min("n_chars").as("mn"), max("n_chars").as("mx"))
@@ -1285,6 +2105,23 @@ object AnalyticQueries {
           round(col("mn") + (col("bucket") + 1) * col("w"), 6).as("hi"))
         .orderBy("lang", "bucket")
     }),
+      // width arithmetic mirrors the engine cast-for-cast (CAST(mx - mn AS
+      // DOUBLE)/10 — a bare 10.0 literal would make DuckDB divide in DECIMAL)
+      """WITH s AS (
+            SELECT lang, min(n_chars) AS mn, max(n_chars) AS mx
+            FROM documents GROUP BY lang),
+          b AS (
+            SELECT d.lang, s.mn, CAST(s.mx - s.mn AS DOUBLE) / 10 AS w,
+              CASE WHEN CAST(s.mx - s.mn AS DOUBLE) / 10 = 0 THEN 0
+                   ELSE CAST(LEAST(FLOOR((d.n_chars - s.mn)
+                          / (CAST(s.mx - s.mn AS DOUBLE) / 10)), 9) AS INT)
+              END AS bucket
+            FROM documents d JOIN s USING (lang))
+          SELECT lang, bucket, CAST(count(*) AS BIGINT) AS n,
+            ROUND(mn + bucket * w, 6) AS lo,
+            ROUND(mn + (bucket + 1) * w, 6) AS hi
+          FROM b GROUP BY lang, bucket, mn, w
+          ORDER BY lang, bucket"""),
 
     // ── CUSUM changepoint scan over the hourly series ────────────────────
     // Level-shift detection in exact integers: the scaled CUSUM
@@ -1294,7 +2131,7 @@ object AnalyticQueries {
     // tie-pinned argmax over the dense gap-filled grid — one window
     // pass + a 1-row tie-pinned cut, the ops read that answers "did the
     // stream's level shift, and when".
-    "q_cusum_break" -> ((s, dir) => {
+    Query("q_cusum_break", ((s, dir) => {
       val W = org.apache.spark.sql.expressions.Window
       val hourUs = 3600L * 1000000L
       val perB = Tables.events(s, dir, widen = false)
@@ -1323,6 +2160,32 @@ object AnalyticQueries {
           round(col("d").cast("double") /
             (col("nn").cast("double") * col("tot")), 6).as("cusum_stat"))
     }),
+      """WITH perb AS (
+           SELECT epoch_us(ts) // 3600000000 AS b,
+             CAST(count(*) AS BIGINT) AS n
+           FROM events GROUP BY 1),
+         bounds AS (SELECT min(b) AS b0, max(b) AS b1 FROM perb),
+         grid AS (SELECT unnest(generate_series(b0, b1)) AS b FROM bounds),
+         dense AS (
+           SELECT g.b, CAST(COALESCE(p.n, 0) AS BIGINT) AS x
+           FROM grid g LEFT JOIN perb p USING (b)),
+         c AS (
+           SELECT b, x,
+             row_number() OVER (ORDER BY b) AS r,
+             CAST(sum(x) OVER (ORDER BY b ROWS UNBOUNDED PRECEDING)
+               AS BIGINT) AS cx,
+             CAST(sum(x) OVER () AS BIGINT) AS tot,
+             CAST(count(*) OVER () AS BIGINT) AS nn
+           FROM dense),
+         d AS (
+           SELECT b, nn, tot, abs(nn * cx - r * tot) AS d
+           FROM c ORDER BY d DESC, b LIMIT 1)
+         SELECT nn AS n_buckets,
+           make_timestamp(b * 3600000000) AS cp_hour,
+           CAST(d AS BIGINT) AS d_max,
+           ROUND(CAST(d AS DOUBLE) / (CAST(nn AS DOUBLE) * tot), 6)
+             AS cusum_stat
+         FROM d"""),
 
     // ── Discrete churn hazard (survival analysis over user lifetimes) ───
     // Kaplan–Meier's discrete cousin in exact integers: per observed-
@@ -1332,7 +2195,7 @@ object AnalyticQueries {
     // and the hazard ratio rounded once. One per-user aggregate + one
     // tiny window; the survival product is deliberately NOT emitted
     // (Π of doubles is order-fragile — consumers fold hazards instead).
-    "q_churn_hazard" -> ((s, dir) => {
+    Query("q_churn_hazard", ((s, dir) => {
       val perUser = Tables.events(s, dir)
         .select(col("user_id"),
           expr("unix_micros(cast(ts as timestamp)) div 86400000000")
@@ -1353,6 +2216,21 @@ object AnalyticQueries {
             .as("hazard"))
         .orderBy("w")
     }),
+      """WITH pu AS (
+           SELECT user_id,
+             (max(epoch_us(ts) // 86400000000)
+              - min(epoch_us(ts) // 86400000000)) // 7 AS w
+           FROM events GROUP BY user_id),
+         c AS (SELECT w, CAST(count(*) AS BIGINT) AS n_ended
+               FROM pu GROUP BY w),
+         r AS (
+           SELECT w, n_ended,
+             CAST(sum(n_ended) OVER (ORDER BY w DESC
+               ROWS UNBOUNDED PRECEDING) AS BIGINT) AS n_at_risk
+           FROM c)
+         SELECT w, n_ended, n_at_risk,
+           ROUND(CAST(n_ended AS DOUBLE) / n_at_risk, 6) AS hazard
+         FROM r ORDER BY w"""),
 
     // ── TPC-H Q3 shape (shipping priority) ──────────────────────────────
     // The canonical 3-way fact⋈fact⋈dim benchmark query: BUILDING
@@ -1364,7 +2242,7 @@ object AnalyticQueries {
     // still ~1/5 of a relation that grows with sf, so AQE's size
     // threshold picks broadcast while it fits and a shuffle join once
     // it doesn't — the plan Spark picks unaided IS the point.
-    "q_tpch_q3" -> ((s, dir) => {
+    Query("q_tpch_q3", ((s, dir) => {
       val c = t(s, dir, "customer")
         .where(col("c_mktsegment") === "BUILDING").select("c_custkey")
       val o = t(s, dir, "orders")
@@ -1384,6 +2262,18 @@ object AnalyticQueries {
         .orderBy(desc("revenue"), col("l_orderkey"))
         .limit(10)
     }),
+      """SELECT l_orderkey, CAST(o_orderdate AS TIMESTAMP) AS o_orderdate,
+           o_orderpriority,
+           ROUND(CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
+             AS DECIMAL(28,10))) AS DOUBLE), 4) AS revenue
+         FROM lineitem
+         JOIN orders ON l_orderkey = o_orderkey
+         JOIN customer ON o_custkey = c_custkey
+         WHERE c_mktsegment = 'BUILDING'
+           AND o_orderdate < TIMESTAMP '1998-01-01'
+           AND l_shipdate > TIMESTAMP '1998-01-01'
+         GROUP BY 1, 2, 3
+         ORDER BY revenue DESC, l_orderkey LIMIT 10"""),
 
     // ── Autocorrelation of the hourly event series (lags 1/24/168) ──────
     // Periodicity detection in exact integer arithmetic: Pearson r
@@ -1394,7 +2284,7 @@ object AnalyticQueries {
     // projections, no window over the full span), so the plan is
     // lag-count × series-length linear. r(24) ≫ r(1) reads "daily
     // cycle"; r(168) the weekly one.
-    "q_autocorr" -> ((s, dir) => {
+    Query("q_autocorr", ((s, dir) => {
       val perB = Tables.events(s, dir)
         .select(expr("unix_micros(cast(ts as timestamp)) div 3600000000")
           .as("b"))
@@ -1423,6 +2313,33 @@ object AnalyticQueries {
               .cast("double"))), 6).as("acf"))
         .orderBy("lag")
     }),
+      """WITH perb AS (
+           SELECT epoch_us(ts) // 3600000000 AS b,
+             CAST(count(*) AS BIGINT) AS n
+           FROM events GROUP BY 1),
+         bounds AS (SELECT min(b) AS b0, max(b) AS b1 FROM perb),
+         grid AS (SELECT unnest(generate_series(b0, b1)) AS b FROM bounds),
+         dense AS (
+           SELECT g.b, CAST(COALESCE(p.n, 0) AS BIGINT) AS x
+           FROM grid g LEFT JOIN perb p USING (b)),
+         shifted AS (
+           SELECT CAST(1 AS BIGINT) AS lag, b + 1 AS b, x AS y FROM dense
+           UNION ALL SELECT 24, b + 24, x FROM dense
+           UNION ALL SELECT 168, b + 168, x FROM dense),
+         j AS (
+           SELECT s.lag, d.x, s.y FROM dense d JOIN shifted s USING (b)),
+         m AS (
+           SELECT lag, CAST(count(*) AS BIGINT) AS m,
+             CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
+             CAST(sum(x * y) AS BIGINT) AS sxy,
+             CAST(sum(x * x) AS BIGINT) AS sxx,
+             CAST(sum(y * y) AS BIGINT) AS syy
+           FROM j GROUP BY lag)
+         SELECT lag, m,
+           ROUND(CAST(m * sxy - sx * sy AS DOUBLE)
+             / (sqrt(CAST(m * sxx - sx * sx AS DOUBLE))
+                * sqrt(CAST(m * syy - sy * sy AS DOUBLE))), 6) AS acf
+         FROM m ORDER BY lag"""),
 
     // ── Deterministic Poisson-bootstrap confidence interval ─────────────
     // The scale-native bootstrap: replica b resamples every row with a
@@ -1433,7 +2350,7 @@ object AnalyticQueries {
     // 2.5/97.5 exact percentiles of the 32 replica means bound the mean
     // order value. Weighted sums decimal-accumulated; every division
     // rounded once at 6.
-    "q_bootstrap_ci" -> ((s, dir) => {
+    Query("q_bootstrap_ci", ((s, dir) => {
       val B = 32
       // ONE md5 per row; the per-replica uniforms come from exact-integer
       // affine transforms of its low 20 bits (odd multiplier ⇒ bijection
@@ -1476,6 +2393,40 @@ object AnalyticQueries {
             .as("ci_lo"),
           round(expr("percentile(CASE WHEN b >= 1 THEN m END, 0.975)"), 6)
             .as("ci_hi"))
+    }), {
+      val h = graft.functions.Hashes.h60Sql("CAST(o_orderkey AS VARCHAR)")
+      s"""WITH fan AS (
+           SELECT o_orderkey, o_totalprice,
+             ($h) % 1048576 AS h20,
+             unnest(generate_series(0, 32)) AS b
+           FROM orders),
+         wts AS (
+           SELECT b, o_totalprice,
+             CASE WHEN b = 0 THEN 1
+                  WHEN u < 0.36787944117144233 THEN 0
+                  WHEN u < 0.7357588823428847 THEN 1
+                  WHEN u < 0.9196986029286058 THEN 2
+                  WHEN u < 0.9810118431238462 THEN 3
+                  WHEN u < 0.9963401531726563 THEN 4
+                  ELSE 5 END AS w
+           FROM (SELECT *,
+                   CAST(((((b * 2462143) % 524288) * 2 + 1) * h20
+                         + (b * 586061) % 1048576) % 1048576 AS DOUBLE)
+                     / 1048576.0 AS u
+                 FROM fan)),
+         means AS (
+           SELECT b,
+             ROUND(CAST(sum(CAST(w * o_totalprice AS DECIMAL(38,10)))
+               AS DOUBLE) / sum(w), 6) AS m
+           FROM wts GROUP BY b)
+         SELECT CAST(sum(CASE WHEN b >= 1 THEN 1 ELSE 0 END) AS BIGINT)
+             AS n_replicas,
+           max(CASE WHEN b = 0 THEN m END) AS est,
+           ROUND(quantile_cont(CASE WHEN b >= 1 THEN m END, 0.025), 6)
+             AS ci_lo,
+           ROUND(quantile_cont(CASE WHEN b >= 1 THEN m END, 0.975), 6)
+             AS ci_hi
+         FROM means"""
     }),
 
     // ── Day-of-week seasonality profile + χ² uniformity parts ───────────
@@ -1488,7 +2439,7 @@ object AnalyticQueries {
     // the corpus total rides a constant-key window over the ≤168-cell
     // relation. Absent cells (none in this fixture) would need a
     // gapfill-style densify for the textbook χ² — documented contract.
-    "q_seasonality" -> ((s, dir) => {
+    Query("q_seasonality", ((s, dir) => {
       val cells = Tables.events(s, dir).select(
           expr("(unix_micros(cast(ts as timestamp)) div 86400000000 + 4) % 7")
             .as("dow"),
@@ -1510,6 +2461,25 @@ object AnalyticQueries {
             .as("chi2_part"))
         .orderBy("dow")
     }),
+      """WITH cells AS (
+           SELECT (epoch_us(ts) // 86400000000 + 4) % 7 AS dow,
+             (epoch_us(ts) // 3600000000) % 24 AS hod,
+             CAST(count(*) AS BIGINT) AS n
+           FROM events GROUP BY 1, 2),
+         e AS (
+           SELECT dow, n, sum(n) OVER () AS ntot,
+             CAST(sum(n) OVER () AS DOUBLE) / 168.0 AS e
+           FROM cells),
+         c AS (
+           SELECT dow, n, ntot,
+             ROUND((CAST(n AS DOUBLE) - e) * (CAST(n AS DOUBLE) - e) / e, 6)
+               AS c
+           FROM e)
+         SELECT dow, CAST(sum(n) AS BIGINT) AS n_events,
+           ROUND(CAST(sum(n) AS DOUBLE) / max(ntot), 6) AS share,
+           ROUND(CAST(sum(CAST(c AS DECIMAL(28,10))) AS DOUBLE), 4)
+             AS chi2_part
+         FROM c GROUP BY dow ORDER BY dow"""),
 
     // ── Funnel time-to-convert distribution ─────────────────────────────
     // q_funnel tells WHO converts; this tells HOW FAST: per stage
@@ -1519,7 +2489,7 @@ object AnalyticQueries {
     // epoch-micros, are rounded ONCE, then feed the proven
     // percentile↔quantile_cont and decimal-mean parities. Two keyed
     // left joins + aggregates — per-user state, never event-pair scale.
-    "q_funnel_time" -> ((s, dir) => {
+    Query("q_funnel_time", ((s, dir) => {
       val ev = Tables.events(s, dir)
       val signup = ev.where(col("event_type") === "signup")
         .groupBy(col("user_id")).agg(min(col("ts")).as("signup_ts"))
@@ -1554,6 +2524,37 @@ object AnalyticQueries {
             count(lit(1)), 6).as("mean_hours"))
         .orderBy("transition")
     }),
+      """WITH s AS (
+           SELECT user_id, min(ts) AS signup_ts FROM events
+           WHERE event_type = 'signup' GROUP BY 1),
+         c AS (
+           SELECT s.user_id, s.signup_ts,
+             min(CASE WHEN e.ts > s.signup_ts THEN e.ts END) AS click_ts
+           FROM s LEFT JOIN events e
+             ON e.user_id = s.user_id AND e.event_type = 'click'
+           GROUP BY 1, 2),
+         p AS (
+           SELECT c.user_id, c.signup_ts, c.click_ts,
+             min(CASE WHEN e.ts > c.click_ts THEN e.ts END) AS purchase_ts
+           FROM c LEFT JOIN events e
+             ON e.user_id = c.user_id AND e.event_type = 'purchase'
+           GROUP BY 1, 2, 3),
+         t AS (
+           SELECT 'signup_to_click' AS transition,
+             ROUND(CAST(epoch_us(click_ts) - epoch_us(signup_ts) AS DOUBLE)
+               / 3600000000.0, 6) AS h
+           FROM p WHERE click_ts IS NOT NULL
+           UNION ALL
+           SELECT 'click_to_purchase',
+             ROUND(CAST(epoch_us(purchase_ts) - epoch_us(click_ts)
+               AS DOUBLE) / 3600000000.0, 6) AS h
+           FROM p WHERE purchase_ts IS NOT NULL)
+         SELECT transition, CAST(count(*) AS BIGINT) AS n_users,
+           ROUND(quantile_cont(h, 0.5), 6) AS med_hours,
+           ROUND(quantile_cont(h, 0.9), 6) AS p90_hours,
+           ROUND(CAST(sum(CAST(h AS DECIMAL(28,10))) AS DOUBLE)
+             / count(*), 6) AS mean_hours
+         FROM t GROUP BY 1 ORDER BY transition"""),
 
     // ── Rolling 24-hour median/mean over a dense per-type hourly grid ───
     // The trend line an ops dashboard overlays on q_events_anomaly's
@@ -1565,7 +2566,7 @@ object AnalyticQueries {
     // (per-type sequence() explode off its own 1-row bounds: keyed, no
     // cartesian). Bucket indices in exact epoch-micros; timestamps at
     // the output edge.
-    "q_rolling_median" -> ((s, dir) => {
+    Query("q_rolling_median", ((s, dir) => {
       val hourUs = 3600L * 1000000L
       val perB = Tables.events(s, dir)
         .select(col("event_type"),
@@ -1590,6 +2591,29 @@ object AnalyticQueries {
             count(lit(1)).over(w), 6).as("mean24"))
         .orderBy("event_type", "hour")
     }),
+      """WITH perb AS (
+           SELECT event_type, epoch_us(ts) // 3600000000 AS b,
+             CAST(count(*) AS BIGINT) AS n
+           FROM events GROUP BY 1, 2),
+         bounds AS (
+           SELECT event_type, min(b) AS b0, max(b) AS b1
+           FROM perb GROUP BY 1),
+         grid AS (
+           SELECT event_type, unnest(generate_series(b0, b1)) AS b
+           FROM bounds),
+         dense AS (
+           SELECT g.event_type, g.b,
+             CAST(COALESCE(p.n, 0) AS BIGINT) AS n
+           FROM grid g LEFT JOIN perb p
+             ON g.event_type = p.event_type AND g.b = p.b)
+         SELECT event_type, make_timestamp(b * 3600000000) AS hour, n,
+           ROUND(quantile_cont(n, 0.5) OVER w, 6) AS med24,
+           ROUND(CAST(sum(n) OVER w AS DOUBLE) / (count(*) OVER w), 6)
+             AS mean24
+         FROM dense
+         WINDOW w AS (PARTITION BY event_type ORDER BY b
+                      ROWS BETWEEN 23 PRECEDING AND CURRENT ROW)
+         ORDER BY event_type, hour"""),
 
     // ── Rolling 7-day distinct actives (windowed COUNT DISTINCT) ────────
     // Distinct counting over sliding windows — the aggregate window
@@ -1600,7 +2624,7 @@ object AnalyticQueries {
     // two keyed distinct aggregates; the day-grid join keeps only days
     // the corpus actually spans. The honest-stickiness read next to
     // q_dau_wau's calendar weeks.
-    "q_rolling_wau" -> ((s, dir) => {
+    Query("q_rolling_wau", ((s, dir) => {
       val dayUs = 86400L * 1000000L
       val ud = Tables.events(s, dir)
         .select(col("user_id"),
@@ -1622,6 +2646,22 @@ object AnalyticQueries {
             .as("stickiness"))
         .orderBy("day")
     }),
+      """WITH ud AS (
+           SELECT DISTINCT user_id, epoch_us(ts) // 86400000000 AS day
+           FROM events),
+         dau AS (
+           SELECT day AS d, CAST(count(DISTINCT user_id) AS BIGINT) AS dau
+           FROM ud GROUP BY 1),
+         cover AS (
+           SELECT user_id, unnest(generate_series(day, day + 6)) AS d
+           FROM ud),
+         wau AS (
+           SELECT d, CAST(count(DISTINCT user_id) AS BIGINT) AS wau7
+           FROM cover GROUP BY d)
+         SELECT make_timestamp(d * 86400000000) AS day, dau.dau, wau.wau7,
+           ROUND(CAST(dau AS DOUBLE) / wau7, 6) AS stickiness
+         FROM dau JOIN wau USING (d)
+         ORDER BY day"""),
 
     // ── Cohort LTV triangle (retention-weighted revenue) ────────────────
     // q_cohort's money twin: per (first-order cohort week × activity
@@ -1632,7 +2672,7 @@ object AnalyticQueries {
     // Two keyed aggregates + one cohort-partitioned window — the
     // q_cohort plan plus one window pass, nothing fact-scale after the
     // first aggregate.
-    "q_user_ltv" -> ((s, dir) => {
+    Query("q_user_ltv", ((s, dir) => {
       val o = t(s, dir, "orders")
       val first = o.groupBy(col("o_custkey"))
         .agg(date_trunc("week", min(col("o_orderdate")))
@@ -1653,6 +2693,23 @@ object AnalyticQueries {
             .as("cum_revenue"))
         .orderBy("cohort_week", "week")
     }),
+      """WITH f AS (
+           SELECT o_custkey, date_trunc('week', min(o_orderdate))
+             AS cohort_week
+           FROM orders GROUP BY 1),
+         cell AS (
+           SELECT CAST(f.cohort_week AS TIMESTAMP) AS cohort_week,
+             CAST(date_trunc('week', o.o_orderdate) AS TIMESTAMP) AS week,
+             sum(CAST(o.o_totalprice AS DECIMAL(28,10))) AS rev_dec,
+             CAST(count(DISTINCT o.o_custkey) AS BIGINT) AS n_buyers
+           FROM orders o JOIN f USING (o_custkey)
+           GROUP BY 1, 2)
+         SELECT cohort_week, week, n_buyers,
+           ROUND(CAST(rev_dec AS DOUBLE), 4) AS revenue,
+           ROUND(CAST(sum(rev_dec) OVER (
+             PARTITION BY cohort_week ORDER BY week
+             ROWS UNBOUNDED PRECEDING) AS DOUBLE), 4) AS cum_revenue
+         FROM cell ORDER BY cohort_week, week"""),
 
     // ── Two-proportion z-test (A/B experiment read) ─────────────────────
     // Conversion-rate comparison between the two largest market segments
@@ -1663,7 +2720,7 @@ object AnalyticQueries {
     // (sqrt + divisions, rounded once at 6) and the significance bit
     // compares the ROUNDED z so a ulp can't flip the verdict. The
     // 1-row pivot rides a constant-key window, no scalar crossJoin.
-    "q_ab_test" -> ((s, dir) => {
+    Query("q_ab_test", ((s, dir) => {
       val c = t(s, dir, "customer")
       val top2 = c.groupBy(col("c_mktsegment")).agg(count(lit(1)).as("cnt"))
         .select(col("c_mktsegment"), col("cnt"),
@@ -1707,6 +2764,46 @@ object AnalyticQueries {
         round(z, 6).as("z"),
         (abs(round(z, 6)) >= 1.96).as("significant"))
     }),
+      """WITH sc AS (
+           SELECT c_mktsegment, count(*) AS cnt FROM customer GROUP BY 1),
+         top2 AS (
+           SELECT c_mktsegment, rn FROM (
+             SELECT c_mktsegment,
+               row_number() OVER (ORDER BY cnt DESC, c_mktsegment) AS rn
+             FROM sc) WHERE rn <= 2),
+         u AS (SELECT DISTINCT o_custkey FROM orders
+               WHERE o_orderpriority = '1-URGENT'),
+         arms AS (
+           SELECT t.rn, t.c_mktsegment, CAST(count(*) AS BIGINT) AS n,
+             CAST(sum(CASE WHEN u.o_custkey IS NOT NULL
+                      THEN 1 ELSE 0 END) AS BIGINT) AS conv
+           FROM customer c
+           JOIN top2 t USING (c_mktsegment)
+           LEFT JOIN u ON c.c_custkey = u.o_custkey
+           GROUP BY 1, 2),
+         one AS (
+           SELECT max(CASE WHEN rn = 1 THEN c_mktsegment END) AS segment_a,
+             max(CASE WHEN rn = 2 THEN c_mktsegment END) AS segment_b,
+             max(CASE WHEN rn = 1 THEN n END) AS n_a,
+             max(CASE WHEN rn = 2 THEN n END) AS n_b,
+             max(CASE WHEN rn = 1 THEN conv END) AS conv_a,
+             max(CASE WHEN rn = 2 THEN conv END) AS conv_b
+           FROM arms)
+         SELECT segment_a, segment_b, n_a, conv_a, n_b, conv_b,
+           ROUND(CAST(conv_a AS DOUBLE) / n_a, 6) AS p_a,
+           ROUND(CAST(conv_b AS DOUBLE) / n_b, 6) AS p_b,
+           ROUND((CAST(conv_a AS DOUBLE) / n_a - CAST(conv_b AS DOUBLE) / n_b)
+             / sqrt((CAST(conv_a + conv_b AS DOUBLE) / (n_a + n_b))
+               * (1 - CAST(conv_a + conv_b AS DOUBLE) / (n_a + n_b))
+               * (CAST(1 AS DOUBLE) / n_a + CAST(1 AS DOUBLE) / n_b)), 6)
+             AS z,
+           abs(ROUND((CAST(conv_a AS DOUBLE) / n_a
+                      - CAST(conv_b AS DOUBLE) / n_b)
+             / sqrt((CAST(conv_a + conv_b AS DOUBLE) / (n_a + n_b))
+               * (1 - CAST(conv_a + conv_b AS DOUBLE) / (n_a + n_b))
+               * (CAST(1 AS DOUBLE) / n_a + CAST(1 AS DOUBLE) / n_b)), 6))
+             >= 1.96 AS significant
+         FROM one"""),
 
     // ── CUPED variance reduction (experimentation family) ───────────────
     // The modern A/B-test read: per-user post-period metric (purchase
@@ -1719,7 +2816,7 @@ object AnalyticQueries {
     // pattern); every accumulation decimal-exact, θ/x̄ one IEEE chain
     // from exact sums, rounded only at the edge. At 100 TB the per-user
     // aggregate is the only data-scale exchange.
-    "q_cuped" -> ((s, dir) => {
+    Query("q_cuped", ((s, dir) => {
       val dec = "decimal(30,10)"
       val per = Tables.events(s, dir)
         .groupBy(col("user_id"))
@@ -1757,6 +2854,43 @@ object AnalyticQueries {
             / max(col("syyc")), 6).as("var_reduction"))
         .orderBy("arm")
     }),
+      // same decimal-exact per-user sums, pooled moments, and one IEEE
+      // θ/x̄ chain; arm = h60(user_id) % 2 replayed verbatim.
+      s"""WITH per AS (
+           SELECT user_id,
+             CAST(SUM(CAST(CASE WHEN event_type = 'view' THEN value
+                           ELSE 0.0 END AS DECIMAL(30,10))) AS DOUBLE) AS x,
+             CAST(SUM(CAST(CASE WHEN event_type = 'purchase' THEN value
+                           ELSE 0.0 END AS DECIMAL(30,10))) AS DOUBLE) AS y
+           FROM events GROUP BY user_id),
+         pa AS (
+           SELECT ${Hashes.h60Sql("CAST(user_id AS VARCHAR)")} % 2 AS arm,
+             x, y FROM per),
+         st AS (
+           SELECT CAST(count(*) AS BIGINT) AS n,
+             CAST(SUM(CAST(x AS DECIMAL(30,10))) AS DOUBLE) AS sx,
+             CAST(SUM(CAST(y AS DECIMAL(30,10))) AS DOUBLE) AS sy,
+             CAST(SUM(CAST(x * y AS DECIMAL(30,10))) AS DOUBLE) AS sxy,
+             CAST(SUM(CAST(x * x AS DECIMAL(30,10))) AS DOUBLE) AS sxx,
+             CAST(SUM(CAST(y * y AS DECIMAL(30,10))) AS DOUBLE) AS syy
+           FROM pa),
+         th AS (
+           SELECT
+             (CAST(n AS DOUBLE) * sxy - sx * sy)
+               / (CAST(n AS DOUBLE) * sxx - sx * sx) AS theta,
+             sx / CAST(n AS DOUBLE) AS xbar,
+             (CAST(n AS DOUBLE) * sxx - sx * sx) AS sxxc,
+             (CAST(n AS DOUBLE) * syy - sy * sy) AS syyc
+           FROM st)
+         SELECT arm, CAST(count(*) AS BIGINT) AS n_users,
+           ROUND(CAST(SUM(CAST(y AS DECIMAL(30,10))) AS DOUBLE)
+             / count(*), 6) AS mean_y,
+           ROUND(CAST(SUM(CAST(y - theta * (x - xbar) AS DECIMAL(30,10)))
+             AS DOUBLE) / count(*), 6) AS mean_y_adj,
+           ROUND(MAX(theta), 6) AS theta,
+           ROUND(MAX(theta) * MAX(theta) * MAX(sxxc) / MAX(syyc), 6)
+             AS var_reduction
+         FROM pa, th GROUP BY arm ORDER BY arm"""),
 
     // ── Cohen's d effect size (the "is it LARGE" read next to q_ab_test's
     // "is it significant"): standardized mean difference of per-user
@@ -1764,7 +2898,7 @@ object AnalyticQueries {
     // the Bessel-corrected pooled SD. Per-arm decimal moment sums from
     // ONE keyed aggregate; d is one IEEE chain on the 2-row pivot
     // (constant-key window over 2 rows — the q_ab_test shape).
-    "q_cohend" -> ((s, dir) => {
+    Query("q_cohend", ((s, dir) => {
       val dec = "decimal(30,10)"
       val arms = Tables.events(s, dir, widen = false)
         .where(col("event_type") === "purchase")
@@ -1797,6 +2931,38 @@ object AnalyticQueries {
         round(sp, 6).as("sd_pooled"),
         round((ma - mb) / sp, 6).as("cohen_d"))
     }),
+      s"""WITH per AS (
+           SELECT user_id,
+             CAST(SUM(CAST(value AS DECIMAL(30,10))) AS DOUBLE) AS y
+           FROM events WHERE event_type = 'purchase' GROUP BY user_id),
+         pa AS (
+           SELECT ${Hashes.h60Sql("CAST(user_id AS VARCHAR)")} % 2 AS arm,
+             y FROM per),
+         arms AS (
+           SELECT arm, CAST(count(*) AS BIGINT) AS n,
+             CAST(SUM(CAST(y AS DECIMAL(30,10))) AS DOUBLE) AS sy,
+             CAST(SUM(CAST(y * y AS DECIMAL(30,10))) AS DOUBLE) AS syy
+           FROM pa GROUP BY arm),
+         one AS (
+           SELECT max(CASE WHEN arm = 0 THEN n END) AS n_a,
+             max(CASE WHEN arm = 1 THEN n END) AS n_b,
+             max(CASE WHEN arm = 0 THEN sy END) AS sy_a,
+             max(CASE WHEN arm = 1 THEN sy END) AS sy_b,
+             max(CASE WHEN arm = 0 THEN syy END) AS syy_a,
+             max(CASE WHEN arm = 1 THEN syy END) AS syy_b
+           FROM arms),
+         k AS (
+           SELECT n_a, n_b,
+             sy_a / CAST(n_a AS DOUBLE) AS ma,
+             sy_b / CAST(n_b AS DOUBLE) AS mb,
+             sqrt(((syy_a - sy_a * sy_a / CAST(n_a AS DOUBLE))
+                 + (syy_b - sy_b * sy_b / CAST(n_b AS DOUBLE)))
+               / (CAST(n_a AS DOUBLE) + CAST(n_b AS DOUBLE) - 2)) AS sp
+           FROM one)
+         SELECT n_a, n_b, ROUND(ma, 6) AS mean_a, ROUND(mb, 6) AS mean_b,
+           ROUND(sp, 6) AS sd_pooled,
+           ROUND((ma - mb) / sp, 6) AS cohen_d
+         FROM k"""),
 
     // ── Delta-method CI for a RATIO metric (revenue per session-day) ────
     // The experimentation pitfall q_ab_test sidesteps: a ratio of two
@@ -1805,7 +2971,7 @@ object AnalyticQueries {
     // var(ȳ/x̄) ≈ (var_y − 2R·cov + R²·var_x)/(n·x̄²). Per-arm moment
     // sums (y, x, y², x², xy) decimal-exact from one keyed aggregate;
     // ratio, SE, and the ±1.96 CI are one double chain per arm row.
-    "q_delta_ratio" -> ((s, dir) => {
+    Query("q_delta_ratio", ((s, dir) => {
       val dec = "decimal(30,10)"
       val per = Tables.events(s, dir)
         .groupBy(col("user_id"))
@@ -1840,6 +3006,45 @@ object AnalyticQueries {
           round(ratio + lit(1.96) * se, 6).as("ci_hi"))
         .orderBy("arm")
     }),
+      s"""WITH per AS (
+           SELECT user_id,
+             CAST(SUM(CAST(CASE WHEN event_type = 'purchase' THEN value
+                           ELSE 0.0 END AS DECIMAL(30,10))) AS DOUBLE) AS y,
+             CAST(count(DISTINCT epoch_us(ts) // 86400000000) AS DOUBLE)
+               AS x
+           FROM events GROUP BY user_id),
+         pa AS (
+           SELECT ${Hashes.h60Sql("CAST(user_id AS VARCHAR)")} % 2 AS arm,
+             x, y FROM per),
+         m AS (
+           SELECT arm, CAST(count(*) AS BIGINT) AS n,
+             CAST(SUM(CAST(y AS DECIMAL(30,10))) AS DOUBLE) AS sy,
+             CAST(SUM(CAST(x AS DECIMAL(30,10))) AS DOUBLE) AS sx,
+             CAST(SUM(CAST(y * y AS DECIMAL(30,10))) AS DOUBLE) AS syy,
+             CAST(SUM(CAST(x * x AS DECIMAL(30,10))) AS DOUBLE) AS sxx,
+             CAST(SUM(CAST(x * y AS DECIMAL(30,10))) AS DOUBLE) AS sxy
+           FROM pa GROUP BY arm),
+         k AS (
+           SELECT arm, n,
+             sx / CAST(n AS DOUBLE) AS mx,
+             sy / CAST(n AS DOUBLE) AS my,
+             (syy - sy * sy / CAST(n AS DOUBLE))
+               / (CAST(n AS DOUBLE) - 1) AS vy,
+             (sxx - sx * sx / CAST(n AS DOUBLE))
+               / (CAST(n AS DOUBLE) - 1) AS vx,
+             (sxy - sx * sy / CAST(n AS DOUBLE))
+               / (CAST(n AS DOUBLE) - 1) AS cxy
+           FROM m),
+         r AS (
+           SELECT arm, n, my / mx AS ratio,
+             sqrt((vy - CAST(2.0 AS DOUBLE) * (my / mx) * cxy
+                 + (my / mx) * (my / mx) * vx)
+               / (CAST(n AS DOUBLE) * mx * mx)) AS se
+           FROM k)
+         SELECT arm, n, ROUND(ratio, 6) AS ratio, ROUND(se, 6) AS se,
+           ROUND(ratio - CAST(1.96 AS DOUBLE) * se, 6) AS ci_lo,
+           ROUND(ratio + CAST(1.96 AS DOUBLE) * se, 6) AS ci_hi
+         FROM r ORDER BY arm"""),
 
     // ── Sample-ratio mismatch check (experiment hygiene) ────────────────
     // The gate that runs BEFORE any A/B metric is read: a 50/50 h60
@@ -1849,7 +3054,7 @@ object AnalyticQueries {
     // — exact int64 numerator, one double division, flag compared on the
     // ROUNDED value (the q_ab_test discipline). One distinct + one
     // aggregate; no joins at all.
-    "q_srm" -> ((s, dir) => {
+    Query("q_srm", ((s, dir) => {
       val arms = Tables.events(s, dir).select(col("user_id")).distinct()
         .select(pmod(Hashes.h60(col("user_id").cast("string")), lit(2L))
           .as("arm"))
@@ -1862,6 +3067,20 @@ object AnalyticQueries {
         .select(col("n_a"), col("n_b"), col("chi2"),
           (col("chi2") >= lit(3.841459)).as("srm"))
     }),
+      s"""WITH arms AS (
+           SELECT ${Hashes.h60Sql("CAST(user_id AS VARCHAR)")} % 2 AS arm
+           FROM (SELECT DISTINCT user_id FROM events)),
+         c AS (
+           SELECT CAST(SUM(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT)
+               AS n_a,
+             CAST(SUM(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_b
+           FROM arms),
+         x AS (
+           SELECT n_a, n_b,
+             ROUND(CAST((n_a - n_b) * (n_a - n_b) AS DOUBLE)
+               / (n_a + n_b), 6) AS chi2
+           FROM c)
+         SELECT n_a, n_b, chi2, chi2 >= 3.841459 AS srm FROM x"""),
 
     // ── Time-series gap fill (dense bucket grid + zero-filled holes) ────
     // Event counts on a dense 10-minute grid: bucket indices in exact
@@ -1872,7 +3091,7 @@ object AnalyticQueries {
     // The "no row ≠ zero" fix every downstream window/anomaly pass
     // needs. At 100 TB the grid is span/bucket rows (time-bounded, not
     // data-bounded) and the join stays keyed on the bucket index.
-    "q_gapfill" -> ((s, dir) => {
+    Query("q_gapfill", ((s, dir) => {
       val bucketUs = 600L * 1000000L
       val perB = Tables.events(s, dir)
         .select(expr(s"unix_micros(cast(ts as timestamp)) div $bucketUs")
@@ -1888,6 +3107,17 @@ object AnalyticQueries {
           col("n").isNull.as("is_gap"))
         .orderBy("bucket")
     }),
+      """WITH perb AS (
+           SELECT epoch_us(ts) // 600000000 AS b,
+             CAST(count(*) AS BIGINT) AS n
+           FROM events GROUP BY 1),
+         bounds AS (SELECT min(b) AS b0, max(b) AS b1 FROM perb),
+         grid AS (SELECT unnest(generate_series(b0, b1)) AS b FROM bounds)
+         SELECT make_timestamp(g.b * 600000000) AS bucket,
+           CAST(COALESCE(p.n, 0) AS BIGINT) AS n,
+           p.n IS NULL AS is_gap
+         FROM grid g LEFT JOIN perb p USING (b)
+         ORDER BY bucket"""),
 
     // ── Week-over-week audience churn (consecutive-week Jaccard) ────────
     // How much of each week's audience is still there next week: per
@@ -1904,7 +3134,7 @@ object AnalyticQueries {
     // cumulative sums are conditional DECIMAL aggregates in ONE pass over
     // the ranked relation (r ≤ ⌈q·n⌉ against the carried total), so the
     // decile table costs one aggregate regardless of customer count.
-    "q_lorenz" -> ((s, dir) => {
+    Query("q_lorenz", ((s, dir) => {
       val dec = "decimal(30,10)"
       val rev = t(s, dir, "orders")
         .groupBy(col("o_custkey"))
@@ -1926,6 +3156,24 @@ object AnalyticQueries {
             .as("rev_share"))
         .orderBy("q")
     }),
+      """WITH rev AS (SELECT o_custkey,
+            SUM(CAST(o_totalprice AS DECIMAL(30,10))) AS rev
+          FROM orders GROUP BY 1),
+         r AS (SELECT rev AS x,
+            row_number() OVER (ORDER BY rev, o_custkey) AS r,
+            count(*) OVER () AS n
+          FROM rev),
+         tq AS (SELECT CAST(q AS DOUBLE) AS q
+          FROM (SELECT unnest([0.1,0.2,0.3,0.4,0.5,0.6,0.7,0.8,0.9]) AS q)),
+         a AS (SELECT tq.q,
+            CAST(ceil(tq.q * (SELECT max(n) FROM r)) AS BIGINT) AS n_cust,
+            SUM(CASE WHEN r.r <= ceil(tq.q * (SELECT max(n) FROM r))
+              THEN x ELSE CAST(0 AS DECIMAL(30,10)) END) AS cum
+          FROM tq CROSS JOIN r GROUP BY 1, 2),
+         tot AS (SELECT SUM(x) AS tot FROM r)
+         SELECT q, n_cust,
+           ROUND(CAST(cum AS DOUBLE) / CAST(tot AS DOUBLE), 6) AS rev_share
+         FROM a CROSS JOIN tot ORDER BY q"""),
 
     // ── Weekly growth accounting (new / retained / resurrected / churn) ─
     // The MAU-accounting decomposition behind q_new_returning and
@@ -1937,7 +3185,7 @@ object AnalyticQueries {
     // with its own one-week shift on presence MARKERS (the Merge.upsert
     // NULL-safe discipline), first-seen joined back KEYED on user — no
     // broadcast hint on a user-scale relation (VERDICT r13 #1).
-    "q_growth_accounting" -> ((s, dir) => {
+    Query("q_growth_accounting", ((s, dir) => {
       val weekUs = 7L * 86400L * 1000000L
       val uw = Tables.events(s, dir)
         .select(col("user_id"),
@@ -1968,8 +3216,34 @@ object AnalyticQueries {
           col("n_resurrected"), col("n_churned"))
         .orderBy("week")
     }),
+      """WITH uw AS (
+           SELECT DISTINCT user_id,
+             epoch_us(ts) // 604800000000 AS w
+           FROM events),
+         fst AS (SELECT user_id, min(w) AS w0 FROM uw GROUP BY 1),
+         cur AS (SELECT user_id, w, 1 AS c FROM uw),
+         prv AS (SELECT user_id, w + 1 AS w, 1 AS p FROM uw),
+         j AS (SELECT COALESCE(cur.user_id, prv.user_id) AS user_id,
+             COALESCE(cur.w, prv.w) AS w, cur.c, prv.p
+           FROM cur FULL OUTER JOIN prv
+             ON cur.user_id = prv.user_id AND cur.w = prv.w),
+         g AS (SELECT j.w,
+             CAST(SUM(CASE WHEN c IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
+               AS n_active,
+             CAST(SUM(CASE WHEN c IS NOT NULL AND f.w0 = j.w
+               THEN 1 ELSE 0 END) AS BIGINT) AS n_new,
+             CAST(SUM(CASE WHEN c IS NOT NULL AND p IS NOT NULL
+               THEN 1 ELSE 0 END) AS BIGINT) AS n_retained,
+             CAST(SUM(CASE WHEN c IS NOT NULL AND p IS NULL AND f.w0 < j.w
+               THEN 1 ELSE 0 END) AS BIGINT) AS n_resurrected,
+             CAST(SUM(CASE WHEN p IS NOT NULL AND c IS NULL
+               THEN 1 ELSE 0 END) AS BIGINT) AS n_churned
+           FROM j JOIN fst f ON f.user_id = j.user_id GROUP BY 1)
+         SELECT make_timestamp(w * 604800000000) AS week,
+           n_active, n_new, n_retained, n_resurrected, n_churned
+         FROM g ORDER BY week"""),
 
-    "q_week_churn" -> ((s, dir) => {
+    Query("q_week_churn", ((s, dir) => {
       val weekUs = 7L * 86400L * 1000000L
       val uw = Tables.events(s, dir, widen = false)
         .select(col("user_id"),
@@ -1996,6 +3270,28 @@ object AnalyticQueries {
             col("n_this"), 6).as("retention"))
         .orderBy("week")
     }),
+      """WITH uw AS (
+           SELECT DISTINCT user_id,
+             epoch_us(ts) // 604800000000 AS w
+           FROM events),
+         sz AS (SELECT w, CAST(count(*) AS BIGINT) AS n
+                FROM uw GROUP BY w),
+         bw AS (
+           SELECT a.w, CAST(count(*) AS BIGINT) AS n_both
+           FROM uw a JOIN uw b
+             ON a.user_id = b.user_id AND b.w = a.w + 1
+           GROUP BY a.w)
+         SELECT make_timestamp(s1.w * 604800000000) AS week,
+           s1.n AS n_this, s2.n AS n_next,
+           CAST(COALESCE(b.n_both, 0) AS BIGINT) AS n_both,
+           ROUND(CAST(COALESCE(b.n_both, 0) AS DOUBLE)
+             / (s1.n + s2.n - COALESCE(b.n_both, 0)), 6) AS jaccard,
+           ROUND(CAST(COALESCE(b.n_both, 0) AS DOUBLE) / s1.n, 6)
+             AS retention
+         FROM sz s1
+         JOIN sz s2 ON s2.w = s1.w + 1
+         LEFT JOIN bw b ON b.w = s1.w
+         ORDER BY week"""),
 
     // ── Inter-order gap distribution (repeat-purchase cadence) ──────────
     // The cadence read behind replenishment and churn thresholds: days
@@ -2003,7 +3299,7 @@ object AnalyticQueries {
     // per-customer order sequence, exact epoch-day arithmetic), then
     // exact median/p90, decimal mean, and the share of gaps beyond 90
     // days (an integer-threshold compare). One window + one aggregate.
-    "q_order_gaps" -> ((s, dir) => {
+    Query("q_order_gaps", ((s, dir) => {
       val W = org.apache.spark.sql.expressions.Window
         .partitionBy(col("o_custkey"))
         .orderBy(col("day"), col("o_orderkey"))
@@ -2021,6 +3317,20 @@ object AnalyticQueries {
           round(sum(when(col("gap") > 90L, 1L).otherwise(0L))
             .cast("double") / count(lit(1)), 6).as("share_gt_90d"))
     }),
+      """WITH g AS (
+           SELECT (epoch_us(o_orderdate) // 86400000000)
+             - lag(epoch_us(o_orderdate) // 86400000000, 1) OVER (
+                 PARTITION BY o_custkey
+                 ORDER BY o_orderdate, o_orderkey) AS gap
+           FROM orders)
+         SELECT CAST(count(*) AS BIGINT) AS n_gaps,
+           ROUND(quantile_cont(gap, 0.5), 6) AS p50_days,
+           ROUND(quantile_cont(gap, 0.9), 6) AS p90_days,
+           ROUND(CAST(sum(CAST(gap AS DECIMAL(28,10))) AS DOUBLE)
+             / count(*), 6) AS mean_days,
+           ROUND(CAST(sum(CASE WHEN gap > 90 THEN 1 ELSE 0 END) AS DOUBLE)
+             / count(*), 6) AS share_gt_90d
+         FROM g WHERE gap IS NOT NULL"""),
 
     // ── Audience-overlap matrix (distinct-user Jaccard per type pair) ───
     // How much do event types share users? Per unordered type pair:
@@ -2030,7 +3340,7 @@ object AnalyticQueries {
     // pairs, so candidates are 10N not N², and the size attach is two
     // keyed joins onto the 5-row audience relation. The segmentation
     // read behind "are clickers and purchasers the same people".
-    "q_audience_overlap" -> ((s, dir) => {
+    Query("q_audience_overlap", ((s, dir) => {
       val tu = Tables.events(s, dir)
         .select(col("event_type"), col("user_id")).distinct()
       val sizes = tu.groupBy(col("event_type"))
@@ -2051,6 +3361,24 @@ object AnalyticQueries {
             (col("n_a") + col("n_b") - col("n_both")), 6).as("jaccard"))
         .orderBy("type_a", "type_b")
     }),
+      """WITH tu AS (
+           SELECT DISTINCT event_type, user_id FROM events),
+         sz AS (
+           SELECT event_type, CAST(count(*) AS BIGINT) AS n
+           FROM tu GROUP BY 1),
+         pairs AS (
+           SELECT a.event_type AS type_a, b.event_type AS type_b,
+             CAST(count(*) AS BIGINT) AS n_both
+           FROM tu a JOIN tu b
+             ON a.user_id = b.user_id AND a.event_type < b.event_type
+           GROUP BY 1, 2)
+         SELECT type_a, type_b, sa.n AS n_a, sb.n AS n_b, n_both,
+           ROUND(CAST(n_both AS DOUBLE) / (sa.n + sb.n - n_both), 6)
+             AS jaccard
+         FROM pairs
+         JOIN sz sa ON type_a = sa.event_type
+         JOIN sz sb ON type_b = sb.event_type
+         ORDER BY type_a, type_b"""),
 
     // ── First/last-touch conversion attribution ─────────────────────────
     // For every purchase event: the user's FIRST preceding non-purchase
@@ -2061,7 +3389,7 @@ object AnalyticQueries {
     // unbounded-to-−1 frame, tie-pinned by event_id), one aggregate;
     // never a self-join per conversion. Cold-start purchases (no prior
     // touch) surface as 'none' per the no-NULL output rule.
-    "q_attribution" -> ((s, dir) => {
+    Query("q_attribution", ((s, dir) => {
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts"), col("event_id"))
         .rowsBetween(Window.unboundedPreceding, -1)
@@ -2078,6 +3406,26 @@ object AnalyticQueries {
           Exact.roundSum(col("value")).as("sum_value"))
         .orderBy("first_touch", "last_touch")
     }),
+      """WITH t AS (
+           SELECT event_type, value,
+             first_value(CASE WHEN event_type <> 'purchase'
+                           THEN event_type END IGNORE NULLS)
+               OVER (PARTITION BY user_id ORDER BY ts, event_id
+                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+               AS ft,
+             last_value(CASE WHEN event_type <> 'purchase'
+                          THEN event_type END IGNORE NULLS)
+               OVER (PARTITION BY user_id ORDER BY ts, event_id
+                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+               AS lt
+           FROM events)
+         SELECT COALESCE(ft, 'none') AS first_touch,
+           COALESCE(lt, 'none') AS last_touch,
+           CAST(count(*) AS BIGINT) AS n_conversions,
+           ROUND(CAST(SUM(CAST(value AS DECIMAL(28,10))) AS DOUBLE), 4)
+             AS sum_value
+         FROM t WHERE event_type = 'purchase'
+         GROUP BY 1, 2 ORDER BY 1, 2"""),
 
     // ── Event-type transition matrix (first-order Markov estimate) ──────
     // (state → next state) counts over each user's tie-pinned event
@@ -2098,7 +3446,7 @@ object AnalyticQueries {
     // ordered window (sequential testing is inherently a per-stream
     // ordered scan — type count is bounded, and at production scale this
     // exact recurrence is the streaming monitor's state update).
-    "q_sprt" -> ((s, dir) => {
+    Query("q_sprt", ((s, dir) => {
       val c1 = lit(new java.math.BigDecimal("0.200671"))
       val bnd = lit(new java.math.BigDecimal("2.944439"))
       val w = Window.partitionBy(col("event_type"))
@@ -2128,6 +3476,34 @@ object AnalyticQueries {
           round(col("llr_fin").cast("double"), 6).as("llr_final"))
         .orderBy("event_type")
     }),
+      """WITH ev AS (SELECT event_type, ts, event_id,
+             CASE WHEN value > 35.0 THEN 1 ELSE 0 END AS hit FROM events),
+         r AS (SELECT event_type,
+             row_number() OVER (PARTITION BY event_type
+               ORDER BY ts, event_id) AS k,
+             SUM(hit) OVER (PARTITION BY event_type ORDER BY ts, event_id
+               ROWS UNBOUNDED PRECEDING) AS h
+           FROM ev),
+         l AS (SELECT event_type, k,
+             CAST(0.200671 AS DECIMAL(12,6)) * (2*h - k) AS llr FROM r),
+         c AS (SELECT event_type, min(k) AS first_cross_k FROM l
+           WHERE llr >= CAST(2.944439 AS DECIMAL(12,6))
+              OR llr <= -CAST(2.944439 AS DECIMAL(12,6)) GROUP BY 1),
+         cd AS (SELECT l.event_type, c.first_cross_k, l.llr AS cross_llr
+           FROM c JOIN l ON l.event_type = c.event_type
+             AND l.k = c.first_cross_k),
+         f AS (SELECT event_type, max(k) AS n_events FROM l GROUP BY 1),
+         fl AS (SELECT l.event_type, f.n_events, l.llr AS llr_final
+           FROM f JOIN l ON l.event_type = f.event_type
+             AND l.k = f.n_events)
+         SELECT fl.event_type, fl.n_events,
+           COALESCE(cd.first_cross_k, -1) AS first_cross_k,
+           CASE WHEN cd.first_cross_k IS NULL THEN 'continue'
+             WHEN cd.cross_llr > 0 THEN 'accept_h1'
+             ELSE 'accept_h0' END AS decision,
+           ROUND(CAST(fl.llr_final AS DOUBLE), 6) AS llr_final
+         FROM fl LEFT JOIN cd ON cd.event_type = fl.event_type
+         ORDER BY fl.event_type"""),
 
     // ── Markov stationary distribution (3-step power iteration) ─────────
     // Where does user attention settle: q_markov_chain's row-normalized
@@ -2138,7 +3514,7 @@ object AnalyticQueries {
     // engines walk the identical vector. The data-scale work is the ONE
     // lead()+aggregate building the matrix; the iteration runs on the
     // |types|² relation.
-    "q_markov_stationary" -> ((s, dir) => {
+    Query("q_markov_stationary", ((s, dir) => {
       val wU = Window.partitionBy(col("user_id"))
         .orderBy(col("ts"), col("event_id"))
       val dec6 = "decimal(12,6)"
@@ -2168,8 +3544,37 @@ object AnalyticQueries {
       pi3.select(col("state"), col("pi").cast("double").as("pi3"))
         .orderBy("state")
     }),
+      """WITH tr AS (SELECT user_id, event_type AS from_type,
+             lead(event_type) OVER (PARTITION BY user_id
+               ORDER BY ts, event_id) AS to_type
+           FROM events),
+         cnt AS (SELECT from_type, to_type, count(*) AS n FROM tr
+           WHERE to_type IS NOT NULL GROUP BY 1, 2),
+         p AS (SELECT from_type, to_type,
+             CAST(ROUND(CAST(n AS DOUBLE) /
+               SUM(n) OVER (PARTITION BY from_type), 6)
+               AS DECIMAL(12,6)) AS p
+           FROM cnt),
+         s0 AS (SELECT DISTINCT from_type AS state FROM p),
+         ns AS (SELECT CAST(count(*) AS BIGINT) AS ns FROM s0),
+         pi0 AS (SELECT state,
+             CAST(ROUND(CAST(1 AS DOUBLE) / ns, 6) AS DECIMAL(12,6)) AS pi
+           FROM s0 CROSS JOIN ns),
+         pi1 AS (SELECT p.to_type AS state,
+             CAST(ROUND(CAST(SUM(CAST(pi.pi * p.p AS DECIMAL(24,12)))
+               AS DOUBLE), 6) AS DECIMAL(12,6)) AS pi
+           FROM p JOIN pi0 pi ON pi.state = p.from_type GROUP BY 1),
+         pi2 AS (SELECT p.to_type AS state,
+             CAST(ROUND(CAST(SUM(CAST(pi.pi * p.p AS DECIMAL(24,12)))
+               AS DOUBLE), 6) AS DECIMAL(12,6)) AS pi
+           FROM p JOIN pi1 pi ON pi.state = p.from_type GROUP BY 1),
+         pi3 AS (SELECT p.to_type AS state,
+             CAST(ROUND(CAST(SUM(CAST(pi.pi * p.p AS DECIMAL(24,12)))
+               AS DOUBLE), 6) AS DECIMAL(12,6)) AS pi
+           FROM p JOIN pi2 pi ON pi.state = p.from_type GROUP BY 1)
+         SELECT state, CAST(pi AS DOUBLE) AS pi3 FROM pi3 ORDER BY state"""),
 
-    "q_markov_chain" -> ((s, dir) => {
+    Query("q_markov_chain", ((s, dir) => {
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts"), col("event_id"))
       val trans = Tables.events(s, dir)
@@ -2185,6 +3590,19 @@ object AnalyticQueries {
             .as("p"))
         .orderBy("from_type", "to_type")
     }),
+      """WITH seq AS (
+           SELECT event_type AS from_type,
+             COALESCE(lead(event_type, 1)
+               OVER (PARTITION BY user_id ORDER BY ts, event_id), 'end')
+               AS to_type
+           FROM events),
+         c AS (
+           SELECT from_type, to_type, CAST(count(*) AS BIGINT) AS n
+           FROM seq GROUP BY 1, 2)
+         SELECT from_type, to_type, n,
+           ROUND(CAST(n AS DOUBLE) / sum(n) OVER (PARTITION BY from_type),
+                 6) AS p
+         FROM c ORDER BY from_type, to_type"""),
 
     // ── TPC-H Q5 shape (local supplier volume) ──────────────────────────
     // The canonical snowflake fact⋈fact⋈4-dim benchmark: revenue by
@@ -2196,7 +3614,7 @@ object AnalyticQueries {
     // factor) broadcast under AQE's size threshold unaided (no hints:
     // customer/supplier grow with sf — VERDICT r13 #1 discipline).
     // Date + region filters push to their scans; revenue folds DECIMAL.
-    "q_tpch_q5" -> ((s, dir) => {
+    Query("q_tpch_q5", ((s, dir) => {
       val asia = tn(s, dir, "nation")
         .join(tn(s, dir, "region").where(col("r_name") === "ASIA"),
           col("n_regionkey") === col("r_regionkey"))
@@ -2222,6 +3640,20 @@ object AnalyticQueries {
           .as("revenue"))
         .orderBy(desc("revenue"), col("n_name"))
     }),
+      """SELECT n_name,
+           ROUND(CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
+             AS DECIMAL(28,10))) AS DOUBLE), 4) AS revenue
+         FROM lineitem
+         JOIN orders ON l_orderkey = o_orderkey
+         JOIN customer ON o_custkey = c_custkey
+         JOIN supplier ON l_suppkey = s_suppkey
+           AND c_nationkey = s_nationkey
+         JOIN nation ON s_nationkey = n_nationkey
+         JOIN region ON n_regionkey = r_regionkey
+         WHERE r_name = 'ASIA'
+           AND o_orderdate >= TIMESTAMP '1996-01-01'
+           AND o_orderdate < TIMESTAMP '1997-01-01'
+         GROUP BY 1 ORDER BY revenue DESC, n_name"""),
 
     // ── Kendall's τ-b between monthly revenue and monthly order count ───
     // The rank-correlation sibling of q_spearman that handles TIES
@@ -2231,7 +3663,7 @@ object AnalyticQueries {
     // final sqrt), then τ_b = (C−D)/√((n₀−t_x)(n₀−t_y)). The data-scale
     // work is the ONE monthly aggregate; the pair grid is |months|²-
     // bounded (the q_theil_sen pattern), never corpus-scale.
-    "q_kendall_tau" -> ((s, dir) => {
+    Query("q_kendall_tau", ((s, dir) => {
       val m = t(s, dir, "orders")
         .groupBy(expr("unix_micros(cast(o_orderdate as timestamp))" +
           " div 2629800000000").as("m"))
@@ -2261,6 +3693,32 @@ object AnalyticQueries {
                 (col("n_pairs") - col("ty"))).cast("double"))), 6)
             .as("tau_b"))
     }),
+      """WITH m AS (SELECT epoch_us(o_orderdate) // 2629800000000 AS m,
+            SUM(CAST(o_totalprice AS DECIMAL(30,10))) AS rev,
+            CAST(count(*) AS BIGINT) AS cnt
+          FROM orders GROUP BY 1),
+         p AS (SELECT
+             CASE WHEN b.rev > a.rev THEN 1
+               WHEN b.rev < a.rev THEN -1 ELSE 0 END AS cx,
+             CASE WHEN b.cnt > a.cnt THEN 1
+               WHEN b.cnt < a.cnt THEN -1 ELSE 0 END AS cy
+           FROM m a JOIN m b ON a.m < b.m),
+         ag AS (SELECT CAST(count(*) AS BIGINT) AS n_pairs,
+             CAST(SUM(CASE WHEN cx*cy > 0 THEN 1 ELSE 0 END) AS BIGINT)
+               AS c,
+             CAST(SUM(CASE WHEN cx*cy < 0 THEN 1 ELSE 0 END) AS BIGINT)
+               AS d,
+             CAST(SUM(CASE WHEN cx = 0 THEN 1 ELSE 0 END) AS BIGINT)
+               AS tx,
+             CAST(SUM(CASE WHEN cy = 0 THEN 1 ELSE 0 END) AS BIGINT)
+               AS ty
+           FROM p)
+         SELECT n_pairs, c AS concordant, d AS discordant,
+           ROUND(CASE WHEN (n_pairs - tx) * (n_pairs - ty) > 0
+             THEN CAST(c - d AS DOUBLE)
+               / sqrt(CAST((n_pairs - tx) * (n_pairs - ty) AS DOUBLE))
+             END, 6) AS tau_b
+         FROM ag"""),
 
     // ── Kaplan–Meier survival curve of user lifetime ─────────────────────
     // The censoring-correct retention read q_churn_hazard approximates:
@@ -2278,7 +3736,7 @@ object AnalyticQueries {
     // (exp of the exact running decimal sum) is order-free; the
     // everyone-dies final step is floored at 1e-12 (rounds to 0) to keep
     // log finite on both engines.
-    "q_kaplan_meier" -> ((s, dir) => {
+    Query("q_kaplan_meier", ((s, dir) => {
       val per = Tables.events(s, dir)
         .select(col("user_id"),
           expr("unix_micros(cast(ts as timestamp))").as("us"))
@@ -2315,6 +3773,29 @@ object AnalyticQueries {
           round(exp(col("ls").cast("double")), 6).as("survival"))
         .orderBy("t_hours")
     }),
+      """WITH per AS (SELECT user_id, min(epoch_us(ts)) AS mn,
+            max(epoch_us(ts)) AS mx
+          FROM events GROUP BY 1),
+         fin AS (SELECT max(mx) AS study_end FROM per),
+         byt AS (SELECT (mx - mn) // 3600000000 AS t,
+             CAST(SUM(CASE WHEN study_end - mx < 21600000000
+               THEN 0 ELSE 1 END) AS BIGINT) AS d,
+             CAST(count(*) AS BIGINT) AS tot
+           FROM per CROSS JOIN fin GROUP BY 1),
+         n AS (SELECT CAST(SUM(tot) AS BIGINT) AS n_total FROM byt),
+         km AS (SELECT t, d,
+             CAST(n_total - COALESCE(SUM(tot) OVER (ORDER BY t
+               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+               AS BIGINT) AS r
+           FROM byt CROSS JOIN n),
+         st AS (SELECT t, d, r,
+             SUM(CAST(ln(greatest(CAST(r - d AS DOUBLE) / r, 1e-12))
+               AS DECIMAL(20,10))) OVER (ORDER BY t
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ls
+           FROM km)
+         SELECT t AS t_hours, r AS n_at_risk, d AS n_events,
+           ROUND(exp(CAST(ls AS DOUBLE)), 6) AS survival
+         FROM st WHERE d > 0 ORDER BY t"""),
 
     // ── Isotonic (PAV) calibration of return rate vs discount ───────────
     // The monotone-fit calibrator a probability model runs before
@@ -2328,7 +3809,7 @@ object AnalyticQueries {
     // discount bins at any corpus size). Determinism: interval averages
     // are single double divides of exact int64 range sums (prefix cums
     // on the pmod-bounded window), min/max over exact doubles.
-    "q_isotonic" -> ((s, dir) => {
+    Query("q_isotonic", ((s, dir) => {
       val b = t(s, dir, "lineitem")
         .groupBy(round(col("l_discount") * 100).cast("int").as("i"))
         .agg(count(lit(1)).as("w"),
@@ -2356,6 +3837,26 @@ object AnalyticQueries {
           round(col("iso"), 6).as("iso_rate"))
         .orderBy("discount_pct")
     }),
+      """WITH b AS (SELECT CAST(round(l_discount * 100, 0) AS INT) AS i,
+            CAST(count(*) AS BIGINT) AS w,
+            CAST(SUM(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END)
+              AS BIGINT) AS y
+          FROM lineitem GROUP BY 1),
+         p AS (SELECT i, w, y,
+             CAST(SUM(w) OVER (ORDER BY i) AS BIGINT) AS cw,
+             CAST(SUM(y) OVER (ORDER BY i) AS BIGINT) AS cy
+           FROM b),
+         iv AS (SELECT k.i AS k, j.i AS j,
+             CAST(j.cy - k.cy + k.y AS DOUBLE)
+               / CAST(j.cw - k.cw + k.w AS DOUBLE) AS a
+           FROM p k JOIN p j ON k.i <= j.i),
+         mn AS (SELECT b.i, iv.k, min(iv.a) AS mn
+           FROM b JOIN iv ON iv.k <= b.i AND b.i <= iv.j GROUP BY 1, 2),
+         f AS (SELECT i, max(mn) AS iso FROM mn GROUP BY 1)
+         SELECT b.i AS discount_pct, b.w AS n,
+           ROUND(CAST(b.y AS DOUBLE) / CAST(b.w AS DOUBLE), 6) AS raw_rate,
+           ROUND(f.iso, 6) AS iso_rate
+         FROM b JOIN f USING (i) ORDER BY discount_pct"""),
 
     // ── EWMA control chart over the hourly event series ──────────────────
     // The small-shift detector next to q_cusum_break's changepoint: per
@@ -2370,7 +3871,7 @@ object AnalyticQueries {
     // buckets fan out (24× the bucket relation, never corpus-scale);
     // the dense horizon arrives via the q_mase span grid. Moments fold
     // from double-squared decimals (the q_did discipline).
-    "q_ewma" -> ((s, dir) => {
+    Query("q_ewma", ((s, dir) => {
       val perH = Tables.events(s, dir)
         .select(col("event_type"),
           expr("unix_micros(cast(ts as timestamp)) div 3600000000")
@@ -2424,6 +3925,44 @@ object AnalyticQueries {
           col("n_out"), col("first_out_h"))
         .orderBy("event_type")
     }),
+      """WITH perh AS (SELECT event_type, epoch_us(ts) // 3600000000 AS h,
+            CAST(count(*) AS BIGINT) AS c
+          FROM events GROUP BY 1, 2),
+         span AS (SELECT min(h) AS h0, max(h) AS h1 FROM perh),
+         contrib AS (SELECT event_type, h + g.k AS th,
+             CAST(c * CAST(round(0.2 * pow(0.8, g.k), 8)
+               AS DECIMAL(12,8)) AS DECIMAL(30,10)) AS t
+           FROM perh, LATERAL (SELECT unnest(generate_series(0, 23)) AS k)
+             g),
+         agg AS (SELECT event_type, th, SUM(t) AS ewma_dec
+           FROM contrib GROUP BY 1, 2),
+         dense AS (SELECT ty.event_type, gr.th,
+             COALESCE(a.ewma_dec, CAST(0 AS DECIMAL(30,10))) AS e
+           FROM (SELECT DISTINCT event_type FROM perh) ty
+           CROSS JOIN (SELECT unnest(generate_series(
+             (SELECT h0 + 23 FROM span), (SELECT h1 FROM span))) AS th
+             WHERE (SELECT h0 + 23 FROM span) <= (SELECT h1 FROM span)) gr
+           LEFT JOIN agg a ON a.event_type = ty.event_type
+             AND a.th = gr.th),
+         m AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
+             SUM(e) AS s,
+             SUM(CAST(CAST(e AS DOUBLE) * CAST(e AS DOUBLE)
+               AS DECIMAL(30,10))) AS ss
+           FROM dense GROUP BY 1),
+         st AS (SELECT event_type, n,
+             CAST(s AS DOUBLE) / n AS mean,
+             sqrt(greatest((CAST(ss AS DOUBLE)
+               - CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / n)
+               / (n - 1), 0.0)) AS sd
+           FROM m)
+         SELECT d.event_type, st.n AS n_hours,
+           ROUND(st.mean, 6) AS mean_ewma, ROUND(st.sd, 6) AS sd_ewma,
+           CAST(SUM(CASE WHEN abs(CAST(d.e AS DOUBLE) - st.mean)
+             > 3.0 * st.sd THEN 1 ELSE 0 END) AS BIGINT) AS n_out,
+           min(CASE WHEN abs(CAST(d.e AS DOUBLE) - st.mean)
+             > 3.0 * st.sd THEN d.th END) AS first_out_h
+         FROM dense d JOIN st ON d.event_type = st.event_type
+         GROUP BY 1, 2, 3, 4 ORDER BY d.event_type"""),
 
     // ── Delete-one-nation jackknife SE of revenue per order ─────────────
     // The resampling-free uncertainty read next to q_bootstrap_ci: the
@@ -2434,7 +3973,7 @@ object AnalyticQueries {
     // jackknife algebra runs on the ≤25-row group relation with
     // leave-one-out ratios as single double divides of exact decimals,
     // deviations² quantized DECIMAL(30,10) before their sum.
-    "q_jackknife" -> ((s, dir) => {
+    Query("q_jackknife", ((s, dir) => {
       val dec = "decimal(30,10)"
       val g = t(s, dir, "orders")
         .join(t(s, dir, "customer")
@@ -2469,6 +4008,31 @@ object AnalyticQueries {
           round((col("gcnt") - 1L).cast("double") *
             (col("rbar") - col("r_full")), 6).as("bias_jack"))
     }),
+      """WITH g AS (SELECT c_nationkey,
+            SUM(CAST(o_totalprice AS DECIMAL(30,10))) AS sg,
+            CAST(count(*) AS BIGINT) AS ng
+          FROM orders JOIN customer ON o_custkey = c_custkey
+          GROUP BY 1),
+         tot AS (SELECT SUM(sg) AS st, CAST(SUM(ng) AS BIGINT) AS nt,
+           CAST(count(*) AS BIGINT) AS gcnt FROM g),
+         loo AS (SELECT gcnt,
+             CAST(st AS DOUBLE) / nt AS r_full,
+             CAST(st - sg AS DOUBLE) / CAST(nt - ng AS DOUBLE) AS r
+           FROM g CROSS JOIN tot),
+         rb AS (SELECT SUM(CAST(r AS DECIMAL(30,10))) AS sr FROM loo),
+         dev AS (SELECT gcnt, r_full,
+             CAST(sr AS DOUBLE) / gcnt AS rbar,
+             SUM(CAST((r - CAST(sr AS DOUBLE) / gcnt)
+               * (r - CAST(sr AS DOUBLE) / gcnt) AS DECIMAL(30,10)))
+               AS sdev
+           FROM loo CROSS JOIN rb GROUP BY 1, 2, 3)
+         SELECT gcnt AS n_groups, ROUND(r_full, 6) AS r_full,
+           ROUND(rbar, 6) AS r_loo_mean,
+           ROUND(sqrt(CAST(gcnt - 1 AS DOUBLE) / gcnt
+             * CAST(sdev AS DOUBLE)), 6) AS se_jack,
+           ROUND(CAST(gcnt - 1 AS DOUBLE) * (rbar - r_full), 6)
+             AS bias_jack
+         FROM dev"""),
 
     // ── Gumbel block-maxima fit of weekly peak order value ──────────────
     // The extreme-value read next to q_hill_tail's tail index: weekly
@@ -2479,7 +4043,7 @@ object AnalyticQueries {
     // keyed weekly aggregate; moments fold over the ≤|weeks|-row maxima
     // relation with the q_did decimal discipline; the closing constants
     // (γ, π) are fixed literals so both engines run one IEEE chain.
-    "q_gumbel" -> ((s, dir) => {
+    Query("q_gumbel", ((s, dir) => {
       val wk = tn(s, dir, "orders")
         .groupBy(expr("unix_micros(cast(o_orderdate as timestamp))" +
           " div 604800000000").as("w"))
@@ -2500,6 +4064,28 @@ object AnalyticQueries {
         round(mu - beta * lit(math.log(-math.log(0.99))), 6)
           .as("ret_level_99"))
     }),
+      """WITH wk AS (SELECT epoch_us(o_orderdate) // 604800000000 AS w,
+            max(o_totalprice) AS mx
+          FROM orders GROUP BY 1),
+         m AS (SELECT CAST(count(*) AS BIGINT) AS n,
+             SUM(CAST(mx AS DECIMAL(30,10))) AS s,
+             SUM(CAST(mx * mx AS DECIMAL(30,10))) AS ss
+           FROM wk),
+         st AS (SELECT n,
+             CAST(s AS DOUBLE) / n AS mean,
+             sqrt(greatest((CAST(ss AS DOUBLE)
+               - CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / n) / (n - 1),
+               0.0)) AS sd
+           FROM m),
+         fit AS (SELECT n, mean, sd,
+             sd * (sqrt(6.0) / pi()) AS beta
+           FROM st)
+         SELECT n AS n_weeks, ROUND(mean, 6) AS mean_max,
+           ROUND(sd, 6) AS sd_max, ROUND(beta, 6) AS beta,
+           ROUND(mean - 0.5772156649015329 * beta, 6) AS mu,
+           ROUND(mean - 0.5772156649015329 * beta
+             - beta * ln(-ln(0.99)), 6) AS ret_level_99
+         FROM fit"""),
 
     // ── Inverse-propensity-weighted treatment effect (Hájek IPW) ────────
     // The confounder-adjusted sibling of q_did/q_cuped: treated = click,
@@ -2511,7 +4097,7 @@ object AnalyticQueries {
     // so the four arm sums are order-free; the stratum attach is a keyed
     // join to the 24-row stats relation. Reads "what the click−view gap
     // would be if both arms had the same hourly mix".
-    "q_ipw_ate" -> ((s, dir) => {
+    Query("q_ipw_ate", ((s, dir) => {
       val dec = "decimal(30,10)"
       val ev = Tables.events(s, dir)
         .where(col("event_type").isin("click", "view"))
@@ -2550,6 +4136,38 @@ object AnalyticQueries {
         round(col("mt") - col("mc"), 6).as("ate_ipw"),
         round(col("yt") - col("yc"), 6).as("diff_naive"))
     }),
+      """WITH ev AS (SELECT (event_type = 'click') AS treated, value,
+            (epoch_us(ts) // 3600000000) % 24 AS stratum
+          FROM events WHERE event_type IN ('click', 'view')),
+         strat AS (SELECT stratum, CAST(count(*) AS BIGINT) AS n_s,
+             CAST(SUM(CASE WHEN treated THEN 1 ELSE 0 END) AS BIGINT)
+               AS nt_s
+           FROM ev GROUP BY 1),
+         wtd AS (SELECT e.treated, e.value,
+             CASE WHEN e.treated
+               THEN CAST(s.n_s AS DOUBLE) / s.nt_s
+               ELSE CAST(s.n_s AS DOUBLE) / (s.n_s - s.nt_s) END AS w
+           FROM ev e JOIN strat s ON e.stratum = s.stratum),
+         agg AS (SELECT treated, CAST(count(*) AS BIGINT) AS n,
+             SUM(CAST(value * w AS DECIMAL(30,10))) AS syw,
+             SUM(CAST(w AS DECIMAL(30,10))) AS sw,
+             SUM(CAST(value AS DECIMAL(30,10))) AS sy
+           FROM wtd GROUP BY 1),
+         one AS (SELECT
+             max(CASE WHEN treated THEN n END) AS n_treated,
+             max(CASE WHEN NOT treated THEN n END) AS n_control,
+             max(CASE WHEN treated THEN CAST(syw AS DOUBLE)
+               / CAST(sw AS DOUBLE) END) AS mt,
+             max(CASE WHEN NOT treated THEN CAST(syw AS DOUBLE)
+               / CAST(sw AS DOUBLE) END) AS mc,
+             max(CASE WHEN treated THEN CAST(sy AS DOUBLE) / n END)
+               AS yt,
+             max(CASE WHEN NOT treated THEN CAST(sy AS DOUBLE) / n END)
+               AS yc
+           FROM agg)
+         SELECT n_treated, n_control, ROUND(mt - mc, 6) AS ate_ipw,
+           ROUND(yt - yc, 6) AS diff_naive
+         FROM one"""),
 
     // ── TPC-H Q18 shape (large-volume customers) ─────────────────────────
     // The HAVING-subquery benchmark: orders whose total quantity exceeds
@@ -2559,7 +4177,7 @@ object AnalyticQueries {
     // is scanned twice (once to qualify, once to total) but shuffled
     // only on orderkey; quantities are integral doubles summed as exact
     // int64 (Exact.longSum). Customer join unhinted (VERDICT r13 #1).
-    "q_tpch_q18" -> ((s, dir) => {
+    Query("q_tpch_q18", ((s, dir) => {
       val li = tn(s, dir, "lineitem").select("l_orderkey", "l_quantity")
       val big = li.groupBy(col("l_orderkey"))
         .agg(Exact.longSum(col("l_quantity")).as("qty"))
@@ -2578,6 +4196,17 @@ object AnalyticQueries {
         .orderBy(desc("o_totalprice"), col("o_orderkey"))
         .limit(100)
     }),
+      """SELECT c_name, o_custkey, o_orderkey,
+           CAST(o_orderdate AS TIMESTAMP) AS o_orderdate, o_totalprice,
+           CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS total_qty
+         FROM customer
+         JOIN orders ON c_custkey = o_custkey
+         JOIN lineitem ON o_orderkey = l_orderkey
+         WHERE o_orderkey IN (
+           SELECT l_orderkey FROM lineitem GROUP BY l_orderkey
+           HAVING SUM(CAST(l_quantity AS BIGINT)) > 300)
+         GROUP BY 1, 2, 3, 4, 5
+         ORDER BY o_totalprice DESC, o_orderkey LIMIT 100"""),
 
     // ── Top event trigram paths (behavioral sequence mining) ────────────
     // What users DO in order — the n-gram extension of q_markov_chain's
@@ -2588,7 +4217,7 @@ object AnalyticQueries {
     // denominator rides a constant-key window over the ≤|types|³-row
     // path relation (the q_class_weights pmod idiom). Top-20,
     // path-tiebroken.
-    "q_event_paths" -> ((s, dir) => {
+    Query("q_event_paths", ((s, dir) => {
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts"), col("event_id"))
       val tri = Tables.events(s, dir)
@@ -2605,6 +4234,18 @@ object AnalyticQueries {
         .orderBy(desc("n"), col("e1"), col("e2"), col("e3"))
         .limit(20)
     }),
+      """WITH seq AS (SELECT event_type AS e1,
+            lead(event_type, 1) OVER (PARTITION BY user_id
+              ORDER BY ts, event_id) AS e2,
+            lead(event_type, 2) OVER (PARTITION BY user_id
+              ORDER BY ts, event_id) AS e3
+          FROM events),
+         tri AS (SELECT e1, e2, e3, CAST(count(*) AS BIGINT) AS n
+           FROM seq WHERE e2 IS NOT NULL AND e3 IS NOT NULL
+           GROUP BY 1, 2, 3)
+         SELECT e1, e2, e3, n,
+           ROUND(CAST(n AS DOUBLE) / sum(n) OVER (), 6) AS share
+         FROM tri ORDER BY n DESC, e1, e2, e3 LIMIT 20"""),
 
     // ── 7-day rolling correlation of click vs purchase dailies ──────────
     // Does engagement co-move with conversion, and WHEN does the
@@ -2617,7 +4258,7 @@ object AnalyticQueries {
     // denominator to zero). The rolled relation is SPAN-bounded (days in
     // window at any corpus size), so its ordered windows ride the pmod
     // idiom.
-    "q_rolling_corr" -> ((s, dir) => {
+    Query("q_rolling_corr", ((s, dir) => {
       val perD = Tables.events(s, dir)
         .where(col("event_type").isin("click", "purchase"))
         .select(col("event_type"),
@@ -2650,6 +4291,36 @@ object AnalyticQueries {
               .cast("double") / sqrt(den.cast("double")), 6)).as("r7"))
         .orderBy("day")
     }),
+      """WITH perd AS (SELECT epoch_us(ts) // 86400000000 AS d,
+            CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
+              AS BIGINT) AS x,
+            CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
+              AS BIGINT) AS y
+          FROM events WHERE event_type IN ('click', 'purchase')
+          GROUP BY 1),
+         bounds AS (SELECT min(d) AS d0, max(d) AS d1 FROM perd),
+         dense AS (SELECT b.d0, g.d,
+             CAST(COALESCE(p.x, 0) AS BIGINT) AS x,
+             CAST(COALESCE(p.y, 0) AS BIGINT) AS y
+           FROM bounds b
+           CROSS JOIN (SELECT unnest(generate_series(
+             (SELECT d0 FROM bounds), (SELECT d1 FROM bounds))) AS d) g
+           LEFT JOIN perd p ON p.d = g.d),
+         m AS (SELECT d, d0, x, y,
+             CAST(SUM(x) OVER w AS BIGINT) AS sx,
+             CAST(SUM(y) OVER w AS BIGINT) AS sy,
+             CAST(SUM(x * y) OVER w AS BIGINT) AS sxy,
+             CAST(SUM(x * x) OVER w AS BIGINT) AS sxx,
+             CAST(SUM(y * y) OVER w AS BIGINT) AS syy
+           FROM dense
+           WINDOW w AS (ORDER BY d ROWS BETWEEN 6 PRECEDING
+             AND CURRENT ROW))
+         SELECT d AS day, x AS clicks, y AS purchases,
+           CASE WHEN (7 * sxx - sx * sx) * (7 * syy - sy * sy) > 0
+             THEN ROUND(CAST(7 * sxy - sx * sy AS DOUBLE)
+               / sqrt(CAST((7 * sxx - sx * sx) * (7 * syy - sy * sy)
+                 AS DOUBLE)), 6) END AS r7
+         FROM m WHERE d >= d0 + 6 ORDER BY day"""),
 
     // ── Log-rank test: click-first vs view-first survival ───────────────
     // Do the two onboarding cohorts CHURN differently — the hypothesis
@@ -2661,7 +4332,7 @@ object AnalyticQueries {
     // lifetime table (pmod window); each per-row E/V term is one IEEE
     // chain quantized DECIMAL(20,10) so the three sums are order-free;
     // the degenerate rₜ=1 final row is guarded identically both sides.
-    "q_logrank" -> ((s, dir) => {
+    Query("q_logrank", ((s, dir) => {
       val wU = Window.partitionBy(col("user_id"))
         .orderBy(col("ts"), col("event_id"))
       val per = Tables.events(s, dir)
@@ -2712,1800 +4383,6 @@ object AnalyticQueries {
           round((col("o1").cast("double") - col("e1").cast("double")) /
             sqrt(col("v").cast("double")), 6).as("z"))
     }),
-
-    // ── Empirical VaR / CVaR of daily revenue ────────────────────────────
-    // The tail-risk read a revenue dashboard puts next to q_gumbel's
-    // peak model: the 5% value-at-risk (type-1 order statistic at
-    // ⌈0.05·n⌉ over the ≤|days|-row daily revenue relation) and the
-    // expected shortfall CVaR = mean of the days at or below it. Daily
-    // sums are decimal-exact; the rank rides the pmod window on the
-    // span-bounded relation; the tail mean folds decimal sums with ONE
-    // final divide. Exactly replayable — no interpolation semantics to
-    // disagree on (the q_global_quantiles type-1 discipline).
-    "q_var_cvar" -> ((s, dir) => {
-      val daily = tn(s, dir, "orders")
-        .groupBy(expr("unix_micros(cast(o_orderdate as timestamp))" +
-          " div 86400000000").as("d"))
-        .agg(sum(col("o_totalprice").cast("decimal(30,10)")).as("rev"))
-      val wRank = Window.partitionBy(pmod(col("d"), lit(1L)))
-        .orderBy(col("rev"), col("d"))
-      val wTot = Window.partitionBy(pmod(col("d"), lit(1L)))
-      val ranked = daily.select(col("rev"),
-        row_number().over(wRank).as("rk"),
-        count(lit(1)).over(wTot).as("n"))
-      ranked
-        .where(col("rk") <= ceil(col("n").cast("double") * 0.05)
-          .cast("long"))
-        .groupBy(col("n"))
-        .agg(count(lit(1)).as("n_tail"),
-          max(col("rev")).as("var_dec"),
-          sum(col("rev")).as("tail_sum"))
-        .select(col("n").as("n_days"), col("n_tail"),
-          round(col("var_dec").cast("double"), 4).as("var_5pct"),
-          round(col("tail_sum").cast("double") /
-            col("n_tail").cast("double"), 4).as("cvar_5pct"))
-    }),
-  )
-
-  private def oSum(expr: String, as: String, scale: Int = 4): String =
-    s"ROUND(CAST(SUM(CAST($expr AS DECIMAL(28,10))) AS DOUBLE), $scale) AS $as"
-
-  val oracles: Map[String, String] = Map(
-    "q_wilcoxon" ->
-      """WITH d0 AS (
-           SELECT o_custkey,
-             SUM(CAST(CASE WHEN month(o_orderdate) <= 6 THEN o_totalprice
-                 ELSE 0.0 END AS DECIMAL(30,10)))
-             - SUM(CAST(CASE WHEN month(o_orderdate) > 6 THEN o_totalprice
-                 ELSE 0.0 END AS DECIMAL(30,10))) AS d
-           FROM orders GROUP BY 1),
-         dd AS (SELECT d FROM d0 WHERE d <> 0),
-         grp AS (SELECT abs(d) AS absd, CAST(count(*) AS BIGINT) AS c,
-             CAST(SUM(CASE WHEN d > 0 THEN 1 ELSE 0 END) AS BIGINT) AS p
-           FROM dd GROUP BY 1),
-         cum AS (SELECT absd, c, p, SUM(c) OVER (ORDER BY absd) AS cc,
-             SUM(c) OVER () AS n FROM grp),
-         st AS (SELECT CAST(max(n) AS BIGINT) AS n,
-             CAST(SUM(p * (2*cc - c + 1)) AS BIGINT) AS w2_plus FROM cum)
-         SELECT n AS n_pairs, w2_plus,
-           ROUND(CAST(w2_plus - n*(n+1)//2 AS DOUBLE)
-             / sqrt(CAST(n*(n+1)*(2*n+1) AS DOUBLE) / CAST(6 AS DOUBLE)), 6)
-             AS z
-         FROM st""",
-    "q_sprt" ->
-      """WITH ev AS (SELECT event_type, ts, event_id,
-             CASE WHEN value > 35.0 THEN 1 ELSE 0 END AS hit FROM events),
-         r AS (SELECT event_type,
-             row_number() OVER (PARTITION BY event_type
-               ORDER BY ts, event_id) AS k,
-             SUM(hit) OVER (PARTITION BY event_type ORDER BY ts, event_id
-               ROWS UNBOUNDED PRECEDING) AS h
-           FROM ev),
-         l AS (SELECT event_type, k,
-             CAST(0.200671 AS DECIMAL(12,6)) * (2*h - k) AS llr FROM r),
-         c AS (SELECT event_type, min(k) AS first_cross_k FROM l
-           WHERE llr >= CAST(2.944439 AS DECIMAL(12,6))
-              OR llr <= -CAST(2.944439 AS DECIMAL(12,6)) GROUP BY 1),
-         cd AS (SELECT l.event_type, c.first_cross_k, l.llr AS cross_llr
-           FROM c JOIN l ON l.event_type = c.event_type
-             AND l.k = c.first_cross_k),
-         f AS (SELECT event_type, max(k) AS n_events FROM l GROUP BY 1),
-         fl AS (SELECT l.event_type, f.n_events, l.llr AS llr_final
-           FROM f JOIN l ON l.event_type = f.event_type
-             AND l.k = f.n_events)
-         SELECT fl.event_type, fl.n_events,
-           COALESCE(cd.first_cross_k, -1) AS first_cross_k,
-           CASE WHEN cd.first_cross_k IS NULL THEN 'continue'
-             WHEN cd.cross_llr > 0 THEN 'accept_h1'
-             ELSE 'accept_h0' END AS decision,
-           ROUND(CAST(fl.llr_final AS DOUBLE), 6) AS llr_final
-         FROM fl LEFT JOIN cd ON cd.event_type = fl.event_type
-         ORDER BY fl.event_type""",
-    "q_markov_stationary" ->
-      """WITH tr AS (SELECT user_id, event_type AS from_type,
-             lead(event_type) OVER (PARTITION BY user_id
-               ORDER BY ts, event_id) AS to_type
-           FROM events),
-         cnt AS (SELECT from_type, to_type, count(*) AS n FROM tr
-           WHERE to_type IS NOT NULL GROUP BY 1, 2),
-         p AS (SELECT from_type, to_type,
-             CAST(ROUND(CAST(n AS DOUBLE) /
-               SUM(n) OVER (PARTITION BY from_type), 6)
-               AS DECIMAL(12,6)) AS p
-           FROM cnt),
-         s0 AS (SELECT DISTINCT from_type AS state FROM p),
-         ns AS (SELECT CAST(count(*) AS BIGINT) AS ns FROM s0),
-         pi0 AS (SELECT state,
-             CAST(ROUND(CAST(1 AS DOUBLE) / ns, 6) AS DECIMAL(12,6)) AS pi
-           FROM s0 CROSS JOIN ns),
-         pi1 AS (SELECT p.to_type AS state,
-             CAST(ROUND(CAST(SUM(CAST(pi.pi * p.p AS DECIMAL(24,12)))
-               AS DOUBLE), 6) AS DECIMAL(12,6)) AS pi
-           FROM p JOIN pi0 pi ON pi.state = p.from_type GROUP BY 1),
-         pi2 AS (SELECT p.to_type AS state,
-             CAST(ROUND(CAST(SUM(CAST(pi.pi * p.p AS DECIMAL(24,12)))
-               AS DOUBLE), 6) AS DECIMAL(12,6)) AS pi
-           FROM p JOIN pi1 pi ON pi.state = p.from_type GROUP BY 1),
-         pi3 AS (SELECT p.to_type AS state,
-             CAST(ROUND(CAST(SUM(CAST(pi.pi * p.p AS DECIMAL(24,12)))
-               AS DOUBLE), 6) AS DECIMAL(12,6)) AS pi
-           FROM p JOIN pi2 pi ON pi.state = p.from_type GROUP BY 1)
-         SELECT state, CAST(pi AS DOUBLE) AS pi3 FROM pi3 ORDER BY state""",
-    "q_eb_shrinkage" ->
-      """WITH li AS (SELECT l_partkey, CAST(count(*) AS BIGINT) AS n_items,
-             CAST(SUM(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END)
-               AS BIGINT) AS n_returns
-           FROM lineitem GROUP BY 1),
-         lr AS (SELECT *, ROUND(CAST(n_returns AS DOUBLE) / n_items, 6)
-             AS rate FROM li),
-         pri AS (SELECT CAST(count(*) AS BIGINT) AS g,
-             SUM(CAST(rate AS DECIMAL(12,6))) AS s1,
-             SUM(CAST(rate AS DECIMAL(12,6)) * CAST(rate AS DECIMAL(12,6)))
-               AS s2 FROM lr),
-         pp AS (SELECT g, CAST(s1 AS DOUBLE)/g AS m,
-             (CAST(s2 AS DOUBLE)
-               - CAST(s1 AS DOUBLE)*CAST(s1 AS DOUBLE)/g) / (g - 1) AS v
-           FROM pri),
-         pr AS (SELECT m,
-             m*(CAST(1 AS DOUBLE)-m)/v - CAST(1 AS DOUBLE) AS ab FROM pp)
-         SELECT l_partkey, n_items, n_returns, rate AS rate_raw,
-           ROUND((n_returns + m*ab) / (n_items + ab), 6) AS rate_eb
-         FROM lr CROSS JOIN pr ORDER BY l_partkey""",
-    "q_window_rank" ->
-      """SELECT c_mktsegment, rn, c_custkey, c_acctbal FROM (
-           SELECT c_mktsegment, c_custkey, c_acctbal,
-             row_number() OVER (PARTITION BY c_mktsegment
-                                ORDER BY c_acctbal DESC, c_custkey ASC) AS rn
-           FROM customer)
-         WHERE rn <= 3 ORDER BY c_mktsegment, rn""",
-    "q_window_lag" ->
-      """SELECT o_orderkey, o_custkey,
-            COALESCE(lag(o_totalprice, 1) OVER (PARTITION BY o_custkey
-              ORDER BY o_orderdate ASC, o_orderkey ASC), -1.0) AS prev_price
-         FROM orders ORDER BY o_orderkey""",
-    "q_scd2" ->
-      """WITH c AS (
-           SELECT user_id, ts, event_id, event_type,
-             lag(event_type) OVER (PARTITION BY user_id
-                                   ORDER BY ts, event_id) AS prev
-           FROM events WHERE user_id < 20),
-         ch AS (
-           SELECT user_id, ts, event_id, event_type FROM c
-           WHERE prev IS NULL OR prev <> event_type)
-         SELECT user_id, event_type AS state, ts AS valid_from,
-           lead(ts) OVER (PARTITION BY user_id
-                          ORDER BY ts, event_id) AS valid_to,
-           lead(ts) OVER (PARTITION BY user_id
-                          ORDER BY ts, event_id) IS NULL AS is_current
-         FROM ch ORDER BY user_id, valid_from""",
-    // the DIRECT full aggregate — merged partials must equal it exactly
-    "q_ivm_merge" ->
-      """SELECT event_type, CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-           count(*) AS cnt,
-           ROUND(CAST(SUM(CAST(value AS DECIMAL(28,10))) AS DOUBLE), 4)
-             AS sum_value,
-           min(value) AS min_v, max(value) AS max_v
-         FROM events GROUP BY 1, 2 ORDER BY event_type, day""",
-    "q_window_dist" ->
-      """SELECT c_mktsegment, c_custkey, c_acctbal,
-           ROUND(percent_rank() OVER w, 6) AS pct_rank,
-           ROUND(cume_dist() OVER w, 6) AS cume,
-           nth_value(c_acctbal, 3) OVER (w ROWS BETWEEN UNBOUNDED PRECEDING
-                                         AND UNBOUNDED FOLLOWING) AS third_bal
-         FROM customer
-         WINDOW w AS (PARTITION BY c_mktsegment
-                      ORDER BY c_acctbal DESC, c_custkey ASC)
-         ORDER BY c_mktsegment, pct_rank, c_custkey""",
-    "q_window_frame" ->
-      """SELECT o_orderkey, o_custkey,
-            ROUND(CAST(SUM(CAST(o_totalprice AS DECIMAL(28,10))) OVER (
-              PARTITION BY o_custkey ORDER BY o_orderdate ASC, o_orderkey ASC
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE), 4)
-              AS running_total
-         FROM orders ORDER BY o_orderkey""",
-    "q_events_hourly" ->
-      s"""SELECT date_trunc('hour', ts) AS hour, count(*) AS cnt,
-            ${oSum("value", "sum_value")}
-          FROM events GROUP BY 1 ORDER BY hour""",
-    "q_fano" ->
-      """WITH perh AS (
-           SELECT event_type, epoch_us(ts) // 3600000000 AS h,
-             CAST(count(*) AS BIGINT) AS c
-           FROM events GROUP BY 1, 2),
-         span AS (
-           SELECT CAST(max(h) - min(h) + 1 AS BIGINT) AS n_hours
-           FROM perh),
-         m AS (
-           SELECT event_type, CAST(SUM(c) AS BIGINT) AS sx,
-             CAST(SUM(c * c) AS BIGINT) AS sxx
-           FROM perh GROUP BY 1),
-         k AS (
-           SELECT event_type, n_hours, sx,
-             CAST(sx AS DOUBLE) / CAST(n_hours AS DOUBLE) AS mean0,
-             CAST(sxx AS DOUBLE) / CAST(n_hours AS DOUBLE)
-               - (CAST(sx AS DOUBLE) / CAST(n_hours AS DOUBLE))
-               * (CAST(sx AS DOUBLE) / CAST(n_hours AS DOUBLE)) AS var0
-           FROM m, span)
-         SELECT event_type, n_hours, sx AS n_events,
-           ROUND(mean0, 6) AS mean_per_hour,
-           ROUND(var0, 6) AS var_per_hour,
-           ROUND(var0 / mean0, 6) AS fano
-         FROM k ORDER BY event_type""",
-    "q_new_returning" ->
-      """WITH ev AS (
-           SELECT user_id, epoch_us(ts) // 604800000000 AS wk FROM events),
-         f AS (SELECT user_id, min(wk) AS wk0 FROM ev GROUP BY 1)
-         SELECT wk, CAST(count(*) AS BIGINT) AS n_events,
-           CAST(count(DISTINCT ev.user_id) AS BIGINT) AS n_users,
-           CAST(count(DISTINCT CASE WHEN wk = wk0 THEN ev.user_id END)
-             AS BIGINT) AS n_new_users,
-           ROUND(CAST(count(DISTINCT CASE WHEN wk = wk0 THEN ev.user_id END)
-               AS DOUBLE)
-             / count(DISTINCT ev.user_id), 6) AS new_share
-         FROM ev JOIN f USING (user_id)
-         GROUP BY wk ORDER BY wk""",
-    "q_hill_tail" ->
-      """WITH cust AS (
-           SELECT o_custkey,
-             CAST(SUM(CAST(o_totalprice AS DECIMAL(28,10))) AS DOUBLE) AS x
-           FROM orders GROUP BY 1),
-         top AS (
-           SELECT o_custkey, x FROM cust
-           ORDER BY x DESC, o_custkey LIMIT 101),
-         ranked AS (
-           SELECT x, row_number() OVER (ORDER BY x DESC, o_custkey) AS rn
-           FROM top),
-         ref AS (SELECT x AS xref FROM ranked WHERE rn = 101),
-         s AS (
-           SELECT CAST(count(*) AS BIGINT) AS k,
-             CAST(SUM(CAST(ln(x / xref) AS DECIMAL(30,10))) AS DOUBLE)
-               AS s,
-             xref
-           FROM ranked, ref WHERE rn <= 100 GROUP BY xref)
-         SELECT k, ROUND(xref, 4) AS x_kplus1,
-           ROUND(CAST(k AS DOUBLE) / s, 6) AS hill_alpha
-         FROM s""",
-    "q_transition_entropy" ->
-      """WITH e AS (
-           SELECT user_id, event_id, event_type,
-             CAST(epoch_us(ts) AS BIGINT) AS ts_us
-           FROM events),
-         p AS (
-           SELECT event_type AS cur,
-             lead(event_type) OVER (PARTITION BY user_id
-                                    ORDER BY ts_us, event_id) AS nxt
-           FROM e),
-         cells AS (
-           SELECT cur, nxt, CAST(count(*) AS BIGINT) AS c
-           FROM p WHERE nxt IS NOT NULL GROUP BY 1, 2),
-         ct AS (SELECT cur, CAST(SUM(c) AS BIGINT) AS tc
-                FROM cells GROUP BY 1),
-         nt AS (SELECT nxt, CAST(SUM(c) AS BIGINT) AS tn
-                FROM cells GROUP BY 1),
-         tot AS (SELECT CAST(SUM(c) AS BIGINT) AS n FROM cells),
-         hc AS (
-           SELECT CAST(SUM(CAST(0.0 - CAST(c AS DOUBLE) / n
-               * ln(CAST(c AS DOUBLE) / tc) AS DECIMAL(30,10))) AS DOUBLE)
-             AS h_cond
-           FROM cells JOIN ct USING (cur) CROSS JOIN tot),
-         hm AS (
-           SELECT CAST(SUM(CAST(0.0 - CAST(tn AS DOUBLE) / n
-               * ln(CAST(tn AS DOUBLE) / n) AS DECIMAL(30,10))) AS DOUBLE)
-             AS h_marg
-           FROM nt CROSS JOIN tot)
-         SELECT n AS n_transitions, ROUND(h_cond, 6) AS h_cond,
-           ROUND(h_marg, 6) AS h_marg,
-           ROUND(h_marg - h_cond, 6) AS info_gain
-         FROM tot, hc, hm""",
-    "q_streaks" ->
-      """WITH days AS (
-           SELECT DISTINCT user_id, epoch_us(ts) // 86400000000 AS d
-           FROM events),
-         runs AS (
-           SELECT user_id, d - row_number() OVER (PARTITION BY user_id
-             ORDER BY d) AS isl
-           FROM days),
-         lens AS (
-           SELECT user_id, isl, CAST(count(*) AS BIGINT) AS len
-           FROM runs GROUP BY 1, 2)
-         SELECT len, CAST(count(*) AS BIGINT) AS n_streaks,
-           CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
-         FROM lens GROUP BY len ORDER BY len""",
-    "q_yoy" ->
-      """WITH m AS (
-           SELECT year(o_orderdate) * 12 + month(o_orderdate) - 1 AS mix,
-             sum(CAST(o_totalprice AS DECIMAL(28,10))) AS rev
-           FROM orders GROUP BY 1)
-         SELECT CAST(c.mix // 12 AS INT) AS o_year,
-           CAST(c.mix % 12 + 1 AS INT) AS o_month,
-           ROUND(CAST(c.rev AS DOUBLE), 4) AS revenue,
-           ROUND((CAST(c.rev AS DOUBLE) / CAST(p.rev AS DOUBLE) - 1) * 100,
-             4) AS mom_pct,
-           ROUND((CAST(c.rev AS DOUBLE) / CAST(y.rev AS DOUBLE) - 1) * 100,
-             4) AS yoy_pct
-         FROM m c
-         JOIN m p ON c.mix = p.mix + 1
-         JOIN m y ON c.mix = y.mix + 12
-         ORDER BY c.mix""",
-    "q_orders_monthly" ->
-      s"""SELECT CAST(year(o_orderdate) AS INT) AS o_year,
-            CAST(month(o_orderdate) AS INT) AS o_month,
-            count(*) AS cnt, ${oSum("o_totalprice", "total")}
-          FROM orders GROUP BY 1, 2 ORDER BY o_year, o_month""",
-    // the q_outliers median/MAD mirror over per-type hourly counts
-    "q_events_anomaly" ->
-      """WITH hourly AS (
-            SELECT event_type, date_trunc('hour', ts) AS hour,
-              CAST(count(*) AS DOUBLE) AS x
-            FROM events GROUP BY 1, 2),
-          med AS (
-            SELECT event_type, ROUND(quantile_cont(x, 0.5), 6) AS med
-            FROM hourly GROUP BY 1),
-          dev AS (
-            SELECT h.event_type, h.hour, h.x, m.med,
-              ABS(h.x - m.med) AS adev
-            FROM hourly h JOIN med m USING (event_type)),
-          mad AS (
-            SELECT event_type, ROUND(quantile_cont(adev, 0.5), 6) AS mad
-            FROM dev GROUP BY 1),
-          z AS (
-            SELECT d.hour, d.event_type, d.x, d.med, m.mad,
-              CASE WHEN m.mad = 0 THEN NULL
-                   ELSE ROUND((d.x - d.med) / (1.4826 * m.mad), 6)
-              END AS z
-            FROM dev d JOIN mad m USING (event_type))
-          SELECT hour, event_type, CAST(x AS BIGINT) AS n_events, med, mad,
-            z, COALESCE(ABS(z) > 3, FALSE) AS is_outlier
-          FROM z ORDER BY event_type, hour""",
-    "q_sessions" ->
-      """WITH x AS (
-           SELECT user_id, ts,
-             CASE WHEN lag(ts) OVER w IS NULL
-                    OR ts - lag(ts) OVER w >= INTERVAL 10 MINUTE
-                  THEN 1 ELSE 0 END AS new_s
-           FROM events
-           WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-         y AS (
-           SELECT user_id, ts,
-             SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts
-                              ROWS UNBOUNDED PRECEDING) AS sid
-           FROM x)
-         SELECT user_id, min(ts) AS session_start,
-           max(ts) + INTERVAL 10 MINUTE AS session_end,
-           count(*) AS n_events
-         FROM y GROUP BY user_id, sid
-         ORDER BY user_id, session_start""",
-    "q_dau_wau" ->
-      """WITH e AS (
-           SELECT CAST(date_trunc('week', ts) AS TIMESTAMP) AS week,
-             CAST(date_trunc('day', ts) AS TIMESTAMP) AS day, user_id
-           FROM events),
-         dau AS (
-           SELECT week, day, count(DISTINCT user_id) AS dau
-           FROM e GROUP BY 1, 2),
-         wau AS (
-           SELECT week, count(DISTINCT user_id) AS wau
-           FROM e GROUP BY 1),
-         wk AS (
-           SELECT week, count(*) AS n_days,
-             ROUND(CAST(SUM(CAST(dau AS DECIMAL(28,10))) AS DOUBLE)
-               / count(*), 6) AS avg_dau
-           FROM dau GROUP BY 1)
-         SELECT wk.week, wk.n_days, wk.avg_dau, wau.wau,
-           ROUND(wk.avg_dau / wau.wau, 6) AS stickiness
-         FROM wk JOIN wau USING (week)
-         ORDER BY week""",
-    "q_rfm" ->
-      """WITH per AS (
-           SELECT o_custkey, max(o_orderdate) AS last_d,
-             count(*) AS freq,
-             ROUND(CAST(SUM(CAST(o_totalprice AS DECIMAL(28,10)))
-               AS DOUBLE), 4) AS monetary
-           FROM orders GROUP BY 1),
-         mx AS (SELECT max(o_orderdate) AS max_d FROM orders),
-         rfm AS (
-           SELECT o_custkey,
-             date_diff('day', CAST(last_d AS DATE), CAST(max_d AS DATE))
-               AS recency,
-             freq, monetary
-           FROM per CROSS JOIN mx),
-         scored AS (
-           SELECT o_custkey,
-             ntile(5) OVER (ORDER BY recency ASC, o_custkey ASC) AS r_q,
-             ntile(5) OVER (ORDER BY freq DESC, o_custkey ASC) AS f_q,
-             ntile(5) OVER (ORDER BY monetary DESC, o_custkey ASC) AS m_q
-           FROM rfm)
-         SELECT r_q, f_q, m_q, count(*) AS n_customers
-         FROM scored GROUP BY 1, 2, 3 ORDER BY r_q, f_q, m_q""",
-    // sessions CTE shared with q_sessions/q_interval_join; exact micros
-    // (epoch_us) throughout, seconds only at the output edge.
-    "q_burst_coverage" ->
-      """WITH x AS (
-           SELECT user_id, ts,
-             CASE WHEN lag(ts) OVER w IS NULL
-                    OR ts - lag(ts) OVER w >= INTERVAL 10 MINUTE
-                  THEN 1 ELSE 0 END AS new_s
-           FROM events
-           WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-         y AS (
-           SELECT user_id, ts,
-             SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts
-                              ROWS UNBOUNDED PRECEDING) AS sid
-           FROM x),
-         sess AS (
-           SELECT user_id, min(ts) AS session_start,
-             max(ts) + INTERVAL 10 MINUTE AS session_end
-           FROM y GROUP BY user_id, sid),
-         bursts AS (
-           SELECT date_trunc('hour', ts) AS w_start,
-             date_trunc('hour', ts) + INTERVAL 1 HOUR AS w_end
-           FROM events WHERE event_type = 'error'
-           GROUP BY 1 HAVING count(*) >= 7),
-         ov AS (
-           SELECT s.user_id,
-             epoch_us(least(s.session_end, b.w_end))
-               - epoch_us(greatest(s.session_start, b.w_start)) AS ov_us
-           FROM sess s JOIN bursts b
-             ON s.session_start < b.w_end AND b.w_start < s.session_end),
-         ovu AS (
-           SELECT user_id, count(*) AS n_overlaps,
-             CAST(sum(ov_us) AS BIGINT) AS ov_us
-           FROM ov GROUP BY 1),
-         tot AS (
-           SELECT user_id, count(*) AS n_sessions,
-             CAST(sum(epoch_us(session_end) - epoch_us(session_start))
-               AS BIGINT) AS sess_us
-           FROM sess GROUP BY 1)
-         SELECT t.user_id, t.n_sessions,
-           COALESCE(o.n_overlaps, 0) AS n_overlaps,
-           ROUND(CAST(t.sess_us AS DOUBLE) / 1000000.0, 6) AS sess_secs,
-           ROUND(CAST(COALESCE(o.ov_us, 0) AS DOUBLE) / 1000000.0, 6)
-             AS ov_secs,
-           ROUND(CAST(COALESCE(o.ov_us, 0) AS DOUBLE) / t.sess_us, 6)
-             AS coverage
-         FROM tot t LEFT JOIN ovu o USING (user_id)
-         ORDER BY user_id""",
-    // Sessions CTE shared verbatim with q_sessions (the gate that proves
-    // the relational derivation equals session_window); the overlap join
-    // itself is the plain range predicate — the engine's binning is an
-    // execution strategy, not a semantic.
-    "q_interval_join" ->
-      """WITH x AS (
-           SELECT user_id, ts,
-             CASE WHEN lag(ts) OVER w IS NULL
-                    OR ts - lag(ts) OVER w >= INTERVAL 10 MINUTE
-                  THEN 1 ELSE 0 END AS new_s
-           FROM events
-           WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-         y AS (
-           SELECT user_id, ts,
-             SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts
-                              ROWS UNBOUNDED PRECEDING) AS sid
-           FROM x),
-         sess AS (
-           SELECT user_id, min(ts) AS session_start,
-             max(ts) + INTERVAL 10 MINUTE AS session_end
-           FROM y GROUP BY user_id, sid),
-         bursts AS (
-           SELECT date_trunc('hour', ts) AS w_start,
-             date_trunc('hour', ts) + INTERVAL 1 HOUR AS w_end,
-             count(*) AS n_errors
-           FROM events WHERE event_type = 'error'
-           GROUP BY 1 HAVING count(*) >= 7)
-         SELECT s.user_id, s.session_start, s.session_end, b.w_start,
-           b.n_errors,
-           (epoch_us(least(s.session_end, b.w_end))
-            - epoch_us(greatest(s.session_start, b.w_start))) / 1000000.0
-             AS overlap_secs
-         FROM sess s JOIN bursts b
-           ON s.session_start < b.w_end AND b.w_start < s.session_end
-         ORDER BY s.user_id, s.session_start, b.w_start""",
-    "q_funnel" ->
-      """WITH su AS (
-           SELECT user_id, min(ts) AS signup_ts FROM events
-           WHERE event_type = 'signup' GROUP BY 1),
-         c AS (
-           SELECT su.user_id, su.signup_ts,
-             min(CASE WHEN e.ts > su.signup_ts THEN e.ts END) AS click_ts
-           FROM su LEFT JOIN events e
-             ON e.user_id = su.user_id AND e.event_type = 'click'
-           GROUP BY 1, 2),
-         p AS (
-           SELECT c.user_id, c.signup_ts, c.click_ts,
-             min(CASE WHEN e.ts > c.click_ts THEN e.ts END) AS purchase_ts
-           FROM c LEFT JOIN events e
-             ON e.user_id = c.user_id AND e.event_type = 'purchase'
-           GROUP BY 1, 2, 3)
-         SELECT user_id, signup_ts, click_ts, purchase_ts,
-           1 + CASE WHEN click_ts IS NOT NULL THEN 1 ELSE 0 END
-             + CASE WHEN purchase_ts IS NOT NULL THEN 1 ELSE 0 END AS stage
-         FROM p ORDER BY user_id""",
-    "q_cohort" ->
-      """WITH f AS (
-           SELECT user_id, date_trunc('week', min(ts)) AS cohort_week
-           FROM events GROUP BY 1),
-         a AS (
-           SELECT DISTINCT user_id, date_trunc('week', ts) AS week
-           FROM events)
-         SELECT CAST(f.cohort_week AS TIMESTAMP) AS cohort_week,
-           CAST(a.week AS TIMESTAMP) AS week, count(*) AS n_users
-         FROM f JOIN a ON f.user_id = a.user_id
-         GROUP BY 1, 2 ORDER BY cohort_week, week""",
-    "q_events_props" ->
-      s"""SELECT CAST(json_extract_string(props, '$$.k') AS INT) AS k_path,
-            CAST(json_extract_string(props, '$$.k') AS INT) AS k_struct,
-            count(*) AS cnt, ${oSum("value", "sum_value")}
-          FROM events GROUP BY 1, 2 ORDER BY k_path""",
-    "q_array_fns" -> {
-      val re = graft.tok.Tokenizer.DefaultSplitRegex.replace("'", "''")
-      s"""SELECT doc_id,
-            CAST(len(toks) AS INT) AS n_tokens,
-            CAST(len(list_distinct(toks)) AS INT) AS n_distinct,
-            list_sort(toks)[1] AS first_token,
-            list_sort(toks)[-1] AS last_token
-          FROM (SELECT doc_id,
-                  list_filter(string_split_regex(lower(text), '$re'),
-                              x -> x <> '') AS toks
-                FROM documents)
-          ORDER BY doc_id"""
-    },
-    "q_string_fns" ->
-      """SELECT p_partkey, upper(p_name) AS uname,
-            substring(p_name, 1, 4) AS prefix,
-            CAST(length(p_name) AS INT) AS len,
-            CAST(regexp_extract(p_brand, '[0-9]+') AS INT) AS brand_num,
-            concat_ws('/', p_type, p_brand) AS type_brand,
-            regexp_replace(p_name, '[aeiou]', '_', 'g') AS devoweled
-         FROM part ORDER BY p_partkey""",
-    "q_math_fns" ->
-      """SELECT l_orderkey, l_linenumber,
-            ROUND(sqrt(l_extendedprice), 6) AS sqrt_price,
-            ROUND(ln(l_extendedprice + 1.0), 6) AS ln_price,
-            CAST(ceil(l_quantity / 7.0) AS BIGINT) AS qty_ceil,
-            CAST(floor(l_quantity / 7.0) AS BIGINT) AS qty_floor,
-            abs(l_discount - 0.05) AS abs_disc,
-            l_orderkey % 97 AS key_mod
-         FROM lineitem ORDER BY l_orderkey, l_linenumber""",
-    "q_corr" ->
-      """WITH m AS (
-            SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n,
-              CAST(SUM(CAST(l_quantity AS DECIMAL(30,10))) AS DOUBLE) AS sx,
-              CAST(SUM(CAST(l_extendedprice AS DECIMAL(30,10))) AS DOUBLE)
-                AS sy,
-              CAST(SUM(CAST(l_quantity * l_extendedprice AS DECIMAL(30,10)))
-                   AS DOUBLE) AS sxy,
-              CAST(SUM(CAST(l_quantity * l_quantity AS DECIMAL(30,10)))
-                   AS DOUBLE) AS sxx,
-              CAST(SUM(CAST(l_extendedprice * l_extendedprice
-                            AS DECIMAL(30,10))) AS DOUBLE) AS syy
-            FROM lineitem GROUP BY l_returnflag)
-          SELECT l_returnflag, n,
-            ROUND((CAST(n AS DOUBLE) * sxy - sx * sy)
-                  / (sqrt(CAST(n AS DOUBLE) * sxx - sx * sx)
-                     * sqrt(CAST(n AS DOUBLE) * syy - sy * sy)), 6) AS r
-          FROM m ORDER BY l_returnflag""",
-    // the unrounded slope feeds the intercept on both sides (rounding it
-    // first would double-round the composite)
-    "q_regression" ->
-      """WITH m AS (
-            SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n,
-              CAST(SUM(CAST(l_quantity AS DECIMAL(30,10))) AS DOUBLE) AS sx,
-              CAST(SUM(CAST(l_extendedprice AS DECIMAL(30,10))) AS DOUBLE)
-                AS sy,
-              CAST(SUM(CAST(l_quantity * l_extendedprice AS DECIMAL(30,10)))
-                   AS DOUBLE) AS sxy,
-              CAST(SUM(CAST(l_quantity * l_quantity AS DECIMAL(30,10)))
-                   AS DOUBLE) AS sxx
-            FROM lineitem GROUP BY l_returnflag),
-          k AS (
-            SELECT *, (CAST(n AS DOUBLE) * sxy - sx * sy)
-                      / (CAST(n AS DOUBLE) * sxx - sx * sx) AS slope
-            FROM m)
-          SELECT l_returnflag, n, ROUND(slope, 6) AS slope,
-            ROUND((sy - slope * sx) / CAST(n AS DOUBLE), 6) AS intercept
-          FROM k ORDER BY l_returnflag""",
-    // same nine decimal moment sums; Cramer solve is one double chain.
-    "q_ols2" ->
-      """WITH m AS (
-            SELECT CAST(count(*) AS BIGINT) AS n,
-              CAST(SUM(CAST(l_quantity AS DECIMAL(30,10))) AS DOUBLE) AS s1,
-              CAST(SUM(CAST(l_discount AS DECIMAL(30,10))) AS DOUBLE) AS s2,
-              CAST(SUM(CAST(l_extendedprice AS DECIMAL(30,10))) AS DOUBLE)
-                AS sy,
-              CAST(SUM(CAST(l_quantity * l_quantity AS DECIMAL(30,10)))
-                   AS DOUBLE) AS s11,
-              CAST(SUM(CAST(l_quantity * l_discount AS DECIMAL(30,10)))
-                   AS DOUBLE) AS s12,
-              CAST(SUM(CAST(l_discount * l_discount AS DECIMAL(30,10)))
-                   AS DOUBLE) AS s22,
-              CAST(SUM(CAST(l_quantity * l_extendedprice AS DECIMAL(30,10)))
-                   AS DOUBLE) AS s1y,
-              CAST(SUM(CAST(l_discount * l_extendedprice AS DECIMAL(30,10)))
-                   AS DOUBLE) AS s2y,
-              CAST(SUM(CAST(l_extendedprice * l_extendedprice
-                   AS DECIMAL(30,10))) AS DOUBLE) AS syy
-            FROM lineitem),
-          c AS (
-            SELECT n,
-              s1, s2, sy,
-              CAST(n AS DOUBLE) * s11 - s1 * s1 AS c11,
-              CAST(n AS DOUBLE) * s12 - s1 * s2 AS c12,
-              CAST(n AS DOUBLE) * s22 - s2 * s2 AS c22,
-              CAST(n AS DOUBLE) * s1y - s1 * sy AS c1y,
-              CAST(n AS DOUBLE) * s2y - s2 * sy AS c2y,
-              CAST(n AS DOUBLE) * syy - sy * sy AS cyy
-            FROM m),
-          b AS (
-            SELECT n, s1, s2, sy, c1y, c2y, cyy,
-              (c1y * c22 - c2y * c12) / (c11 * c22 - c12 * c12) AS b1,
-              (c11 * c2y - c12 * c1y) / (c11 * c22 - c12 * c12) AS b2
-            FROM c)
-          SELECT n, ROUND(b1, 6) AS b_quantity, ROUND(b2, 6) AS b_discount,
-            ROUND((sy - b1 * s1 - b2 * s2) / CAST(n AS DOUBLE), 6)
-              AS intercept,
-            ROUND((b1 * c1y + b2 * c2y) / cyy, 6) AS r2
-          FROM b""",
-    // rank() = min-rank on ties; doubled midrank = 2·rank + cnt − 1.
-    "q_spearman" ->
-      """WITH b AS (
-            SELECT l_quantity AS q, l_extendedprice AS p,
-              l_orderkey * 10 + l_linenumber AS rid
-            FROM lineitem),
-          ur AS (
-            SELECT rid, 2 * rank() OVER (ORDER BY q)
-              + count(*) OVER (PARTITION BY q) - 1 AS u
-            FROM b),
-          vr AS (
-            SELECT rid, 2 * rank() OVER (ORDER BY p)
-              + count(*) OVER (PARTITION BY p) - 1 AS v
-            FROM b),
-          m AS (
-            SELECT CAST(count(*) AS BIGINT) AS n,
-              CAST(SUM(CAST(u AS DECIMAL(30,0))) AS DOUBLE) AS su,
-              CAST(SUM(CAST(v AS DECIMAL(30,0))) AS DOUBLE) AS sv,
-              CAST(SUM(CAST(u AS DECIMAL(19,0)) * CAST(v AS DECIMAL(19,0)))
-                AS DOUBLE) AS suv,
-              CAST(SUM(CAST(u AS DECIMAL(19,0)) * CAST(u AS DECIMAL(19,0)))
-                AS DOUBLE) AS suu,
-              CAST(SUM(CAST(v AS DECIMAL(19,0)) * CAST(v AS DECIMAL(19,0)))
-                AS DOUBLE) AS svv
-            FROM ur JOIN vr USING (rid))
-          SELECT n,
-            ROUND((CAST(n AS DOUBLE) * suv - su * sv)
-              / (sqrt(CAST(n AS DOUBLE) * suu - su * su)
-                * sqrt(CAST(n AS DOUBLE) * svv - sv * sv)), 6)
-              AS spearman_rho
-          FROM m""",
-    "q_cramers_v" ->
-      """WITH cells AS (
-            SELECT l_returnflag AS rf, month(l_shipdate) AS mo,
-              CAST(count(*) AS BIGINT) AS o
-            FROM lineitem GROUP BY 1, 2),
-          rm AS (SELECT rf, CAST(SUM(o) AS BIGINT) AS rsum
-                 FROM cells GROUP BY 1),
-          cm AS (SELECT mo, CAST(SUM(o) AS BIGINT) AS csum
-                 FROM cells GROUP BY 1),
-          tot AS (SELECT CAST(SUM(o) AS BIGINT) AS n,
-                    CAST(count(DISTINCT rf) AS BIGINT) AS r,
-                    CAST(count(DISTINCT mo) AS BIGINT) AS c
-                  FROM cells),
-          grid AS (
-            SELECT rm.rf, cm.mo, rm.rsum, cm.csum,
-              coalesce(cells.o, 0) AS o
-            FROM rm CROSS JOIN cm
-            LEFT JOIN cells ON cells.rf = rm.rf AND cells.mo = cm.mo),
-          x AS (
-            SELECT CAST(SUM(CAST(
-                (CAST(o AS DOUBLE) - CAST(rsum AS DOUBLE)
-                   * CAST(csum AS DOUBLE) / CAST(n AS DOUBLE))
-                * (CAST(o AS DOUBLE) - CAST(rsum AS DOUBLE)
-                   * CAST(csum AS DOUBLE) / CAST(n AS DOUBLE))
-                / (CAST(rsum AS DOUBLE) * CAST(csum AS DOUBLE)
-                   / CAST(n AS DOUBLE))
-              AS DECIMAL(30,6))) AS DOUBLE) AS chi2
-            FROM grid, tot)
-          SELECT n, r, c,
-            ROUND(chi2, 6) AS chi2,
-            (r - 1) * (c - 1) AS dof,
-            ROUND(sqrt(chi2 / (CAST(n AS DOUBLE)
-              * CAST(least(r - 1, c - 1) AS DOUBLE))), 6) AS cramers_v
-          FROM x, tot""",
-    "q_partial_corr" ->
-      """WITH m AS (
-            SELECT CAST(count(*) AS BIGINT) AS n,
-              CAST(SUM(CAST(l_quantity AS DECIMAL(30,10))) AS DOUBLE) AS sx,
-              CAST(SUM(CAST(l_extendedprice AS DECIMAL(30,10))) AS DOUBLE)
-                AS sy,
-              CAST(SUM(CAST(l_discount AS DECIMAL(30,10))) AS DOUBLE) AS sz,
-              CAST(SUM(CAST(l_quantity * l_extendedprice AS DECIMAL(30,10)))
-                AS DOUBLE) AS sxy,
-              CAST(SUM(CAST(l_quantity * l_discount AS DECIMAL(30,10)))
-                AS DOUBLE) AS sxz,
-              CAST(SUM(CAST(l_extendedprice * l_discount AS DECIMAL(30,10)))
-                AS DOUBLE) AS syz,
-              CAST(SUM(CAST(l_quantity * l_quantity AS DECIMAL(30,10)))
-                AS DOUBLE) AS sxx,
-              CAST(SUM(CAST(l_extendedprice * l_extendedprice
-                AS DECIMAL(30,10))) AS DOUBLE) AS syy,
-              CAST(SUM(CAST(l_discount * l_discount AS DECIMAL(30,10)))
-                AS DOUBLE) AS szz
-            FROM lineitem),
-          k AS (
-            SELECT n,
-              (CAST(n AS DOUBLE) * sxy - sx * sy)
-                / (sqrt(CAST(n AS DOUBLE) * sxx - sx * sx)
-                  * sqrt(CAST(n AS DOUBLE) * syy - sy * sy)) AS rxy,
-              (CAST(n AS DOUBLE) * sxz - sx * sz)
-                / (sqrt(CAST(n AS DOUBLE) * sxx - sx * sx)
-                  * sqrt(CAST(n AS DOUBLE) * szz - sz * sz)) AS rxz,
-              (CAST(n AS DOUBLE) * syz - sy * sz)
-                / (sqrt(CAST(n AS DOUBLE) * syy - sy * sy)
-                  * sqrt(CAST(n AS DOUBLE) * szz - sz * sz)) AS ryz
-            FROM m)
-          SELECT n, ROUND(rxy, 6) AS r_xy, ROUND(rxz, 6) AS r_xz,
-            ROUND(ryz, 6) AS r_yz,
-            ROUND((rxy - rxz * ryz)
-              / sqrt((CAST(1 AS DOUBLE) - rxz * rxz)
-                * (CAST(1 AS DOUBLE) - ryz * ryz)), 6) AS r_xy_given_z
-          FROM k""",
-    "q_simpson" ->
-      """WITH g AS (
-            SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n,
-              SUM(CAST(l_quantity AS DECIMAL(30,10))) AS sx,
-              SUM(CAST(l_extendedprice AS DECIMAL(30,10))) AS sy,
-              SUM(CAST(l_quantity * l_extendedprice AS DECIMAL(30,10)))
-                AS sxy,
-              SUM(CAST(l_quantity * l_quantity AS DECIMAL(30,10))) AS sxx
-            FROM lineitem GROUP BY 1),
-          a AS (
-            SELECT CAST(SUM(n) AS BIGINT) AS n,
-              CAST(SUM(sx) AS DOUBLE) AS tsx,
-              CAST(SUM(sy) AS DOUBLE) AS tsy,
-              CAST(SUM(sxy) AS DOUBLE) AS tsxy,
-              CAST(SUM(sxx) AS DOUBLE) AS tsxx,
-              CAST(SUM(CAST((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
-                  - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-                / CAST(n AS DOUBLE) AS DECIMAL(30,6))) AS DOUBLE) AS wxy,
-              CAST(SUM(CAST((CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-                  - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-                / CAST(n AS DOUBLE) AS DECIMAL(30,6))) AS DOUBLE) AS wxx
-            FROM g),
-          s AS (
-            SELECT n,
-              ROUND((CAST(n AS DOUBLE) * tsxy - tsx * tsy)
-                / (CAST(n AS DOUBLE) * tsxx - tsx * tsx), 6)
-                AS slope_overall,
-              ROUND(wxy / wxx, 6) AS slope_within
-            FROM a)
-          SELECT n, slope_overall, slope_within,
-            slope_overall * slope_within >= 0 AS same_sign
-          FROM s""",
-    "q_theil" ->
-      """WITH cust AS (
-            SELECT o.o_custkey,
-              CAST(SUM(CAST(o_totalprice AS DECIMAL(30,10))) AS DOUBLE)
-                AS x,
-              c.c_nationkey
-            FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-            GROUP BY o.o_custkey, c.c_nationkey),
-          gl AS (
-            SELECT CAST(count(*) AS BIGINT) AS n,
-              CAST(SUM(CAST(x AS DECIMAL(30,10))) AS DOUBLE) AS xt
-            FROM cust),
-          tt AS (
-            SELECT CAST(SUM(CAST((x / (xt / CAST(n AS DOUBLE)))
-                * ln(x / (xt / CAST(n AS DOUBLE))) AS DECIMAL(30,6)))
-              AS DOUBLE) AS tsum
-            FROM cust, gl),
-          nat AS (
-            SELECT c_nationkey, CAST(count(*) AS BIGINT) AS ng,
-              CAST(SUM(CAST(x AS DECIMAL(30,10))) AS DOUBLE) AS xg
-            FROM cust GROUP BY 1),
-          tb AS (
-            SELECT CAST(SUM(CAST((xg / xt)
-                * ln((xg / CAST(ng AS DOUBLE)) / (xt / CAST(n AS DOUBLE)))
-                AS DECIMAL(30,6))) AS DOUBLE) AS bsum
-            FROM nat, gl)
-          SELECT gl.n AS n_customers,
-            ROUND(tsum / CAST(gl.n AS DOUBLE), 6) AS t_total,
-            ROUND(bsum, 6) AS t_between,
-            ROUND(tsum / CAST(gl.n AS DOUBLE) - bsum, 6) AS t_within
-          FROM gl, tt, tb""",
-    // ntile remainder rule (first buckets take the extra row) is the same
-    // in both engines; the (n_chars, doc_id) total order pins membership.
-    "q_histogram_eqdepth" ->
-      """SELECT lang, ntile_b AS bucket, count(*) AS n,
-           min(n_chars) AS lo, max(n_chars) AS hi
-         FROM (
-           SELECT lang, n_chars,
-             ntile(8) OVER (PARTITION BY lang
-                            ORDER BY n_chars, doc_id) AS ntile_b
-           FROM documents)
-         GROUP BY lang, ntile_b ORDER BY lang, bucket""",
-    // width arithmetic mirrors the engine cast-for-cast (CAST(mx - mn AS
-    // DOUBLE)/10 — a bare 10.0 literal would make DuckDB divide in DECIMAL)
-    "q_histogram" ->
-      """WITH s AS (
-            SELECT lang, min(n_chars) AS mn, max(n_chars) AS mx
-            FROM documents GROUP BY lang),
-          b AS (
-            SELECT d.lang, s.mn, CAST(s.mx - s.mn AS DOUBLE) / 10 AS w,
-              CASE WHEN CAST(s.mx - s.mn AS DOUBLE) / 10 = 0 THEN 0
-                   ELSE CAST(LEAST(FLOOR((d.n_chars - s.mn)
-                          / (CAST(s.mx - s.mn AS DOUBLE) / 10)), 9) AS INT)
-              END AS bucket
-            FROM documents d JOIN s USING (lang))
-          SELECT lang, bucket, CAST(count(*) AS BIGINT) AS n,
-            ROUND(mn + bucket * w, 6) AS lo,
-            ROUND(mn + (bucket + 1) * w, 6) AS hi
-          FROM b GROUP BY lang, bucket, mn, w
-          ORDER BY lang, bucket""",
-    "q_cusum_break" ->
-      """WITH perb AS (
-           SELECT epoch_us(ts) // 3600000000 AS b,
-             CAST(count(*) AS BIGINT) AS n
-           FROM events GROUP BY 1),
-         bounds AS (SELECT min(b) AS b0, max(b) AS b1 FROM perb),
-         grid AS (SELECT unnest(generate_series(b0, b1)) AS b FROM bounds),
-         dense AS (
-           SELECT g.b, CAST(COALESCE(p.n, 0) AS BIGINT) AS x
-           FROM grid g LEFT JOIN perb p USING (b)),
-         c AS (
-           SELECT b, x,
-             row_number() OVER (ORDER BY b) AS r,
-             CAST(sum(x) OVER (ORDER BY b ROWS UNBOUNDED PRECEDING)
-               AS BIGINT) AS cx,
-             CAST(sum(x) OVER () AS BIGINT) AS tot,
-             CAST(count(*) OVER () AS BIGINT) AS nn
-           FROM dense),
-         d AS (
-           SELECT b, nn, tot, abs(nn * cx - r * tot) AS d
-           FROM c ORDER BY d DESC, b LIMIT 1)
-         SELECT nn AS n_buckets,
-           make_timestamp(b * 3600000000) AS cp_hour,
-           CAST(d AS BIGINT) AS d_max,
-           ROUND(CAST(d AS DOUBLE) / (CAST(nn AS DOUBLE) * tot), 6)
-             AS cusum_stat
-         FROM d""",
-    "q_churn_hazard" ->
-      """WITH pu AS (
-           SELECT user_id,
-             (max(epoch_us(ts) // 86400000000)
-              - min(epoch_us(ts) // 86400000000)) // 7 AS w
-           FROM events GROUP BY user_id),
-         c AS (SELECT w, CAST(count(*) AS BIGINT) AS n_ended
-               FROM pu GROUP BY w),
-         r AS (
-           SELECT w, n_ended,
-             CAST(sum(n_ended) OVER (ORDER BY w DESC
-               ROWS UNBOUNDED PRECEDING) AS BIGINT) AS n_at_risk
-           FROM c)
-         SELECT w, n_ended, n_at_risk,
-           ROUND(CAST(n_ended AS DOUBLE) / n_at_risk, 6) AS hazard
-         FROM r ORDER BY w""",
-    "q_tpch_q3" ->
-      """SELECT l_orderkey, CAST(o_orderdate AS TIMESTAMP) AS o_orderdate,
-           o_orderpriority,
-           ROUND(CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
-             AS DECIMAL(28,10))) AS DOUBLE), 4) AS revenue
-         FROM lineitem
-         JOIN orders ON l_orderkey = o_orderkey
-         JOIN customer ON o_custkey = c_custkey
-         WHERE c_mktsegment = 'BUILDING'
-           AND o_orderdate < TIMESTAMP '1998-01-01'
-           AND l_shipdate > TIMESTAMP '1998-01-01'
-         GROUP BY 1, 2, 3
-         ORDER BY revenue DESC, l_orderkey LIMIT 10""",
-    "q_autocorr" ->
-      """WITH perb AS (
-           SELECT epoch_us(ts) // 3600000000 AS b,
-             CAST(count(*) AS BIGINT) AS n
-           FROM events GROUP BY 1),
-         bounds AS (SELECT min(b) AS b0, max(b) AS b1 FROM perb),
-         grid AS (SELECT unnest(generate_series(b0, b1)) AS b FROM bounds),
-         dense AS (
-           SELECT g.b, CAST(COALESCE(p.n, 0) AS BIGINT) AS x
-           FROM grid g LEFT JOIN perb p USING (b)),
-         shifted AS (
-           SELECT CAST(1 AS BIGINT) AS lag, b + 1 AS b, x AS y FROM dense
-           UNION ALL SELECT 24, b + 24, x FROM dense
-           UNION ALL SELECT 168, b + 168, x FROM dense),
-         j AS (
-           SELECT s.lag, d.x, s.y FROM dense d JOIN shifted s USING (b)),
-         m AS (
-           SELECT lag, CAST(count(*) AS BIGINT) AS m,
-             CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-             CAST(sum(x * y) AS BIGINT) AS sxy,
-             CAST(sum(x * x) AS BIGINT) AS sxx,
-             CAST(sum(y * y) AS BIGINT) AS syy
-           FROM j GROUP BY lag)
-         SELECT lag, m,
-           ROUND(CAST(m * sxy - sx * sy AS DOUBLE)
-             / (sqrt(CAST(m * sxx - sx * sx AS DOUBLE))
-                * sqrt(CAST(m * syy - sy * sy AS DOUBLE))), 6) AS acf
-         FROM m ORDER BY lag""",
-    "q_bootstrap_ci" -> {
-      val h = graft.functions.Hashes.h60Sql("CAST(o_orderkey AS VARCHAR)")
-      s"""WITH fan AS (
-           SELECT o_orderkey, o_totalprice,
-             ($h) % 1048576 AS h20,
-             unnest(generate_series(0, 32)) AS b
-           FROM orders),
-         wts AS (
-           SELECT b, o_totalprice,
-             CASE WHEN b = 0 THEN 1
-                  WHEN u < 0.36787944117144233 THEN 0
-                  WHEN u < 0.7357588823428847 THEN 1
-                  WHEN u < 0.9196986029286058 THEN 2
-                  WHEN u < 0.9810118431238462 THEN 3
-                  WHEN u < 0.9963401531726563 THEN 4
-                  ELSE 5 END AS w
-           FROM (SELECT *,
-                   CAST(((((b * 2462143) % 524288) * 2 + 1) * h20
-                         + (b * 586061) % 1048576) % 1048576 AS DOUBLE)
-                     / 1048576.0 AS u
-                 FROM fan)),
-         means AS (
-           SELECT b,
-             ROUND(CAST(sum(CAST(w * o_totalprice AS DECIMAL(38,10)))
-               AS DOUBLE) / sum(w), 6) AS m
-           FROM wts GROUP BY b)
-         SELECT CAST(sum(CASE WHEN b >= 1 THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_replicas,
-           max(CASE WHEN b = 0 THEN m END) AS est,
-           ROUND(quantile_cont(CASE WHEN b >= 1 THEN m END, 0.025), 6)
-             AS ci_lo,
-           ROUND(quantile_cont(CASE WHEN b >= 1 THEN m END, 0.975), 6)
-             AS ci_hi
-         FROM means"""
-    },
-    "q_seasonality" ->
-      """WITH cells AS (
-           SELECT (epoch_us(ts) // 86400000000 + 4) % 7 AS dow,
-             (epoch_us(ts) // 3600000000) % 24 AS hod,
-             CAST(count(*) AS BIGINT) AS n
-           FROM events GROUP BY 1, 2),
-         e AS (
-           SELECT dow, n, sum(n) OVER () AS ntot,
-             CAST(sum(n) OVER () AS DOUBLE) / 168.0 AS e
-           FROM cells),
-         c AS (
-           SELECT dow, n, ntot,
-             ROUND((CAST(n AS DOUBLE) - e) * (CAST(n AS DOUBLE) - e) / e, 6)
-               AS c
-           FROM e)
-         SELECT dow, CAST(sum(n) AS BIGINT) AS n_events,
-           ROUND(CAST(sum(n) AS DOUBLE) / max(ntot), 6) AS share,
-           ROUND(CAST(sum(CAST(c AS DECIMAL(28,10))) AS DOUBLE), 4)
-             AS chi2_part
-         FROM c GROUP BY dow ORDER BY dow""",
-    "q_funnel_time" ->
-      """WITH s AS (
-           SELECT user_id, min(ts) AS signup_ts FROM events
-           WHERE event_type = 'signup' GROUP BY 1),
-         c AS (
-           SELECT s.user_id, s.signup_ts,
-             min(CASE WHEN e.ts > s.signup_ts THEN e.ts END) AS click_ts
-           FROM s LEFT JOIN events e
-             ON e.user_id = s.user_id AND e.event_type = 'click'
-           GROUP BY 1, 2),
-         p AS (
-           SELECT c.user_id, c.signup_ts, c.click_ts,
-             min(CASE WHEN e.ts > c.click_ts THEN e.ts END) AS purchase_ts
-           FROM c LEFT JOIN events e
-             ON e.user_id = c.user_id AND e.event_type = 'purchase'
-           GROUP BY 1, 2, 3),
-         t AS (
-           SELECT 'signup_to_click' AS transition,
-             ROUND(CAST(epoch_us(click_ts) - epoch_us(signup_ts) AS DOUBLE)
-               / 3600000000.0, 6) AS h
-           FROM p WHERE click_ts IS NOT NULL
-           UNION ALL
-           SELECT 'click_to_purchase',
-             ROUND(CAST(epoch_us(purchase_ts) - epoch_us(click_ts)
-               AS DOUBLE) / 3600000000.0, 6) AS h
-           FROM p WHERE purchase_ts IS NOT NULL)
-         SELECT transition, CAST(count(*) AS BIGINT) AS n_users,
-           ROUND(quantile_cont(h, 0.5), 6) AS med_hours,
-           ROUND(quantile_cont(h, 0.9), 6) AS p90_hours,
-           ROUND(CAST(sum(CAST(h AS DECIMAL(28,10))) AS DOUBLE)
-             / count(*), 6) AS mean_hours
-         FROM t GROUP BY 1 ORDER BY transition""",
-    "q_rolling_median" ->
-      """WITH perb AS (
-           SELECT event_type, epoch_us(ts) // 3600000000 AS b,
-             CAST(count(*) AS BIGINT) AS n
-           FROM events GROUP BY 1, 2),
-         bounds AS (
-           SELECT event_type, min(b) AS b0, max(b) AS b1
-           FROM perb GROUP BY 1),
-         grid AS (
-           SELECT event_type, unnest(generate_series(b0, b1)) AS b
-           FROM bounds),
-         dense AS (
-           SELECT g.event_type, g.b,
-             CAST(COALESCE(p.n, 0) AS BIGINT) AS n
-           FROM grid g LEFT JOIN perb p
-             ON g.event_type = p.event_type AND g.b = p.b)
-         SELECT event_type, make_timestamp(b * 3600000000) AS hour, n,
-           ROUND(quantile_cont(n, 0.5) OVER w, 6) AS med24,
-           ROUND(CAST(sum(n) OVER w AS DOUBLE) / (count(*) OVER w), 6)
-             AS mean24
-         FROM dense
-         WINDOW w AS (PARTITION BY event_type ORDER BY b
-                      ROWS BETWEEN 23 PRECEDING AND CURRENT ROW)
-         ORDER BY event_type, hour""",
-    "q_rolling_wau" ->
-      """WITH ud AS (
-           SELECT DISTINCT user_id, epoch_us(ts) // 86400000000 AS day
-           FROM events),
-         dau AS (
-           SELECT day AS d, CAST(count(DISTINCT user_id) AS BIGINT) AS dau
-           FROM ud GROUP BY 1),
-         cover AS (
-           SELECT user_id, unnest(generate_series(day, day + 6)) AS d
-           FROM ud),
-         wau AS (
-           SELECT d, CAST(count(DISTINCT user_id) AS BIGINT) AS wau7
-           FROM cover GROUP BY d)
-         SELECT make_timestamp(d * 86400000000) AS day, dau.dau, wau.wau7,
-           ROUND(CAST(dau AS DOUBLE) / wau7, 6) AS stickiness
-         FROM dau JOIN wau USING (d)
-         ORDER BY day""",
-    "q_user_ltv" ->
-      """WITH f AS (
-           SELECT o_custkey, date_trunc('week', min(o_orderdate))
-             AS cohort_week
-           FROM orders GROUP BY 1),
-         cell AS (
-           SELECT CAST(f.cohort_week AS TIMESTAMP) AS cohort_week,
-             CAST(date_trunc('week', o.o_orderdate) AS TIMESTAMP) AS week,
-             sum(CAST(o.o_totalprice AS DECIMAL(28,10))) AS rev_dec,
-             CAST(count(DISTINCT o.o_custkey) AS BIGINT) AS n_buyers
-           FROM orders o JOIN f USING (o_custkey)
-           GROUP BY 1, 2)
-         SELECT cohort_week, week, n_buyers,
-           ROUND(CAST(rev_dec AS DOUBLE), 4) AS revenue,
-           ROUND(CAST(sum(rev_dec) OVER (
-             PARTITION BY cohort_week ORDER BY week
-             ROWS UNBOUNDED PRECEDING) AS DOUBLE), 4) AS cum_revenue
-         FROM cell ORDER BY cohort_week, week""",
-    "q_ab_test" ->
-      """WITH sc AS (
-           SELECT c_mktsegment, count(*) AS cnt FROM customer GROUP BY 1),
-         top2 AS (
-           SELECT c_mktsegment, rn FROM (
-             SELECT c_mktsegment,
-               row_number() OVER (ORDER BY cnt DESC, c_mktsegment) AS rn
-             FROM sc) WHERE rn <= 2),
-         u AS (SELECT DISTINCT o_custkey FROM orders
-               WHERE o_orderpriority = '1-URGENT'),
-         arms AS (
-           SELECT t.rn, t.c_mktsegment, CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(CASE WHEN u.o_custkey IS NOT NULL
-                      THEN 1 ELSE 0 END) AS BIGINT) AS conv
-           FROM customer c
-           JOIN top2 t USING (c_mktsegment)
-           LEFT JOIN u ON c.c_custkey = u.o_custkey
-           GROUP BY 1, 2),
-         one AS (
-           SELECT max(CASE WHEN rn = 1 THEN c_mktsegment END) AS segment_a,
-             max(CASE WHEN rn = 2 THEN c_mktsegment END) AS segment_b,
-             max(CASE WHEN rn = 1 THEN n END) AS n_a,
-             max(CASE WHEN rn = 2 THEN n END) AS n_b,
-             max(CASE WHEN rn = 1 THEN conv END) AS conv_a,
-             max(CASE WHEN rn = 2 THEN conv END) AS conv_b
-           FROM arms)
-         SELECT segment_a, segment_b, n_a, conv_a, n_b, conv_b,
-           ROUND(CAST(conv_a AS DOUBLE) / n_a, 6) AS p_a,
-           ROUND(CAST(conv_b AS DOUBLE) / n_b, 6) AS p_b,
-           ROUND((CAST(conv_a AS DOUBLE) / n_a - CAST(conv_b AS DOUBLE) / n_b)
-             / sqrt((CAST(conv_a + conv_b AS DOUBLE) / (n_a + n_b))
-               * (1 - CAST(conv_a + conv_b AS DOUBLE) / (n_a + n_b))
-               * (CAST(1 AS DOUBLE) / n_a + CAST(1 AS DOUBLE) / n_b)), 6)
-             AS z,
-           abs(ROUND((CAST(conv_a AS DOUBLE) / n_a
-                      - CAST(conv_b AS DOUBLE) / n_b)
-             / sqrt((CAST(conv_a + conv_b AS DOUBLE) / (n_a + n_b))
-               * (1 - CAST(conv_a + conv_b AS DOUBLE) / (n_a + n_b))
-               * (CAST(1 AS DOUBLE) / n_a + CAST(1 AS DOUBLE) / n_b)), 6))
-             >= 1.96 AS significant
-         FROM one""",
-    // same decimal-exact per-user sums, pooled moments, and one IEEE
-    // θ/x̄ chain; arm = h60(user_id) % 2 replayed verbatim.
-    "q_cuped" ->
-      s"""WITH per AS (
-           SELECT user_id,
-             CAST(SUM(CAST(CASE WHEN event_type = 'view' THEN value
-                           ELSE 0.0 END AS DECIMAL(30,10))) AS DOUBLE) AS x,
-             CAST(SUM(CAST(CASE WHEN event_type = 'purchase' THEN value
-                           ELSE 0.0 END AS DECIMAL(30,10))) AS DOUBLE) AS y
-           FROM events GROUP BY user_id),
-         pa AS (
-           SELECT ${Hashes.h60Sql("CAST(user_id AS VARCHAR)")} % 2 AS arm,
-             x, y FROM per),
-         st AS (
-           SELECT CAST(count(*) AS BIGINT) AS n,
-             CAST(SUM(CAST(x AS DECIMAL(30,10))) AS DOUBLE) AS sx,
-             CAST(SUM(CAST(y AS DECIMAL(30,10))) AS DOUBLE) AS sy,
-             CAST(SUM(CAST(x * y AS DECIMAL(30,10))) AS DOUBLE) AS sxy,
-             CAST(SUM(CAST(x * x AS DECIMAL(30,10))) AS DOUBLE) AS sxx,
-             CAST(SUM(CAST(y * y AS DECIMAL(30,10))) AS DOUBLE) AS syy
-           FROM pa),
-         th AS (
-           SELECT
-             (CAST(n AS DOUBLE) * sxy - sx * sy)
-               / (CAST(n AS DOUBLE) * sxx - sx * sx) AS theta,
-             sx / CAST(n AS DOUBLE) AS xbar,
-             (CAST(n AS DOUBLE) * sxx - sx * sx) AS sxxc,
-             (CAST(n AS DOUBLE) * syy - sy * sy) AS syyc
-           FROM st)
-         SELECT arm, CAST(count(*) AS BIGINT) AS n_users,
-           ROUND(CAST(SUM(CAST(y AS DECIMAL(30,10))) AS DOUBLE)
-             / count(*), 6) AS mean_y,
-           ROUND(CAST(SUM(CAST(y - theta * (x - xbar) AS DECIMAL(30,10)))
-             AS DOUBLE) / count(*), 6) AS mean_y_adj,
-           ROUND(MAX(theta), 6) AS theta,
-           ROUND(MAX(theta) * MAX(theta) * MAX(sxxc) / MAX(syyc), 6)
-             AS var_reduction
-         FROM pa, th GROUP BY arm ORDER BY arm""",
-    "q_cohend" ->
-      s"""WITH per AS (
-           SELECT user_id,
-             CAST(SUM(CAST(value AS DECIMAL(30,10))) AS DOUBLE) AS y
-           FROM events WHERE event_type = 'purchase' GROUP BY user_id),
-         pa AS (
-           SELECT ${Hashes.h60Sql("CAST(user_id AS VARCHAR)")} % 2 AS arm,
-             y FROM per),
-         arms AS (
-           SELECT arm, CAST(count(*) AS BIGINT) AS n,
-             CAST(SUM(CAST(y AS DECIMAL(30,10))) AS DOUBLE) AS sy,
-             CAST(SUM(CAST(y * y AS DECIMAL(30,10))) AS DOUBLE) AS syy
-           FROM pa GROUP BY arm),
-         one AS (
-           SELECT max(CASE WHEN arm = 0 THEN n END) AS n_a,
-             max(CASE WHEN arm = 1 THEN n END) AS n_b,
-             max(CASE WHEN arm = 0 THEN sy END) AS sy_a,
-             max(CASE WHEN arm = 1 THEN sy END) AS sy_b,
-             max(CASE WHEN arm = 0 THEN syy END) AS syy_a,
-             max(CASE WHEN arm = 1 THEN syy END) AS syy_b
-           FROM arms),
-         k AS (
-           SELECT n_a, n_b,
-             sy_a / CAST(n_a AS DOUBLE) AS ma,
-             sy_b / CAST(n_b AS DOUBLE) AS mb,
-             sqrt(((syy_a - sy_a * sy_a / CAST(n_a AS DOUBLE))
-                 + (syy_b - sy_b * sy_b / CAST(n_b AS DOUBLE)))
-               / (CAST(n_a AS DOUBLE) + CAST(n_b AS DOUBLE) - 2)) AS sp
-           FROM one)
-         SELECT n_a, n_b, ROUND(ma, 6) AS mean_a, ROUND(mb, 6) AS mean_b,
-           ROUND(sp, 6) AS sd_pooled,
-           ROUND((ma - mb) / sp, 6) AS cohen_d
-         FROM k""",
-    "q_delta_ratio" ->
-      s"""WITH per AS (
-           SELECT user_id,
-             CAST(SUM(CAST(CASE WHEN event_type = 'purchase' THEN value
-                           ELSE 0.0 END AS DECIMAL(30,10))) AS DOUBLE) AS y,
-             CAST(count(DISTINCT epoch_us(ts) // 86400000000) AS DOUBLE)
-               AS x
-           FROM events GROUP BY user_id),
-         pa AS (
-           SELECT ${Hashes.h60Sql("CAST(user_id AS VARCHAR)")} % 2 AS arm,
-             x, y FROM per),
-         m AS (
-           SELECT arm, CAST(count(*) AS BIGINT) AS n,
-             CAST(SUM(CAST(y AS DECIMAL(30,10))) AS DOUBLE) AS sy,
-             CAST(SUM(CAST(x AS DECIMAL(30,10))) AS DOUBLE) AS sx,
-             CAST(SUM(CAST(y * y AS DECIMAL(30,10))) AS DOUBLE) AS syy,
-             CAST(SUM(CAST(x * x AS DECIMAL(30,10))) AS DOUBLE) AS sxx,
-             CAST(SUM(CAST(x * y AS DECIMAL(30,10))) AS DOUBLE) AS sxy
-           FROM pa GROUP BY arm),
-         k AS (
-           SELECT arm, n,
-             sx / CAST(n AS DOUBLE) AS mx,
-             sy / CAST(n AS DOUBLE) AS my,
-             (syy - sy * sy / CAST(n AS DOUBLE))
-               / (CAST(n AS DOUBLE) - 1) AS vy,
-             (sxx - sx * sx / CAST(n AS DOUBLE))
-               / (CAST(n AS DOUBLE) - 1) AS vx,
-             (sxy - sx * sy / CAST(n AS DOUBLE))
-               / (CAST(n AS DOUBLE) - 1) AS cxy
-           FROM m),
-         r AS (
-           SELECT arm, n, my / mx AS ratio,
-             sqrt((vy - CAST(2.0 AS DOUBLE) * (my / mx) * cxy
-                 + (my / mx) * (my / mx) * vx)
-               / (CAST(n AS DOUBLE) * mx * mx)) AS se
-           FROM k)
-         SELECT arm, n, ROUND(ratio, 6) AS ratio, ROUND(se, 6) AS se,
-           ROUND(ratio - CAST(1.96 AS DOUBLE) * se, 6) AS ci_lo,
-           ROUND(ratio + CAST(1.96 AS DOUBLE) * se, 6) AS ci_hi
-         FROM r ORDER BY arm""",
-    "q_srm" ->
-      s"""WITH arms AS (
-           SELECT ${Hashes.h60Sql("CAST(user_id AS VARCHAR)")} % 2 AS arm
-           FROM (SELECT DISTINCT user_id FROM events)),
-         c AS (
-           SELECT CAST(SUM(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_a,
-             CAST(SUM(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_b
-           FROM arms),
-         x AS (
-           SELECT n_a, n_b,
-             ROUND(CAST((n_a - n_b) * (n_a - n_b) AS DOUBLE)
-               / (n_a + n_b), 6) AS chi2
-           FROM c)
-         SELECT n_a, n_b, chi2, chi2 >= 3.841459 AS srm FROM x""",
-    "q_twap" ->
-      """WITH e AS (
-           SELECT user_id, event_id, event_type, value,
-             epoch_us(ts) AS ts_us
-           FROM events),
-         d AS (
-           SELECT event_type, value,
-             lead(ts_us) OVER (PARTITION BY user_id
-                               ORDER BY ts_us, event_id) - ts_us AS dt_us
-           FROM e)
-         SELECT event_type, CAST(count(*) AS BIGINT) AS n_intervals,
-           CAST(SUM(dt_us) AS BIGINT) AS dur_us,
-           ROUND(CAST(SUM(CAST(value * CAST(dt_us AS DOUBLE)
-                 AS DECIMAL(30,6))) AS DOUBLE)
-             / CAST(SUM(dt_us) AS DOUBLE), 6) AS twap,
-           ROUND(CAST(SUM(CAST(value * CAST(dt_us AS DOUBLE)
-                 AS DECIMAL(30,6))) AS DOUBLE) / 1000000.0, 4)
-             AS value_seconds
-         FROM d WHERE dt_us IS NOT NULL
-         GROUP BY 1 ORDER BY event_type""",
-    "q_gapfill" ->
-      """WITH perb AS (
-           SELECT epoch_us(ts) // 600000000 AS b,
-             CAST(count(*) AS BIGINT) AS n
-           FROM events GROUP BY 1),
-         bounds AS (SELECT min(b) AS b0, max(b) AS b1 FROM perb),
-         grid AS (SELECT unnest(generate_series(b0, b1)) AS b FROM bounds)
-         SELECT make_timestamp(g.b * 600000000) AS bucket,
-           CAST(COALESCE(p.n, 0) AS BIGINT) AS n,
-           p.n IS NULL AS is_gap
-         FROM grid g LEFT JOIN perb p USING (b)
-         ORDER BY bucket""",
-    "q_session_gap_sweep" ->
-      """WITH g AS (SELECT user_id,
-            epoch_us(ts) - lag(epoch_us(ts)) OVER (PARTITION BY user_id
-              ORDER BY ts, event_id) AS gap
-          FROM events),
-         a AS (SELECT CAST(count(*) AS BIGINT) AS n_events,
-            CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
-            CAST(SUM(CASE WHEN gap > 900000000 THEN 1 ELSE 0 END)
-              AS BIGINT) AS b900,
-            CAST(SUM(CASE WHEN gap > 1800000000 THEN 1 ELSE 0 END)
-              AS BIGINT) AS b1800,
-            CAST(SUM(CASE WHEN gap > 3600000000 THEN 1 ELSE 0 END)
-              AS BIGINT) AS b3600
-          FROM g)
-         SELECT t.gap_s, t.ns AS n_sessions,
-           ROUND(CAST(a.n_events AS DOUBLE) / t.ns, 6)
-             AS events_per_session
-         FROM a, LATERAL (VALUES (900, n_users + b900),
-           (1800, n_users + b1800), (3600, n_users + b3600))
-           AS t(gap_s, ns)
-         ORDER BY t.gap_s""",
-    "q_did" ->
-      """WITH ev AS (SELECT (event_type = 'click') AS treated, value,
-            epoch_us(ts) // 604800000000 AS w
-          FROM events WHERE event_type IN ('click', 'view')),
-         sp AS (SELECT (min(w) + max(w)) // 2 AS wmid FROM ev),
-         cells AS (SELECT treated, (w > wmid) AS post,
-             CAST(count(*) AS BIGINT) AS n,
-             SUM(CAST(value AS DECIMAL(30,10))) AS s,
-             SUM(CAST(value * value AS DECIMAL(30,10))) AS ss
-           FROM ev CROSS JOIN sp GROUP BY 1, 2),
-         g AS (SELECT treated, post,
-             CAST(s AS DOUBLE) / n AS m,
-             ((CAST(ss AS DOUBLE)
-               - CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / n) / (n - 1)) / n
-               AS vn
-           FROM cells),
-         one AS (SELECT
-             max(CASE WHEN treated AND post THEN m END) AS mtp,
-             max(CASE WHEN treated AND NOT post THEN m END) AS mt0,
-             max(CASE WHEN NOT treated AND post THEN m END) AS mcp,
-             max(CASE WHEN NOT treated AND NOT post THEN m END) AS mc0,
-             max(CASE WHEN treated AND post THEN vn END) AS vtp,
-             max(CASE WHEN treated AND NOT post THEN vn END) AS vt0,
-             max(CASE WHEN NOT treated AND post THEN vn END) AS vcp,
-             max(CASE WHEN NOT treated AND NOT post THEN vn END) AS vc0
-           FROM g)
-         SELECT ROUND((mtp - mt0) - (mcp - mc0), 6) AS did_effect,
-           ROUND(sqrt(vtp + vt0 + vcp + vc0), 6) AS se,
-           ROUND(((mtp - mt0) - (mcp - mc0))
-             / sqrt(vtp + vt0 + vcp + vc0), 6) AS t_stat
-         FROM one""",
-    "q_mase" ->
-      """WITH perh AS (SELECT event_type, epoch_us(ts) // 3600000000 AS h,
-            CAST(count(*) AS BIGINT) AS c
-          FROM events GROUP BY 1, 2),
-         span AS (SELECT min(h) AS h0, max(h) AS h1 FROM perh),
-         dense AS (SELECT t.event_type, s.h0, g.h, COALESCE(p.c, 0) AS c
-           FROM (SELECT DISTINCT event_type FROM perh) t
-           CROSS JOIN span s
-           CROSS JOIN (SELECT unnest(generate_series(
-             (SELECT h0 FROM span), (SELECT h1 FROM span))) AS h) g
-           LEFT JOIN perh p ON p.event_type = t.event_type AND p.h = g.h),
-         e AS (SELECT event_type, h, h0, c,
-             lag(c, 1) OVER (PARTITION BY event_type ORDER BY h) AS c1,
-             lag(c, 24) OVER (PARTITION BY event_type ORDER BY h) AS c24
-           FROM dense),
-         a AS (SELECT event_type,
-             CAST(SUM(CASE WHEN h >= h0 + 24 THEN abs(c - c1) END)
-               AS BIGINT) AS sae1,
-             CAST(SUM(CASE WHEN h >= h0 + 24 THEN abs(c - c24) END)
-               AS BIGINT) AS sae24,
-             CAST(SUM(CASE WHEN h >= h0 + 24 THEN 1 END) AS BIGINT) AS nh
-           FROM e GROUP BY 1)
-         SELECT event_type, nh AS n_hours,
-           ROUND(CAST(sae1 AS DOUBLE) / nh, 6) AS mae_naive,
-           ROUND(CAST(sae24 AS DOUBLE) / nh, 6) AS mae_seasonal,
-           ROUND(CAST(sae24 AS DOUBLE) / CAST(sae1 AS DOUBLE), 6) AS mase
-         FROM a ORDER BY event_type""",
-    "q_theil_sen" ->
-      """WITH m AS (SELECT epoch_us(o_orderdate) // 2629800000000 AS m,
-            SUM(CAST(o_totalprice AS DECIMAL(30,10))) AS rev
-          FROM orders GROUP BY 1),
-         p AS (SELECT CAST(b.rev - a.rev AS DOUBLE)
-             / CAST(b.m - a.m AS DOUBLE) AS slope
-           FROM m a JOIN m b ON a.m < b.m),
-         ag AS (SELECT CAST(count(*) AS BIGINT) AS n_pairs,
-           ROUND(quantile_cont(slope, 0.5), 6) AS med_slope FROM p),
-         nm AS (SELECT CAST(count(*) AS BIGINT) AS n_months FROM m)
-         SELECT n_months, n_pairs, med_slope FROM ag CROSS JOIN nm""",
-    "q_mk_trend" ->
-      """WITH m AS (SELECT epoch_us(o_orderdate) // 2629800000000 AS m,
-            SUM(CAST(o_totalprice AS DECIMAL(30,10))) AS rev
-          FROM orders GROUP BY 1),
-         st AS (SELECT CAST(SUM(CASE WHEN b.rev > a.rev THEN 1
-             WHEN b.rev < a.rev THEN -1 ELSE 0 END) AS BIGINT) AS s
-           FROM m a JOIN m b ON a.m < b.m),
-         nm AS (SELECT CAST(count(*) AS BIGINT) AS n FROM m)
-         SELECT n AS n_months, s,
-           ROUND(CASE WHEN s > 0 THEN CAST(s - 1 AS DOUBLE)
-               / sqrt(CAST(n*(n-1)*(2*n+5) AS DOUBLE) / CAST(18 AS DOUBLE))
-             WHEN s < 0 THEN CAST(s + 1 AS DOUBLE)
-               / sqrt(CAST(n*(n-1)*(2*n+5) AS DOUBLE) / CAST(18 AS DOUBLE))
-             ELSE CAST(0 AS DOUBLE) END, 6) AS z
-         FROM st CROSS JOIN nm""",
-    "q_window_ntile" ->
-      """WITH q AS (SELECT c_mktsegment, c_acctbal,
-            ntile(4) OVER (PARTITION BY c_mktsegment
-              ORDER BY c_acctbal DESC, c_custkey ASC) AS quartile
-          FROM customer)
-         SELECT c_mktsegment, quartile, CAST(count(*) AS BIGINT) AS n_cust,
-           ROUND(CAST(SUM(CAST(c_acctbal AS DECIMAL(28,10))) AS DOUBLE)
-             / count(*), 6) AS avg_bal
-         FROM q GROUP BY 1, 2 ORDER BY 1, 2""",
-    "q_price_elasticity" ->
-      """WITH g AS (SELECT p.p_brand, CAST(count(*) AS BIGINT) AS n,
-            SUM(CAST(l_discount AS DECIMAL(12,6))) AS sx,
-            SUM(CAST(l_quantity AS DECIMAL(12,2))) AS sy,
-            SUM(CAST(CAST(l_discount AS DECIMAL(12,6))
-              * CAST(l_quantity AS DECIMAL(12,2)) AS DECIMAL(28,10)))
-              AS sxy,
-            SUM(CAST(CAST(l_discount AS DECIMAL(12,6))
-              * CAST(l_discount AS DECIMAL(12,6)) AS DECIMAL(28,10)))
-              AS sxx
-          FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
-          GROUP BY 1)
-         SELECT p_brand, n,
-           ROUND(CAST(n*sxy - sx*sy AS DOUBLE)
-             / CAST(n*sxx - sx*sx AS DOUBLE), 6) AS slope,
-           ROUND((CAST(sy AS DOUBLE)
-             - (CAST(n*sxy - sx*sy AS DOUBLE)
-                / CAST(n*sxx - sx*sx AS DOUBLE)) * CAST(sx AS DOUBLE))
-             / n, 6) AS intercept
-         FROM g ORDER BY p_brand""",
-    "q_lorenz" ->
-      """WITH rev AS (SELECT o_custkey,
-            SUM(CAST(o_totalprice AS DECIMAL(30,10))) AS rev
-          FROM orders GROUP BY 1),
-         r AS (SELECT rev AS x,
-            row_number() OVER (ORDER BY rev, o_custkey) AS r,
-            count(*) OVER () AS n
-          FROM rev),
-         tq AS (SELECT CAST(q AS DOUBLE) AS q
-          FROM (SELECT unnest([0.1,0.2,0.3,0.4,0.5,0.6,0.7,0.8,0.9]) AS q)),
-         a AS (SELECT tq.q,
-            CAST(ceil(tq.q * (SELECT max(n) FROM r)) AS BIGINT) AS n_cust,
-            SUM(CASE WHEN r.r <= ceil(tq.q * (SELECT max(n) FROM r))
-              THEN x ELSE CAST(0 AS DECIMAL(30,10)) END) AS cum
-          FROM tq CROSS JOIN r GROUP BY 1, 2),
-         tot AS (SELECT SUM(x) AS tot FROM r)
-         SELECT q, n_cust,
-           ROUND(CAST(cum AS DOUBLE) / CAST(tot AS DOUBLE), 6) AS rev_share
-         FROM a CROSS JOIN tot ORDER BY q""",
-    "q_growth_accounting" ->
-      """WITH uw AS (
-           SELECT DISTINCT user_id,
-             epoch_us(ts) // 604800000000 AS w
-           FROM events),
-         fst AS (SELECT user_id, min(w) AS w0 FROM uw GROUP BY 1),
-         cur AS (SELECT user_id, w, 1 AS c FROM uw),
-         prv AS (SELECT user_id, w + 1 AS w, 1 AS p FROM uw),
-         j AS (SELECT COALESCE(cur.user_id, prv.user_id) AS user_id,
-             COALESCE(cur.w, prv.w) AS w, cur.c, prv.p
-           FROM cur FULL OUTER JOIN prv
-             ON cur.user_id = prv.user_id AND cur.w = prv.w),
-         g AS (SELECT j.w,
-             CAST(SUM(CASE WHEN c IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_active,
-             CAST(SUM(CASE WHEN c IS NOT NULL AND f.w0 = j.w
-               THEN 1 ELSE 0 END) AS BIGINT) AS n_new,
-             CAST(SUM(CASE WHEN c IS NOT NULL AND p IS NOT NULL
-               THEN 1 ELSE 0 END) AS BIGINT) AS n_retained,
-             CAST(SUM(CASE WHEN c IS NOT NULL AND p IS NULL AND f.w0 < j.w
-               THEN 1 ELSE 0 END) AS BIGINT) AS n_resurrected,
-             CAST(SUM(CASE WHEN p IS NOT NULL AND c IS NULL
-               THEN 1 ELSE 0 END) AS BIGINT) AS n_churned
-           FROM j JOIN fst f ON f.user_id = j.user_id GROUP BY 1)
-         SELECT make_timestamp(w * 604800000000) AS week,
-           n_active, n_new, n_retained, n_resurrected, n_churned
-         FROM g ORDER BY week""",
-    "q_week_churn" ->
-      """WITH uw AS (
-           SELECT DISTINCT user_id,
-             epoch_us(ts) // 604800000000 AS w
-           FROM events),
-         sz AS (SELECT w, CAST(count(*) AS BIGINT) AS n
-                FROM uw GROUP BY w),
-         bw AS (
-           SELECT a.w, CAST(count(*) AS BIGINT) AS n_both
-           FROM uw a JOIN uw b
-             ON a.user_id = b.user_id AND b.w = a.w + 1
-           GROUP BY a.w)
-         SELECT make_timestamp(s1.w * 604800000000) AS week,
-           s1.n AS n_this, s2.n AS n_next,
-           CAST(COALESCE(b.n_both, 0) AS BIGINT) AS n_both,
-           ROUND(CAST(COALESCE(b.n_both, 0) AS DOUBLE)
-             / (s1.n + s2.n - COALESCE(b.n_both, 0)), 6) AS jaccard,
-           ROUND(CAST(COALESCE(b.n_both, 0) AS DOUBLE) / s1.n, 6)
-             AS retention
-         FROM sz s1
-         JOIN sz s2 ON s2.w = s1.w + 1
-         LEFT JOIN bw b ON b.w = s1.w
-         ORDER BY week""",
-    "q_order_gaps" ->
-      """WITH g AS (
-           SELECT (epoch_us(o_orderdate) // 86400000000)
-             - lag(epoch_us(o_orderdate) // 86400000000, 1) OVER (
-                 PARTITION BY o_custkey
-                 ORDER BY o_orderdate, o_orderkey) AS gap
-           FROM orders)
-         SELECT CAST(count(*) AS BIGINT) AS n_gaps,
-           ROUND(quantile_cont(gap, 0.5), 6) AS p50_days,
-           ROUND(quantile_cont(gap, 0.9), 6) AS p90_days,
-           ROUND(CAST(sum(CAST(gap AS DECIMAL(28,10))) AS DOUBLE)
-             / count(*), 6) AS mean_days,
-           ROUND(CAST(sum(CASE WHEN gap > 90 THEN 1 ELSE 0 END) AS DOUBLE)
-             / count(*), 6) AS share_gt_90d
-         FROM g WHERE gap IS NOT NULL""",
-    "q_audience_overlap" ->
-      """WITH tu AS (
-           SELECT DISTINCT event_type, user_id FROM events),
-         sz AS (
-           SELECT event_type, CAST(count(*) AS BIGINT) AS n
-           FROM tu GROUP BY 1),
-         pairs AS (
-           SELECT a.event_type AS type_a, b.event_type AS type_b,
-             CAST(count(*) AS BIGINT) AS n_both
-           FROM tu a JOIN tu b
-             ON a.user_id = b.user_id AND a.event_type < b.event_type
-           GROUP BY 1, 2)
-         SELECT type_a, type_b, sa.n AS n_a, sb.n AS n_b, n_both,
-           ROUND(CAST(n_both AS DOUBLE) / (sa.n + sb.n - n_both), 6)
-             AS jaccard
-         FROM pairs
-         JOIN sz sa ON type_a = sa.event_type
-         JOIN sz sb ON type_b = sb.event_type
-         ORDER BY type_a, type_b""",
-    "q_attribution" ->
-      """WITH t AS (
-           SELECT event_type, value,
-             first_value(CASE WHEN event_type <> 'purchase'
-                           THEN event_type END IGNORE NULLS)
-               OVER (PARTITION BY user_id ORDER BY ts, event_id
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-               AS ft,
-             last_value(CASE WHEN event_type <> 'purchase'
-                          THEN event_type END IGNORE NULLS)
-               OVER (PARTITION BY user_id ORDER BY ts, event_id
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-               AS lt
-           FROM events)
-         SELECT COALESCE(ft, 'none') AS first_touch,
-           COALESCE(lt, 'none') AS last_touch,
-           CAST(count(*) AS BIGINT) AS n_conversions,
-           ROUND(CAST(SUM(CAST(value AS DECIMAL(28,10))) AS DOUBLE), 4)
-             AS sum_value
-         FROM t WHERE event_type = 'purchase'
-         GROUP BY 1, 2 ORDER BY 1, 2""",
-    "q_markov_chain" ->
-      """WITH seq AS (
-           SELECT event_type AS from_type,
-             COALESCE(lead(event_type, 1)
-               OVER (PARTITION BY user_id ORDER BY ts, event_id), 'end')
-               AS to_type
-           FROM events),
-         c AS (
-           SELECT from_type, to_type, CAST(count(*) AS BIGINT) AS n
-           FROM seq GROUP BY 1, 2)
-         SELECT from_type, to_type, n,
-           ROUND(CAST(n AS DOUBLE) / sum(n) OVER (PARTITION BY from_type),
-                 6) AS p
-         FROM c ORDER BY from_type, to_type""",
-    "q_tpch_q5" ->
-      """SELECT n_name,
-           ROUND(CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
-             AS DECIMAL(28,10))) AS DOUBLE), 4) AS revenue
-         FROM lineitem
-         JOIN orders ON l_orderkey = o_orderkey
-         JOIN customer ON o_custkey = c_custkey
-         JOIN supplier ON l_suppkey = s_suppkey
-           AND c_nationkey = s_nationkey
-         JOIN nation ON s_nationkey = n_nationkey
-         JOIN region ON n_regionkey = r_regionkey
-         WHERE r_name = 'ASIA'
-           AND o_orderdate >= TIMESTAMP '1996-01-01'
-           AND o_orderdate < TIMESTAMP '1997-01-01'
-         GROUP BY 1 ORDER BY revenue DESC, n_name""",
-    "q_kendall_tau" ->
-      """WITH m AS (SELECT epoch_us(o_orderdate) // 2629800000000 AS m,
-            SUM(CAST(o_totalprice AS DECIMAL(30,10))) AS rev,
-            CAST(count(*) AS BIGINT) AS cnt
-          FROM orders GROUP BY 1),
-         p AS (SELECT
-             CASE WHEN b.rev > a.rev THEN 1
-               WHEN b.rev < a.rev THEN -1 ELSE 0 END AS cx,
-             CASE WHEN b.cnt > a.cnt THEN 1
-               WHEN b.cnt < a.cnt THEN -1 ELSE 0 END AS cy
-           FROM m a JOIN m b ON a.m < b.m),
-         ag AS (SELECT CAST(count(*) AS BIGINT) AS n_pairs,
-             CAST(SUM(CASE WHEN cx*cy > 0 THEN 1 ELSE 0 END) AS BIGINT)
-               AS c,
-             CAST(SUM(CASE WHEN cx*cy < 0 THEN 1 ELSE 0 END) AS BIGINT)
-               AS d,
-             CAST(SUM(CASE WHEN cx = 0 THEN 1 ELSE 0 END) AS BIGINT)
-               AS tx,
-             CAST(SUM(CASE WHEN cy = 0 THEN 1 ELSE 0 END) AS BIGINT)
-               AS ty
-           FROM p)
-         SELECT n_pairs, c AS concordant, d AS discordant,
-           ROUND(CASE WHEN (n_pairs - tx) * (n_pairs - ty) > 0
-             THEN CAST(c - d AS DOUBLE)
-               / sqrt(CAST((n_pairs - tx) * (n_pairs - ty) AS DOUBLE))
-             END, 6) AS tau_b
-         FROM ag""",
-    "q_kaplan_meier" ->
-      """WITH per AS (SELECT user_id, min(epoch_us(ts)) AS mn,
-            max(epoch_us(ts)) AS mx
-          FROM events GROUP BY 1),
-         fin AS (SELECT max(mx) AS study_end FROM per),
-         byt AS (SELECT (mx - mn) // 3600000000 AS t,
-             CAST(SUM(CASE WHEN study_end - mx < 21600000000
-               THEN 0 ELSE 1 END) AS BIGINT) AS d,
-             CAST(count(*) AS BIGINT) AS tot
-           FROM per CROSS JOIN fin GROUP BY 1),
-         n AS (SELECT CAST(SUM(tot) AS BIGINT) AS n_total FROM byt),
-         km AS (SELECT t, d,
-             CAST(n_total - COALESCE(SUM(tot) OVER (ORDER BY t
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-               AS BIGINT) AS r
-           FROM byt CROSS JOIN n),
-         st AS (SELECT t, d, r,
-             SUM(CAST(ln(greatest(CAST(r - d AS DOUBLE) / r, 1e-12))
-               AS DECIMAL(20,10))) OVER (ORDER BY t
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ls
-           FROM km)
-         SELECT t AS t_hours, r AS n_at_risk, d AS n_events,
-           ROUND(exp(CAST(ls AS DOUBLE)), 6) AS survival
-         FROM st WHERE d > 0 ORDER BY t""",
-    "q_isotonic" ->
-      """WITH b AS (SELECT CAST(round(l_discount * 100, 0) AS INT) AS i,
-            CAST(count(*) AS BIGINT) AS w,
-            CAST(SUM(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END)
-              AS BIGINT) AS y
-          FROM lineitem GROUP BY 1),
-         p AS (SELECT i, w, y,
-             CAST(SUM(w) OVER (ORDER BY i) AS BIGINT) AS cw,
-             CAST(SUM(y) OVER (ORDER BY i) AS BIGINT) AS cy
-           FROM b),
-         iv AS (SELECT k.i AS k, j.i AS j,
-             CAST(j.cy - k.cy + k.y AS DOUBLE)
-               / CAST(j.cw - k.cw + k.w AS DOUBLE) AS a
-           FROM p k JOIN p j ON k.i <= j.i),
-         mn AS (SELECT b.i, iv.k, min(iv.a) AS mn
-           FROM b JOIN iv ON iv.k <= b.i AND b.i <= iv.j GROUP BY 1, 2),
-         f AS (SELECT i, max(mn) AS iso FROM mn GROUP BY 1)
-         SELECT b.i AS discount_pct, b.w AS n,
-           ROUND(CAST(b.y AS DOUBLE) / CAST(b.w AS DOUBLE), 6) AS raw_rate,
-           ROUND(f.iso, 6) AS iso_rate
-         FROM b JOIN f USING (i) ORDER BY discount_pct""",
-    "q_ewma" ->
-      """WITH perh AS (SELECT event_type, epoch_us(ts) // 3600000000 AS h,
-            CAST(count(*) AS BIGINT) AS c
-          FROM events GROUP BY 1, 2),
-         span AS (SELECT min(h) AS h0, max(h) AS h1 FROM perh),
-         contrib AS (SELECT event_type, h + g.k AS th,
-             CAST(c * CAST(round(0.2 * pow(0.8, g.k), 8)
-               AS DECIMAL(12,8)) AS DECIMAL(30,10)) AS t
-           FROM perh, LATERAL (SELECT unnest(generate_series(0, 23)) AS k)
-             g),
-         agg AS (SELECT event_type, th, SUM(t) AS ewma_dec
-           FROM contrib GROUP BY 1, 2),
-         dense AS (SELECT ty.event_type, gr.th,
-             COALESCE(a.ewma_dec, CAST(0 AS DECIMAL(30,10))) AS e
-           FROM (SELECT DISTINCT event_type FROM perh) ty
-           CROSS JOIN (SELECT unnest(generate_series(
-             (SELECT h0 + 23 FROM span), (SELECT h1 FROM span))) AS th
-             WHERE (SELECT h0 + 23 FROM span) <= (SELECT h1 FROM span)) gr
-           LEFT JOIN agg a ON a.event_type = ty.event_type
-             AND a.th = gr.th),
-         m AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-             SUM(e) AS s,
-             SUM(CAST(CAST(e AS DOUBLE) * CAST(e AS DOUBLE)
-               AS DECIMAL(30,10))) AS ss
-           FROM dense GROUP BY 1),
-         st AS (SELECT event_type, n,
-             CAST(s AS DOUBLE) / n AS mean,
-             sqrt(greatest((CAST(ss AS DOUBLE)
-               - CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / n)
-               / (n - 1), 0.0)) AS sd
-           FROM m)
-         SELECT d.event_type, st.n AS n_hours,
-           ROUND(st.mean, 6) AS mean_ewma, ROUND(st.sd, 6) AS sd_ewma,
-           CAST(SUM(CASE WHEN abs(CAST(d.e AS DOUBLE) - st.mean)
-             > 3.0 * st.sd THEN 1 ELSE 0 END) AS BIGINT) AS n_out,
-           min(CASE WHEN abs(CAST(d.e AS DOUBLE) - st.mean)
-             > 3.0 * st.sd THEN d.th END) AS first_out_h
-         FROM dense d JOIN st ON d.event_type = st.event_type
-         GROUP BY 1, 2, 3, 4 ORDER BY d.event_type""",
-    "q_jackknife" ->
-      """WITH g AS (SELECT c_nationkey,
-            SUM(CAST(o_totalprice AS DECIMAL(30,10))) AS sg,
-            CAST(count(*) AS BIGINT) AS ng
-          FROM orders JOIN customer ON o_custkey = c_custkey
-          GROUP BY 1),
-         tot AS (SELECT SUM(sg) AS st, CAST(SUM(ng) AS BIGINT) AS nt,
-           CAST(count(*) AS BIGINT) AS gcnt FROM g),
-         loo AS (SELECT gcnt,
-             CAST(st AS DOUBLE) / nt AS r_full,
-             CAST(st - sg AS DOUBLE) / CAST(nt - ng AS DOUBLE) AS r
-           FROM g CROSS JOIN tot),
-         rb AS (SELECT SUM(CAST(r AS DECIMAL(30,10))) AS sr FROM loo),
-         dev AS (SELECT gcnt, r_full,
-             CAST(sr AS DOUBLE) / gcnt AS rbar,
-             SUM(CAST((r - CAST(sr AS DOUBLE) / gcnt)
-               * (r - CAST(sr AS DOUBLE) / gcnt) AS DECIMAL(30,10)))
-               AS sdev
-           FROM loo CROSS JOIN rb GROUP BY 1, 2, 3)
-         SELECT gcnt AS n_groups, ROUND(r_full, 6) AS r_full,
-           ROUND(rbar, 6) AS r_loo_mean,
-           ROUND(sqrt(CAST(gcnt - 1 AS DOUBLE) / gcnt
-             * CAST(sdev AS DOUBLE)), 6) AS se_jack,
-           ROUND(CAST(gcnt - 1 AS DOUBLE) * (rbar - r_full), 6)
-             AS bias_jack
-         FROM dev""",
-    "q_gumbel" ->
-      """WITH wk AS (SELECT epoch_us(o_orderdate) // 604800000000 AS w,
-            max(o_totalprice) AS mx
-          FROM orders GROUP BY 1),
-         m AS (SELECT CAST(count(*) AS BIGINT) AS n,
-             SUM(CAST(mx AS DECIMAL(30,10))) AS s,
-             SUM(CAST(mx * mx AS DECIMAL(30,10))) AS ss
-           FROM wk),
-         st AS (SELECT n,
-             CAST(s AS DOUBLE) / n AS mean,
-             sqrt(greatest((CAST(ss AS DOUBLE)
-               - CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / n) / (n - 1),
-               0.0)) AS sd
-           FROM m),
-         fit AS (SELECT n, mean, sd,
-             sd * (sqrt(6.0) / pi()) AS beta
-           FROM st)
-         SELECT n AS n_weeks, ROUND(mean, 6) AS mean_max,
-           ROUND(sd, 6) AS sd_max, ROUND(beta, 6) AS beta,
-           ROUND(mean - 0.5772156649015329 * beta, 6) AS mu,
-           ROUND(mean - 0.5772156649015329 * beta
-             - beta * ln(-ln(0.99)), 6) AS ret_level_99
-         FROM fit""",
-    "q_ipw_ate" ->
-      """WITH ev AS (SELECT (event_type = 'click') AS treated, value,
-            (epoch_us(ts) // 3600000000) % 24 AS stratum
-          FROM events WHERE event_type IN ('click', 'view')),
-         strat AS (SELECT stratum, CAST(count(*) AS BIGINT) AS n_s,
-             CAST(SUM(CASE WHEN treated THEN 1 ELSE 0 END) AS BIGINT)
-               AS nt_s
-           FROM ev GROUP BY 1),
-         wtd AS (SELECT e.treated, e.value,
-             CASE WHEN e.treated
-               THEN CAST(s.n_s AS DOUBLE) / s.nt_s
-               ELSE CAST(s.n_s AS DOUBLE) / (s.n_s - s.nt_s) END AS w
-           FROM ev e JOIN strat s ON e.stratum = s.stratum),
-         agg AS (SELECT treated, CAST(count(*) AS BIGINT) AS n,
-             SUM(CAST(value * w AS DECIMAL(30,10))) AS syw,
-             SUM(CAST(w AS DECIMAL(30,10))) AS sw,
-             SUM(CAST(value AS DECIMAL(30,10))) AS sy
-           FROM wtd GROUP BY 1),
-         one AS (SELECT
-             max(CASE WHEN treated THEN n END) AS n_treated,
-             max(CASE WHEN NOT treated THEN n END) AS n_control,
-             max(CASE WHEN treated THEN CAST(syw AS DOUBLE)
-               / CAST(sw AS DOUBLE) END) AS mt,
-             max(CASE WHEN NOT treated THEN CAST(syw AS DOUBLE)
-               / CAST(sw AS DOUBLE) END) AS mc,
-             max(CASE WHEN treated THEN CAST(sy AS DOUBLE) / n END)
-               AS yt,
-             max(CASE WHEN NOT treated THEN CAST(sy AS DOUBLE) / n END)
-               AS yc
-           FROM agg)
-         SELECT n_treated, n_control, ROUND(mt - mc, 6) AS ate_ipw,
-           ROUND(yt - yc, 6) AS diff_naive
-         FROM one""",
-    "q_tpch_q18" ->
-      """SELECT c_name, o_custkey, o_orderkey,
-           CAST(o_orderdate AS TIMESTAMP) AS o_orderdate, o_totalprice,
-           CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS total_qty
-         FROM customer
-         JOIN orders ON c_custkey = o_custkey
-         JOIN lineitem ON o_orderkey = l_orderkey
-         WHERE o_orderkey IN (
-           SELECT l_orderkey FROM lineitem GROUP BY l_orderkey
-           HAVING SUM(CAST(l_quantity AS BIGINT)) > 300)
-         GROUP BY 1, 2, 3, 4, 5
-         ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""",
-    "q_event_paths" ->
-      """WITH seq AS (SELECT event_type AS e1,
-            lead(event_type, 1) OVER (PARTITION BY user_id
-              ORDER BY ts, event_id) AS e2,
-            lead(event_type, 2) OVER (PARTITION BY user_id
-              ORDER BY ts, event_id) AS e3
-          FROM events),
-         tri AS (SELECT e1, e2, e3, CAST(count(*) AS BIGINT) AS n
-           FROM seq WHERE e2 IS NOT NULL AND e3 IS NOT NULL
-           GROUP BY 1, 2, 3)
-         SELECT e1, e2, e3, n,
-           ROUND(CAST(n AS DOUBLE) / sum(n) OVER (), 6) AS share
-         FROM tri ORDER BY n DESC, e1, e2, e3 LIMIT 20""",
-    "q_rolling_corr" ->
-      """WITH perd AS (SELECT epoch_us(ts) // 86400000000 AS d,
-            CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-              AS BIGINT) AS x,
-            CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-              AS BIGINT) AS y
-          FROM events WHERE event_type IN ('click', 'purchase')
-          GROUP BY 1),
-         bounds AS (SELECT min(d) AS d0, max(d) AS d1 FROM perd),
-         dense AS (SELECT b.d0, g.d,
-             CAST(COALESCE(p.x, 0) AS BIGINT) AS x,
-             CAST(COALESCE(p.y, 0) AS BIGINT) AS y
-           FROM bounds b
-           CROSS JOIN (SELECT unnest(generate_series(
-             (SELECT d0 FROM bounds), (SELECT d1 FROM bounds))) AS d) g
-           LEFT JOIN perd p ON p.d = g.d),
-         m AS (SELECT d, d0, x, y,
-             CAST(SUM(x) OVER w AS BIGINT) AS sx,
-             CAST(SUM(y) OVER w AS BIGINT) AS sy,
-             CAST(SUM(x * y) OVER w AS BIGINT) AS sxy,
-             CAST(SUM(x * x) OVER w AS BIGINT) AS sxx,
-             CAST(SUM(y * y) OVER w AS BIGINT) AS syy
-           FROM dense
-           WINDOW w AS (ORDER BY d ROWS BETWEEN 6 PRECEDING
-             AND CURRENT ROW))
-         SELECT d AS day, x AS clicks, y AS purchases,
-           CASE WHEN (7 * sxx - sx * sx) * (7 * syy - sy * sy) > 0
-             THEN ROUND(CAST(7 * sxy - sx * sy AS DOUBLE)
-               / sqrt(CAST((7 * sxx - sx * sx) * (7 * syy - sy * sy)
-                 AS DOUBLE)), 6) END AS r7
-         FROM m WHERE d >= d0 + 6 ORDER BY day""",
-    "q_logrank" ->
       """WITH seq AS (SELECT user_id, epoch_us(ts) AS us,
             first_value(event_type) OVER (PARTITION BY user_id
               ORDER BY ts, event_id) AS ftype
@@ -4548,8 +4425,40 @@ object AnalyticQueries {
            ROUND(CAST(st.v AS DOUBLE), 6) AS variance,
            ROUND((CAST(st.o1 AS DOUBLE) - CAST(st.e1 AS DOUBLE))
              / sqrt(CAST(st.v AS DOUBLE)), 6) AS z
-         FROM st CROSS JOIN n""",
-    "q_var_cvar" ->
+         FROM st CROSS JOIN n"""),
+
+    // ── Empirical VaR / CVaR of daily revenue ────────────────────────────
+    // The tail-risk read a revenue dashboard puts next to q_gumbel's
+    // peak model: the 5% value-at-risk (type-1 order statistic at
+    // ⌈0.05·n⌉ over the ≤|days|-row daily revenue relation) and the
+    // expected shortfall CVaR = mean of the days at or below it. Daily
+    // sums are decimal-exact; the rank rides the pmod window on the
+    // span-bounded relation; the tail mean folds decimal sums with ONE
+    // final divide. Exactly replayable — no interpolation semantics to
+    // disagree on (the q_global_quantiles type-1 discipline).
+    Query("q_var_cvar", ((s, dir) => {
+      val daily = tn(s, dir, "orders")
+        .groupBy(expr("unix_micros(cast(o_orderdate as timestamp))" +
+          " div 86400000000").as("d"))
+        .agg(sum(col("o_totalprice").cast("decimal(30,10)")).as("rev"))
+      val wRank = Window.partitionBy(pmod(col("d"), lit(1L)))
+        .orderBy(col("rev"), col("d"))
+      val wTot = Window.partitionBy(pmod(col("d"), lit(1L)))
+      val ranked = daily.select(col("rev"),
+        row_number().over(wRank).as("rk"),
+        count(lit(1)).over(wTot).as("n"))
+      ranked
+        .where(col("rk") <= ceil(col("n").cast("double") * 0.05)
+          .cast("long"))
+        .groupBy(col("n"))
+        .agg(count(lit(1)).as("n_tail"),
+          max(col("rev")).as("var_dec"),
+          sum(col("rev")).as("tail_sum"))
+        .select(col("n").as("n_days"), col("n_tail"),
+          round(col("var_dec").cast("double"), 4).as("var_5pct"),
+          round(col("tail_sum").cast("double") /
+            col("n_tail").cast("double"), 4).as("cvar_5pct"))
+    }),
       """WITH daily AS (SELECT epoch_us(o_orderdate) // 86400000000 AS d,
             SUM(CAST(o_totalprice AS DECIMAL(30,10))) AS rev
           FROM orders GROUP BY 1),
@@ -4565,6 +4474,6 @@ object AnalyticQueries {
          SELECT CAST(n AS BIGINT) AS n_days, n_tail,
            ROUND(CAST(var_dec AS DOUBLE), 4) AS var_5pct,
            ROUND(CAST(tail_sum AS DOUBLE) / n_tail, 4) AS cvar_5pct
-         FROM tail""",
+         FROM tail"""),
   )
 }

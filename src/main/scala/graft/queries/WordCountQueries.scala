@@ -1,10 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.tok.Tokenizer
 import graft.wc.WordCount
+import OracleSql._
 
 /** The reference's own query surface (SURVEY §2.1 O1–O11): case-insensitive,
   * delimiter-tokenized word count over `documents.text`, plus the top-k and
@@ -12,46 +12,35 @@ import graft.wc.WordCount
   */
 object WordCountQueries {
 
-  /** The shared tokenizer regex, valid for both Java regex and DuckDB RE2. */
-  private val Re = Tokenizer.DefaultSplitRegex
-  /** SQL single-quote escape for embedding the regex in oracle strings. */
-  private def sq(s: String): String = s.replace("'", "''")
-
   // documents is read through Tables.parTable (VERDICT r18 next #6): the
   // tokenize explode + partial count all run BEFORE the groupBy exchange,
   // so on the one-row-group fixture file the whole wc map side otherwise
   // runs as ONE task. Above parTable's 256 MiB ceiling the widen does not
   // exist, so no production plan carries the extra exchange.
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "wc_words" -> ((s, dir) =>
+  val queries: Seq[Query] = Seq(
+    Query("wc_words", ((s, dir) =>
       WordCount.fromText(Tables.parTable(s, dir, "documents"), "text")),
-    "wc_topk" -> ((s, dir) =>
+      s"""SELECT word, count(*) AS cnt
+          FROM (SELECT unnest(string_split_regex(lower(text), '$Re')) AS word
+                FROM documents)
+          WHERE word <> '' GROUP BY word ORDER BY word"""),
+    Query("wc_topk", ((s, dir) =>
       WordCount.fromText(Tables.parTable(s, dir, "documents"), "text")
         .orderBy(desc("cnt"), asc("word")).limit(20)),
-    "wc_per_lang" -> ((s, dir) =>
+      s"""SELECT word, count(*) AS cnt
+          FROM (SELECT unnest(string_split_regex(lower(text), '$Re')) AS word
+                FROM documents)
+          WHERE word <> '' GROUP BY word
+          ORDER BY cnt DESC, word ASC LIMIT 20"""),
+    Query("wc_per_lang", ((s, dir) =>
       Tables.parTable(s, dir, "documents")
         .select(col("lang"),
           explode(Tokenizer.lowerTokens(col("text"))).as("word"))
         .groupBy("lang", "word").agg(count(lit(1)).as("cnt"))
         .orderBy("lang", "word")),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "wc_words" ->
-      s"""SELECT word, count(*) AS cnt
-          FROM (SELECT unnest(string_split_regex(lower(text), '${sq(Re)}')) AS word
-                FROM documents)
-          WHERE word <> '' GROUP BY word ORDER BY word""",
-    "wc_topk" ->
-      s"""SELECT word, count(*) AS cnt
-          FROM (SELECT unnest(string_split_regex(lower(text), '${sq(Re)}')) AS word
-                FROM documents)
-          WHERE word <> '' GROUP BY word
-          ORDER BY cnt DESC, word ASC LIMIT 20""",
-    "wc_per_lang" ->
       s"""SELECT lang, word, count(*) AS cnt
-          FROM (SELECT lang, unnest(string_split_regex(lower(text), '${sq(Re)}')) AS word
+          FROM (SELECT lang, unnest(string_split_regex(lower(text), '$Re')) AS word
                 FROM documents)
-          WHERE word <> '' GROUP BY lang, word ORDER BY lang, word""",
+          WHERE word <> '' GROUP BY lang, word ORDER BY lang, word"""),
   )
 }

@@ -185,23 +185,4 @@ object EventsStream {
       keys = Seq("event_type", "day"), cntCol = "cnt",
       sumCols = Seq("sum_dec"), minCols = Seq("min_v"),
       maxCols = Seq("max_v"))
-
-  def replayFromParquet(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    // Same fixture-generation adaptivity as Tables.events (LONG ns vs
-    // native µs timestamp), but surfaced as TIMESTAMP (not NTZ):
-    // EventTimeWatermark requires TimestampType — a watermark on a
-    // TIMESTAMP_NTZ column fails analysis
-    // (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE). Session TZ is pinned UTC, so
-    // the instant semantics match the batch NTZ surface on the fixtures.
-    val ts = schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        timestamp_micros(expr("ts div 1000"))
-      case _ => col("ts").cast("timestamp")
-    }
-    spark.readStream
-      .schema(schema)
-      .parquet(s"$dir/events.parquet")
-      .withColumn("ts", ts)
-  }
 }

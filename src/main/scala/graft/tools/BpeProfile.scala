@@ -59,9 +59,7 @@ object BpeProfile {
       val sec = (System.nanoTime() - t0) / 1e9
       println(f"[profile] bpeTrain k=$k%-4d total $sec%8.2f s  " +
         f"per-merge ${sec / k}%.3f s")
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      graft.Sessions.releaseCaches(spark)
     }
     spark.stop()
   }

@@ -135,9 +135,7 @@ object QueryProfile {
           case (k, c) => println(f"$c%6d  $k")
         }
       }
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      Sessions.releaseCaches(spark)
     }
     spark.stop()
   }

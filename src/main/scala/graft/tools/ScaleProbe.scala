@@ -198,11 +198,6 @@ object ScaleProbe {
     // the corpus-scale scan entirely (measured ratios < 1 at 10× data),
     // so the cold leg is the honest scan-scaling number.
     val cold = args.drop(4).contains("cold")
-    def dropCaches(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-    }
     def timed(name: String, dir: String): Double = {
       def once(): Double = {
         val t0 = System.nanoTime()
@@ -211,9 +206,9 @@ object ScaleProbe {
         (System.nanoTime() - t0) / 1e9
       }
       once() // warm
-      if (cold) dropCaches()
+      if (cold) graft.Sessions.releaseCaches(spark)
       val t = once()
-      dropCaches()
+      graft.Sessions.releaseCaches(spark)
       t
     }
     queries.foreach { q =>

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
 /** Global scale-posture guard over the ENTIRE gated surface: no query's
   * physical plan may contain a cartesian product or broadcast-nested-loop
@@ -14,11 +13,8 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
   */
 class PlanShapeSpec extends SparkSpec {
 
-  /** Fixture dir; tests `assume` readability so machines without the
-    * driver-generated testdata skip rather than fail (ADVICE r04). */
+  /** Fixture dir; a missing fixture fails every audit below. */
   private val sfDir = "/root/testdata/sf0.001"
-  private def assumeFixtures(): Unit =
-    assume(java.nio.file.Files.isReadable(java.nio.file.Paths.get(sfDir)))
 
   /** Queries whose returned frame is the RESULT of an eagerly-executed
     * iterative job (LogicalRDD leaf after per-round localCheckpoints):
@@ -111,17 +107,44 @@ class PlanShapeSpec extends SparkSpec {
   private def collectNodes(plan: SparkPlan): Seq[SparkPlan] =
     collectPlanNodes(plan)
 
-  test("no gated query plans a cartesian/broadcast-nested-loop join off-allowlist") {
-    assumeFixtures()
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1)
+  /** What the three audits below read from one query's executed plan. */
+  private case class PlanFacts(
+      unkeyedJoins: Seq[String], nodeCount: Int, wideLineitemScans: Seq[Int])
+
+  /** Every gated query's executed plan, built ONCE per spec run and
+    * reduced to the facts each audit checks. */
+  private lazy val planFacts: Seq[(String, PlanFacts)] = {
+    requireFixtures(sfDir)
+    SparkEntry.queries.toSeq.sortBy(_._1)
       .filterNot { case (name, _) => eagerlyExecuted(name) }
-      .flatMap { case (name, fn) =>
-        val plan = fn(spark, sfDir).queryExecution.executedPlan
-        val bad = collectNodes(plan).map(_.nodeName).filter(n =>
+      .map { case (name, fn) =>
+        // collectNodes, NOT plan.collect: AdaptiveSparkPlanExec is a leaf to
+        // TreeNode.collect, which silently finds zero scans under AQE
+        // (review r04 — the vacuous-guard failure mode)
+        val nodes = collectNodes(fn(spark, sfDir).queryExecution.executedPlan)
+        val unkeyed = nodes.map(_.nodeName).filter(n =>
           n.contains("CartesianProduct") || n.contains("BroadcastNestedLoopJoin"))
-        if (bad.nonEmpty && !productAllowlist.contains(name))
-          Some(name -> bad.distinct)
-        else None
+        val wide = nodes.collect {
+          case f: org.apache.spark.sql.execution.FileSourceScanExec
+              if f.relation.location.rootPaths
+                .exists(_.toString.contains("lineitem")) &&
+                f.requiredSchema.size > 8 => f.requiredSchema.size
+        }
+        name -> PlanFacts(unkeyed.distinct, nodes.size, wide)
+      }
+  }
+
+  /** An allowlist or bound that names no registered query pins nothing. */
+  private def assertNamesExist(list: String, names: Iterable[String]): Unit =
+    names.foreach(n => assert(SparkEntry.queries.contains(n),
+      s"$list names a missing query: $n"))
+
+  test("no gated query plans a cartesian/broadcast-nested-loop join off-allowlist") {
+    assertNamesExist("productAllowlist", productAllowlist.keys)
+    assertNamesExist("eagerlyExecuted", eagerlyExecuted)
+    val offenders = planFacts.collect {
+      case (name, f) if f.unkeyedJoins.nonEmpty &&
+          !productAllowlist.contains(name) => name -> f.unkeyedJoins
     }
     assert(offenders.isEmpty,
       s"unkeyed joins outside the allowlist: $offenders")
@@ -144,17 +167,12 @@ class PlanShapeSpec extends SparkSpec {
   private val globalNodeCeiling = 100
 
   test("no gated plan exceeds its recorded node-count bound") {
-    assumeFixtures()
     nodeBounds.keys.foreach(n => assert(SparkEntry.queries.contains(n),
       s"nodeBounds names a missing query: $n — re-run tools.PlanSize and re-pin"))
-    val over = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filterNot { case (name, _) => eagerlyExecuted(name) }
-      .flatMap { case (name, fn) =>
-        val nodes = collectNodes(
-          fn(spark, sfDir).queryExecution.executedPlan).size
-        val bound = nodeBounds.getOrElse(name, globalNodeCeiling)
-        if (nodes > bound) Some((name, nodes, bound)) else None
-      }
+    val over = planFacts.flatMap { case (name, f) =>
+      val bound = nodeBounds.getOrElse(name, globalNodeCeiling)
+      if (f.nodeCount > bound) Some((name, f.nodeCount, bound)) else None
+    }
     assert(over.isEmpty,
       s"plans past their node bound (query, nodes, bound): $over — if the " +
         "growth is intended, re-run tools.PlanSize and re-pin the bound")
@@ -164,21 +182,9 @@ class PlanShapeSpec extends SparkSpec {
     // lineitem has 16 columns; no gated query needs more than 8 of them —
     // a scan reading the full schema means a projection stopped reaching
     // the parquet reader
-    assumeFixtures()
-    val wide = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filterNot { case (name, _) => eagerlyExecuted(name) }
-      .flatMap { case (name, fn) =>
-      // collectNodes, NOT plan.collect: AdaptiveSparkPlanExec is a leaf to
-      // TreeNode.collect, which silently finds zero scans under AQE
-      // (review r04 — the vacuous-guard failure mode)
-      val scans = collectNodes(fn(spark, sfDir).queryExecution.executedPlan)
-        .collect { case f: org.apache.spark.sql.execution.FileSourceScanExec => f }
-      val lineitemWide = scans.filter(s =>
-        s.relation.location.rootPaths.exists(_.toString.contains("lineitem")) &&
-          s.requiredSchema.size > 8)
-      if (lineitemWide.nonEmpty)
-        Some(name -> lineitemWide.map(_.requiredSchema.size))
-      else None
+    val wide = planFacts.collect {
+      case (name, f) if f.wideLineitemScans.nonEmpty =>
+        name -> f.wideLineitemScans
     }
     assert(wide.isEmpty, s"lineitem scans reading >8 columns: $wide")
   }

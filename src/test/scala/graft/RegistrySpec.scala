@@ -1,0 +1,39 @@
+package graft
+
+import graft.queries.Query
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The query registry is the single source of every name-keyed view:
+  * names are unique, every oracle belongs to a registered query, and the
+  * frozen benchmark query list still resolves. */
+class RegistrySpec extends AnyFunSuite {
+
+  private val noBuild: Query.Build = (_, _) => null
+
+  test("a duplicate query name throws instead of shadowing") {
+    val e = intercept[IllegalArgumentException](Query.unique(Seq(
+      Query("q_a", noBuild), Query("q_b", noBuild, "SELECT 1"),
+      Query("q_a", noBuild, "SELECT 2"))))
+    assert(e.getMessage.contains("duplicate query names: q_a"))
+    val ok = Seq(Query("q_a", noBuild), Query("q_b", noBuild))
+    assert(Query.unique(ok) === ok)
+  }
+
+  test("every oracle names a registered query; views match the registry") {
+    val names = SparkEntry.registry.map(_.name)
+    assert(SparkEntry.queries.keySet === names.toSet)
+    assert(SparkEntry.queries.size === SparkEntry.registry.size)
+    assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
+    assert(SparkEntry.benchQueries === names.sorted)
+  }
+
+  test("every name in perfbench/queries.txt is a registered query") {
+    val src = scala.io.Source.fromFile("perfbench/queries.txt", "UTF-8")
+    val listed =
+      try src.getLines().map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#")).toVector
+      finally src.close()
+    assert(listed.nonEmpty)
+    val missing = listed.filterNot(SparkEntry.queries.contains)
+    assert(missing.isEmpty, s"unregistered: $missing")
+  }
+}

@@ -81,7 +81,7 @@ class ShuffleVolumeSpec extends SparkSpec {
     // from the plan AND from the measured shuffle bytes — only the pair
     // aggregate's exchange (present either way) remains.
     val sfDir = "/root/testdata/sf0.001"
-    assume(java.nio.file.Files.isReadable(java.nio.file.Paths.get(sfDir)))
+    requireFixtures(sfDir)
     val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
       .select("l_orderkey", "l_partkey")
     val dir = tempDir("bktli")
@@ -133,37 +133,6 @@ class ShuffleVolumeSpec extends SparkSpec {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
       spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
       spark.sql("DROP TABLE li_bucketed")
-    }
-  }
-
-  test("q_basket_lift behind spark.graft.bucketedFacts=1: identical rows, no join-key exchange") {
-    // VERDICT r15 #6 — the bucketed lever wired into the PRODUCTION
-    // chain: the gated query itself, flag on vs off, must return
-    // identical rows while the flag-on plan reads the bucketed table and
-    // plans the self-join without an input exchange on l_orderkey.
-    val sfDir = "/root/testdata/sf0.001"
-    assume(java.nio.file.Files.isReadable(java.nio.file.Paths.get(sfDir)))
-    val sf = "sf0_001"
-    spark.sql(s"DROP TABLE IF EXISTS li_pairs_bucketed_$sf")
-    // fresh derivation each spec run: the fixture path may hold a copy
-    // from another session — ensureBucketedRead must re-attach it, which
-    // is exactly the cross-JVM path Verify/Bench take; exercise BOTH by
-    // deleting the catalog entry only (above) and keeping files if any
-    val off = SparkEntry.queries("q_basket_lift")(spark, sfDir)
-    val offRows = off.collect().toSeq
-    spark.conf.set("spark.graft.bucketedFacts", "1")
-    try {
-      val on = SparkEntry.queries("q_basket_lift")(spark, sfDir)
-      val onRows = on.collect().toSeq
-      assert(onRows === offRows, "flag must not change results")
-      val plan = on.queryExecution.executedPlan.toString
-      assert(!plan.contains("hashpartitioning(l_orderkey"),
-        s"bucketed self-join must not exchange on the join key:\n" +
-          plan.take(1500))
-      assert(plan.contains("Bucketed: true"),
-        s"fact scan should be bucket-aware:\n${plan.take(1500)}")
-    } finally {
-      spark.conf.unset("spark.graft.bucketedFacts")
     }
   }
 }

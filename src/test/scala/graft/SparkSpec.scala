@@ -27,6 +27,12 @@ abstract class SparkSpec extends AnyFunSuite {
     p
   }
 
+  /** Fails the test when a fixture dir is missing: a gate that cancels
+    * itself on a box without fixtures would pass silently. */
+  def requireFixtures(dir: String): Unit =
+    assert(java.nio.file.Files.isReadable(java.nio.file.Paths.get(dir)),
+      s"fixture dir $dir is missing or unreadable")
+
   def writeFile(dir: java.nio.file.Path, name: String, content: String): Unit =
     java.nio.file.Files.write(dir.resolve(name),
       content.getBytes(java.nio.charset.StandardCharsets.UTF_8))

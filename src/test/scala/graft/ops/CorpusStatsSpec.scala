@@ -559,7 +559,7 @@ class CorpusStatsSpec extends SparkSpec {
     // bucket routing diverged from the sketch's — exactly the bug class
     // this guards
     val sfDir = "/root/testdata/sf0.001"
-    assume(java.nio.file.Files.isReadable(java.nio.file.Paths.get(sfDir)))
+    requireFixtures(sfDir)
     val rows = graft.SparkEntry.queries("q_cms")(spark, sfDir)
       .as[(String, Long, Long, Long)].collect()
     assert(rows.length === 20)
