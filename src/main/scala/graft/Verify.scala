@@ -3,16 +3,32 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+
+  /** The queries a run dumps, in `registered` order: all of them, or only
+    * those named in the comma-separated `filter` (for local iteration; the
+    * correctness gate runs the full surface). Left holds each filter name
+    * that is not registered, so a mistyped filter fails instead of
+    * dumping nothing. */
+  def select(registered: Seq[String], filter: Option[String])
+      : Either[Seq[String], Seq[String]] = filter.map(_.split(',').toSeq) match {
+    case None => Right(registered)
+    case Some(names) =>
+      val unknown = names.filterNot(registered.contains)
+      if (unknown.nonEmpty) Left(unknown) else Right(registered.filter(names.contains))
+  }
+
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // optional 3rd arg: comma-separated query names (local iteration only;
-    // the driver always runs the full surface)
-    val only = args.lift(2).map(_.split(',').toSet)
+    val names = select(SparkEntry.queries.keys.toSeq, args.lift(2)) match {
+      case Right(ns) => ns
+      case Left(unknown) =>
+        unknown.foreach(n => System.err.println(s"[verify] unknown query: $n"))
+        sys.exit(1)
+    }
     val spark = Sessions.local("graft-verify")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    names.foreach { name =>
+      val fn = SparkEntry.queries(name)
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -78,7 +78,8 @@ object Dedup {
   /** Distinct n-gram hash set of a token array, skipping n-gram string
     * construction entirely: one md5 per token, then the native
     * [[graft.expr.NgramHashes]] position-weighted combination per window.
-    * Profiling (NeardupProfile, sf0.1): building shingle STRINGS
+    * Profiling at sf0.1 (per-stage times, the read `graft.tools.QueryProfile`
+    * gives on the near-dup queries): building shingle STRINGS
     * (`concat_ws` per window) cost ~2× the md5 pass itself — this path
     * removes it while keeping the same set semantics.
     */

@@ -1482,15 +1482,13 @@ object AnalyticQueries {
          FROM part ORDER BY p_partkey"""),
 
     // ── Math functions ──────────────────────────────────────────────────
-    // Plain Tables.table, NOT the widened parTable scan: this is the one
-    // gated query whose output is row-level under a NON-total ORDER BY —
-    // (l_orderkey, l_linenumber) repeats in the fixtures (e.g. (1,7) has
-    // two rows with different values), so the order of tied rows is
-    // whatever order the sort consumed them in, and the oracle compare is
-    // order-sensitive within ties. A pre-sort repartition permutes tie
-    // order and flips the hash with identical row multisets (caught by
-    // the r18 oracle sweep: 14k misaligned positions, multiset diff 0).
-    // Single unsplittable scan → sort keeps both engines in file order.
+    // (l_orderkey, l_linenumber) repeats in the fixtures (11,785 keys at
+    // sf0.01), so both engines order by EVERY output column: rows that
+    // tie on all of them are identical, and the order is total. Plain
+    // Tables.table, not the widened parTable scan: the sort's range
+    // exchange right after the cheap projection already spreads the rows
+    // over every core, so a round-robin widen would put a second shuffle
+    // in front of it (the reasoning of Tables.events' widen=false).
     Query("q_math_fns", ((s, dir) =>
       Tables.table(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_linenumber"),
@@ -1500,7 +1498,8 @@ object AnalyticQueries {
           floor(col("l_quantity") / lit(7.0)).as("qty_floor"),
           abs(col("l_discount") - lit(0.05)).as("abs_disc"),
           pmod(col("l_orderkey"), lit(97L)).as("key_mod"))
-        .orderBy("l_orderkey", "l_linenumber")),
+        .orderBy("l_orderkey", "l_linenumber", "sqrt_price", "ln_price",
+          "qty_ceil", "qty_floor", "abs_disc", "key_mod")),
       """SELECT l_orderkey, l_linenumber,
             ROUND(sqrt(l_extendedprice), 6) AS sqrt_price,
             ROUND(ln(l_extendedprice + 1.0), 6) AS ln_price,
@@ -1508,7 +1507,9 @@ object AnalyticQueries {
             CAST(floor(l_quantity / 7.0) AS BIGINT) AS qty_floor,
             abs(l_discount - 0.05) AS abs_disc,
             l_orderkey % 97 AS key_mod
-         FROM lineitem ORDER BY l_orderkey, l_linenumber"""),
+         FROM lineitem
+         ORDER BY l_orderkey, l_linenumber, sqrt_price, ln_price,
+                  qty_ceil, qty_floor, abs_disc, key_mod"""),
 
     // ── Portable Pearson correlation via decimal moment sums ────────────
     // Built-in corr() accumulates covariance in shuffle order (engine- and

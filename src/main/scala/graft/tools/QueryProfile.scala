@@ -1,8 +1,7 @@
 package graft.tools
 
 import graft.{Sessions, SparkEntry}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import scala.collection.mutable
+import graft.obs.Collector
 
 /** Per-stage profile of named gated queries under the Bench protocol
   * (warm-up run, then a timed `noop` sink): for every stage of the timed
@@ -11,15 +10,9 @@ import scala.collection.mutable
   * (Stages tab + task metrics) for a UI-less box. Diagnosis tool, not
   * gated surface.
   *
-  * Usage: runMain graft.tools.QueryProfile <sfDir> q_a[,q_b,...] [--cold]
+  * Usage: runMain graft.tools.QueryProfile <sfDir> q_a[,q_b,...] [--cold] [--sample]
   */
 object QueryProfile {
-
-  final case class StageRow(id: Int, name: String, tasks: Int,
-                            runMs: Long, cpuMs: Long, gcMs: Long,
-                            shufReadMB: Double, shufWriteMB: Double,
-                            inputMB: Double, spillMB: Double,
-                            wallMs: Long)
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
@@ -27,25 +20,7 @@ object QueryProfile {
       .getOrElse(sys.error("usage: QueryProfile <sfDir> q_a[,q_b,...]"))
     val cold = args.contains("--cold")
     val spark = Sessions.local("graft-profile")
-
-    val rows = mutable.ArrayBuffer.empty[StageRow]
-    val listener = new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val si = sc.stageInfo
-        val tm = si.taskMetrics
-        val wall = (for {
-          a <- si.completionTime; b <- si.submissionTime
-        } yield a - b).getOrElse(-1L)
-        rows += StageRow(si.stageId, si.name.takeWhile(_ != '\n').take(80),
-          si.numTasks, tm.executorRunTime, tm.executorCpuTime / 1000000,
-          tm.jvmGCTime,
-          tm.shuffleReadMetrics.totalBytesRead / 1048576.0,
-          tm.shuffleWriteMetrics.bytesWritten / 1048576.0,
-          tm.inputMetrics.bytesRead / 1048576.0,
-          tm.memoryBytesSpilled / 1048576.0,
-          wall)
-      }
-    }
+    val collector = new Collector(spark)
 
     // In-process stack sampler (--sample): every 25 ms, histogram the top
     // interesting frame of every executor worker thread during the timed
@@ -92,42 +67,33 @@ object QueryProfile {
     names.foreach { n =>
       val fn = SparkEntry.queries.getOrElse(n,
         sys.error(s"unknown query: $n (see SparkEntry.queries)"))
-      var constructSec = 0.0 // lambda invocation: plan build + any eager
-                             // driver collects/persist registrations
-      def run(): Double = {
-        val t0 = System.nanoTime()
-        val df = fn(spark, sfDir)
-        val t1 = System.nanoTime()
-        constructSec = (t1 - t0) / 1e9
-        df.write.mode("overwrite").format("noop").save()
-        (System.nanoTime() - t1) / 1e9 + constructSec
-      }
-      if (!cold) run() // warm-up, unlistened
-      rows.clear()
+      // construct = the lambda invocation: plan build + any eager driver
+      // collects/persist registrations; action = the noop sink
+      def run() = collector.traced(s"profile: $n")(fn(spark, sfDir))(
+        _.write.mode("overwrite").format("noop").save())
+      if (!cold) run() // warm-up, record discarded
       frameHist.clear()
-      spark.sparkContext.addSparkListener(listener)
-      spark.sparkContext.setJobDescription(s"profile: $n")
       sampling = sample
-      val sec = run()
+      val r = run()
       sampling = false
-      spark.sparkContext.removeSparkListener(listener)
-      // listener bus is async; drain before reading
-      Thread.sleep(300)
-      println(f"\n════ $n: ${sec}%.3f s (timed run, ${rows.size} stages) ════")
+      val sec = r.constructS + r.actionS
+      println(f"\n════ $n: ${sec}%.3f s (timed run, ${r.stages.size} stages) ════")
       println(f"${"stage"}%5s ${"tasks"}%5s ${"wall_s"}%8s ${"run_s"}%8s " +
         f"${"cpu_s"}%8s ${"gc_s"}%6s ${"shR_MB"}%8s ${"shW_MB"}%8s " +
         f"${"in_MB"}%8s ${"spill"}%6s  name")
-      rows.sortBy(-_.runMs).foreach { r =>
-        println(f"${r.id}%5d ${r.tasks}%5d ${r.wallMs / 1000.0}%8.2f " +
-          f"${r.runMs / 1000.0}%8.2f ${r.cpuMs / 1000.0}%8.2f " +
-          f"${r.gcMs / 1000.0}%6.2f ${r.shufReadMB}%8.2f " +
-          f"${r.shufWriteMB}%8.2f ${r.inputMB}%8.2f ${r.spillMB}%6.1f  ${r.name}")
+      def mb(bytes: Long) = bytes / 1048576.0
+      r.stages.sortBy(-_.runMs).foreach { s =>
+        println(f"${s.id}%5d ${s.tasks}%5d ${s.wallMs / 1000.0}%8.2f " +
+          f"${s.runMs / 1000.0}%8.2f ${s.cpuMs / 1000.0}%8.2f " +
+          f"${s.gcMs / 1000.0}%6.2f ${mb(s.shuffleReadBytes)}%8.2f " +
+          f"${mb(s.shuffleWriteBytes)}%8.2f ${mb(s.inputBytes)}%8.2f " +
+          f"${mb(s.spillBytes)}%6.1f  ${s.name.take(80)}")
       }
-      val totRun = rows.map(_.runMs).sum / 1000.0
-      val totCpu = rows.map(_.cpuMs).sum / 1000.0
+      val totRun = r.stages.map(_.runMs).sum / 1000.0
+      val totCpu = r.stages.map(_.cpuMs).sum / 1000.0
       println(f"TOTAL run ${totRun}%.2f s cpu ${totCpu}%.2f s across " +
-        f"${rows.map(_.tasks).sum} tasks; wall ${sec}%.3f s " +
-        f"(construct ${constructSec}%.3f s, action ${sec - constructSec}%.3f s)")
+        f"${r.tasks} tasks; wall ${sec}%.3f s " +
+        f"(construct ${r.constructS}%.3f s, action ${r.actionS}%.3f s)")
       if (sample) {
         import scala.jdk.CollectionConverters._
         println("-- sampled worker frames (25 ms ticks) --")

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * q_mixture_sample's quota draw) do not grow super-linearly with corpus
   * size — their corpus-scale stages are the rankers/draw scan, their
   * result-scale stages are k-row. Not part of the gated surface — a
-  * diagnosis tool like DecontamProfile.
+  * diagnosis tool like QueryProfile.
   *
   * Replica k shifts ids by k·10⁹, so every replicated row is a distinct
   * document/vector; replica 0 is the original corpus, which keeps

@@ -1,7 +1,9 @@
 package graft.tools
 
-import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import graft.obs.Collector
+import graft.ops.Plans
+import org.apache.spark.sql.execution.adaptive.AQEShuffleReadExec
+import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 import org.apache.spark.sql.functions._
 
 /** Timing evidence for the AQE skew-join gate (AqeSkewJoinSpec): plant a
@@ -63,54 +65,25 @@ object SkewProfile {
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "4m")
     spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
 
-    val maxTaskMs = new AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) maxTaskMs.getAndUpdate(p =>
-          math.max(p, m.executorRunTime))
-      }
-    })
-
     def planShape(df: org.apache.spark.sql.DataFrame): String = {
-      def walk(p: org.apache.spark.sql.execution.SparkPlan)
-          : Seq[org.apache.spark.sql.execution.SparkPlan] = {
-        val self = p match {
-          case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-            walk(a.executedPlan)
-          case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-            q +: walk(q.plan)
-          case x => Seq(x)
-        }
-        self ++ p.children.flatMap(walk)
-      }
-      val nodes = walk(df.queryExecution.executedPlan)
-      val smj = nodes.collect {
-        case s: org.apache.spark.sql.execution.joins.SortMergeJoinExec =>
-          s"smj(skew=${s.isSkewJoin})" }
-      val reads = nodes.collect {
-        case r: org.apache.spark.sql.execution.adaptive.AQEShuffleReadExec =>
-          r.partitionSpecs.size }
+      val nodes = Plans.collectNodes(df.queryExecution.executedPlan)
+      val smj = nodes.collect { case s: SortMergeJoinExec => s"smj(skew=${s.isSkewJoin})" }
+      val reads = nodes.collect { case r: AQEShuffleReadExec => r.partitionSpecs.size }
       s"${smj.mkString(",")} reads=${reads.mkString("/")}"
     }
 
+    val collector = new Collector(spark)
     def timed(): (Double, Long, String) = {
-      maxTaskMs.set(0L)
-      val df = fact.join(dim, Seq("k"))
-        .agg(count(lit(1)), sum(col("price") * col("dv")))
-      val t0 = System.nanoTime()
       // collect, not a noop write: DataFrameWriter re-plans into its own
       // QueryExecution, so inspecting df.queryExecution after a write
       // reads the INITIAL adaptive plan (isFinalPlan=false) — the skew
       // evidence must come from the executed tree itself
-      df.collect()
-      val t = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(500) // let straggler TaskEnd events drain
-      (t, maxTaskMs.get(), planShape(df))
+      val df = fact.join(dim, Seq("k"))
+        .agg(count(lit(1)), sum(col("price") * col("dv")))
+      val r = collector.traced("skew-join")(df)(_.collect())
+      (r.actionS, r.maxTaskRunMs, planShape(df))
     }
 
-    sys.env.get("SKEW_FORCE").foreach(v =>
-      spark.conf.set("spark.sql.adaptive.forceOptimizeSkewedJoin", v))
     for (enabled <- Seq(true, false, true, false)) {
       spark.conf.set("spark.sql.adaptive.skewJoin.enabled", enabled.toString)
       timed() // warm

@@ -54,16 +54,23 @@ object WordCount {
       .agg(count(lit(1)).as("cnt"))
       .orderBy("word")
 
-  /** Word count over a directory of text files — the reference's exact I/O
-    * contract (O1, `word_count_mpi.c:61-99`): every regular file under `path`
-    * is one logical byte stream. Spark's text source supplies the stable file
-    * enumeration, byte-range splitting, and record-boundary repair the
-    * reference hand-rolls (SURVEY §2.1 O2/O3).
+  /** Word count over a directory of text files — the reference's I/O
+    * contract (O1, `word_count_mpi.c:61-99`): the regular files under `path`
+    * are one logical byte stream. Names starting with `_` or `.` are
+    * skipped by Spark's file index ([[isRead]]), where the reference reads
+    * every regular file (SURVEY §2.3 item 10). Spark's text source supplies
+    * the stable file enumeration, byte-range splitting, and record-boundary
+    * repair the reference hand-rolls (SURVEY §2.1 O2/O3).
     */
   def fromDirectory(spark: SparkSession, path: String,
                     delimiterFile: Option[String] = None): DataFrame =
     fromText(spark.read.text(path), "value",
       delimiterFile.map(Tokenizer.delimitersFromFile).getOrElse(Tokenizer.DefaultDelimiters))
+
+  /** Whether [[fromDirectory]] reads a file of this name: Spark's file
+    * index skips names that start with `_` or `.`. */
+  def isRead(fileName: String): Boolean =
+    !fileName.startsWith("_") && !fileName.startsWith(".")
 
   /** Per-file word counts — keeps the lineage the reference discards
     * (`input_file_name()` instead of the concatenated-corpus view).

@@ -33,7 +33,9 @@ object WordCountCli {
       if (pairs.contains(None)) None else Some(pairs.flatten.toMap)
     }
 
-  /** Bounded emptiness check: does `path` contain at least one regular file?
+  /** Bounded emptiness check: does `path` contain at least one regular file
+    * that the scan will read ([[WordCount.isRead]])? A directory holding
+    * only `_`/`.` files is empty to the scan, so it fails here too.
     * (`Files.list` stream, no full-directory materialization; null-safe,
     * unlike `File.listFiles` on unreadable paths — VERDICT r01 #4.) */
   def hasRegularFile(path: String): Boolean = {
@@ -42,7 +44,8 @@ object WordCountCli {
     else
       try {
         val s = java.nio.file.Files.list(p)
-        try s.anyMatch(f => java.nio.file.Files.isRegularFile(f))
+        try s.anyMatch(f => java.nio.file.Files.isRegularFile(f) &&
+          WordCount.isRead(f.getFileName.toString))
         finally s.close()
       } catch {
         // unreadable dir (AccessDenied etc.) → clean exit-1 path, not a

@@ -4,8 +4,9 @@ import graft.queries.Query
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The query registry is the single source of every name-keyed view:
-  * names are unique, every oracle belongs to a registered query, and the
-  * frozen benchmark query list still resolves. */
+  * names are unique, every oracle belongs to a registered query, Verify's
+  * filter only names registered queries, and the frozen benchmark query
+  * list still resolves. */
 class RegistrySpec extends AnyFunSuite {
 
   private val noBuild: Query.Build = (_, _) => null
@@ -25,6 +26,14 @@ class RegistrySpec extends AnyFunSuite {
     assert(SparkEntry.queries.size === SparkEntry.registry.size)
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
     assert(SparkEntry.benchQueries === names.sorted)
+  }
+
+  test("Verify's filter selects registered names and rejects unknown ones") {
+    val reg = Seq("q_a", "q_b", "q_c")
+    assert(Verify.select(reg, None) === Right(reg))
+    assert(Verify.select(reg, Some("q_c,q_a")) === Right(Seq("q_a", "q_c")))
+    assert(Verify.select(reg, Some("NONE")) === Left(Seq("NONE")))
+    assert(Verify.select(reg, Some("q_a,q_x,,q_b ")) === Left(Seq("q_x", "", "q_b ")))
   }
 
   test("every name in perfbench/queries.txt is a registered query") {

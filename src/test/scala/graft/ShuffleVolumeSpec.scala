@@ -1,7 +1,6 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import graft.obs.Collector
 import org.apache.spark.sql.functions._
 
 /** Measured scale posture: the word-count pipeline's shuffle volume scales
@@ -12,29 +11,8 @@ import org.apache.spark.sql.functions._
 class ShuffleVolumeSpec extends SparkSpec {
   import spark.implicits._
 
-  private def shuffleBytesOf(action: => Unit): Long = {
-    val bytes = new AtomicLong(0L)
-    val listener = new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      action
-      // listener events are async and the private listenerBus.waitUntilEmpty
-      // isn't accessible: poll until the byte count is stable (bounded)
-      var prev = -1L
-      var tries = 0
-      while (bytes.get() != prev && tries < 50) {
-        prev = bytes.get()
-        Thread.sleep(100)
-        tries += 1
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
-    bytes.get()
-  }
+  private def shuffleBytesOf(action: => Unit): Long =
+    new Collector(spark).traced("shuffle-volume")(())(_ => action).shuffleWriteBytes
 
   test("8x the input bytes, same distinct words => shuffle stays ~flat") {
     val vocab = Vector.tabulate(200)(i => s"word$i")

@@ -5,7 +5,7 @@ import graft.SparkSpec
 /** The reference's composed pipeline: counting semantics, the text-dir
   * source, per-file lineage, the CSV sink byte contract, and the
   * partition-invariance property the reference spends
-  * `word_count_mpi.c:259-325` hand-building (SURVEY §2.3 items 4–8).
+  * `word_count_mpi.c:259-325` hand-building (SURVEY §2.3 items 4–8, 10).
   */
 class WordCountSpec extends SparkSpec {
   import spark.implicits._
@@ -29,6 +29,18 @@ class WordCountSpec extends SparkSpec {
     val rows = WordCount.fromDirectory(spark, dir.toString)
       .as[(String, Long)].collect().toSeq
     assert(rows === Seq(("again", 1L), ("hello", 2L), ("world", 2L)))
+  }
+
+  test("hidden files: names starting with _ or . are not counted, and alone fail the CLI check") {
+    val dir = tempDir("hidden")
+    writeFile(dir, "_a.txt", "alpha")
+    assert(!WordCountCli.hasRegularFile(dir.toString), "only _a.txt must exit 1")
+    writeFile(dir, ".b.txt", "beta")
+    writeFile(dir, "c.txt", "Gamma gamma")
+    assert(WordCountCli.hasRegularFile(dir.toString))
+    val rows = WordCount.fromDirectory(spark, dir.toString)
+      .as[(String, Long)].collect().toSeq
+    assert(rows === Seq(("gamma", 2L)))
   }
 
   test("fromDirectory with a custom delimiter file (define_delimiters analogue)") {
