@@ -4,9 +4,13 @@ import scala.collection.immutable.ListMap
 /** Benchmark harness (driver contract): runs the headline queries on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
   *
-  * Methodology (VERDICT r01 fixes):
+  * Methodology — stateless: a published timing depends only on the
+  * current run. Bench reads no file but `/proc` (host load and steal);
+  * `bench_full.json` and `bench_partial.json` are outputs only.
   *  - every query is executed once untimed (warm-up: session/JIT/codegen,
   *    parquet footer cache) and then timed on a second full execution;
+  *    a first timing of [[SampleAtSec]] or more is re-timed twice and the
+  *    median of three published ([[settle]]);
   *  - the action is `write.format("noop")` — a real sink that executes the
   *    complete physical plan (sorts and exchanges included, unlike `count()`
   *    which lets Catalyst prune them) without filesystem cost;
@@ -34,109 +38,25 @@ import scala.collection.immutable.ListMap
   */
 object Bench {
 
-  /** A sustained excursion below this many seconds is never FLAGGED as a
-    * regression (the median-of-3 de-noise still applies): on this
-    * hardware sub-second queries jitter past 2× on scheduler noise alone
-    * (measured: q_pivot 0.20 → 0.48 s on an idle box), and a flag that
-    * cries wolf every sweep hides the 13-second real thing.
-    */
-  val RegressFloorSec = 1.0
-
   /** Heavy-query sampling floor: a query whose first timing reaches this
-    * many seconds AND has no same-box prior (new query) is re-timed twice
-    * and reported as the median of 3, with samples logged. Heavies WITH an
-    * in-band prior run ONCE (r16, VERDICT r15 #1): the unconditional
-    * median-of-3 on every ≥1 s query cost ~2×(heavy sum) ≈ 340 s of the
-    * ~900 s r15 sweep, and the driver's wall-clock budget killed the run
-    * (BENCH_r15 rc=124). Drift diagnosis is preserved by
-    * [[DriftSampleFactor]]: any heavy whose first timing moves past 1.5×
-    * its prior still draws the full 3-sample record, so the r10
-    * q_neardup_jaccard shape (1.52 → 3.23 s, under the 2× flag trigger)
-    * still carries samples; only steady in-band heavies stop paying.
+    * many seconds is re-timed twice and published as the median of three
+    * ([[settle]]). This is the one re-time rule seen to set published
+    * numbers on a 4-core box: 57 to 89 of the 312 queries draw it in a
+    * full sf0.1 sweep, depending on host load.
     */
   val SampleAtSec = 1.0
 
-  /** A heavy (≥ [[SampleAtSec]]) first timing past this many times its
-    * prior triggers the median-of-3 even below the 2× flag trigger —
-    * the diagnosable-drift band (VERDICT r10 #2), kept while dropping
-    * the unconditional in-band heavy re-times (r16 wall-clock cut).
+  /** Published (seconds, samples) of one warm query: the first timing
+    * when it is under [[SampleAtSec]], else the median of it and two
+    * `retime()` calls. The samples let a reader tell one inflated timing
+    * among three (transient machine state caught by the median) from
+    * three inflated ones (a degraded sweep context).
     */
-  val DriftSampleFactor = 1.5
-
-  /** Outlier re-time policy (VERDICT r07 #3), pure for unit testing: a
-    * first timing above 2× the same-box prior is re-timed twice more and
-    * the MEDIAN of 3 reported — machine-state outliers (page cache, JIT,
-    * GC alignment) stop masquerading as plan regressions. The query is
-    * flagged REGRESSED when even the median exceeds 2× the prior: slow on
-    * all three back-to-back timings is sustained, not noise (VERDICT r09
-    * #5). Returns (reported seconds, regressed, raw samples).
-    *
-    * The samples let a flagged regression log all three timings — one
-    * inflated timing among three tells a different
-    * diagnosis story (transient machine state caught by the median) than
-    * three inflated ones (degraded sweep context), and BENCH_r09's 13.1 s
-    * q_pagerank was only diagnosable because the judge knew it was a
-    * median. Re-times (median-of-3) when the first timing exceeds 2× the
-    * prior at ANY magnitude — this IS the one-rerun confirmation pass for
-    * sub-second movers the r15 verdict asked for; their samples land in
-    * bench_full.json even though the flag floor keeps them unflagged — or
-    * when a heavy (first ≥ [[SampleAtSec]]) has no usable prior or drifts
-    * past [[DriftSampleFactor]]× it. Steady in-band heavies run once
-    * (VERDICT r15 #1 wall-clock cut). The regression flag is judged on
-    * the MEDIAN either way.
-    */
-  def settleSamples(prior: Option[Double], first: Double,
-                    retime: () => Double): (Double, Boolean, Seq[Double]) = {
-    val p = prior.filter(_ > 0)
-    val overPrior = p.exists(first > 2 * _)
-    val heavyDrift = first >= SampleAtSec &&
-      (p.isEmpty || p.exists(first > DriftSampleFactor * _))
-    if (overPrior || heavyDrift) {
+  def settle(first: Double, retime: () => Double): (Double, Seq[Double]) =
+    if (first < SampleAtSec) (first, Seq(first))
+    else {
       val samples = Seq(first, retime(), retime())
-      val med = samples.sorted.apply(1)
-      val regressed = p.exists(med > 2 * _) && med >= RegressFloorSec
-      (med, regressed, samples)
-    } else (first, false, Seq(first))
-  }
-
-  /** A confirmed regression whose measurement exceeds this many times its
-    * old prior keeps the OLD prior (the r9 shape: 13.1 s vs a 1.9 s prior
-    * = 6.9× — an all-sweep host stall must never become the baseline).
-    * Below the cap the confirmed number IS accepted as the next prior —
-    * see [[nextPriors]].
-    */
-  val PriorAcceptCap = 4.0
-
-  /** Next-round priors (VERDICT r09 #5, revised r11): a TRANSIENT outlier
-    * must not become its own baseline — but a regression that survived
-    * the end-of-sweep re-measure (fresh warm-up + 3 more samples, minutes
-    * after the mid-sweep flag) is this box's sustained number, and
-    * carrying the old prior forever makes the flag permanent when the
-    * prior came from a different (faster) machine: BENCH_r10's
-    * q_source_overlap flagged against a 0.49 s builder-box rested prior
-    * while the driver box has measured ~0.9–1.1 s for two rounds — a
-    * cross-box envelope, not a plan change. So: confirmed regressions
-    * within [[PriorAcceptCap]]× of the old prior record the confirmed
-    * measurement (one-shot flag — the next same-box sweep compares
-    * against the box's own number); beyond the cap the old prior is
-    * carried (stall protection, the flag stays armed). Everything else
-    * records the fresh measurement.
-    */
-  def nextPriors(times: Map[String, Double], priors: Map[String, Double],
-                 regressed: Set[String],
-                 degraded: Set[String] = Set.empty): Map[String, Double] =
-    times.flatMap { case (k, t) =>
-      // A degraded-tail timing is a COLD single run taken past the sweep
-      // budget (no warm-up, no re-times, usually on a contended box —
-      // ADVICE r16): it must never arm as a prior. Keep the old prior if
-      // one exists (the flag stays meaningful next sweep); a degraded
-      // query with no prior stays priorless — the next in-protocol sweep
-      // measures it fresh.
-      if (degraded(k)) priors.get(k).map(k -> _)
-      else Some(k -> (if (regressed(k)) {
-        val old = priors.getOrElse(k, t)
-        if (t <= PriorAcceptCap * old) t else old
-      } else t))
+      (samples.sorted.apply(1), samples)
     }
 
   /** Headline split (VERDICT r16 #1): the official artifact's single
@@ -163,39 +83,6 @@ object Bench {
   def inbandCount(times: Map[String, Double], degraded: Set[String]): Int =
     times.count { case (k, _) => !degraded(k) }
 
-  /** In-band stall auto-adjudication (VERDICT r17 #1): BENCH_r17 published
-    * q_image_neardup at 25.38 s inside `value_inband` (41.9× its 0.61 s
-    * rested prior) while a rerun under the identical harness read 0.98 s —
-    * the one-rerun rule the builder applied BY HAND belongs in the
-    * harness. Any in-band settled timing past [[AdjudicateFactor]]× its
-    * armed prior (and past the noise floor) triggers ONE fresh-context
-    * confirmation run: the SparkSession (and with it the SparkContext,
-    * executor pools, block manager, RPC env — the r16 latent-stall layer)
-    * is torn down and rebuilt, the query re-warmed and re-timed once. The
-    * artifact then carries the adjudicated value plus `raw_first` and a
-    * `stall_adjudicated` marker, so no unexplained >4× mover can sit in
-    * the in-band headline. [[MaxAdjudications]] bounds the wall-clock a
-    * pathological sweep can spend re-proving itself.
-    */
-  val AdjudicateFactor = 4.0
-  val MaxAdjudications = 12
-
-  def needsAdjudication(prior: Option[Double], settled: Double): Boolean =
-    prior.exists(p => p > 0 && settled > AdjudicateFactor * p) &&
-      settled >= RegressFloorSec
-
-  /** Adjudicated (value, stillRegressed): the better of the stalled
-    * settled value and the fresh-context confirmation — a genuine plan
-    * regression is still slow in a fresh context (flag stands, judged at
-    * the normal 2× rule); a stall victim recovers and the recovered
-    * number is the truth this sweep gets to publish.
-    */
-  def adjudicate(prior: Double, settled: Double,
-                 fresh: Double): (Double, Boolean) = {
-    val v = math.min(settled, fresh)
-    (v, prior > 0 && v > 2 * prior && v >= RegressFloorSec)
-  }
-
   /** Segmented sweep (VERDICT r17 #3): one global 1500 s budget made the
     * degraded tail all-or-nothing — the instant it expired, EVERY
     * remaining query ran cold (135/310 in r17), and one latent-stall JVM
@@ -220,10 +107,9 @@ object Bench {
       (math.min(segmentQueries, remainingQueries).toDouble / remainingQueries)
 
   /** 1-minute load average from /proc/loadavg — sampled at sweep start,
-    * sweep end, and at every REGRESSED flag, so a contended sweep's
-    * record carries the host's own story (r11: the flags' samples said
-    * "box", the probe said "fine", and nothing in-band settled it).
-    * Returns -1 when unreadable (non-Linux).
+    * sweep end, and after every degraded-tail run, so a contended sweep's
+    * record carries the host's own story. Returns -1 when unreadable
+    * (non-Linux).
     */
   def loadAvg1m(): Double =
     try new String(java.nio.file.Files.readAllBytes(
@@ -243,34 +129,8 @@ object Bench {
       (if (f.length > 7) f(7) else 0L, f.sum)
     } catch { case _: Throwable => (-1L, -1L) }
 
-  /** Parse same-box priors from a bench_full.json text: the `"priors"`
-    * object when present (carry-forward aware, written since r10), else
-    * any query-keyed numbers in the text (r9-era files, where the only
-    * map was `"queries"`). A prior recorded at a DIFFERENT scale factor
-    * is discarded — comparing an sf0.1 timing against an sf0.001 prior
-    * would flag every query as a 2× outlier and triple the whole sweep.
-    * A prior recorded at a different CORE COUNT — or one with no
-    * recorded `"priors_cpus"` at all (pre-r19 files, whose width is
-    * unverifiable) — is discarded the same way (VERDICT r18 #3: the
-    * driver's 8-core scaling sweep re-armed 8-core priors that the next
-    * 32-core sweep would have re-timed against).
-    */
-  def parsePriors(txt: String, sfDir: String, cpus: Int): Map[String, Double] = {
-    val sameSf = "\"sf\":\"([^\"]*)\"".r.findFirstMatchIn(txt)
-      .exists(_.group(1) == sfDir)
-    val sameCpus = "\"priors_cpus\":(\\d+)".r.findFirstMatchIn(txt)
-      .exists(_.group(1).toInt == cpus)
-    if (!sameSf || !sameCpus) Map.empty
-    else {
-      val scope = "\"priors\":\\{([^}]*)\\}".r.findFirstMatchIn(txt)
-        .map(_.group(1)).getOrElse(txt)
-      "\"((?:q_|wc_)\\w+)\":([0-9.]+)".r.findAllMatchIn(scope)
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
-    }
-  }
-
-  /** Between-query GC cadence — see the class doc. ~6 collections across a
-    * 103-query sweep: enough to keep dead broadcast/checkpoint/shuffle
+  /** Between-query GC cadence — see the class doc. ~19 collections across
+    * a 312-query sweep: enough to keep dead broadcast/checkpoint/shuffle
     * state from compounding, rare enough to cost seconds-total at most.
     */
   val GcEvery = 16
@@ -349,10 +209,10 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     var spark = Sessions.local("graft-bench")
-    // fresh-context lever shared by the per-segment restarts and the
-    // stall adjudications: tears down the SparkContext (executor pools,
-    // block manager, RPC env, codegen classloaders) and rebuilds it —
-    // the layer every latent-stall episode so far has lived in
+    // fresh-context lever of the per-segment restarts: tears down the
+    // SparkContext (executor pools, block manager, RPC env, codegen
+    // classloaders) and rebuilds it — the layer every latent-stall
+    // episode so far has lived in
     var restarts = 0
     def restartSession(why: String): Unit = {
       val t0 = System.nanoTime()
@@ -367,14 +227,6 @@ object Bench {
       SparkEntry.queries(name)(spark, sfDir)
         .write.mode("overwrite").format("noop").save()
 
-    // the sweep's core count, recorded with the priors it writes and
-    // required to match on the priors it reads (VERDICT r18 #3)
-    val benchCpus = spark.sparkContext.defaultParallelism
-    val prior: Map[String, Double] = try {
-      parsePriors(new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("bench_full.json")), "UTF-8"), sfDir, benchCpus)
-    } catch { case _: Throwable => Map.empty }
-
     // Opt-in randomized query order (VERDICT r09 #4): the r8/r9 outliers
     // were all late-sweep — a seeded shuffle makes order-dependent
     // inflation measurable (two sweeps, different seeds, diff per-query)
@@ -383,7 +235,7 @@ object Bench {
     // Opt-in subset (diagnosis only, unset for the gated sweep): a
     // comma-separated allowlist so a single slow query can be profiled
     // under the exact harness protocol (warm-up + timed noop sink +
-    // cleanup) without paying the other 100 queries' wall-clock.
+    // cleanup) without paying the other queries' wall-clock.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val all = only match {
@@ -403,19 +255,12 @@ object Bench {
 
     var times = ListMap.empty[String, Double]
     var errors = ListMap.empty[String, String]
-    var regressed = List.empty[String]
     var samplesLog = ListMap.empty[String, Seq[Double]]
     var ran = 0
     def timedRun(name: String): Double = {
       val t0 = System.nanoTime()
       runOnce(name)
       (System.nanoTime() - t0) / 1e9
-    }
-    def stateLine: String = {
-      val rt = Runtime.getRuntime
-      s"heap ${(rt.totalMemory - rt.freeMemory) / 1048576}/" +
-        s"${rt.totalMemory / 1048576} MB, " +
-        s"${spark.sparkContext.getPersistentRDDs.size} persistent RDDs"
     }
     def cleanup(): Unit = {
       // operators that persist() for intra-query branch reuse leave
@@ -430,7 +275,6 @@ object Bench {
     }
     val loadBefore = loadAvg1m()
     val jiffiesBefore = cpuJiffies()
-    var loadAtFlag = ListMap.empty[String, Double]
     // Wall-clock budget backstop (VERDICT r15 #1: the driver killed the
     // r15 sweep at its own timeout, leaving the round's official artifact
     // dark). Once the sweep's elapsed time crosses the budget, remaining
@@ -454,20 +298,17 @@ object Bench {
     // Incremental partial record (VERDICT r15 #1): a killed sweep used to
     // leave nothing parsable. A short running-total line goes to stderr
     // every [[PartialEvery]] queries (stdout keeps the one-line contract),
-    // and bench_partial.json carries the full running per-query map.
+    // and bench_partial.json carries the full running per-query map; both
+    // are [[recordLine]]s marked `"partial":true`.
     val PartialEvery = 25
+    val partial = ""","partial":true"""
     def partialLine: String =
-      s"""{"metric":"total","value":${fmt(times.values.sum)},"unit":"sec","n_queries":${times.size},"partial":true,"failed":${errors.size},"sf":"$sfDir"}"""
+      recordLine(times, errors, sfDir, "", partial)(ListMap.empty, times.size, maxErrors = 0)
     def writePartial(): Unit =
       try java.nio.file.Files.write(
         java.nio.file.Paths.get("bench_partial.json"),
-        (s"""{"metric":"total","value":${fmt(times.values.sum)},"unit":"sec","n_queries":${times.size},"partial":true,"queries":${jmap(times)},"failed":${errors.size},"sf":"$sfDir"}""" + "\n")
-          .getBytes("UTF-8"))
+        (recordLine(times, errors, sfDir, "", partial)() + "\n").getBytes("UTF-8"))
       catch { case _: Throwable => () }
-    // Stall-adjudication record (VERDICT r17 #1): names in adjudication
-    // order and the raw stalled settled value each replaced.
-    var adjudicatedNames = List.empty[String]
-    var rawFirst = ListMap.empty[String, Double]
     // Segmented sweep (VERDICT r17 #3) — see [[SegmentSize]]: each
     // segment gets a fresh SparkSession and a proportional slice of the
     // remaining budget; overruns degrade only the segment's own tail.
@@ -482,59 +323,22 @@ object Bench {
       segment.foreach { name =>
         queriesDone += 1
         try {
-          val degraded = segElapsed > slice
-          if (degraded) degradedNames ::= name
-          if (!degraded) runOnce(name) // warm-up, untimed
-          var (t, isRegressed, samples) =
-            if (degraded) {
-              val j0 = cpuJiffies()
-              val td = timedRun(name)
-              val j1 = cpuJiffies()
-              loadAtDegraded += name -> loadAvg1m()
-              stealAtDegraded += name ->
-                (if (j0._2 >= 0 && j1._2 > j0._2)
-                   100.0 * (j1._1 - j0._1) / (j1._2 - j0._2)
-                 else -1.0)
-              (td, false, Seq.empty[Double])
-            } else settleSamples(prior.get(name), timedRun(name), () => timedRun(name))
-          // In-band auto-adjudication (VERDICT r17 #1): a settled value
-          // past 4× its armed prior gets ONE fresh-context confirmation —
-          // session teardown, re-warm, one timed run; the better number is
-          // published with the marker.
-          if (!degraded && needsAdjudication(prior.get(name), t) &&
-              adjudicatedNames.size < MaxAdjudications) {
-            System.err.println(f"[bench] $name in-band ${t}%.2f s > " +
-              f"${AdjudicateFactor}%.0fx prior ${prior(name)}%.2f s — " +
-              "adjudicating in a fresh context")
-            restartSession(s"adjudicate $name")
-            try {
-              runOnce(name) // fresh warm-up
-              val fresh = timedRun(name)
-              val (v, still) = adjudicate(prior(name), t, fresh)
-              rawFirst += name -> t
-              adjudicatedNames ::= name
-              samples = samples :+ fresh
-              System.err.println(f"[bench] $name adjudicated: fresh-context " +
-                f"$fresh%.2f s vs stalled $t%.2f s → published $v%.2f s" +
-                (if (still) " (STILL regressed — plan, not stall)" else ""))
-              t = v
-              isRegressed = still
-            } catch {
-              case e: Throwable => // keep the settled record; marker absent
-                System.err.println(
-                  s"[bench] $name adjudication failed: ${e.getMessage}")
-            }
+          if (segElapsed > slice) {
+            degradedNames ::= name
+            val j0 = cpuJiffies()
+            times += name -> timedRun(name)
+            val j1 = cpuJiffies()
+            loadAtDegraded += name -> loadAvg1m()
+            stealAtDegraded += name ->
+              (if (j0._2 >= 0 && j1._2 > j0._2)
+                 100.0 * (j1._1 - j0._1) / (j1._2 - j0._2)
+               else -1.0)
+          } else {
+            runOnce(name) // warm-up, untimed
+            val (t, samples) = settle(timedRun(name), () => timedRun(name))
+            if (samples.size > 1) samplesLog += name -> samples
+            times += name -> t
           }
-          if (samples.size > 1) samplesLog += name -> samples
-          if (isRegressed) {
-            regressed ::= name
-            loadAtFlag += name -> loadAvg1m()
-            System.err.println(f"[bench] $name REGRESSED: median $t%.2f s vs " +
-              f"prior ${prior(name)}%.2f s; samples " +
-              samples.map(s => f"$s%.2f").mkString("[", ", ", "]") +
-              f"; load ${loadAtFlag(name)}%.2f; $stateLine")
-          }
-          times += name -> t
         } catch {
           case e: Throwable =>
             errors += name -> Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
@@ -546,57 +350,10 @@ object Bench {
         }
       }
     }
-    // End-of-sweep retry for confirmed regressions (r10): the median-of-3
-    // defeats SHORT machine-state excursions, but a multi-second host
-    // stall spans all three back-to-back samples and confirms a false
-    // regression (measured on this box: q_knn_lsh 8.9 s sustained
-    // median in one sweep, 1.7 s on the identical-seed next run; the
-    // r9 driver's 13.1 s q_pagerank median fits the same shape). A real
-    // plan regression is still slow minutes later; a stall victim is
-    // not — so each flagged query gets ONE re-measurement at the end of
-    // the sweep, and the better (still median-settled) result wins.
-    // adjudicated flags already carried their fresh-context confirmation
-    // mid-sweep — a second end-of-sweep pass would just re-spend budget
-    regressed.reverse.filterNot(adjudicatedNames.toSet).foreach { name =>
-      try {
-        // budget backstop applies here too: past the budget the mid-sweep
-        // record stands (the flag stays armed — stall protection)
-        if (sweepElapsed > budgetSec)
-          throw new RuntimeException("bench budget exhausted")
-        runOnce(name) // re-warm
-        val (t2, still, samples2) =
-          settleSamples(prior.get(name), timedRun(name), () => timedRun(name))
-        samplesLog += name -> (samplesLog.getOrElse(name, Seq.empty) ++ samples2)
-        val midSweep = times(name)
-        if (t2 < midSweep) times += name -> t2
-        if (!still) {
-          regressed = regressed.filterNot(_ == name)
-          System.err.println(f"[bench] $name recovered at end of sweep: " +
-            f"$t2%.2f s (was $midSweep%.2f s mid-sweep) — " +
-            "transient stall, not a regression; samples " +
-            samples2.map(s => f"$s%.2f").mkString("[", ", ", "]"))
-        } else {
-          loadAtFlag += name -> loadAvg1m()
-          System.err.println(f"[bench] $name still regressed at end of " +
-            f"sweep: $t2%.2f s; samples " +
-            samples2.map(s => f"$s%.2f").mkString("[", ", ", "]") +
-            f"; load ${loadAtFlag(name)}%.2f")
-        }
-      } catch { case _: Throwable => () } // keep the mid-sweep record
-      finally cleanup()
-    }
-    val regressedJson =
-      (if (regressed.isEmpty) ""
-       else s""","regressed":${regressed.reverse.map(jstr).mkString("[", ",", "]")}""") +
-        (if (degradedNames.isEmpty) ""
-         else s""","degraded_tail":${degradedNames.size}""") +
-        (if (adjudicatedNames.isEmpty) ""
-         else s""","adjudicated":${adjudicatedNames.size}""")
     val seedJson = seed.map(s => s""","seed":$s""").getOrElse("")
-    // post-sweep host channels: read after every timed region (including
-    // the end-of-sweep re-measures), so Δsteal from /proc/stat and the
-    // 1-min loadavg pair are the in-band contention evidence for THIS
-    // sweep's numbers.
+    // post-sweep host channels: read after every timed region, so Δsteal
+    // from /proc/stat and the 1-min loadavg pair are the in-band
+    // contention evidence for THIS sweep's numbers.
     val loadAfter = loadAvg1m()
     val jiffiesAfter = cpuJiffies()
     val stealPct =
@@ -619,27 +376,20 @@ object Bench {
     val inbandJson =
       if (degradedNames.isEmpty) ""
       else s""","value_inband":${fmt(valInband)},"n_inband":${inbandCount(times, degradedSet)},"value_degraded":${fmt(valDegraded)}"""
-    val extra = regressedJson + seedJson + hostJson
+    val degradedTail =
+      if (degradedNames.isEmpty) "" else s""","degraded_tail":${degradedNames.size}"""
+    val extra = degradedTail + seedJson + hostJson
     try {
-      // the FILE additionally carries next-round priors ("queries" stays
-      // the measured truth; "priors" is what the next sweep compares to —
-      // identical except regressed queries keep their old prior). A
-      // diagnosis-subset run must never replace the full sweep's priors.
-      // the FILE also carries the raw re-time samples of every query that
-      // was sampled (>2 s or >2× prior) — the post-hoc diagnosis record
-      // VERDICT r10 #2 asked for (a lone recorded number can't distinguish
-      // "one bad sample among three" from "three sustained bad samples")
+      // the FILE additionally carries the raw re-time samples of every
+      // sampled query — the post-hoc diagnosis record VERDICT r10 #2 asked
+      // for (a lone recorded number can't distinguish "one bad sample
+      // among three" from "three sustained bad samples"). A diagnosis
+      // subset never writes it.
       val samplesJson =
         if (samplesLog.isEmpty) ""
         else s""","samples":${samplesLog.map { case (k, v) =>
           s"${jstr(k)}:${v.map(fmt).mkString("[", ",", "]")}"
         }.mkString("{", ",", "}")}"""
-      // per-flag 1-min loadavg, captured the moment each flag fired
-      // (VERDICT r11 #1) — pairs with `samples` to say whether the box
-      // was loaded WHILE the bad samples were drawn
-      val loadFlagJson =
-        if (loadAtFlag.isEmpty) ""
-        else s""","load_at_flag":${jmap(loadAtFlag)}"""
       // the per-query protocol marker + per-query host evidence for the
       // degraded tail (VERDICT r16 #1 / ADVICE r16): names, 1-min load,
       // and own-run steal%% — so every cold number in "queries" is
@@ -649,19 +399,11 @@ object Bench {
         else s""","degraded":${degradedNames.reverse.map(jstr).mkString("[", ",", "]")}""" +
           s""","load_at_degraded":${jmap(loadAtDegraded)}""" +
           s""","steal_at_degraded":${jmap(stealAtDegraded)}"""
-      // the adjudication record (VERDICT r17 #1): which in-band entries
-      // were auto-confirmed in a fresh context and the raw stalled value
-      // each replaced
-      val adjJson =
-        if (adjudicatedNames.isEmpty) ""
-        else s""","stall_adjudicated":${adjudicatedNames.reverse.map(jstr).mkString("[", ",", "]")},"raw_first":${jmap(rawFirst)}"""
       val segJson = s""","segments":${segments.size},"session_restarts":$restarts"""
-      val priorsOut = nextPriors(times, prior, regressed.toSet, degradedSet)
       if (only.isEmpty) java.nio.file.Files.write(
         java.nio.file.Paths.get("bench_full.json"),
-        (recordLine(times, errors, sfDir, inbandJson, extra +
-          s""","priors":${jmap(priorsOut)},"priors_cpus":$benchCpus$segJson$adjJson$samplesJson$loadFlagJson$degradedJson""")()
-          + "\n").getBytes("UTF-8"))
+        (recordLine(times, errors, sfDir, inbandJson,
+          extra + segJson + samplesJson + degradedJson)() + "\n").getBytes("UTF-8"))
       // a completed sweep must not leave a stale partial behind to shadow
       // the final artifact (ADVICE r16)
       java.nio.file.Files.deleteIfExists(

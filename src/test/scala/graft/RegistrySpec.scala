@@ -5,8 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The query registry is the single source of every name-keyed view:
   * names are unique, every oracle belongs to a registered query, Verify's
-  * filter only names registered queries, and the frozen benchmark query
-  * list still resolves. */
+  * filter only names registered queries, its dump never leaves a stale
+  * result behind, and the frozen benchmark query list still resolves. */
 class RegistrySpec extends AnyFunSuite {
 
   private val noBuild: Query.Build = (_, _) => null
@@ -34,6 +34,18 @@ class RegistrySpec extends AnyFunSuite {
     assert(Verify.select(reg, Some("q_c,q_a")) === Right(Seq("q_a", "q_c")))
     assert(Verify.select(reg, Some("NONE")) === Left(Seq("NONE")))
     assert(Verify.select(reg, Some("q_a,q_x,,q_b ")) === Left(Seq("q_x", "", "q_b ")))
+  }
+
+  test("Verify.dump deletes a stale dump before building, so a failed build leaves none") {
+    val spark = TestSpark.spark
+    val out = java.nio.file.Files.createTempDirectory("verifyOut")
+    val stale = out.resolve("q_x")
+    java.nio.file.Files.createDirectories(stale.resolve("sub"))
+    java.nio.file.Files.writeString(stale.resolve("sub").resolve("part-0.parquet"), "stale")
+    Verify.dump(spark, "unused", out.toString, "q_x", (_, _) => sys.error("build failed"))
+    assert(!java.nio.file.Files.exists(stale), "a stale dump survived a failed build")
+    Verify.dump(spark, "unused", out.toString, "q_y", (s, _) => s.range(3).toDF("id"))
+    assert(spark.read.parquet(out.resolve("q_y").toString).count() === 3L)
   }
 
   test("every name in perfbench/queries.txt is a registered query") {

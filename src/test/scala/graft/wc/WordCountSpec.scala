@@ -5,7 +5,8 @@ import graft.SparkSpec
 /** The reference's composed pipeline: counting semantics, the text-dir
   * source, per-file lineage, the CSV sink byte contract, and the
   * partition-invariance property the reference spends
-  * `word_count_mpi.c:259-325` hand-building (SURVEY §2.3 items 4–8, 10).
+  * `word_count_mpi.c:259-325` hand-building, also as a property against a
+  * byte-walker oracle (SURVEY §2.3 items 1–10).
   */
 class WordCountSpec extends SparkSpec {
   import spark.implicits._
@@ -106,6 +107,69 @@ class WordCountSpec extends SparkSpec {
     }
   }
 
+  /** Ground truth for the property and the golden corpus: each file is its
+    * own byte stream, split at the bytes of the 36-delimiter table (all
+    * ASCII, so a delimiter byte never sits inside a UTF-8 sequence), each
+    * token decoded and lowercased with `Locale.ROOT`. Shares no code with
+    * the engine's tokenizer. */
+  private def byteWalkerCounts(files: Seq[Array[Byte]]): Map[String, Long] = {
+    val isDelim = new Array[Boolean](256)
+    graft.tok.Tokenizer.DefaultDelimiters.foreach(c => isDelim(c.toInt) = true)
+    val counts = scala.collection.mutable.HashMap.empty[String, Long]
+    val tok = new java.io.ByteArrayOutputStream
+    def flush(): Unit = if (tok.size > 0) {
+      val w = new String(tok.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
+        .toLowerCase(java.util.Locale.ROOT)
+      counts.update(w, counts.getOrElse(w, 0L) + 1L)
+      tok.reset()
+    }
+    files.foreach { bytes =>
+      bytes.foreach(b => if (isDelim(b & 0xff)) flush() else tok.write(b))
+      flush()
+    }
+    counts.toMap
+  }
+
+  /** SURVEY §2.3 items 1–9 as a property: over random corpora of 1–4 files
+    * (ASCII alphanumerics, `é`/`É`, all 36 delimiters, LF and CRLF), the
+    * counts equal the byte walker's at every split size. Each file ends
+    * in a delimiter: §2.3 defines no word that spans two files. */
+  test("property: fromDirectory counts == byte-walker oracle at 16 B/128 B/1 MiB splits") {
+    import org.scalacheck.{Gen, Prop, Test}
+    val delims = graft.tok.Tokenizer.DefaultDelimiters.toVector.sorted.map(_.toString)
+    val fragment: Gen[String] = Gen.frequency(
+      6 -> Gen.oneOf("a", "A", "b", "B", "1", "é", "É"),
+      3 -> Gen.alphaNumChar.map(_.toString),
+      3 -> Gen.oneOf(delims),
+      1 -> Gen.oneOf("\n", "\r\n"))
+    val file: Gen[String] = for {
+      n <- Gen.choose(0, 300)
+      body <- Gen.listOfN(n, fragment)
+      end <- Gen.oneOf(delims)
+    } yield body.mkString + end
+    val corpus: Gen[Seq[String]] = Gen.choose(1, 4).flatMap(Gen.listOfN(_, file))
+    val prop = Prop.forAllNoShrink(corpus) { texts =>
+      val dir = tempDir("wcProp")
+      texts.zipWithIndex.foreach { case (t, i) => writeFile(dir, s"f$i.txt", t) }
+      val want = byteWalkerCounts(texts.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+      val bad = Seq("16", "128", "1048576").flatMap { bytes =>
+        val got = withConf("spark.sql.files.maxPartitionBytes" -> bytes,
+            "spark.sql.files.openCostInBytes" -> "0") {
+          WordCount.fromDirectory(spark, dir.toString).as[(String, Long)].collect().toMap
+        }
+        if (got == want) None
+        else Some(s"maxPartitionBytes=$bytes: extra ${got.toSet -- want.toSet}, " +
+          s"missing ${want.toSet -- got.toSet}")
+      }
+      Prop(bad.isEmpty) :| (bad :+ texts.map(t => "\"" + t + "\"").mkString("files ", ", ", "")).mkString("\n")
+    }
+    val res = Test.check(
+      Test.Parameters.default.withMinSuccessfulTests(8).withWorkers(1)
+        .withInitialSeed(org.scalacheck.rng.Seed(20261018L)),
+      prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+  }
+
   test("writeCsv: golden bytes — header Word,Count, asc order, single part file") {
     val df = Seq("b a c a").toDF("text")
     val out = tempDir("csvout").resolve("res").toString
@@ -145,21 +209,8 @@ class WordCountSpec extends SparkSpec {
     val files = Seq("words.txt" -> goldenCorpus(1, 4000), "more.txt" -> goldenCorpus(2, 1500))
     val dir = tempDir("golden")
     files.foreach { case (name, text) => writeFile(dir, name, text) }
-    // Ground truth is an independent single-threaded JVM count — a direct
-    // walk over the delimiter SET, sharing no code with the engine's
-    // tokenizer/aggregate pipeline. Each file is its own byte stream.
-    val delims = graft.tok.Tokenizer.DefaultDelimiters
-    val counts = scala.collection.mutable.HashMap.empty[String, Long]
-    val sb = new StringBuilder
-    def flush(): Unit = if (sb.nonEmpty) {
-      val w = sb.toString.toLowerCase(java.util.Locale.ROOT)
-      counts.update(w, counts.getOrElse(w, 0L) + 1L)
-      sb.clear()
-    }
-    files.foreach { case (_, text) =>
-      text.foreach(c => if (delims.contains(c)) flush() else sb.append(c))
-      flush()
-    }
+    val counts = byteWalkerCounts(
+      files.map(_._2.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
     // the delimiter set splits hyphen/apostrophe words (d'acqua → d, acqua)
     assert(counts.contains("acqua") && counts.contains("rock") && !counts.contains("well-known"))
     assert(counts.contains("ab" * 5000) && counts.contains("é" * 5000))
