@@ -7,10 +7,12 @@ import scala.collection.immutable.ListMap
   * Methodology — stateless: a published timing depends only on the
   * current run. Bench reads no file but `/proc` (host load and steal);
   * `bench_full.json` and `bench_partial.json` are outputs only.
+  *  - the whole sweep runs in one SparkSession under one wall-clock budget,
+  *    as the reference times its whole job in one running process group;
   *  - every query is executed once untimed (warm-up: session/JIT/codegen,
   *    parquet footer cache) and then timed on a second full execution;
   *    a first timing of [[SampleAtSec]] or more is re-timed twice and the
-  *    median of three published ([[settle]]);
+  *    median of three published ([[measure]], [[settle]]);
   *  - the action is `write.format("noop")` — a real sink that executes the
   *    complete physical plan (sorts and exchanges included, unlike `count()`
   *    which lets Catalyst prune them) without filesystem cost;
@@ -25,12 +27,13 @@ import scala.collection.immutable.ListMap
   *    hold block-manager memory until GC'd;
   *  - broadcast blocks from every broadcast join;
   *  - shuffle files from every exchange.
-  * With the 24 g bench heap GC can stay entirely absent for most of the
-  * sweep, so this dead state accumulates until memory pressure finally
-  * forces collection — INSIDE whichever unlucky late-sweep query is running
-  * (r8: q_fingerprint/q_mi; r9: q_pagerank/q_regression — all sustained
-  * through their median-of-3 re-times because the degraded state persisted
-  * across the back-to-back timings). The harness therefore (a) unpersists
+  * With the bench heap `build.sbt` sets, min(24 g, half of RAM), GC can
+  * stay entirely absent for most of the sweep, so this dead state
+  * accumulates until memory pressure finally forces collection — INSIDE
+  * whichever unlucky late-sweep query is running (r8: q_fingerprint/q_mi;
+  * r9: q_pagerank/q_regression — all sustained through their median-of-3
+  * re-times because the degraded state persisted across the back-to-back
+  * timings). The harness therefore (a) unpersists
   * stray RDD-level persists after every query and (b) runs an explicit
   * `System.gc()` every [[GcEvery]] queries BETWEEN timed regions, draining
   * ContextCleaner's queue on a schedule so collection debt is paid where it
@@ -59,6 +62,20 @@ object Bench {
       (samples.sorted.apply(1), samples)
     }
 
+  /** The per-query protocol: (published seconds, samples, degraded).
+    * Over budget, exactly one timed `run()`, with no warm-up and no
+    * re-time, marked degraded; otherwise one untimed warm-up `run()`,
+    * then [[settle]] over the next timed runs.
+    */
+  def measure(overBudget: Boolean,
+              run: () => Double): (Double, Seq[Double], Boolean) =
+    if (overBudget) { val t = run(); (t, Seq(t), true) }
+    else {
+      run()
+      val (t, samples) = settle(run(), run)
+      (t, samples, false)
+    }
+
   /** Headline split (VERDICT r16 #1): the official artifact's single
     * `value` mixed warm-protocol timings with degraded-tail cold runs, so
     * a reader applying the 2× gate to a contended sweep got the wrong
@@ -83,33 +100,9 @@ object Bench {
   def inbandCount(times: Map[String, Double], degraded: Set[String]): Int =
     times.count { case (k, _) => !degraded(k) }
 
-  /** Segmented sweep (VERDICT r17 #3): one global 1500 s budget made the
-    * degraded tail all-or-nothing — the instant it expired, EVERY
-    * remaining query ran cold (135/310 in r17), and one latent-stall JVM
-    * poisoned everything after it (the r16 artifact-isolation episode).
-    * The sweep now runs in segments of [[SegmentSize]] queries; each
-    * segment gets a fresh SparkSession/SparkContext (clearing the
-    * session/RPC/block-manager layer the latent mode lives in) and a
-    * proportional slice of the REMAINING budget, so a stall or overrun
-    * degrades at most its own segment's tail while later segments recover
-    * with their own slices. Unused slice rolls forward automatically
-    * (slices are computed from actual remaining budget at segment start);
-    * a fully exhausted budget still degrades everything after it, exactly
-    * as before — the mechanism bounds blast radius, it does not mint
-    * extra wall-clock.
-    */
-  val SegmentSize = 20
-
-  def segmentSlice(remainingBudget: Double, remainingQueries: Int,
-                   segmentQueries: Int): Double =
-    if (remainingQueries <= 0 || remainingBudget <= 0) 0.0
-    else remainingBudget *
-      (math.min(segmentQueries, remainingQueries).toDouble / remainingQueries)
-
-  /** 1-minute load average from /proc/loadavg — sampled at sweep start,
-    * sweep end, and after every degraded-tail run, so a contended sweep's
-    * record carries the host's own story. Returns -1 when unreadable
-    * (non-Linux).
+  /** 1-minute load average from /proc/loadavg — sampled at sweep start
+    * and sweep end, so a contended sweep's record carries the host's own
+    * story. Returns -1 when unreadable (non-Linux).
     */
   def loadAvg1m(): Double =
     try new String(java.nio.file.Files.readAllBytes(
@@ -208,24 +201,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    var spark = Sessions.local("graft-bench")
-    // fresh-context lever of the per-segment restarts: tears down the
-    // SparkContext (executor pools, block manager, RPC env, codegen
-    // classloaders) and rebuilds it — the layer every latent-stall
-    // episode so far has lived in
-    var restarts = 0
-    def restartSession(why: String): Unit = {
-      val t0 = System.nanoTime()
-      spark.stop()
-      spark = Sessions.local("graft-bench")
-      restarts += 1
-      System.err.println(
-        f"[bench] fresh SparkSession ($why) in ${(System.nanoTime() - t0) / 1e9}%.1f s")
-    }
-
-    def runOnce(name: String): Unit =
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.mode("overwrite").format("noop").save()
+    val spark = Sessions.local("graft-bench")
 
     // Opt-in randomized query order (VERDICT r09 #4): the r8/r9 outliers
     // were all late-sweep — a seeded shuffle makes order-dependent
@@ -259,7 +235,8 @@ object Bench {
     var ran = 0
     def timedRun(name: String): Double = {
       val t0 = System.nanoTime()
-      runOnce(name)
+      SparkEntry.queries(name)(spark, sfDir)
+        .write.mode("overwrite").format("noop").save()
       (System.nanoTime() - t0) / 1e9
     }
     def cleanup(): Unit = {
@@ -279,22 +256,17 @@ object Bench {
     // r15 sweep at its own timeout, leaving the round's official artifact
     // dark). Once the sweep's elapsed time crosses the budget, remaining
     // queries degrade to a single timed run with NO warm-up and NO
-    // re-times — noisier tail numbers, but the sweep always completes and
-    // the line always prints. The JSON records how many queries ran
-    // degraded so the reader can discount their numbers.
+    // re-times ([[measure]]) — noisier tail numbers, but the sweep always
+    // completes and the line always prints. The JSON records how many
+    // queries ran degraded so the reader can discount their numbers.
     val budgetSec = sys.env.get("SPARK_GRAFT_BENCH_BUDGET")
       .map(_.trim.toDouble).getOrElse(1500.0)
     val sweepStart = System.nanoTime()
     def sweepElapsed: Double = (System.nanoTime() - sweepStart) / 1e9
-    // Degraded-tail record (VERDICT r16 #1 + ADVICE r16): every query that
-    // ran past the budget is NAMED (the per-query protocol marker — a
-    // query is in-protocol iff absent from this list), and each carries
-    // the 1-min loadavg and the /proc/stat steal%% measured ACROSS ITS OWN
-    // RUN, so a contended tail is diagnosable per query, not just in
-    // aggregate.
+    // Degraded-tail record (VERDICT r16 #1): every query that ran past the
+    // budget is NAMED — the per-query protocol marker: a query is
+    // in-protocol iff absent from this list.
     var degradedNames = List.empty[String]
-    var loadAtDegraded = ListMap.empty[String, Double]
-    var stealAtDegraded = ListMap.empty[String, Double]
     // Incremental partial record (VERDICT r15 #1): a killed sweep used to
     // leave nothing parsable. A short running-total line goes to stderr
     // every [[PartialEvery]] queries (stdout keeps the one-line contract),
@@ -309,45 +281,22 @@ object Bench {
         java.nio.file.Paths.get("bench_partial.json"),
         (recordLine(times, errors, sfDir, "", partial)() + "\n").getBytes("UTF-8"))
       catch { case _: Throwable => () }
-    // Segmented sweep (VERDICT r17 #3) — see [[SegmentSize]]: each
-    // segment gets a fresh SparkSession and a proportional slice of the
-    // remaining budget; overruns degrade only the segment's own tail.
-    val segments = names.grouped(SegmentSize).toList
-    var queriesDone = 0
-    segments.zipWithIndex.foreach { case (segment, segIdx) =>
-      if (segIdx > 0) restartSession(s"segment ${segIdx + 1}/${segments.size}")
-      val slice = segmentSlice(budgetSec - sweepElapsed,
-        names.size - queriesDone, segment.size)
-      val segStart = System.nanoTime()
-      def segElapsed: Double = (System.nanoTime() - segStart) / 1e9
-      segment.foreach { name =>
-        queriesDone += 1
-        try {
-          if (segElapsed > slice) {
-            degradedNames ::= name
-            val j0 = cpuJiffies()
-            times += name -> timedRun(name)
-            val j1 = cpuJiffies()
-            loadAtDegraded += name -> loadAvg1m()
-            stealAtDegraded += name ->
-              (if (j0._2 >= 0 && j1._2 > j0._2)
-                 100.0 * (j1._1 - j0._1) / (j1._2 - j0._2)
-               else -1.0)
-          } else {
-            runOnce(name) // warm-up, untimed
-            val (t, samples) = settle(timedRun(name), () => timedRun(name))
-            if (samples.size > 1) samplesLog += name -> samples
-            times += name -> t
-          }
-        } catch {
-          case e: Throwable =>
-            errors += name -> Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
-            System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-        } finally {
-          cleanup()
-          writePartial()
-          if (ran % PartialEvery == 0) System.err.println(partialLine)
-        }
+    names.foreach { name =>
+      val over = sweepElapsed > budgetSec
+      // named before the run, so a degraded query that throws is named too
+      if (over) degradedNames ::= name
+      try {
+        val (t, samples, _) = measure(over, () => timedRun(name))
+        if (samples.size > 1) samplesLog += name -> samples
+        times += name -> t
+      } catch {
+        case e: Throwable =>
+          errors += name -> Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
+          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+      } finally {
+        cleanup()
+        writePartial()
+        if (ran % PartialEvery == 0) System.err.println(partialLine)
       }
     }
     val seedJson = seed.map(s => s""","seed":$s""").getOrElse("")
@@ -390,20 +339,15 @@ object Bench {
         else s""","samples":${samplesLog.map { case (k, v) =>
           s"${jstr(k)}:${v.map(fmt).mkString("[", ",", "]")}"
         }.mkString("{", ",", "}")}"""
-      // the per-query protocol marker + per-query host evidence for the
-      // degraded tail (VERDICT r16 #1 / ADVICE r16): names, 1-min load,
-      // and own-run steal%% — so every cold number in "queries" is
-      // individually attributable to host state, not sweep order
+      // the per-query protocol marker (VERDICT r16 #1): the names of the
+      // degraded tail, whose numbers in "queries" are cold single runs
       val degradedJson =
         if (degradedNames.isEmpty) ""
-        else s""","degraded":${degradedNames.reverse.map(jstr).mkString("[", ",", "]")}""" +
-          s""","load_at_degraded":${jmap(loadAtDegraded)}""" +
-          s""","steal_at_degraded":${jmap(stealAtDegraded)}"""
-      val segJson = s""","segments":${segments.size},"session_restarts":$restarts"""
+        else s""","degraded":${degradedNames.reverse.map(jstr).mkString("[", ",", "]")}"""
       if (only.isEmpty) java.nio.file.Files.write(
         java.nio.file.Paths.get("bench_full.json"),
         (recordLine(times, errors, sfDir, inbandJson,
-          extra + segJson + samplesJson + degradedJson)() + "\n").getBytes("UTF-8"))
+          extra + samplesJson + degradedJson)() + "\n").getBytes("UTF-8"))
       // a completed sweep must not leave a stale partial behind to shadow
       // the final artifact (ADVICE r16)
       java.nio.file.Files.deleteIfExists(

@@ -27,6 +27,8 @@ object Verify {
   def dump(spark: SparkSession, sfDir: String, outDir: String, name: String,
            build: Query.Build): Unit = {
     val out = Paths.get(outDir, name)
+    // names the query for every warning its build logs after this line
+    System.err.println(s"[verify] $name")
     if (Files.exists(out))
       Using.resource(Files.walk(out))(_.sorted(Comparator.reverseOrder[Path]())
         .forEach(p => Files.delete(p)))

@@ -6,11 +6,11 @@ import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
 
 /** The bench policy is pure — test it without a session: a published
-  * timing depends only on the current run (a first timing of 1 s or more
-  * is re-timed twice and the median published), the degraded tail is
-  * reported apart, segments get proportional budget slices, the host
-  * readers never throw, and the printed stdout line stays parseable inside
-  * the kept stdout tail.
+  * timing depends only on the current run (a warm-up, then a first timing
+  * of 1 s or more is re-timed twice and the median published), a query
+  * past the budget runs once and is reported apart in the degraded tail,
+  * the host readers never throw, and the printed stdout line stays
+  * parseable inside the kept stdout tail.
   */
 class BenchPolicySpec extends AnyFunSuite {
 
@@ -20,31 +20,30 @@ class BenchPolicySpec extends AnyFunSuite {
     (() => { i += 1; it.next() }, () => i)
   }
 
-  // Bench reads no prior: every case below is settled by the current
-  // run's first timing alone.
+  // every settle case below is decided by the current run's first
+  // timing alone
 
-  test("no prior, under the sampling floor: first timing reported, no re-time") {
+  test("settle: a first timing under the floor is published, no re-time") {
     val (re, n) = counting(99.0, 99.0)
     assert(Bench.settle(0.7, re) === ((0.7, Seq(0.7))))
     assert(n() === 0)
   }
 
-  test("within 2x of prior and under the floor: no re-time") {
-    // what the last sweep measured no longer matters: a sub-second first
-    // timing is published as it is, up to the floor
+  test("settle: just under 1.0 s is still published unsampled") {
+    // a sub-second first timing is published as it is, up to the floor
     val (re, n) = counting(99.0, 99.0)
     assert(Bench.settle(0.9, re) === ((0.9, Seq(0.9))))
     assert(Bench.settle(0.999, re) === ((0.999, Seq(0.999))))
     assert(n() === 0)
   }
 
-  test("heavy queries with no prior are sampled: median reported, samples kept") {
+  test("settle: a heavy timing is re-timed twice; median and samples kept") {
     val (re, n) = counting(2.4, 2.6)
     assert(Bench.settle(2.5, re) === ((2.5, Seq(2.5, 2.4, 2.6))))
     assert(n() === 2)
   }
 
-  test("first timing past 2x, median recovers: de-noised, not regressed") {
+  test("settle: one inflated timing among three is caught by the median") {
     // 13.0 then 1.8, 2.2: the inflated first timing is caught by the
     // median of three
     val (re, n) = counting(1.8, 2.2)
@@ -83,22 +82,24 @@ class BenchPolicySpec extends AnyFunSuite {
     assert(Bench.inbandCount(Map.empty, Set("q_err1", "q_err2")) === 0)
   }
 
-  test("segment slices are proportional with automatic rollover") {
-    // VERDICT r17 #3: 310 queries, 1500 s — the first 20-query segment
-    // gets its proportional share
-    val s1 = Bench.segmentSlice(1500.0, 310, 20)
-    assert(math.abs(s1 - 1500.0 * 20 / 310) < 1e-9)
-    // a fast segment leaves MORE remaining budget for fewer remaining
-    // queries → later slices grow (rollover), never shrink below fair
-    val s2 = Bench.segmentSlice(1500.0 - 50.0, 290, 20)
-    assert(s2 > s1)
-    // exhausted budget → zero slice: the whole segment degrades, exactly
-    // the old global-backstop behavior
-    assert(Bench.segmentSlice(0.0, 100, 20) === 0.0)
-    assert(Bench.segmentSlice(-3.0, 100, 20) === 0.0)
-    // last partial segment: capped at the remaining query count
-    assert(Bench.segmentSlice(100.0, 10, 20) === 100.0)
-    assert(Bench.segmentSlice(100.0, 0, 20) === 0.0)
+  test("measure: over budget, exactly one timed run, marked degraded") {
+    // the budget backstop: no warm-up and no re-time, even for a heavy run
+    val (run, n) = counting(7.5, 99.0)
+    assert(Bench.measure(overBudget = true, run) === ((7.5, Seq(7.5), true)))
+    assert(n() === 1)
+  }
+
+  test("measure: sub-second first timing: 2 runs, warm-up unpublished") {
+    val (run, n) = counting(30.0, 0.5, 99.0)
+    assert(Bench.measure(overBudget = false, run) === ((0.5, Seq(0.5), false)))
+    assert(n() === 2)
+  }
+
+  test("measure: heavy first timing: 4 runs, median of the last three") {
+    val (run, n) = counting(30.0, 2.5, 4.0, 1.5, 99.0)
+    assert(Bench.measure(overBudget = false, run) ===
+      ((2.5, Seq(2.5, 4.0, 1.5), false)))
+    assert(n() === 4)
   }
 
   test("host evidence readers degrade, never throw") {

@@ -3,10 +3,10 @@ package graft.wc
 import graft.SparkSpec
 
 /** The reference's composed pipeline: counting semantics, the text-dir
-  * source, per-file lineage, the CSV sink byte contract, and the
-  * partition-invariance property the reference spends
-  * `word_count_mpi.c:259-325` hand-building, also as a property against a
-  * byte-walker oracle (SURVEY §2.3 items 1–10).
+  * source, per-file lineage, the CSV sink byte contract, and a property
+  * against a byte-walker oracle that covers the partition invariance the
+  * reference spends `word_count_mpi.c:259-325` hand-building (SURVEY §2.3
+  * items 1–10).
   */
 class WordCountSpec extends SparkSpec {
   import spark.implicits._
@@ -67,54 +67,15 @@ class WordCountSpec extends SparkSpec {
       ("b.txt", "y", 1L), ("b.txt", "z", 1L)))
   }
 
-  /** §5.3 property: the result is independent of how the input bytes are
-    * split into partitions — the invariant the reference's byte-range
-    * boundary repair exists to guarantee (`word_count_mpi.c:296-322`).
-    * We vary `spark.sql.files.maxPartitionBytes` so the text source
-    * actually produces different byte-range splits of the same file.
-    */
-  test("partition invariance: counts identical for 1/2/4/7-ish byte splits") {
-    val rnd = new scala.util.Random(42)
-    val words = Vector("alpha", "beta", "gamma", "delta", "epsilon", "zeta")
-    val corpus = Seq.fill(400)(
-      Seq.fill(1 + rnd.nextInt(8))(words(rnd.nextInt(words.size))).mkString(" "))
-      .mkString("\n")
-    val dir = tempDir("corpusInv")
-    writeFile(dir, "big.txt", corpus)
-
-    val conf = "spark.sql.files.maxPartitionBytes"
-    val costConf = "spark.sql.files.openCostInBytes"
-    val saved = spark.conf.get(conf)
-    val savedCost = spark.conf.get(costConf)
-    try {
-      val results = Seq("16", "128", "1024", "1048576").map { bytes =>
-        spark.conf.set(conf, bytes)
-        spark.conf.set(costConf, "0")
-        WordCount.fromDirectory(spark, dir.toString)
-          .as[(String, Long)].collect().toSeq
-      }
-      assert(results.distinct.size === 1,
-        "word counts must not depend on byte-split boundaries")
-      // and the total equals the number of tokens in the corpus
-      val expectedTotal = corpus.split("\\s+").count(_.nonEmpty)
-      assert(results.head.map(_._2).sum === expectedTotal)
-    } finally {
-      // restore BOTH confs — the session is shared across suites, and a
-      // leaked openCostInBytes=0 changes split counts for plan-sensitive
-      // specs that run later (ordering-dependent flakes)
-      spark.conf.set(conf, saved)
-      spark.conf.set(costConf, savedCost)
-    }
-  }
-
   /** Ground truth for the property and the golden corpus: each file is its
-    * own byte stream, split at the bytes of the 36-delimiter table (all
-    * ASCII, so a delimiter byte never sits inside a UTF-8 sequence), each
-    * token decoded and lowercased with `Locale.ROOT`. Shares no code with
-    * the engine's tokenizer. */
-  private def byteWalkerCounts(files: Seq[Array[Byte]]): Map[String, Long] = {
+    * own byte stream, split at the bytes of `delims` (all ASCII, so a
+    * delimiter byte never sits inside a UTF-8 sequence), each token decoded
+    * and lowercased with `Locale.ROOT`. Shares no code with the engine's
+    * tokenizer. */
+  private def byteWalkerCounts(files: Seq[Array[Byte]],
+      delims: Set[Char] = graft.tok.Tokenizer.DefaultDelimiters): Map[String, Long] = {
     val isDelim = new Array[Boolean](256)
-    graft.tok.Tokenizer.DefaultDelimiters.foreach(c => isDelim(c.toInt) = true)
+    delims.foreach(c => isDelim(c.toInt) = true)
     val counts = scala.collection.mutable.HashMap.empty[String, Long]
     val tok = new java.io.ByteArrayOutputStream
     def flush(): Unit = if (tok.size > 0) {
@@ -130,38 +91,68 @@ class WordCountSpec extends SparkSpec {
     counts.toMap
   }
 
-  /** SURVEY §2.3 items 1–9 as a property: over random corpora of 1–4 files
-    * (ASCII alphanumerics, `é`/`É`, all 36 delimiters, LF and CRLF), the
-    * counts equal the byte walker's at every split size. Each file ends
-    * in a delimiter: §2.3 defines no word that spans two files. */
-  test("property: fromDirectory counts == byte-walker oracle at 16 B/128 B/1 MiB splits") {
+  /** SURVEY §2.3 items 1–10 as a property, the partition invariance the
+    * reference hand-builds (`word_count_mpi.c:259-325`) included: over
+    * random corpora of 1–4 files (ASCII alphanumerics, `é`/`É`, all 36
+    * default delimiters, LF and CRLF; some files one line of 4 KiB or more
+    * with no newline, so splits land inside a line), under the default
+    * delimiters or a random delimiter file (whitespace plus its bytes,
+    * always a delimiter that ends a one-line file), the counts equal the byte
+    * walker's at three split sizes drawn from [1, 4096] B ∪ {1 MiB}. Each
+    * file ends in a delimiter: §2.3 defines no word that spans two files. */
+  test("property: fromDirectory counts == byte-walker oracle at any split size") {
     import org.scalacheck.{Gen, Prop, Test}
-    val delims = graft.tok.Tokenizer.DefaultDelimiters.toVector.sorted.map(_.toString)
-    val fragment: Gen[String] = Gen.frequency(
+    val defaults = graft.tok.Tokenizer.DefaultDelimiters.toVector.sorted.map(_.toString)
+    // printable ASCII but letters: `lower_tokens` lowercases before it
+    // splits, the reference after, so a letter delimiter splits the two
+    // differently (`X` splits under an `x` delimiter in the engine only)
+    val delimByte = Gen.oneOf(('!' to '~').filterNot(_.isLetter))
+    val delimFile: Gen[Option[String]] =
+      Gen.option(Gen.choose(1, 8).flatMap(Gen.listOfN(_, delimByte)).map(_.mkString))
+    def inline(ds: Seq[String]): Seq[String] = ds.filterNot(Set("\n", "\r"))
+    def fragment(delims: Seq[String], newlines: Boolean): Gen[String] = Gen.frequency(
       6 -> Gen.oneOf("a", "A", "b", "B", "1", "é", "É"),
       3 -> Gen.alphaNumChar.map(_.toString),
-      3 -> Gen.oneOf(delims),
-      1 -> Gen.oneOf("\n", "\r\n"))
-    val file: Gen[String] = for {
-      n <- Gen.choose(0, 300)
-      body <- Gen.listOfN(n, fragment)
-      end <- Gen.oneOf(delims)
+      3 -> Gen.oneOf(if (newlines) defaults else inline(defaults)),
+      2 -> Gen.oneOf(if (newlines) delims else inline(delims)),
+      (if (newlines) 1 else 0) -> Gen.oneOf("\n", "\r\n"))
+    def file(delims: Seq[String]): Gen[String] = for {
+      long <- Gen.frequency(2 -> false, 1 -> true)
+      n <- if (long) Gen.choose(4096, 6144) else Gen.choose(0, 2000)
+      body <- Gen.listOfN(n, fragment(delims, newlines = !long))
+      end <- Gen.oneOf(if (long) inline(delims) else delims)
     } yield body.mkString + end
-    val corpus: Gen[Seq[String]] = Gen.choose(1, 4).flatMap(Gen.listOfN(_, file))
-    val prop = Prop.forAllNoShrink(corpus) { texts =>
+    val splitBytes: Gen[Int] =
+      Gen.frequency(3 -> Gen.choose(1, 4096), 1 -> Gen.const(1 << 20))
+    val cases = for {
+      dfile <- delimFile
+      delims = dfile.fold(graft.tok.Tokenizer.DefaultDelimiters)(d =>
+        graft.tok.Tokenizer.WhitespaceDelimiters ++ d)
+      texts <- Gen.choose(1, 4).flatMap(Gen.listOfN(_, file(delims.toVector.sorted.map(_.toString))))
+      splits <- Gen.listOfN(3, splitBytes)
+    } yield (dfile, delims, texts, splits)
+    val prop = Prop.forAllNoShrink(cases) { case (dfile, delims, texts, splits) =>
       val dir = tempDir("wcProp")
       texts.zipWithIndex.foreach { case (t, i) => writeFile(dir, s"f$i.txt", t) }
-      val want = byteWalkerCounts(texts.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-      val bad = Seq("16", "128", "1048576").flatMap { bytes =>
-        val got = withConf("spark.sql.files.maxPartitionBytes" -> bytes,
+      // outside the corpus dir, so the delimiter file is not counted
+      val dpath = dfile.map { d =>
+        val ddir = tempDir("wcPropDelims")
+        writeFile(ddir, "d.txt", d)
+        ddir.resolve("d.txt").toString
+      }
+      val want = byteWalkerCounts(
+        texts.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8)), delims)
+      val bad = splits.flatMap { bytes =>
+        val got = withConf("spark.sql.files.maxPartitionBytes" -> bytes.toString,
             "spark.sql.files.openCostInBytes" -> "0") {
-          WordCount.fromDirectory(spark, dir.toString).as[(String, Long)].collect().toMap
+          WordCount.fromDirectory(spark, dir.toString, dpath).as[(String, Long)].collect().toMap
         }
         if (got == want) None
         else Some(s"maxPartitionBytes=$bytes: extra ${got.toSet -- want.toSet}, " +
           s"missing ${want.toSet -- got.toSet}")
       }
-      Prop(bad.isEmpty) :| (bad :+ texts.map(t => "\"" + t + "\"").mkString("files ", ", ", "")).mkString("\n")
+      Prop(bad.isEmpty) :| (bad ++ dfile.map(d => s"delimiter file \"$d\"") :+
+        texts.map(t => "\"" + t.take(200) + "\"").mkString("files ", ", ", "")).mkString("\n")
     }
     val res = Test.check(
       Test.Parameters.default.withMinSuccessfulTests(8).withWorkers(1)
