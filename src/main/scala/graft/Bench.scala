@@ -81,13 +81,16 @@ object Bench {
     * a reader applying the 2× gate to a contended sweep got the wrong
     * answer (BENCH_r16: 1035.6 s headline, of which 247 unwarmed runs;
     * the six worst re-ran at 8.9 s vs their 464 s under the identical
-    * harness). Returns (in-protocol seconds, degraded seconds) — the 2×
-    * gate reads ONLY the first, against the in-protocol query count.
+    * harness). Returns (in-protocol seconds, degraded seconds), each
+    * rounded to milliseconds once, so the printed `value`, their sum,
+    * equals the printed parts' sum — the 2× gate reads ONLY the first,
+    * against the in-protocol query count.
     */
   def splitHeadline(times: Map[String, Double],
                     degraded: Set[String]): (Double, Double) = {
     val (deg, in) = times.partition { case (k, _) => degraded(k) }
-    (in.values.sum, deg.values.sum)
+    def ms(v: Double): Double = math.round(v * 1000) / 1000.0
+    (ms(in.values.sum), ms(deg.values.sum))
   }
 
   /** In-band query count for the artifact's `n_inband` (ADVICE r17): count
@@ -141,20 +144,25 @@ object Bench {
   /** One sweep record. `value`, `n_queries` and `failed` always describe
     * the whole sweep (`times`, `errors`); `ts` is the per-query map written
     * (`omitted` more left out) and at most `maxErrors` errors of `errLen`
-    * chars are written. `inband` goes right after `value`, `extra` right
-    * before `sf`.
+    * chars are written. With a `degraded` tail, `value_inband`,
+    * `n_inband` and `value_degraded` ([[splitHeadline]]) go right after
+    * `value`, their sum; `extra` goes right before `sf`.
     */
   def recordLine(times: Map[String, Double], errors: Map[String, String],
-                 sfDir: String, inband: String, extra: String)(
+                 sfDir: String, degraded: Set[String], extra: String)(
       ts: Map[String, Double] = times, omitted: Int = 0,
       maxErrors: Int = Int.MaxValue, errLen: Int = 200): String = {
+    val (in, deg) = splitHeadline(times, degraded)
+    val inband =
+      if (degraded.isEmpty) ""
+      else s""","value_inband":${fmt(in)},"n_inband":${inbandCount(times, degraded)},"value_degraded":${fmt(deg)}"""
     val es = errors.take(maxErrors)
       .map { case (k, v) => s"${jstr(k)}:${jstr(v.take(errLen))}" }
       .mkString("{", ",", "}")
     val eo = if (errors.size > maxErrors)
       s""","errors_omitted":${errors.size - maxErrors}""" else ""
     val om = if (omitted > 0) s""","queries_omitted":$omitted""" else ""
-    s"""{"metric":"total","value":${fmt(times.values.sum)}$inband,"unit":"sec","n_queries":${times.size},"queries":${jmap(ts)}$om,"errors":$es$eo,"failed":${errors.size}$extra,"sf":"$sfDir"}"""
+    s"""{"metric":"total","value":${fmt(in + deg)}$inband,"unit":"sec","n_queries":${times.size},"queries":${jmap(ts)}$om,"errors":$es$eo,"failed":${errors.size}$extra,"sf":"$sfDir"}"""
   }
 
   /** The harness that invokes this keeps only the last ~2000 characters of
@@ -171,11 +179,11 @@ object Bench {
     * all-query total either way).
     */
   def contractLine(times: Map[String, Double], errors: Map[String, String],
-                   sfDir: String, inband: String, extra: String): String = {
+                   sfDir: String, degraded: Set[String], extra: String): String = {
     def line(ts: Map[String, Double], omitted: Int, maxErrors: Int,
              errLen: Int): String =
-      recordLine(times, errors, sfDir, inband, extra)(ts, omitted, maxErrors, errLen)
-    val fullLine = recordLine(times, errors, sfDir, inband, extra)()
+      recordLine(times, errors, sfDir, degraded, extra)(ts, omitted, maxErrors, errLen)
+    val fullLine = recordLine(times, errors, sfDir, degraded, extra)()
     if (fullLine.length <= MaxLine) fullLine
     else {
       val bySlow = times.toSeq.sortBy(-_._2)
@@ -275,11 +283,11 @@ object Bench {
     val PartialEvery = 25
     val partial = ""","partial":true"""
     def partialLine: String =
-      recordLine(times, errors, sfDir, "", partial)(ListMap.empty, times.size, maxErrors = 0)
+      recordLine(times, errors, sfDir, Set.empty, partial)(ListMap.empty, times.size, maxErrors = 0)
     def writePartial(): Unit =
       try java.nio.file.Files.write(
         java.nio.file.Paths.get("bench_partial.json"),
-        (recordLine(times, errors, sfDir, "", partial)() + "\n").getBytes("UTF-8"))
+        (recordLine(times, errors, sfDir, Set.empty, partial)() + "\n").getBytes("UTF-8"))
       catch { case _: Throwable => () }
     names.foreach { name =>
       val over = sweepElapsed > budgetSec
@@ -321,10 +329,6 @@ object Bench {
     // value_degraded carries the budget-backstop cold tail separately.
     // BASELINE.md ("how to read the bench artifact") states this read.
     val degradedSet = degradedNames.toSet
-    val (valInband, valDegraded) = splitHeadline(times, degradedSet)
-    val inbandJson =
-      if (degradedNames.isEmpty) ""
-      else s""","value_inband":${fmt(valInband)},"n_inband":${inbandCount(times, degradedSet)},"value_degraded":${fmt(valDegraded)}"""
     val degradedTail =
       if (degradedNames.isEmpty) "" else s""","degraded_tail":${degradedNames.size}"""
     val extra = degradedTail + seedJson + hostJson
@@ -346,14 +350,14 @@ object Bench {
         else s""","degraded":${degradedNames.reverse.map(jstr).mkString("[", ",", "]")}"""
       if (only.isEmpty) java.nio.file.Files.write(
         java.nio.file.Paths.get("bench_full.json"),
-        (recordLine(times, errors, sfDir, inbandJson,
+        (recordLine(times, errors, sfDir, degradedSet,
           extra + samplesJson + degradedJson)() + "\n").getBytes("UTF-8"))
       // a completed sweep must not leave a stale partial behind to shadow
       // the final artifact (ADVICE r16)
       java.nio.file.Files.deleteIfExists(
         java.nio.file.Paths.get("bench_partial.json"))
     } catch { case _: Throwable => () } // best-effort; the stdout line is the contract
-    println(contractLine(times, errors, sfDir, inbandJson, extra))
+    println(contractLine(times, errors, sfDir, degradedSet, extra))
     spark.stop()
     if (errors.nonEmpty) sys.exit(1)
   }

@@ -6,15 +6,19 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
 import org.apache.spark.sql.types.{IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Registers the engine's native expressions with a SparkSession via the
-  * public `spark.sql.extensions` mechanism — the supported way to add
-  * catalyst expressions without touching Spark internals from call sites.
+/** Registers the engine's native expressions, and the planner strategy that
+  * fuses the word-count map side ([[TokenCountStrategy]]), with a
+  * SparkSession via the public `spark.sql.extensions` mechanism — the
+  * supported way to add catalyst expressions without touching Spark
+  * internals from call sites.
   * Wired in [[graft.Sessions.builder]]; usable standalone with
   * `--conf spark.sql.extensions=graft.expr.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    ext.injectPlannerStrategy(_ => TokenCountStrategy)
+
     ext.injectFunction((
       new FunctionIdentifier("float_vec_dot"),
       new ExpressionInfo(classOf[FloatVecDot].getName, "float_vec_dot"),

@@ -9,24 +9,29 @@ import graft.tok.Tokenizer
   * (`/root/reference/word_count_mpi.c:391-443`; pipeline decomposition
   * SURVEY §2.1 O1–O11) — rebuilt as a declarative Catalyst plan:
   *
-  *   FileScan → Generate(explode(lower_tokens)) →
-  *   HashAggregate(partial) → Exchange(hash(word)) → HashAggregate(final) →
+  *   FileScan → TokenCount → Exchange(hash(word)) → HashAggregate(final) →
   *   Exchange(range) → Sort
   *
-  * `lower_tokens` ([[graft.expr.LowerTokens]]) lowercases and splits each
-  * line in one native pass and never emits an empty token, so no filter
-  * sits between the generator and the partial aggregate.
+  * The logical plan is `explode(lower_tokens(value))` grouped by word and
+  * counted. Its partial side is planned as one native operator,
+  * [[graft.expr.TokenCountExec]] ([[graft.expr.TokenCountStrategy]]), in
+  * place of `Generate` → `HashAggregate(partial)`: per task, it lowercases
+  * and splits each line with the `lower_tokens` kernel
+  * ([[graft.expr.LowerTokens]]) and counts each token straight into a
+  * byte-keyed hash table, as the reference counts into its per-process
+  * hash map (`hash_map.c`). No row is built per token; one
+  * `(word, partial count)` row per distinct word leaves each task.
   *
-  * Everything the reference hand-builds (byte-range splits ±1
+  * Everything else the reference hand-builds (byte-range splits ±1
   * `word_count_mpi.c:246-255`, split-boundary word repair `:296-322`,
-  * map-side combine `:344-384`, tree reduce `:147-209`) is the Spark text
-  * source + partial aggregation + shuffle, which parallelize the final merge
-  * instead of funnelling it through rank 0.
+  * tree reduce `:147-209`) is the Spark text source + shuffle + final
+  * aggregate, which parallelize the final merge instead of funnelling it
+  * through rank 0.
   *
   * Scale posture: no collect, no driver loops; the only full shuffle is the
   * hash exchange on `word` (unavoidable for a global group-by) and the range
   * exchange for the global sort, both of which scale with distinct words, not
-  * input bytes, thanks to map-side partial aggregation.
+  * input bytes, thanks to the map-side partial counts.
   */
 object WordCount {
 

@@ -70,6 +70,18 @@ class BenchPolicySpec extends AnyFunSuite {
     assert(Bench.splitHeadline(times, Set.empty) === ((316.75, 0.0)))
   }
 
+  test("value is the sum of the printed parts, each rounded to milliseconds once") {
+    def head(times: Map[String, Double]): String =
+      Bench.recordLine(times, Map.empty, "/d/sf0.1", Set("q_b"), "")()
+        .split(",\"unit\"").head
+    // 0.0004 + 0.0004: each part prints 0.000, their unrounded sum 0.001
+    assert(head(ListMap("q_a" -> 0.0004, "q_b" -> 0.0004)) === """{"metric":"total",""" +
+      """"value":0.000,"value_inband":0.000,"n_inband":1,"value_degraded":0.000""")
+    // 1.3964 + 2.4974: parts 1.396 + 2.497 = 3.893, unrounded sum 3.894
+    assert(head(ListMap("q_a" -> 1.3964, "q_b" -> 2.4974)) === """{"metric":"total",""" +
+      """"value":3.893,"value_inband":1.396,"n_inband":1,"value_degraded":2.497""")
+  }
+
   test("inbandCount partitions exactly what value_inband sums") {
     // ADVICE r17: a degraded query whose timed run THREW is in the
     // degraded name list but absent from times — `times.size - deg.size`
@@ -119,7 +131,7 @@ class BenchPolicySpec extends AnyFunSuite {
       f"q_$i%03d" -> 0.125 * (i % 8 + 1)): _*)
     val errors = ListMap((0 until 312).map(i =>
       f"q_err_$i%03d" -> ("boom \"quoted\" \\ path\nline " * 40 + i)): _*)
-    val line = Bench.contractLine(times, errors, "/d/sf0.1", inband = "",
+    val line = Bench.contractLine(times, errors, "/d/sf0.1", degraded = Set.empty,
       extra = ""","degraded_tail":3,"seed":7""")
     assert(line.length <= Bench.MaxLine)
     val js = new ObjectMapper().readTree(line)
@@ -140,9 +152,8 @@ class BenchPolicySpec extends AnyFunSuite {
   test("contract line: a record that fits is printed whole") {
     val times = ListMap("q_b" -> 2.5, "q_a" -> 1.25)
     val errors = ListMap("q_c" -> "bad \"input\"")
-    val inband = ""","value_inband":1.250,"n_inband":1,"value_degraded":2.500"""
-    val line = Bench.contractLine(times, errors, "/d/sf0.1", inband, "")
-    assert(line === Bench.recordLine(times, errors, "/d/sf0.1", inband, "")())
+    val line = Bench.contractLine(times, errors, "/d/sf0.1", Set("q_b"), "")
+    assert(line === Bench.recordLine(times, errors, "/d/sf0.1", Set("q_b"), "")())
     assert(line === """{"metric":"total","value":3.750,"value_inband":1.250,""" +
       """"n_inband":1,"value_degraded":2.500,"unit":"sec","n_queries":2,""" +
       """"queries":{"q_b":2.500,"q_a":1.250},"errors":{"q_c":"bad \"input\""},""" +

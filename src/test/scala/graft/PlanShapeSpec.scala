@@ -188,4 +188,12 @@ class PlanShapeSpec extends SparkSpec {
     }
     assert(wide.isEmpty, s"lineitem scans reading >8 columns: $wide")
   }
+
+  test("the word-count queries count on the fused map side; the per-language one does not") {
+    requireFixtures(sfDir)
+    Seq("wc_words" -> true, "wc_topk" -> true, "wc_per_lang" -> false).foreach {
+      case (name, fused) =>
+        assert(fusedMapSide(SparkEntry.queries(name)(spark, sfDir)) === fused, name)
+    }
+  }
 }

@@ -64,6 +64,25 @@ abstract class SparkSpec extends AnyFunSuite {
       : Seq[org.apache.spark.sql.execution.SparkPlan] =
     graft.ops.Plans.collectNodes(plan)
 
+  /** Whether `df` counts its words on the fused map side: its executed
+    * plan holds a [[graft.expr.TokenCountExec]], and then no
+    * `GenerateExec` and no partial aggregate (asserted). Runs `df` first,
+    * so the plan read is AQE's final one. */
+  def fusedMapSide(df: org.apache.spark.sql.DataFrame): Boolean = {
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+    df.collect()
+    val nodes = collectPlanNodes(df.queryExecution.executedPlan)
+    val fused = nodes.exists(_.isInstanceOf[graft.expr.TokenCountExec])
+    if (fused) assert(!nodes.exists {
+      case _: GenerateExec => true
+      case a: BaseAggregateExec => a.aggregateExpressions.exists(_.mode == Partial)
+      case _ => false
+    }, df.queryExecution.executedPlan.toString)
+    fused
+  }
+
   /** Assert a frame's executed plan contains no cartesian product or
     * broadcast-nested-loop join — EXCEPT a BNLJ whose BUILD side IS a
     * one-row (ungrouped) aggregate: that is the engine's singleton-attach

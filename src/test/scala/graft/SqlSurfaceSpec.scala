@@ -44,6 +44,10 @@ class SqlSurfaceSpec extends SparkSpec {
       .as[(String, Long)].collect().toSeq
     assert(viaDf.nonEmpty)
     assert(viaSql("lower_tokens(text)") === viaDf)
+    assert(fusedMapSide(spark.sql(
+      """SELECT word, count(*) AS cnt
+         FROM documents LATERAL VIEW explode(lower_tokens(text)) t AS word
+         GROUP BY word""")))
     assert(viaSql(s"filter(split(lower(text), '$re'), x -> length(x) > 0)") === viaDf)
   }
 

@@ -16,35 +16,13 @@ import org.scalacheck.rng.Seed
   */
 class LowerTokensSpec extends SparkSpec {
   import spark.implicits._
-
-  private def utf8(s: String): Array[Byte] = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-
-  /** Fragments a row is built from. Raw byte arrays carry the invalid
-    * UTF-8 cases (`0xFF`, `0xFE`, a lone `0xC3` lead byte). */
-  private val nonAsciiFragments: Seq[Array[Byte]] =
-    (Seq("Σ", "ΑΣ", "ΟΔΟΣ'", "ΣΑ.", "'Σ", "σ", "ς", "\u0130", "\u212a", "😀", "é", "Ü", "ß",
-      "東京") ++ ('À' to 'ÿ').map(_.toString)).map(utf8) ++
-      Seq(Array(0xff.toByte), Array(0xfe.toByte), Array(0xc3.toByte), Array('a'.toByte, 0xc3.toByte))
-  private val asciiFragments: Seq[Array[Byte]] =
-    (Tokenizer.DefaultDelimiters.toSeq.map(_.toString) ++
-      Seq("\r\n", "\u0000", "A", "Z", "a", "z", "0", "9", "The", "QUICK", "fox", "x1Y2")).map(utf8)
+  import TextGen._
 
   private val genAsciiRow: Gen[Array[Byte]] =
     Gen.listOf(Gen.oneOf(asciiFragments)).map(_.toArray.flatten)
   private val genMixedRow: Gen[Array[Byte]] =
     Gen.listOf(Gen.frequency(3 -> Gen.oneOf(asciiFragments), 1 -> Gen.oneOf(nonAsciiFragments)))
       .map(_.toArray.flatten)
-
-  /** Delimiter pool: the defaults, letters of both cases, digits, NUL and
-    * U+0080–U+00FF. */
-  private val delimiterPool: Seq[Char] =
-    Tokenizer.DefaultDelimiters.toSeq ++ ('A' to 'Z') ++ ('a' to 'z') ++ ('0' to '9') ++
-      Seq('\u0000') ++ ('\u0080' to 'ÿ')
-  private val genDelimiters: Gen[Set[Char]] = Gen.frequency(
-    1 -> Gen.const(Tokenizer.DefaultDelimiters),
-    3 -> Gen.choose(1, 12).flatMap(n => Gen.pick(n, delimiterPool)).map(_.toSet),
-    1 -> Gen.choose(1, 6).flatMap(n => Gen.pick(n, delimiterPool))
-      .map(_.toSet ++ Tokenizer.WhitespaceDelimiters))
 
   private case class Batch(rows: Seq[Array[Byte]], delimiterSets: Seq[Set[Char]])
   private val genBatch: Gen[Batch] = for {
@@ -111,6 +89,45 @@ class LowerTokensSpec extends SparkSpec {
         assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
       }
     }
+
+  /** Every code point U+0080–U+00FF alone, between ASCII letters, and on
+    * both sides of each default delimiter (the kernel's native Latin-1
+    * path), and next to `Σ`, `İ`, a final-sigma word or an invalid `C3`
+    * byte (`Lower`'s path). */
+  private val latin1Rows: Seq[Array[Byte]] = {
+    val delims = Tokenizer.DefaultDelimiters.toSeq.sorted.map(_.toString)
+    ('\u0080' to 'ÿ').map(_.toString).flatMap { c =>
+      (Seq(c, s"Ab${c}Cd") ++ delims.map(d => s"$c$d$c") ++
+        Seq(s"${c}Σ $c", s"\u0130$c", s"$c ΟΔΟΣ")).map(utf8) :+
+        (utf8(c) ++ Array(0xc3.toByte) ++ utf8(s"A$c"))
+    }
+  }
+  /** The defaults, and the defaults plus every third Latin-1 code point. */
+  private val latin1Sets: Seq[Set[Char]] =
+    Seq(Tokenizer.DefaultDelimiters, Tokenizer.DefaultDelimiters ++ ('\u0080' to 'ÿ' by 3))
+
+  for (icu <- Seq(true, false))
+    test(s"Latin-1 table: U+0080–U+00FF in every context == filter(split(lower)) (icu=$icu)") {
+      withConf(("spark.sql.icu.caseMappings.enabled" -> icu.toString) +: evalModes(codegen = true): _*) {
+        val bad = mismatches(Batch(latin1Rows, latin1Sets), codegen = true)
+        assert(bad.isEmpty, bad.take(5).mkString("\n"))
+      }
+    }
+
+  test("Latin-1 under a tr default locale with ICU off takes Lower's path") {
+    val saved = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr"))
+    try withConf(("spark.sql.icu.caseMappings.enabled" -> "false") +: evalModes(codegen = true): _*) {
+      val rows = Seq("I", "IÀ", "Iı ÌÍ", "TITLE Éé", "İÀ").map(utf8) ++ latin1Rows.take(200)
+      val bad = mismatches(Batch(rows, latin1Sets), codegen = true)
+      assert(bad.isEmpty, bad.take(5).mkString("\n"))
+      // the locale is in force: a Latin-1 row lowers `I` to dotless `ı`,
+      // an ASCII row (Spark's ASCII fast path) to `i`
+      val toks = Seq("IÀ", "I").toDF("t").select(Tokenizer.lowerTokens(col("t")))
+        .as[Seq[String]].collect().toSeq
+      assert(toks === Seq(Seq("ıà"), Seq("i")))
+    } finally java.util.Locale.setDefault(saved)
+  }
 
   test("invalid UTF-8 bytes lower to U+FFFD: a\\xFFb and A\\xFEB both count as one word") {
     val df = Seq(Array('a'.toByte, 0xff.toByte, 'b'.toByte), Array('A'.toByte, 0xfe.toByte, 'B'.toByte))

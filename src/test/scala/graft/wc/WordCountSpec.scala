@@ -225,25 +225,72 @@ class WordCountSpec extends SparkSpec {
       assert(produced === expected)
     }
 
-  test("fromDirectory plans one native lower_tokens, no split, no filter lambda, generator in codegen") {
-    val dir = tempDir("planShape")
-    writeFile(dir, "a.txt", "Plan shape, please")
-    val df = WordCount.fromDirectory(spark, dir.toString)
-    df.collect()
-    val exprs = collectPlanNodes(df.queryExecution.executedPlan).flatMap(_.expressions)
-      .flatMap(_.collect { case e => e })
-    assert(exprs.exists(_.isInstanceOf[graft.expr.LowerTokens]))
-    assert(!exprs.exists(e => e.isInstanceOf[org.apache.spark.sql.catalyst.expressions.StringSplit] ||
-      e.isInstanceOf[org.apache.spark.sql.catalyst.expressions.ArrayFilter] ||
-      e.isInstanceOf[org.apache.spark.sql.catalyst.expressions.LambdaFunction]))
-    // no codegen fallback left: the generator joins the partial aggregate's
-    // whole-stage-codegen stage
-    assert(collectPlanNodes(df.queryExecution.executedPlan).exists {
-      case w: org.apache.spark.sql.execution.WholeStageCodegenExec =>
-        w.child.exists(_.isInstanceOf[org.apache.spark.sql.execution.GenerateExec])
-      case _ => false
-    })
-  }
+  for (aqe <- Seq(true, false))
+    test(s"fromDirectory plans one native lower_tokens, no split, no filter lambda, fused map side (aqe=$aqe)") {
+      val dir = tempDir("planShape")
+      writeFile(dir, "a.txt", "Plan shape, please")
+      withConf("spark.sql.adaptive.enabled" -> aqe.toString) {
+        val df = WordCount.fromDirectory(spark, dir.toString)
+        assert(df.as[(String, Long)].collect().toSeq === Seq(("plan", 1L), ("please", 1L), ("shape", 1L)))
+        val nodes = collectPlanNodes(df.queryExecution.executedPlan)
+        val exprs = nodes.flatMap(_.expressions).flatMap(_.collect { case e => e })
+        assert(exprs.exists(_.isInstanceOf[graft.expr.LowerTokens]))
+        assert(!exprs.exists(e => e.isInstanceOf[org.apache.spark.sql.catalyst.expressions.StringSplit] ||
+          e.isInstanceOf[org.apache.spark.sql.catalyst.expressions.ArrayFilter] ||
+          e.isInstanceOf[org.apache.spark.sql.catalyst.expressions.LambdaFunction]))
+        // the partial count is the fused operator: no row per token, no
+        // generator and no partial aggregate, under AQE's re-planning too
+        assert(fusedMapSide(df))
+        assert(df.queryExecution.executedPlan
+          .isInstanceOf[org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec] === aqe)
+      }
+    }
+
+  /** Fused and unfused word counts agree: `fromText` (planned on the fused
+    * map side) against the same count over `explode(filter(split(lower)))`,
+    * which the planner rule does not match. Rows mix the property's
+    * fragments with Latin-1, `Σ`/`İ`, invalid UTF-8 and null rows; the
+    * delimiter sets include letters and U+0080–U+00FF. */
+  for (codegen <- Seq(true, false))
+    test(s"property: fused word count == unfused explode(filter(split(lower))) (codegen=$codegen)") {
+      import org.apache.spark.sql.functions._
+      import org.scalacheck.{Gen, Prop, Test}
+      import graft.tok.Tokenizer
+      import graft.expr.TextGen
+      val fragment: Gen[Array[Byte]] = Gen.frequency(
+        6 -> Gen.oneOf("a", "A", "b", "B", "1", "é", "É").map(utf8),
+        3 -> Gen.alphaNumChar.map(c => utf8(c.toString)),
+        3 -> Gen.oneOf(TextGen.asciiFragments),
+        2 -> Gen.oneOf(TextGen.nonAsciiFragments))
+      val row: Gen[Option[Array[Byte]]] = Gen.frequency(
+        12 -> Gen.choose(0, 60).flatMap(Gen.listOfN(_, fragment)).map(fs => Some(fs.toArray.flatten)),
+        1 -> Gen.const(None))
+      val cases = for {
+        rows <- Gen.listOfN(200, row)
+        delims <- TextGen.genDelimiters
+      } yield (rows, delims)
+      val prop = Prop.forAllNoShrink(cases) { case (rows, delims) =>
+        val text = rows.toDF("b").select(col("b").cast("string").as("t"))
+        val fused = WordCount.fromText(text, "t", delims)
+        val unfused = text
+          .select(explode(filter(split(lower(col("t")), Tokenizer.charClassRegex(delims)),
+            x => length(x) > 0)).as("word"))
+          .groupBy("word").agg(count(lit(1)).as("cnt")).orderBy("word")
+        val (got, want) = withConf(codegenConfs(codegen): _*) {
+          assert(fusedMapSide(fused) && !fusedMapSide(unfused))
+          (fused.as[(String, Long)].collect().toSeq, unfused.as[(String, Long)].collect().toSeq)
+        }
+        Prop(got == want) :| s"delimiters ${delims.toSeq.sorted.map(_.toInt)}: " +
+          s"extra ${(got.toSet -- want).take(5)}, missing ${(want.toSet -- got).take(5)}"
+      }
+      val res = Test.check(
+        Test.Parameters.default.withMinSuccessfulTests(6).withWorkers(1)
+          .withInitialSeed(org.scalacheck.rng.Seed(20261019L + (if (codegen) 1 else 0))),
+        prop)
+      assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+    }
+
+  private def utf8(s: String): Array[Byte] = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
 
   test("empty input dir yields an empty result (engine side of exit-1 contract)") {
     val dir = tempDir("emptyc")

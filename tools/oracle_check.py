@@ -27,6 +27,13 @@ def rows_canon(cols, rows):
     out = [tuple(canon(r[i]) for i in order) for r in rows]
     return sorted(cols), out
 
+def fetch(con, sql):
+    """Column names and rows of `sql`. Read through execute, not sql(): a
+    failed sql() relation can leave the connection's transaction aborted
+    for every later query."""
+    cur = con.execute(sql)
+    return [d[0] for d in cur.description], cur.fetchall()
+
 def main():
     out_dir = sys.argv[1]
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
@@ -45,10 +52,9 @@ def main():
             n_fail += 1
             continue
         try:
-            spark_rel = con.sql(f"SELECT * FROM read_parquet('{qdir}/*.parquet')")
-            scols, srows = rows_canon(spark_rel.columns, spark_rel.fetchall())
-            duck_rel = con.sql(oracle[name])
-            dcols, drows = rows_canon(duck_rel.columns, duck_rel.fetchall())
+            scols, srows = rows_canon(*fetch(
+                con, f"SELECT * FROM read_parquet('{qdir}/*.parquet')"))
+            dcols, drows = rows_canon(*fetch(con, oracle[name]))
         except Exception as e:
             print(f"FAIL {name}: {e}")
             n_fail += 1
@@ -60,9 +66,9 @@ def main():
         # ndarray, VERDICT r03 #1) — so run both compares.
         pandas_err = None
         try:
-            sdf = con.sql(
+            sdf = con.execute(
                 f"SELECT * FROM read_parquet('{qdir}/*.parquet')").fetchdf()
-            ddf = con.sql(oracle[name]).fetchdf()
+            ddf = con.execute(oracle[name]).fetchdf()
             for df in (sdf, ddf):
                 df.sort_values(by=list(df.columns), inplace=True)
             # kind, not exact width: the driver's value hash goes through
@@ -96,8 +102,6 @@ def main():
         if not os.path.isdir(qdir):
             continue
         try:
-            # execute, not sql: a failed sql() relation leaves the
-            # connection's transaction aborted for every later check
             n = con.execute(
                 f"SELECT count(*) FROM read_parquet('{qdir}/*.parquet')"
             ).fetchone()[0]
