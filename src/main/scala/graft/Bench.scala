@@ -79,7 +79,7 @@ object Bench {
   /** Headline split (VERDICT r16 #1): the official artifact's single
     * `value` mixed warm-protocol timings with degraded-tail cold runs, so
     * a reader applying the 2× gate to a contended sweep got the wrong
-    * answer (BENCH_r16: 1035.6 s headline, of which 247 unwarmed runs;
+    * answer (the r16 sweep: 1035.6 s headline, of which 247 unwarmed runs;
     * the six worst re-ran at 8.9 s vs their 464 s under the identical
     * harness). Returns (in-protocol seconds, degraded seconds), each
     * rounded to milliseconds once, so the printed `value`, their sum,

@@ -3,7 +3,7 @@ package graft.obs
 import scala.collection.mutable
 import org.apache.spark.graft.Bus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-  SparkListenerStageCompleted, SparkListenerTaskEnd}
+  SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
 /** One completed stage of a traced operation: the stage's task metrics,
@@ -15,9 +15,9 @@ final case class StageRow(id: Int, name: String, tasks: Int, wallMs: Long,
                           inputBytes: Long, spillBytes: Long)
 
 /** What Spark reported for one traced operation. Stages are in completion
-  * order; `maxTaskRunMs` is the longest executor run time of any task. */
+  * order. */
 final case class OpRecord(constructS: Double, actionS: Double, jobs: Int,
-                          stages: Seq[StageRow], maxTaskRunMs: Long) {
+                          stages: Seq[StageRow]) {
   def tasks: Int = stages.map(_.tasks).sum
   def shuffleWriteBytes: Long = stages.map(_.shuffleWriteBytes).sum
 }
@@ -37,7 +37,6 @@ final class Collector(spark: SparkSession) extends SparkListener {
   private var jobs = 0
   private val stageIds = mutable.Set.empty[Int]
   private val stages = mutable.ArrayBuffer.empty[StageRow]
-  private var maxTaskRunMs = 0L
 
   override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
     if (e.properties != null &&
@@ -60,17 +59,12 @@ final class Collector(spark: SparkSession) extends SparkListener {
     }
   }
 
-  override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
-    if (e.taskMetrics != null && stageIds.contains(e.stageId))
-      maxTaskRunMs = math.max(maxTaskRunMs, e.taskMetrics.executorRunTime)
-  }
-
   /** Runs `construct`, then `action` on what it built, as one operation
     * named `op`, and returns what Spark reported for it. */
   def traced[T](op: String)(construct: => T)(action: T => Unit): OpRecord = {
     val sc = spark.sparkContext
     synchronized {
-      group = Some(op); jobs = 0; stageIds.clear(); stages.clear(); maxTaskRunMs = 0L
+      group = Some(op); jobs = 0; stageIds.clear(); stages.clear()
     }
     sc.addSparkListener(this)
     sc.setJobGroup(op, op)
@@ -82,7 +76,7 @@ final class Collector(spark: SparkSession) extends SparkListener {
       val t2 = System.nanoTime()
       Bus.drain(sc)
       synchronized {
-        OpRecord((t1 - t0) / 1e9, (t2 - t1) / 1e9, jobs, stages.toVector, maxTaskRunMs)
+        OpRecord((t1 - t0) / 1e9, (t2 - t1) / 1e9, jobs, stages.toVector)
       }
     } finally {
       sc.clearJobGroup()

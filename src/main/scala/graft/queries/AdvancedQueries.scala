@@ -314,7 +314,7 @@ object AdvancedQueries {
       // plain scan: both branches (percentile groupBy; Ranks.groupedRank's
       // range partition) open with an exchange, so the parTable widen is
       // upstream-redundant here and the r18 sweep pair measured it as pure
-      // overhead (+0.51 s) — see OPTIMIZATION_r18.md "scan widening"
+      // overhead (+0.51 s)
       val li = Tables.table(s, dir, "lineitem")
       val qty = li.groupBy(col("l_returnflag"))
         .agg(

@@ -14,8 +14,8 @@ import graft.ops.Multimodal
 object ExtensionQueries {
 
   // Scan posture (VERDICT r18 next #6): the parTable widen was applied to
-  // every payload-synthesis/decode query here and MEASURED OUT again
-  // (plans/r19/*_before.txt hold the widened plans). Two mechanisms make
+  // every payload-synthesis/decode query here and MEASURED OUT again, by
+  // an r19 A/B of the widened and plain plans. Two mechanisms make
   // the widen a net loss for this module at fixture scale:
   //   1. sort-terminal synthesis (q_*_meta, q_*_frames): with a 1-partition
   //      child the final global sort needs NO exchange (a single partition

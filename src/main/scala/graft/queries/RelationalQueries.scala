@@ -35,7 +35,7 @@ object RelationalQueries {
     * another shuffle and buys nothing — the r18 sweep pair measured it as
     * pure overhead on exactly these shapes (+0.1–0.5 s each; the widened
     * form wins only where real per-row compute runs BEFORE the first
-    * exchange). See OPTIMIZATION_r18.md "scan widening" for the pairs. */
+    * exchange). */
   private def tn(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.table(s, dir, name)
 

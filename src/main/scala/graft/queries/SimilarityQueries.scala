@@ -44,9 +44,9 @@ object SimilarityQueries {
     * shared by q_knn_accuracy and q_knn_ci so the eval and its intervals
     * read the same draw: 20% id-stride probe sample over the LSH index,
     * full-corpus candidates. The gated queries pin `nBits` = [[NBits]]
-    * for oracle replay; ScaleProbe's probe_knn_scaled passes
-    * [[graft.ops.Similarity.AutoBits]] to measure the scaledNBits lever
-    * (VERDICT r13 #2) on the same relation.
+    * for oracle replay; passing [[graft.ops.Similarity.AutoBits]] gives
+    * the scaledNBits lever (VERDICT r13 #2) on the same relation, as
+    * q_knn_auto does.
     *
     * DOCUMENTED SCALE BOUND (r17 cold probes, decorrelated replicas):
     * the pinned-8-bit form is ~quadratic in bucket occupancy — 3.55× at

@@ -22,16 +22,18 @@ import org.apache.spark.sql.streaming.Trigger
   * directed watermark spec.
   *
   * Usage: runMain graft.tools.StreamEq [sfDir] [outJson]
+  * (`outJson` defaults to `target/stream_eq/stream_eq.json`, inside the
+  * work dir each run clears first).
   */
 object StreamEq {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val outJson = args.drop(1).headOption.getOrElse("STREAM_EQ.json")
+    val work = "target/stream_eq"
+    val outJson = args.drop(1).headOption.getOrElse(s"$work/stream_eq.json")
     val spark = graft.Sessions.local("stream-eq")
     import spark.implicits._
     import graft.streaming.{DocStream, EventsStream, StreamingWordCount}
 
-    val work = "target/stream_eq"
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(work))
 
     // ── fixture prep: the real tables, sliced into 8 micro-batch files ──

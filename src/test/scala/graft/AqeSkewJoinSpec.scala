@@ -113,8 +113,8 @@ class AqeSkewJoinSpec extends SparkSpec {
       assert(rowOn.head === 4000000L)
       assert(rowOn === rowOff)
       info(f"skewJoin on: $tOn%.2f s, off: $tOff%.2f s " +
-        "(fixture-scale; the sf0.1 timing contrast is recorded in " +
-        "BASELINE.md from graft.tools.SkewProfile)")
+        "(fixture-scale; the sf0.1 on/off contrast is a dated record in " +
+        "BASELINE.md)")
     } finally restore()
   }
 }

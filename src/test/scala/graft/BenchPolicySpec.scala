@@ -58,7 +58,7 @@ class BenchPolicySpec extends AnyFunSuite {
   }
 
   test("splitHeadline: the 2x gate reads in-protocol seconds only") {
-    // VERDICT r16 #1: BENCH_r16's single 1035.6 s value mixed 247 cold
+    // VERDICT r16 #1: the r16 sweep's single 1035.6 s value mixed 247 cold
     // degraded runs with warm-protocol timings and nominally failed the
     // gate while the outliers re-ran 55x faster under the same harness.
     // binary-exact values so the equality is order-insensitive

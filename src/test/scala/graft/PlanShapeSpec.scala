@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.execution.SparkPlan
-
 /** Global scale-posture guard over the ENTIRE gated surface: no query's
   * physical plan may contain a cartesian product or broadcast-nested-loop
   * join unless it is on the explicit allowlist below with a documented
@@ -102,11 +100,6 @@ class PlanShapeSpec extends SparkSpec {
     "q_logrank" -> "crossJoins of the single-row study-end and cohort-total aggregates (broadcast, one row each — the q_kaplan_meier pattern); the per-user aggregate is keyed and the lifetime table is span-bounded",
     "q_quantile_sweep" -> "crossJoin of the single-row exact-p99 order-statistic aggregate onto the single-row approx-sketch aggregate (broadcast, one row each — the q_hll_merge pattern); the exact leg is the Ranks.globalRank range-partitioned kernel, never a value-map aggregate")
 
-  // the AQE-aware walker lives on SparkSpec (collectPlanNodes) so DedupSpec's
-  // ccRound audit and this guard can never drift apart
-  private def collectNodes(plan: SparkPlan): Seq[SparkPlan] =
-    collectPlanNodes(plan)
-
   /** What the three audits below read from one query's executed plan. */
   private case class PlanFacts(
       unkeyedJoins: Seq[String], nodeCount: Int, wideLineitemScans: Seq[Int])
@@ -118,10 +111,10 @@ class PlanShapeSpec extends SparkSpec {
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filterNot { case (name, _) => eagerlyExecuted(name) }
       .map { case (name, fn) =>
-        // collectNodes, NOT plan.collect: AdaptiveSparkPlanExec is a leaf to
-        // TreeNode.collect, which silently finds zero scans under AQE
+        // collectPlanNodes, NOT plan.collect: AdaptiveSparkPlanExec is a
+        // leaf to TreeNode.collect, which silently finds zero scans under AQE
         // (review r04 — the vacuous-guard failure mode)
-        val nodes = collectNodes(fn(spark, sfDir).queryExecution.executedPlan)
+        val nodes = collectPlanNodes(fn(spark, sfDir).queryExecution.executedPlan)
         val unkeyed = nodes.map(_.nodeName).filter(n =>
           n.contains("CartesianProduct") || n.contains("BroadcastNestedLoopJoin"))
         val wide = nodes.collect {
@@ -151,13 +144,15 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   /** Plan-size regression gate (VERDICT r16 #4): recorded physical node
-    * counts for the 10 largest gated plans (tools.PlanSize census at
-    * sf0.001, r17: 130/94/85/84/78/77/76/71/68/68), with ~25 % headroom
-    * so routine optimizer drift passes but a lineage deepening — the r15
-    * 310k-char plan-string class, or an iterative operator losing its
-    * checkpoint cadence — fails a test instead of a sweep. Every OTHER
-    * query gets the global ceiling: the 11th-largest plan is 66 nodes, so
-    * 100 catches any quiet ballooning while staying far from noise.
+    * counts for the 10 largest gated plans (census at sf0.001, r17:
+    * 130/94/85/84/78/77/76/71/68/68), with ~25 % headroom so routine
+    * optimizer drift passes but a lineage deepening — the r15 310k-char
+    * plan-string class, or an iterative operator losing its checkpoint
+    * cadence — fails a test instead of a sweep. Every OTHER query gets the
+    * global ceiling: the 11th-largest plan is 66 nodes, so 100 catches any
+    * quiet ballooning while staying far from noise. A failure prints the
+    * current census of the 10 largest plans, which is what re-pinning a
+    * bound reads.
     */
   private val nodeBounds: Map[String, Int] = Map(
     "q_band_sweep" -> 165, "q_pca_power" -> 120, "q_domain_kl" -> 110,
@@ -167,15 +162,18 @@ class PlanShapeSpec extends SparkSpec {
   private val globalNodeCeiling = 100
 
   test("no gated plan exceeds its recorded node-count bound") {
-    nodeBounds.keys.foreach(n => assert(SparkEntry.queries.contains(n),
-      s"nodeBounds names a missing query: $n — re-run tools.PlanSize and re-pin"))
+    assertNamesExist("nodeBounds", nodeBounds.keys)
     val over = planFacts.flatMap { case (name, f) =>
       val bound = nodeBounds.getOrElse(name, globalNodeCeiling)
       if (f.nodeCount > bound) Some((name, f.nodeCount, bound)) else None
     }
+    val census = planFacts.map { case (name, f) => name -> f.nodeCount }
+      .sortBy { case (name, n) => (-n, name) }.take(10)
+      .map { case (name, n) => s"$name $n" }.mkString(", ")
     assert(over.isEmpty,
       s"plans past their node bound (query, nodes, bound): $over — if the " +
-        "growth is intended, re-run tools.PlanSize and re-pin the bound")
+        "growth is intended, re-pin the bound from the 10 largest plans " +
+        s"(query nodes): $census")
   }
 
   test("every fact-table query keeps scan-level column pruning (no SELECT *)") {

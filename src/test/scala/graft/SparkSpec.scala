@@ -55,14 +55,27 @@ abstract class SparkSpec extends AnyFunSuite {
     "spark.sql.codegen.wholeStage" -> codegen.toString,
     "spark.sql.codegen.factoryMode" -> (if (codegen) "CODEGEN_ONLY" else "NO_CODEGEN"))
 
-  /** Every physical node of an executed plan, unwrapping AQE and
-    * recursing into subqueries — delegates to the ONE shared walker
-    * ([[graft.ops.Plans.collectNodes]]; a per-suite copy once dropped the
-    * subquery recursion — keep one definition, shared with the tools).
+  /** Every physical node of an executed plan, unwrapping AQE and recursing
+    * into subqueries — the one AQE-aware walker every spec uses (a
+    * per-suite copy once dropped the subquery recursion).
+    * `TreeNode.collect` treats `AdaptiveSparkPlanExec` as a leaf and
+    * silently finds nothing under AQE; materialized AQE stages
+    * (Shuffle/Broadcast/ResultQueryStage) hold their subtree in `plan`,
+    * not `children` — without those cases every plan-shape assertion sees
+    * a single opaque leaf and passes vacuously.
     */
   def collectPlanNodes(plan: org.apache.spark.sql.execution.SparkPlan)
-      : Seq[org.apache.spark.sql.execution.SparkPlan] =
-    graft.ops.Plans.collectNodes(plan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    val self = plan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        collectPlanNodes(a.executedPlan)
+      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
+        q +: collectPlanNodes(q.plan)
+      case p => Seq(p)
+    }
+    self ++ plan.children.flatMap(collectPlanNodes) ++
+      plan.subqueries.flatMap(collectPlanNodes)
+  }
 
   /** Whether `df` counts its words on the fused map side: its executed
     * plan holds a [[graft.expr.TokenCountExec]], and then no

@@ -302,8 +302,8 @@ class GraphSpec extends SparkSpec {
     val lazyForm = Graph.hits(edges, iters = 2)
     // collect, not a noop write: DataFrameWriter re-plans into its own
     // QueryExecution and the frame's own adaptive plan would stay
-    // isFinalPlan=false (the SkewProfile lesson) — the expansion
-    // evidence must come from the EXECUTED tree
+    // isFinalPlan=false — the expansion evidence must come from the
+    // EXECUTED tree
     lazyForm.collect()
     val lazyNodes = collectPlanNodes(lazyForm.queryExecution.executedPlan)
     val stages = lazyNodes.count(

@@ -29,34 +29,6 @@ class SkewSpec extends SparkSpec {
     assert(Skew.saltedJoin(fact, dim, "k", col("row_id"), 1).count() === plain)
   }
 
-  test("AQE splits the skewed partition of a sort-merge join at runtime") {
-    // force the SMJ path and lower the skew thresholds so the hot-key
-    // partition (95% of bigFact rows land on key 0) qualifies at test
-    // scale; then check the executed plan carries the skew=true SMJ marker
-    val saved = Seq(
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor"
-    ).map(k => k -> spark.conf.get(k))
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "4KB")
-      spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4KB")
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2.0")
-      val bigFact = (0 until 20000).map { i =>
-        (if (i % 20 == 0) (i / 20) % 9 + 1 else 0L, i.toLong, "x" * 64)
-      }.toDF("k", "row_id", "pad")
-      val joined = bigFact.join(dim, Seq("k"))
-      // collect() drives THIS DataFrame's QueryExecution (count() would
-      // execute a different plan and leave this one un-adapted)
-      assert(joined.collect().length === 20000)
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(plan.contains("skew=true"),
-        s"AQE skew split did not fire:\n${plan.take(2000)}")
-    } finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
-  }
-
   test("salted partial aggregation spreads the hot key and sums exactly") {
     val got = Skew.saltedCount(fact, "k", col("row_id"), salts = 8)
       .as[(Long, Long)].collect().toMap
