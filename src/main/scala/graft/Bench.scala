@@ -211,32 +211,6 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Sessions.local("graft-bench")
 
-    // Opt-in randomized query order (VERDICT r09 #4): the r8/r9 outliers
-    // were all late-sweep — a seeded shuffle makes order-dependent
-    // inflation measurable (two sweeps, different seeds, diff per-query)
-    // instead of folklore. Unset → stable alphabetical order.
-    val seed = sys.env.get("SPARK_GRAFT_BENCH_SEED").map(_.trim.toLong)
-    // Opt-in subset (diagnosis only, unset for the gated sweep): a
-    // comma-separated allowlist so a single slow query can be profiled
-    // under the exact harness protocol (warm-up + timed noop sink +
-    // cleanup) without paying the other queries' wall-clock.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val all = only match {
-      case Some(sel) =>
-        val missing = sel -- SparkEntry.benchQueries.toSet
-        require(missing.isEmpty, s"unknown bench queries: ${missing.mkString(",")}")
-        System.err.println(s"[bench] SUBSET of ${sel.size} queries (diagnosis mode)")
-        SparkEntry.benchQueries.filter(sel)
-      case None => SparkEntry.benchQueries
-    }
-    val names = seed match {
-      case Some(s) =>
-        System.err.println(s"[bench] randomized query order, seed=$s")
-        new scala.util.Random(s).shuffle(all)
-      case None => all
-    }
-
     var times = ListMap.empty[String, Double]
     var errors = ListMap.empty[String, String]
     var samplesLog = ListMap.empty[String, Seq[Double]]
@@ -289,7 +263,7 @@ object Bench {
         java.nio.file.Paths.get("bench_partial.json"),
         (recordLine(times, errors, sfDir, Set.empty, partial)() + "\n").getBytes("UTF-8"))
       catch { case _: Throwable => () }
-    names.foreach { name =>
+    SparkEntry.benchQueries.foreach { name =>
       val over = sweepElapsed > budgetSec
       // named before the run, so a degraded query that throws is named too
       if (over) degradedNames ::= name
@@ -307,7 +281,6 @@ object Bench {
         if (ran % PartialEvery == 0) System.err.println(partialLine)
       }
     }
-    val seedJson = seed.map(s => s""","seed":$s""").getOrElse("")
     // post-sweep host channels: read after every timed region, so Δsteal
     // from /proc/stat and the 1-min loadavg pair are the in-band
     // contention evidence for THIS sweep's numbers.
@@ -331,13 +304,12 @@ object Bench {
     val degradedSet = degradedNames.toSet
     val degradedTail =
       if (degradedNames.isEmpty) "" else s""","degraded_tail":${degradedNames.size}"""
-    val extra = degradedTail + seedJson + hostJson
+    val extra = degradedTail + hostJson
     try {
       // the FILE additionally carries the raw re-time samples of every
       // sampled query — the post-hoc diagnosis record VERDICT r10 #2 asked
       // for (a lone recorded number can't distinguish "one bad sample
-      // among three" from "three sustained bad samples"). A diagnosis
-      // subset never writes it.
+      // among three" from "three sustained bad samples").
       val samplesJson =
         if (samplesLog.isEmpty) ""
         else s""","samples":${samplesLog.map { case (k, v) =>
@@ -348,7 +320,7 @@ object Bench {
       val degradedJson =
         if (degradedNames.isEmpty) ""
         else s""","degraded":${degradedNames.reverse.map(jstr).mkString("[", ",", "]")}"""
-      if (only.isEmpty) java.nio.file.Files.write(
+      java.nio.file.Files.write(
         java.nio.file.Paths.get("bench_full.json"),
         (recordLine(times, errors, sfDir, degradedSet,
           extra + samplesJson + degradedJson)() + "\n").getBytes("UTF-8"))

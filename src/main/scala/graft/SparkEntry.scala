@@ -40,9 +40,9 @@ object SparkEntry {
     registry.flatMap(q => q.oracle.map(q.name -> _)).toMap
 
   /** Queries Bench times — ALL of them, in stable name order. A full sweep
-    * is the only protocol; `SPARK_GRAFT_BENCH_ONLY` narrows it to named
-    * queries for diagnosis and never writes bench_full.json, which no
-    * sweep reads. BASELINE.md holds the recorded full-sweep number and how
-    * to read the artifact; the count and seconds are not restated here. */
+    * is the only protocol; `graft.tools.QueryProfile` replays its warm-up
+    * and timed run for named queries. BASELINE.md holds the recorded
+    * full-sweep number and how to read the artifact; the count and
+    * seconds are not restated here. */
   lazy val benchQueries: Seq[String] = registry.map(_.name).sorted
 }

@@ -526,17 +526,13 @@ object CorpusStats {
     */
   def duplicatedNgramFraction(docs: DataFrame, idCol: String,
                               toksCol: Column, n: Int,
-                              carryCols: Seq[String] = Nil,
-                              persistIndex: Boolean = true): DataFrame = {
+                              carryCols: Seq[String] = Nil): DataFrame = {
     val carried = carryCols.map(col)
-    val ex0 = docs
+    val ex = docs
       .select(col(idCol) +: Dedup.ngramHashSet(toksCol, n).as("hs") +: carried: _*)
       .where(size(col("hs")) > 0)
       .select(col(idCol) +: explode(col("hs")).as("h") +: carried: _*)
-    val ex =
-      if (persistIndex)
-        ex0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else ex0
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // hs is distinct per doc, so count(*) per hash IS document frequency
     val dfRel = ex.groupBy(col("h")).agg(count(lit(1)).as("df"))
     ex.join(dfRel, Seq("h"))
@@ -579,7 +575,7 @@ object CorpusStats {
     * Verify/Bench clear per query). For LARGE k (a real tokenizer
     * trainer runs 30k–50k merges) the plan would otherwise nest one
     * join+aggregate layer per round and Catalyst analysis cost would grow
-    * with k, so every `checkpointEvery` rounds the vocabulary lineage is
+    * with k, so every `BpeCutEvery` (2) rounds the vocabulary lineage is
     * cut with an eager `localCheckpoint` (the [[graft.ops.Dedup.connectedComponents]]
     * pattern) and cache entries of superseded rounds are released — plan
     * depth and per-round cost stay CONSTANT in k (spec-gated by
@@ -587,18 +583,15 @@ object CorpusStats {
     * length is also a STRING cost bound: each lazy round references the
     * previous vocabulary ~2× (merge winner + merge projection), and
     * AQE's per-stage plan-description updates walk such shared subtrees
-    * once per PATH — ~2^segment — so large-k callers should pass
-    * `checkpointEvery` ≤ 4 (measured: 8-round segments at k≈60 spent
-    * minutes in plan-string generation; 4-round segments are flat). The
-    * default (8) keeps the oracle-gated k=5 queries on a single fully
-    * lazy declarative plan, byte-identical to the pre-cut behavior.
-    * Fault-tolerance trade: `localCheckpoint` blocks live on executors
-    * without lineage — a 30k-merge run on preemptible hardware should use
-    * reliable checkpointing instead (the [[graft.ops.Graph.pageRank]]
+    * once per PATH — ~2^segment (measured: 8-round segments at k≈60
+    * spent minutes in plan-string generation; 4-round segments are
+    * flat). Fault-tolerance trade: `localCheckpoint` blocks live on
+    * executors without lineage — a 30k-merge run on preemptible hardware
+    * should use reliable checkpointing instead (the [[graft.ops.Graph.pageRank]]
     * note applies verbatim).
     */
-  def bpeTrain(tok: DataFrame, k: Int, checkpointEvery: Int = 8): DataFrame =
-    bpeRounds(tok, k, checkpointEvery)._1.reduce(_ unionByName _)
+  def bpeTrain(tok: DataFrame, k: Int): DataFrame =
+    bpeRounds(tok, k)._1.reduce(_ unionByName _)
 
   /** The APPLY half of BPE: the word-frequency table re-symbolized by the
     * `k` trained merges — `(sym, wc)` with `sym` the two-space-joined
@@ -608,8 +601,8 @@ object CorpusStats {
     * Same fixed-depth plan as [[bpeTrain]]; both derive from one shared
     * iteration chain.
     */
-  def bpeVocab(tok: DataFrame, k: Int, checkpointEvery: Int = 8): DataFrame =
-    bpeRounds(tok, k, checkpointEvery)._2
+  def bpeVocab(tok: DataFrame, k: Int): DataFrame =
+    bpeRounds(tok, k)._2
       .select(trim(col("sym")).as("sym"), col("wc"))
 
   /** BPE INFERENCE: per-document subword segmentation statistics under
@@ -624,12 +617,12 @@ object CorpusStats {
     * the [[unigramLogProb]] shape (Heaps-small build side, broadcast
     * gated on measured size).
     */
-  def bpeSegmentStats(tok: DataFrame, k: Int, checkpointEvery: Int = 8,
+  def bpeSegmentStats(tok: DataFrame, k: Int,
                       broadcastMaxVocab: Long = 10000000L): DataFrame = {
     val Sep = "  "
     // unit lists never contain whitespace and join on exactly two
     // spaces, so collapsing the separators reconstructs the word
-    val words = bpeVocab(tok, k, checkpointEvery)
+    val words = bpeVocab(tok, k)
       .select(call_function("replace", col("sym"), lit(Sep), lit("")).as("tok"),
         size(split(col("sym"), Sep)).cast("long").as("nu"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -653,11 +646,10 @@ object CorpusStats {
     * has exhausted its merge candidates repeat the previous step's stats
     * (the no-op-merge semantics [[bpeTrain]] documents).
     */
-  def bpeCompressionCurve(tok: DataFrame, k: Int,
-                          checkpointEvery: Int = 8): DataFrame = {
+  def bpeCompressionCurve(tok: DataFrame, k: Int): DataFrame = {
     val Sep = "  "
     val buf = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Long)]
-    bpeRounds(tok, k, checkpointEvery, onVocab = (step, vocab) => {
+    bpeRounds(tok, k, onVocab = (step, vocab) => {
       val r = vocab.select(col("wc"),
           size(split(trim(col("sym")), Sep)).cast("long").as("nu"),
           length(call_function("replace", trim(col("sym")), lit(Sep),
@@ -675,11 +667,18 @@ object CorpusStats {
           / col("n_chars").cast("double"), 6).as("units_per_char"))
   }
 
-  private def bpeRounds(tok: DataFrame, k: Int, checkpointEvery: Int,
+  /** BPE rounds per lazy segment: every `BpeCutEvery`-th round's
+    * vocabulary is an eager `localCheckpoint` (see [[bpeTrain]]). Two keeps
+    * the SQL-listener plan descriptions shallow — a 5-round fully lazy
+    * nest built a ~24 MB description per action, 6 s of a timed run with
+    * the data fully cached. The cut is plan-only: values do not depend
+    * on it. */
+  private val BpeCutEvery = 2
+
+  private def bpeRounds(tok: DataFrame, k: Int,
       onVocab: (Int, DataFrame) => Unit = (_, _) => ())
       : (Seq[DataFrame], DataFrame) = {
     require(k >= 1, s"k: $k")
-    require(checkpointEvery >= 1, s"checkpointEvery: $checkpointEvery")
     val Sep = "  "
     val chars = transform(sequence(lit(1), length(col("tok"))),
       i => col("tok").substr(i, lit(1)))
@@ -717,7 +716,7 @@ object CorpusStats {
               concat(lit(" "), col("a"), lit(Sep), col("b"), lit(" ")),
               concat(lit(" "), col("a"), col("b"), lit(" ")))).as("sym"),
           col("wc"))
-      if (step % checkpointEvery == 0) {
+      if (step % BpeCutEvery == 0) {
         // eager lineage cut: materializes this round's vocabulary (and
         // its `top`, which the plan consumes) as a checkpoint scan —
         // the next round's plan starts from depth 0 regardless of k
@@ -820,10 +819,9 @@ object CorpusStats {
     * characters — the compression the merges actually bought per group.
     */
   def subwordFertility(docs: DataFrame, idCol: String, grpCol: String,
-                       toksCol: Column, k: Int,
-                       checkpointEvery: Int = 8): DataFrame = {
+                       toksCol: Column, k: Int): DataFrame = {
     val tok = tokenStream(docs, idCol, toksCol)
-    val seg = bpeSegmentStats(tok, k, checkpointEvery)
+    val seg = bpeSegmentStats(tok, k)
     val chars = tok.groupBy(col(idCol))
       .agg(sum(length(col("tok"))).cast("long").as("n_chars"))
     seg.join(chars, Seq(idCol))

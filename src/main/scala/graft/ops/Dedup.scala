@@ -295,21 +295,17 @@ object Dedup {
     * for the same boilerplate/skew reasons — as [[contaminationPairs]].
     * Because [[winnowedFingerprints]] is distinct per doc, the join's
     * group count IS the distinct shared-fingerprint count. The exploded
-    * index feeds three plan branches (df aggregate + both join sides);
-    * `persistIndex` materializes it once (caller-managed lifetime, the
-    * repo's per-query contract).
+    * index feeds three plan branches (df aggregate + both join sides),
+    * so it is persisted once (caller-managed lifetime, the repo's
+    * per-query contract).
     */
   def winnowPairs(docs: DataFrame, idCol: String, toksCol: Column,
-                  n: Int, w: Int, minShared: Int, maxDf: Int,
-                  persistIndex: Boolean = true): DataFrame = {
+                  n: Int, w: Int, minShared: Int, maxDf: Int): DataFrame = {
     require(minShared >= 1, s"minShared: $minShared")
     require(maxDf >= 1, s"maxDf: $maxDf")
-    val f0 = docs.select(col(idCol).as("id"),
+    val f = docs.select(col(idCol).as("id"),
       explode(winnowedFingerprints(toksCol, n, w)).as("fp"))
-    val f =
-      if (persistIndex)
-        f0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else f0
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val keep = f.groupBy(col("fp")).agg(count(lit(1)).as("df"))
       .where(col("df") <= maxDf).select(col("fp"))
     val idx = f.join(keep, Seq("fp"))
@@ -365,15 +361,11 @@ object Dedup {
     * (same artifact as the [[incrementalNearDups]] corpus side); same
     * caller-managed cache lifetime as [[verifiedNearDupsFromHashes]].
     */
-  def candidatePairsFromHashes(hashed: DataFrame,
-                               k: Int = 30, b: Int = 10, r: Int = 3,
-                               persistBuckets: Boolean = true): DataFrame = {
+  def candidatePairsFromHashes(hashed: DataFrame, k: Int = 30, b: Int = 10,
+                               r: Int = 3): DataFrame = {
     require(b * r <= k, s"bands($b)×rows($r) exceed signature length $k")
-    val buckets0 = bandBuckets(hashed, "id", k, b, r)
-    val buckets =
-      if (persistBuckets)
-        buckets0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else buckets0
+    val buckets = bandBuckets(hashed, "id", k, b, r)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val a = buckets.select(col("band"), col("bh"), col("id").as("id_a"))
     val bb = buckets.select(col("band"), col("bh"), col("id").as("id_b"))
     a.join(bb, Seq("band", "bh"))
@@ -482,20 +474,16 @@ object Dedup {
     *
     * Input is a [[hashedNgrams]]-shaped relation (`id`, `hs` distinct).
     * The exploded index feeds three plan branches (df aggregate + both
-    * join sides); `persistIndex` materializes it once — caller-managed
-    * lifetime, same contract as [[verifiedNearDupsFromHashes]].
+    * join sides), so it is persisted once — caller-managed lifetime,
+    * same contract as [[verifiedNearDupsFromHashes]].
     */
   def jaccardNearDups(hashed: DataFrame, threshold: Double,
-                      maxDf: Int = Int.MaxValue,
-                      persistIndex: Boolean = true): DataFrame = {
+                      maxDf: Int = Int.MaxValue): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, s"threshold: $threshold")
     require(maxDf >= 1, s"maxDf: $maxDf")
-    val exploded0 = hashed.select(col("id"), size(col("hs")).as("n"),
+    val exploded = hashed.select(col("id"), size(col("hs")).as("n"),
       explode(col("hs")).as("h"))
-    val exploded =
-      if (persistIndex)
-        exploded0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else exploded0
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val idx =
       if (maxDf == Int.MaxValue) exploded
       else {
@@ -549,10 +537,9 @@ object Dedup {
     */
   def similarityHistogram(hashed: DataFrame, minSim: Double,
                           buckets: Int = 10,
-                          maxDf: Int = Int.MaxValue,
-                          persistIndex: Boolean = true): DataFrame = {
+                          maxDf: Int = Int.MaxValue): DataFrame = {
     require(buckets >= 1, s"buckets: $buckets")
-    jaccardNearDups(hashed, minSim, maxDf, persistIndex)
+    jaccardNearDups(hashed, minSim, maxDf)
       .select(least(floor(col("jaccard") * buckets).cast("int"),
         lit(buckets - 1)).as("band"), col("jaccard"))
       .groupBy(col("band"))
@@ -610,16 +597,12 @@ object Dedup {
         .toInt))
 
   def containmentPairs(hashed: DataFrame, threshold: Double,
-                       maxDf: Int = Int.MaxValue,
-                       persistIndex: Boolean = true): DataFrame = {
+                       maxDf: Int = Int.MaxValue): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, s"threshold: $threshold")
     require(maxDf >= 1, s"maxDf: $maxDf")
-    val exploded0 = hashed.select(col("id"), size(col("hs")).as("n"),
+    val exploded = hashed.select(col("id"), size(col("hs")).as("n"),
       explode(col("hs")).as("h"))
-    val exploded =
-      if (persistIndex)
-        exploded0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else exploded0
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val idx =
       if (maxDf == Int.MaxValue) exploded
       else {
@@ -745,8 +728,7 @@ object Dedup {
     * small — Catalyst picks that up from sizes).
     */
   def contaminationPairs(trainHashed: DataFrame, benchHashed: DataFrame,
-                         minShared: Int, maxTrainDf: Int,
-                         persistTrain: Boolean = true): DataFrame = {
+                         minShared: Int, maxTrainDf: Int): DataFrame = {
     require(minShared >= 1, s"minShared: $minShared")
     require(maxTrainDf >= 1, s"maxTrainDf: $maxTrainDf")
     // hs comes from ngramHashSet (already distinct per doc), so the final
@@ -756,15 +738,10 @@ object Dedup {
     // tokenize+hash pipeline runs once (same rationale as
     // verifiedNearDupsFromHashes — measured 2.3 s → ~1.2 s at sf0.1).
     // Lifetime contract: the entry lives until the CALLER clears it
-    // (`spark.catalog.clearCache()` — Verify/Bench do, per query); pass
-    // persistTrain=false in long-lived sessions that manage caching
-    // themselves.
-    val train0 = trainHashed
+    // (`spark.catalog.clearCache()` — Verify/Bench do, per query).
+    val train = trainHashed
       .select(col("id").as("train_id"), explode(col("hs")).as("h"))
-    val train =
-      if (persistTrain)
-        train0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else train0
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val keepable = train.groupBy(col("h"))
       .agg(count(lit(1)).as("df"))
       .where(col("df") <= maxTrainDf)
@@ -902,18 +879,14 @@ object Dedup {
     * and the oracle's 1-based positions agree.
     */
   def substringRunPairs(docs: DataFrame, idCol: String, toksCol: Column,
-                        k: Int, minRunTokens: Int, maxDf: Int,
-                        persistIndex: Boolean = true): DataFrame = {
+                        k: Int, minRunTokens: Int, maxDf: Int): DataFrame = {
     require(k >= 2, s"k: $k")
     require(minRunTokens >= k, s"minRunTokens $minRunTokens < k $k")
     require(maxDf >= 2, s"maxDf: $maxDf (a shared window needs df ≥ 2)")
-    val pos0 = positionalNgrams(docs, idCol, toksCol, k)
     // feeds three plan branches (df aggregate + both join sides) — same
     // caller-managed persist contract as jaccardNearDups
-    val pos =
-      if (persistIndex)
-        pos0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else pos0
+    val pos = positionalNgrams(docs, idCol, toksCol, k)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val keep = pos.groupBy(col("h")).agg(count(lit(1)).as("df"))
       .where(col("df") <= maxDf).select(col("h"))
     val idx = pos.join(keep, Seq("h"))

@@ -281,7 +281,7 @@ object Multimodal {
     * independent images is ~8·n²/2⁸ — quadratic with a fixed 2⁸ bucket
     * space, exactly the scale-killer class [[graft.ops.Similarity.scaledNBits]]
     * retires for sign-LSH. Above `2^(8+margin)` docs (bucket occupancy
-    * > 2^margin) switch to 16-bit super-bands + Hamming-1 multiprobe:
+    * > 2^margin) switch to 16-bit super-bands + Hamming-1 multi-probe:
     * 4 bands of 16 bits, probe side expanded to the 17-value Hamming-≤1
     * neighborhood — candidates fall to ~4·17·n²/2¹⁶ (≈30× fewer) for a
     * 17× linear probe fan-out. Recall stays 1 by the same pigeonhole
@@ -307,7 +307,7 @@ object Multimodal {
     * width; the brute-force oracle is therefore exactly equal, while the
     * engine plan stays a keyed hash join. `superBandBits` picks the
     * bucket space: 8 (8 exact byte-bands, fan-out ≈ n²/2⁸ per band) or
-    * 16 (4 super-bands + 17-probe multiprobe, fan-out ≈ n²/2¹⁶ per
+    * 16 (4 super-bands + 17-probe multi-probe, fan-out ≈ n²/2¹⁶ per
     * band·probe); [[AutoBands]] (default) resolves it from one count of
     * the persisted hash relation — the measured-count gate, mirroring
     * pageRank's `broadcastMaxNodes` and `Dedup.adaptiveMaxDf`.

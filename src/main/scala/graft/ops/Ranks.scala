@@ -10,40 +10,50 @@ import org.apache.spark.sql.functions._
   * The naive form is a constant-key window: every row through one task's
   * sort — correct, and exactly the straggler a 100× scale-up turns into
   * the job. Instead: range-repartition on the sort key, rank locally per
-  * range partition, then add per-range prefix-count offsets (one
-  * ≤ numParts-row bounded driver collect). Each task sorts only its own
-  * range slice; the collect is partition-count-scale, never data-scale.
-  * The persist barrier pins partition ids so the count pass and the rank
-  * pass read identical slices (AQE may coalesce adjacent ranges — the
-  * merged ids still order by range, so prefix offsets stay exact).
+  * range partition, then add per-range prefix-count offsets (one bounded
+  * driver collect of a row per range). Each task sorts only its own range
+  * slice; the collect is partition-count-scale, never data-scale. The
+  * range count is the session's `spark.sql.shuffle.partitions`
+  * ([[Sessions.builder]] sets it to the core count). The persist barrier
+  * pins partition ids so the offset pass and the rank pass read
+  * identical slices.
   */
 object Ranks {
+
+  private val Pid = "__gr_pid"
+
+  /** `df` range-partitioned by `orderCols` into the session's shuffle
+    * partition count, each row tagged with its range id `__gr_pid`,
+    * persisted so every later pass reads the same slices. */
+  private def rangeParted(df: DataFrame, orderCols: Seq[Column]): DataFrame =
+    df.repartitionByRange(
+        df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
+        orderCols: _*)
+      .withColumn(Pid, spark_partition_id())
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
+  /** The shared offset step: `parted`'s per-range totals of the aggregate
+    * `measure` (a count or a sum), collected to the driver (one row per
+    * range), as (range id → total over all LOWER ranges, grand total). */
+  private def rangeOffsets(parted: DataFrame, measure: Column)
+      : (Map[Int, BigDecimal], BigDecimal) = {
+    val per = parted.groupBy(col(Pid))
+      .agg(measure.cast("decimal(38,10)"))
+      .orderBy(col(Pid))
+      .collect().map(r => (r.getInt(0), BigDecimal(r.getDecimal(1))))
+    val prefix = per.map(_._2).scanLeft(BigDecimal(0))(_ + _)
+    (per.map(_._1).zip(prefix.init).toMap, prefix.last)
+  }
 
   /** `df` extended with `r` (1-based exact global rank by (sortCol,
     * tieCol) — tieCol must make the order total) and `n` (total rows).
     * Output columns: sortCol aliased `x`, tieCol aliased `tie` (carried
     * through so callers can join rankings back to rows), rank `r`,
-    * total `n`.
+    * total `n` — [[globalRankAll]] over that projected pair.
     */
-  def globalRank(df: DataFrame, sortCol: Column, tieCol: Column,
-                 numParts: Int = 32): DataFrame = {
-    val W = org.apache.spark.sql.expressions.Window
-    val parted = df.select(sortCol.as("x"), tieCol.as("tie"))
-      .repartitionByRange(numParts, col("x"), col("tie"))
-      .withColumn("pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cnts = parted.groupBy(col("pid")).agg(count(lit(1)).as("c"))
-      .orderBy(col("pid"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))) // ≤ numParts rows
-    val total = cnts.map(_._2).sum
-    val offsets: Map[Int, Long] = // pid → rows in all lower ranges
-      cnts.map(_._1).zip(cnts.map(_._2).scanLeft(0L)(_ + _).init).toMap
-    parted.select(col("x"), col("tie"),
-      (row_number().over(W.partitionBy(col("pid"))
-        .orderBy(col("x"), col("tie"))).cast("long")
-        + element_at(typedlit(offsets), col("pid"))).as("r"),
-      lit(total).as("n"))
-  }
+  def globalRank(df: DataFrame, sortCol: Column, tieCol: Column): DataFrame =
+    globalRankAll(df.select(sortCol.as("x"), tieCol.as("tie")),
+      Seq(col("x"), col("tie")))
 
   /** Per-GROUP sibling of [[globalRank]]: exact 1-based rank of every row
     * WITHIN its group by (sortCol, tieCol), plus the group size `n` —
@@ -57,27 +67,26 @@ object Ranks {
     * Discipline: range-repartition on (grp, sort, tie) so each group
     * spans a contiguous run of range partitions; rank locally per
     * (partition, group); add per-(partition, group) prefix-count offsets.
-    * The offset relation is ≤ numParts × |groups| rows, built
+    * The offset relation is ≤ ranges × |groups| rows, built
     * DISTRIBUTED (a tiny window over the per-slice counts) and broadcast
     * back — no driver collect at all. Output: `g`, `x`, `tie`, rank `r`,
     * group size `n`.
     */
   def groupedRank(df: DataFrame, grpCol: Column, sortCol: Column,
-                  tieCol: Column, numParts: Int = 32): DataFrame = {
+                  tieCol: Column): DataFrame = {
     val W = org.apache.spark.sql.expressions.Window
-    val parted = df.select(grpCol.as("g"), sortCol.as("x"), tieCol.as("tie"))
-      .repartitionByRange(numParts, col("g"), col("x"), col("tie"))
-      .withColumn("pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cnts = parted.groupBy(col("pid"), col("g")).agg(count(lit(1)).as("c"))
-    val offs = cnts.select(col("pid"), col("g"),
+    val parted = rangeParted(
+      df.select(grpCol.as("g"), sortCol.as("x"), tieCol.as("tie")),
+      Seq(col("g"), col("x"), col("tie")))
+    val cnts = parted.groupBy(col(Pid), col("g")).agg(count(lit(1)).as("c"))
+    val offs = cnts.select(col(Pid), col("g"),
       coalesce(sum(col("c")).over(W.partitionBy(col("g"))
-        .orderBy(col("pid"))
+        .orderBy(col(Pid))
         .rowsBetween(W.unboundedPreceding, -1)), lit(0L)).as("off"),
       sum(col("c")).over(W.partitionBy(col("g"))).as("n"))
-    parted.join(broadcast(offs), Seq("pid", "g"))
+    parted.join(broadcast(offs), Seq(Pid, "g"))
       .select(col("g"), col("x"), col("tie"),
-        (row_number().over(W.partitionBy(col("pid"), col("g"))
+        (row_number().over(W.partitionBy(col(Pid), col("g"))
           .orderBy(col("x"), col("tie"))).cast("long") + col("off")).as("r"),
         col("n"))
   }
@@ -87,35 +96,24 @@ object Ranks {
     * a total order over df, or ranks among ties are partition-placement-
     * dependent) and total row count `n` (long) to ALL of df's columns,
     * with the same range-partitioned discipline (per-range local
-    * row_number + per-range prefix-count offsets from one ≤ numParts-row
-    * bounded driver collect). Descending orders are respected: pass
-    * `col(...).desc` and both the range partitioner and the local window
-    * honor it, so offsets stay consistent whatever the direction. The
-    * swap-in replacement for the constant-key
+    * row_number + per-range prefix-count offsets). Descending orders are
+    * respected: pass `col(...).desc` and both the range partitioner and
+    * the local window honor it, so offsets stay consistent whatever the
+    * direction. The swap-in replacement for the constant-key
     * `Window.partitionBy(pmod(k, 1))` global sort, which funnels the
     * whole relation through ONE task (VERDICT r18 #1).
     */
-  def globalRankAll(df: DataFrame, orderCols: Seq[Column],
-                    numParts: Int = -1): DataFrame = {
+  def globalRankAll(df: DataFrame, orderCols: Seq[Column]): DataFrame = {
     val W = org.apache.spark.sql.expressions.Window
-    val np = if (numParts > 0) numParts
-             else df.sparkSession.sparkContext.defaultParallelism
-    val parted = df
-      .repartitionByRange(np, orderCols: _*)
-      .withColumn("__gr_pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cnts = parted.groupBy(col("__gr_pid")).agg(count(lit(1)).as("c"))
-      .orderBy(col("__gr_pid"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))) // ≤ numParts rows
-    val total = cnts.map(_._2).sum
-    val offsets: Map[Int, Long] = // pid → rows in all earlier ranges
-      cnts.map(_._1).zip(cnts.map(_._2).scanLeft(0L)(_ + _).init).toMap
+    val parted = rangeParted(df, orderCols)
+    val (offs, total) = rangeOffsets(parted, count(lit(1)))
+    val offsets: Map[Int, Long] = offs.map { case (p, o) => p -> o.toLong }
     parted
       .withColumn("r", row_number().over(
-          W.partitionBy(col("__gr_pid")).orderBy(orderCols: _*)).cast("long")
-        + element_at(typedlit(offsets), col("__gr_pid")))
-      .withColumn("n", lit(total))
-      .drop("__gr_pid")
+          W.partitionBy(col(Pid)).orderBy(orderCols: _*)).cast("long")
+        + element_at(typedlit(offsets), col(Pid)))
+      .withColumn("n", lit(total.toLong))
+      .drop(Pid)
   }
 
   /** Exact long integer division a div b for non-negative longs — both
@@ -148,37 +146,27 @@ object Ranks {
   /** The WEIGHTED sibling: exact global running weight in (sortCol,
     * tieCol) order — `(x, w, cumw, totw)` with `cumw` the INCLUSIVE
     * decimal-exact prefix sum of `weightCol`. Same range-partitioned
-    * discipline (per-range local window + per-range weight-sum offsets,
-    * one bounded driver collect of ≤ numParts decimals); the kernel
-    * behind exact weighted quantiles at scale, where a constant-key
-    * running-sum window would funnel every row through one task.
+    * discipline (per-range local window + per-range weight-sum offsets);
+    * the kernel behind exact weighted quantiles at scale, where a
+    * constant-key running-sum window would funnel every row through one
+    * task.
     */
   def globalCumWeight(df: DataFrame, sortCol: Column, tieCol: Column,
-                      weightCol: Column, numParts: Int = 32): DataFrame = {
+                      weightCol: Column): DataFrame = {
     val W = org.apache.spark.sql.expressions.Window
     val dec = "decimal(30,10)"
-    val parted = df.select(sortCol.as("x"), tieCol.as("tie"),
-        weightCol.cast(dec).as("w"))
-      .repartitionByRange(numParts, col("x"), col("tie"))
-      .withColumn("pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sums = parted.groupBy(col("pid"))
-      .agg(sum(col("w")).as("sw"))
-      .orderBy(col("pid"))
-      .collect().map(r => (r.getInt(0), r.getDecimal(1))) // ≤ numParts rows
-    val totw = sums.map(r => BigDecimal(r._2)).sum
+    val parted = rangeParted(df.select(sortCol.as("x"), tieCol.as("tie"),
+        weightCol.cast(dec).as("w")), Seq(col("x"), col("tie")))
+    val (offs, totw) = rangeOffsets(parted, sum(col("w")))
     val offsets: Map[Int, java.math.BigDecimal] = // pid → weight below
-      sums.map(_._1)
-        .zip(sums.map(r => BigDecimal(r._2)).scanLeft(BigDecimal(0))(_ + _)
-          .init.map(_.bigDecimal))
-        .toMap
-    val w = W.partitionBy(col("pid")).orderBy(col("x"), col("tie"))
+      offs.map { case (p, o) => p -> o.bigDecimal }
+    val w = W.partitionBy(col(Pid)).orderBy(col("x"), col("tie"))
       .rowsBetween(W.unboundedPreceding, W.currentRow)
     parted.select(col("x"), col("w"),
       // offsets carry ≤ 10-dp values: the cast back to the shared scale
       // is exact, and keeps the add inside one decimal precision class
       (sum(col("w")).over(w)
-        + element_at(typedlit(offsets), col("pid")).cast(dec)).as("cumw"),
+        + element_at(typedlit(offsets), col(Pid)).cast(dec)).as("cumw"),
       lit(totw.bigDecimal).cast(dec).as("totw"))
   }
 }

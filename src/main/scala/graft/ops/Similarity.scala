@@ -16,9 +16,9 @@ import graft.functions.Hashes
   *  - [[topKNeighborsLsh]]: random-hyperplane LSH — each vector gets an
   *    `nBits`-bit signature (sign of ⟨v, w_p⟩ for deterministic pseudo-random
   *    hyperplanes w_p); candidates are vectors whose signature lands in the
-  *    same bucket as the probe (optionally within Hamming distance 1 —
-  *    multiprobe). The join is hash-partitioned on the bucket id: corpus
-  *    scales linearly, no all-pairs product anywhere.
+  *    same bucket as the probe or in one of its Hamming-1 neighbours.
+  *    The join is hash-partitioned on the bucket id: corpus scales
+  *    linearly, no all-pairs product anywhere.
   *
   * Numeric contract: the *exact* variants accumulate in DECIMAL(30,16), so
   * the result is independent of summation order and bit-identical across
@@ -133,8 +133,8 @@ object Similarity {
     * expected occupancy N/2^nBits ≤ 2^-margin, i.e. candidate volume O(N).
     * Capped at `maxBits`: signature cost is nBits·dim multiply-adds per
     * row and 2³⁰ buckets already covers ~10⁹-row corpora; recall loss from
-    * wider signatures is recovered with multiprobe and/or `nTables`
-    * independent tables, not by shrinking the bucket space.
+    * wider signatures is recovered by probing the Hamming-1 neighbour
+    * buckets ([[topKNeighborsLsh]]), not by shrinking the bucket space.
     */
   def scaledNBits(n: Long, minBits: Int, margin: Int = 2,
                   maxBits: Int = 30): Int = {
@@ -149,13 +149,12 @@ object Similarity {
     * makes. Metadata-cheap on a raw parquet scan, but a FULL computation
     * for filtered/derived inputs, and re-paid on every invocation (it
     * breaks operator laziness — ADVICE r04). Callers who already know the
-    * corpus size (catalog stats, a prior count, a fixture) pass it via
-    * `corpusCount` and no job runs.
+    * corpus size pass an explicit `nBits` (e.g. [[scaledNBits]] of it)
+    * and no job runs.
     */
-  private def resolveBits(nBits: Int, corpus: DataFrame, minBits: Int,
-                          corpusCount: Option[Long]): Int =
+  private def resolveBits(nBits: Int, corpus: DataFrame, minBits: Int): Int =
     if (nBits != AutoBits) nBits
-    else scaledNBits(corpusCount.getOrElse(corpus.count()), minBits)
+    else scaledNBits(corpus.count(), minBits)
 
   /** `nBits`-bit sign signature of a float vector. Exact decimal
     * accumulation per bit so the sign (and therefore the bucket) is
@@ -166,14 +165,11 @@ object Similarity {
     * the column-expression form re-derived each weight per ROW via md5
     * (nBits·dim md5 calls per vector; measured as the bulk of the LSH
     * bench query). `dim` caps the dims that carry signal; vectors shorter
-    * than `dim` zip to their own length. `pOffset` shifts the hyperplane
-    * index range — table t of a multi-table scheme uses
-    * pOffset = t·nBits, giving every table an independent hyperplane set
-    * from the same deterministic family.
+    * than `dim` zip to their own length.
     */
-  def signBits(vec: Column, nBits: Int, dim: Int = 64, pOffset: Int = 0): Column = {
+  def signBits(vec: Column, nBits: Int, dim: Int = 64): Column = {
     val weights: Seq[Seq[Double]] =
-      (pOffset until pOffset + nBits).map(p => (1 to dim).map(i => hyperplaneWeightJvm(p, i)))
+      (0 until nBits).map(p => (1 to dim).map(i => hyperplaneWeightJvm(p, i)))
     val wLit = typedlit(weights)
     val bits = transform(
       sequence(lit(0), lit(nBits - 1)),
@@ -328,41 +324,27 @@ object Similarity {
     * collides AND whose exact cosine clears `threshold` — the embedding
     * analogue of MinHash near-dup. One hash-partitioned self-join on the
     * bucket id; recall is the sign-LSH collision probability
-    * ((1 − θ/π)^nBits per table for angle θ — raise with `nTables`
-    * independent tables, 1−(1−p)^T, never by shrinking the bucket space),
-    * and the default `nBits = AutoBits` sizes the bucket space to the
-    * corpus ([[scaledNBits]]) so candidate volume stays O(N) at any scale.
+    * ((1 − θ/π)^nBits for angle θ), and the default `nBits = AutoBits`
+    * sizes the bucket space to the corpus ([[scaledNBits]]) so candidate
+    * volume stays O(N) at any scale.
     * Exact-decimal cosine keeps the result oracle-comparable.
     */
   def embeddingNearDups(vecs: DataFrame, threshold: Double,
-                        nBits: Int = AutoBits, nTables: Int = 1,
-                        corpusCount: Option[Long] = None): DataFrame = {
-    require(nTables >= 1, s"nTables: $nTables")
-    val bits = resolveBits(nBits, vecs, minBits = 8, corpusCount)
+                        nBits: Int = AutoBits): DataFrame = {
+    val bits = resolveBits(nBits, vecs, minBits = 8)
     // persisted: both self-join branches read the signature relation, and
     // the decimal-exact projection behind signBits is the expensive part.
     // Cache lifetime is caller-managed (`spark.catalog.clearCache()` —
     // the Verify/Bench harnesses clear per query; see Dedup scaladocs).
-    // nTables > 1 trades signature cost for recall at wide `bits`: each
-    // table hashes with an independent hyperplane set (pOffset = t·bits),
-    // and a pair is a candidate if it collides in ANY table.
-    val tables = array((0 until nTables).map(t =>
-      signBits(col("embedding"), bits, pOffset = t * bits)): _*)
     val sig = vecs.select(col("vec_id"), col("embedding"),
-      posexplode(tables).as(Seq("tbl", "bucket")))
+        signBits(col("embedding"), bits).as("bucket"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val a = sig.select(col("tbl"), col("bucket"), col("vec_id").as("id_a"),
+    val a = sig.select(col("bucket"), col("vec_id").as("id_a"),
       col("embedding").as("va"))
-    val b = sig.select(col("tbl"), col("bucket"), col("vec_id").as("id_b"),
+    val b = sig.select(col("bucket"), col("vec_id").as("id_b"),
       col("embedding").as("vb"))
-    val cand0 = a.join(b, Seq("tbl", "bucket"))
+    a.join(b, Seq("bucket"))
       .where(col("id_a") < col("id_b"))
-    // one table ⇒ a pair collides at most once, no dedup needed; more
-    // tables ⇒ drop multi-table repeats BEFORE the cosine work
-    val cand = if (nTables == 1) cand0
-      else cand0.select(col("id_a"), col("id_b"), col("va"), col("vb"))
-        .dropDuplicates("id_a", "id_b")
-    cand
       // cheap native-dot pre-filter before the exact-decimal cosine: sign
       // buckets skew when the corpus clusters (hot buckets go quadratic),
       // and the interpreted decimal path on every candidate dominated the
@@ -732,40 +714,32 @@ object Similarity {
   }
 
   /** LSH-bucketed cosine top-k. Probes and corpus are bucketed by
-    * [[signBits]]; candidates come from a hash join on the bucket id
-    * (multiprobe: probe also visits all Hamming-1 buckets, trading nBits×
-    * candidate growth for recall). Exact cosine + top-k on candidates only.
+    * [[signBits]]; candidates come from a hash join on the bucket id, and
+    * each probe also visits all its Hamming-1 buckets (nBits× candidate
+    * growth traded for recall). Exact cosine + top-k on candidates only.
     * May return < k rows per probe (LSH recall is probabilistic) — that is
     * the contract; callers needing exact top-k use [[topKNeighbors]].
     */
   def topKNeighborsLsh(probes: DataFrame, corpus: DataFrame, k: Int,
-                       nBits: Int = AutoBits, multiprobe: Boolean = true,
-                       nTables: Int = 1,
-                       corpusCount: Option[Long] = None): DataFrame = {
-    require(nTables >= 1, s"nTables: $nTables")
-    val bits = resolveBits(nBits, corpus, minBits = 12, corpusCount)
-    // per-table independent hyperplane sets; the candidate join carries the
-    // table index so buckets never collide across tables
-    val tables = array((0 until nTables).map(t =>
-      signBits(col("embedding"), bits, pOffset = t * bits)): _*)
+                       nBits: Int = AutoBits): DataFrame = {
+    val bits = resolveBits(nBits, corpus, minBits = 12)
     val c = corpus.select(col("vec_id").as("cand_id"), col("embedding").as("cv"),
-      posexplode(tables).as(Seq("tbl", "bucket")))
-    val p0 = probes.select(col("vec_id").as("probe_id"), col("embedding").as("pv"),
-      posexplode(tables).as(Seq("tbl", "b0")))
-    val p =
-      if (!multiprobe)
-        p0.select(col("probe_id"), col("pv"), col("tbl"), col("b0").as("bucket"))
-      else p0.select(col("probe_id"), col("pv"), col("tbl"),
+      signBits(col("embedding"), bits).as("bucket"))
+    val p = probes.select(col("vec_id").as("probe_id"), col("embedding").as("pv"),
+        signBits(col("embedding"), bits).as("b0"))
+      .select(col("probe_id"), col("pv"),
         explode(concat(array(col("b0")),
           transform(sequence(lit(0), lit(bits - 1)),
             i => col("b0").bitwiseXOR(shiftleftSafe(i))))).as("bucket"))
     val w = Window.partitionBy(col("probe_id"))
       .orderBy(desc("cosine"), asc("cand_id"))
-    p.join(c, Seq("tbl", "bucket"))
+    p.join(c, Seq("bucket"))
       .where(col("probe_id") =!= col("cand_id"))
       .select(col("probe_id"), col("cand_id"),
         cosineExact(col("pv"), col("cv")).as("cosine"))
-      .distinct() // multiprobe/multi-table can reach a candidate twice
+      // a probe's buckets are distinct, so a pair repeats only where an
+      // input repeats a vector row
+      .distinct()
       .withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
   }

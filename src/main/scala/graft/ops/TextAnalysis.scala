@@ -20,10 +20,11 @@ object TextAnalysis {
     * (the reference's 38-char set) collapsed to one space, ends trimmed.
     * Two documents equal under this normalization are duplicates for
     * counting purposes — same definition the reference's tokenizer implies
-    * (delimiters carry no identity, `tokenizer.c:37-45`).
+    * (delimiters carry no identity, `tokenizer.c:37-45`): the lowercased
+    * tokens joined by single spaces.
     */
   def normalize(text: Column): Column =
-    trim(regexp_replace(lower(text), Tokenizer.DefaultSplitRegex, " "))
+    array_join(Tokenizer.lowerTokens(text), " ")
 
   /** Lowercased non-empty tokens (reference semantics). */
   def tokens(text: Column): Column = Tokenizer.lowerTokens(text)
@@ -311,13 +312,10 @@ object TextAnalysis {
     * persisted, caller-managed lifetime (see [[Dedup]] scaladocs).
     */
   def tfidfTopK(docs: DataFrame, idCol: String, toksCol: String,
-                k: Int, persistTf: Boolean = true): DataFrame = {
+                k: Int): DataFrame = {
     require(k >= 1, s"k: $k")
-    val tf0 = termFrequencies(docs, idCol, toksCol)
-    val tf =
-      if (persistTf)
-        tf0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else tf0
+    val tf = termFrequencies(docs, idCol, toksCol)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val dfRel = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val n = docs.agg(count(lit(1)).as("n_docs"))
     val w = org.apache.spark.sql.expressions.Window

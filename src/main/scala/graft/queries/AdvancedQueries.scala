@@ -344,7 +344,7 @@ object AdvancedQueries {
     // q_percentiles is per-group (bounded groups own their sorts); the
     // GLOBAL exact quantile is the one that degenerates into a single
     // all-data sort task unless ranked distributively — this is
-    // Ranks.globalRank (range-partition + local rank + ≤numParts offset
+    // Ranks.globalRank (range-partition + local rank + per-range offset
     // collect) selecting the type-1 (lower inverse-CDF) decile values at
     // ranks ⌈q·n⌉, q ∈ {0.1..0.9}. The target relation is 9 rows joined
     // keyed on rank; nothing data-scale leaves the executors. Tie order

@@ -777,15 +777,8 @@ object CorpusStatsQueries {
     // recounts. Both engines express the merge as replace(sym,'a  b','ab')
     // over the two-space-joined symbolization — structurally identical
     // plans, bit-identical results (see CorpusStats.bpeTrain).
-    // checkpointEvery = 2: with every round persisted lazily, the
-    // SQL-listener plan description renders each InMemoryRelation's
-    // cachedPlan RECURSIVELY — a 5-round nest built a ~24 MB description
-    // per action and dominated the timed bench run (6 s, data fully
-    // cached). Two-round lazy segments keep the nesting (and the string)
-    // shallow; values are unchanged (lineage cuts are plan-only,
-    // spec-gated in CorpusStatsSpec).
     Query("q_bpe_train", ((s, dir) =>
-      CorpusStats.bpeTrain(tokStream(s, dir), k = BpeK, checkpointEvery = 2)
+      CorpusStats.bpeTrain(tokStream(s, dir), k = BpeK)
         .orderBy("step")),
       bpeTrainSql(BpeK)),
 
@@ -795,7 +788,7 @@ object CorpusStatsQueries {
     // corpus frequency of every resulting subword unit (top-20). Oracle
     // = the same unrolled chain, final vocabulary exploded.
     Query("q_bpe_apply", ((s, dir) =>
-      CorpusStats.bpeVocab(tokStream(s, dir), k = BpeK, checkpointEvery = 2)
+      CorpusStats.bpeVocab(tokStream(s, dir), k = BpeK)
         .select(explode(split(col("sym"), "  ")).as("unit"), col("wc"))
         .groupBy(col("unit"))
         .agg(sum(col("wc")).cast("long").as("cnt"))
@@ -810,8 +803,7 @@ object CorpusStatsQueries {
     // relation — the trained artifact is reused, not re-derived per
     // occurrence (CorpusStats.bpeSegmentStats).
     Query("q_bpe_segment", ((s, dir) =>
-      CorpusStats.bpeSegmentStats(tokStream(s, dir), k = BpeK,
-          checkpointEvery = 2)
+      CorpusStats.bpeSegmentStats(tokStream(s, dir), k = BpeK)
         .orderBy("doc_id")),
       bpeSegmentSql(BpeK)),
 
@@ -825,8 +817,7 @@ object CorpusStatsQueries {
     // is the plan the fixture runs. n_chars rides along (constant across
     // steps — a conservation sanity the oracle re-proves).
     Query("q_bpe_compression", ((s, dir) =>
-      CorpusStats.bpeCompressionCurve(tokStream(s, dir), k = BpeK,
-          checkpointEvery = 2)
+      CorpusStats.bpeCompressionCurve(tokStream(s, dir), k = BpeK)
         .orderBy("step")), {
       // Per-step readout off the SAME unrolled chain (v1..vK already exist
       // in bpeChainSql) — conservation of n_chars across steps is re-proven
@@ -990,7 +981,7 @@ object CorpusStatsQueries {
     // (CorpusStats.subwordFertility).
     Query("q_tok_fertility", ((s, dir) =>
       CorpusStats.subwordFertility(docs(s, dir), "doc_id", "lang", toks,
-          k = BpeK, checkpointEvery = 2)
+          k = BpeK)
         .orderBy("grp")),
       s"""${bpeChainSql(BpeK)},
             w AS (

@@ -175,7 +175,7 @@ object ExtensionQueries {
     // noise pairs sit near 32 and never appear. Band width is the
     // ADAPTIVE measured-count lever (Multimodal.adaptiveSuperBandBits,
     // r14): ≤2¹⁰ docs join the 8 exact byte-bands; above that the plan
-    // switches to 16-bit super-bands + Hamming-1 multiprobe (~30× fewer
+    // switches to 16-bit super-bands + Hamming-1 multi-probe (~30× fewer
     // candidates on noise) — output-invariant either way, so the oracle
     // replays both regimes unchanged.
     Query("q_image_neardup", ((s, dir) =>

@@ -601,7 +601,7 @@ object SimilarityQueries {
           FROM ranked WHERE rank <= $K ORDER BY probe_id, rank"""),
 
     // LSH-bucketed top-k (the scale path): sign-hyperplane signatures,
-    // multiprobe Hamming-1 bucket visit, exact cosine on candidates only.
+    // multi-probe Hamming-1 bucket visit, exact cosine on candidates only.
     Query("q_knn_lsh", ((s, dir) => {
       val e = emb(s, dir)
       Similarity.topKNeighborsLsh(e.where(col("vec_id") < 5), e, K, NBits)
@@ -925,7 +925,7 @@ object SimilarityQueries {
 
     // ── 1-NN label accuracy (embedding-quality eval) ────────────────────
     // Leave-one-out: every vector probes the LSH index (same sign-bit
-    // buckets + Hamming-1 multiprobe as q_knn_lsh — the SCALE path, a
+    // buckets + Hamming-1 multi-probe as q_knn_lsh — the SCALE path, a
     // keyed bucket join, never all-pairs) for its nearest in-bucket
     // neighbor; per-label agreement rate between the probe's label and
     // its neighbor's. The metric that says whether the embedding space
@@ -934,7 +934,7 @@ object SimilarityQueries {
     // id-stride sample (vec_id ≡ 0 mod 5): an accuracy estimate needs a
     // sample, not every vector — the candidate side stays the FULL corpus
     // (measured 19.5 s → ~4 s at sf0.1 for the same per-label estimate).
-    // Probes whose multiprobe buckets hold no other vector drop (n_eval
+    // Probes whose multi-probe buckets hold no other vector drop (n_eval
     // counts evaluated probes, the contract the oracle mirrors).
     Query("q_knn_accuracy", ((s, dir) =>
       knnAccuracyRelation(s, dir)
@@ -1035,7 +1035,7 @@ object SimilarityQueries {
     // [[PinBits]] — the value Similarity.scaledNBits resolves at the
     // sf0.1 bench fixture (⌈log₂ 2000⌉ + 2 = 13; minBits 12) — so the
     // production-geometry bucket chain has an independent DuckDB check
-    // and drift in the signBits/multiprobe machinery is caught by hash,
+    // and drift in the signBits/multi-probe machinery is caught by hash,
     // not only by SimilaritySpec. q_knn_auto itself stays spec-gated
     // (its adaptive count is a runtime corpus statistic, inexpressible
     // as a static SQL literal).

@@ -48,9 +48,8 @@ object Tokenizer {
   /** Compile a delimiter set into a `[...]+` regex character class, escaping
     * the chars that are special inside a Java/RE2 class (`\ ^ ] [ -`).
     * `-` is emitted last (position makes it literal), `^` never first.
-    * The same pattern string is valid for DuckDB's RE2: the oracle SQL
-    * tokenizes with it, and [[graft.ops.TextAnalysis.normalize]] collapses
-    * delimiter runs with it.
+    * The same pattern string is valid for DuckDB's RE2, where the oracle
+    * SQL tokenizes with it.
     */
   def charClassRegex(delims: Set[Char]): String = {
     require(delims.nonEmpty, "empty delimiter set")
@@ -65,7 +64,9 @@ object Tokenizer {
     "[" + body + (if (dash.nonEmpty) "-" else "") + "]+"
   }
 
-  /** The default split regex — the full 36-char reference delimiter set. */
+  /** The default split regex — the full 36-char reference delimiter set.
+    * Only the DuckDB oracle SQL reads it (`graft.queries.OracleSql.Re`); the
+    * engine tokenizes with the native `lower_tokens`. */
   val DefaultSplitRegex: String = charClassRegex(DefaultDelimiters)
 
   /** Lowercased non-empty tokens of a string column, for case-insensitive

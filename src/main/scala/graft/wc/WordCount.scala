@@ -2,6 +2,7 @@ package graft.wc
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.streaming.StreamingWordCount
 import graft.tok.Tokenizer
 
 /** The reference's one composed query — distributed, case-insensitive,
@@ -48,16 +49,15 @@ object WordCount {
     wordCounts.as[WordCountRow]
   }
 
-  /** Word count over a string column of an arbitrary DataFrame.
+  /** Word count over a string column of an arbitrary DataFrame: the
+    * batch and streaming count are one pipeline
+    * ([[graft.streaming.StreamingWordCount.counts]]), sorted here.
     * Output schema: (word string, cnt long), ascending binary order by word
     * (matches the reference's `strcmp` sort, `cell.c:18-20`).
     */
   def fromText(df: DataFrame, textCol: String,
                delimiters: Set[Char] = Tokenizer.DefaultDelimiters): DataFrame =
-    df.select(explode(Tokenizer.lowerTokens(col(textCol), delimiters)).as("word"))
-      .groupBy("word")
-      .agg(count(lit(1)).as("cnt"))
-      .orderBy("word")
+    StreamingWordCount.counts(df, textCol, delimiters).orderBy("word")
 
   /** Word count over a directory of text files — the reference's I/O
     * contract (O1, `word_count_mpi.c:61-99`): the regular files under `path`

@@ -132,7 +132,7 @@ class BenchPolicySpec extends AnyFunSuite {
     val errors = ListMap((0 until 312).map(i =>
       f"q_err_$i%03d" -> ("boom \"quoted\" \\ path\nline " * 40 + i)): _*)
     val line = Bench.contractLine(times, errors, "/d/sf0.1", degraded = Set.empty,
-      extra = ""","degraded_tail":3,"seed":7""")
+      extra = ""","degraded_tail":3,"steal_pct":1.5""")
     assert(line.length <= Bench.MaxLine)
     val js = new ObjectMapper().readTree(line)
     assert(js.get("metric").asText === "total")
@@ -141,7 +141,7 @@ class BenchPolicySpec extends AnyFunSuite {
     assert(js.get("n_queries").asInt === 312)
     assert(js.get("failed").asInt === 312)
     assert(js.get("sf").asText === "/d/sf0.1")
-    assert(js.get("seed").asInt === 7)
+    assert(js.get("steal_pct").asDouble === 1.5)
     val kept = js.get("queries").fieldNames.asScala.toSet
     assert(kept.nonEmpty)
     assert(kept.size + js.get("queries_omitted").asInt === 312)

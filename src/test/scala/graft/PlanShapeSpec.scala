@@ -143,22 +143,20 @@ class PlanShapeSpec extends SparkSpec {
       s"unkeyed joins outside the allowlist: $offenders")
   }
 
-  /** Plan-size regression gate (VERDICT r16 #4): recorded physical node
-    * counts for the 10 largest gated plans (census at sf0.001, r17:
-    * 130/94/85/84/78/77/76/71/68/68), with ~25 % headroom so routine
-    * optimizer drift passes but a lineage deepening — the r15 310k-char
-    * plan-string class, or an iterative operator losing its checkpoint
-    * cadence — fails a test instead of a sweep. Every OTHER query gets the
-    * global ceiling: the 11th-largest plan is 66 nodes, so 100 catches any
-    * quiet ballooning while staying far from noise. A failure prints the
-    * current census of the 10 largest plans, which is what re-pinning a
-    * bound reads.
+  /** Plan-size regression gate (VERDICT r16 #4): every gated plan's
+    * physical node count stays under the global ceiling, and the plans
+    * that need more get a bound of their census count plus ~25 %
+    * headroom, so routine optimizer drift passes but a lineage deepening
+    * — the r15 310k-char plan-string class, or an iterative operator
+    * losing its checkpoint cadence — fails a test instead of a sweep.
+    * Census at sf0.001 (10 largest): 106/94/84/78/77/70/68/68/66/65; only
+    * the first three need more than the ceiling with headroom. The
+    * 11th-largest plan is 63 nodes, so 100 catches any quiet ballooning
+    * while staying far from noise. A failure prints the current census of
+    * the 10 largest plans, which is what re-pinning a bound reads.
     */
   private val nodeBounds: Map[String, Int] = Map(
-    "q_band_sweep" -> 165, "q_pca_power" -> 120, "q_domain_kl" -> 110,
-    "q_kcore" -> 110, "q_emd_drift" -> 100, "q_ks_drift" -> 100,
-    "q_curate_funnel" -> 100, "q_dup_quality_bias" -> 92,
-    "q_autocorr" -> 88, "q_profile" -> 88)
+    "q_band_sweep" -> 133, "q_pca_power" -> 118, "q_kcore" -> 105)
   private val globalNodeCeiling = 100
 
   test("no gated plan exceeds its recorded node-count bound") {

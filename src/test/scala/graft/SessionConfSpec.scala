@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 /** Pins the semantics- and pathology-critical session conf that every
   * entry point inherits through Sessions.builder — a silent conf loss
   * here reverts a measured engine fix without failing any oracle.
@@ -43,5 +45,24 @@ class SessionConfSpec extends SparkSpec {
       assert(!Sessions.shmEligible(new java.io.File(tmp, "missing")))
       assert(Sessions.ShmMinFreeBytes >= 1L * 1024 * 1024 * 1024)
     } finally { tmp.delete(); () }
+  }
+
+  test("env surface: the engine reads exactly four environment variables") {
+    // every knob doubles the configurations tests and benchmarks must
+    // cover, so a new env read has to change this list to get in
+    val src = java.nio.file.Paths.get("src/main")
+    requireFixtures(src.toString)
+    val texts = scala.util.Using.resource(java.nio.file.Files.walk(src)) {
+      _.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    }.map(f => new String(java.nio.file.Files.readAllBytes(f),
+      java.nio.charset.StandardCharsets.UTF_8))
+    val anyRead = """sys\.env|System\.getenv""".r
+    val namedRead =
+      """(?:sys\.env(?:\.get|\.getOrElse|\.contains)?|System\.getenv)\(\s*"([^"]*)"""".r
+    val names = texts.flatMap(t => namedRead.findAllMatchIn(t).map(_.group(1)))
+    assert(texts.map(t => anyRead.findAllIn(t).size).sum === names.size,
+      "every env read names its variable as a literal")
+    assert(names.toSet === Set("SPARK_GRAFT_CPUS", "SPARK_GRAFT_SF_DIR",
+      "SPARK_GRAFT_BENCH_BUDGET", "SPARK_GRAFT_LOCAL_DIR"))
   }
 }

@@ -12,7 +12,9 @@ import org.scalacheck.rng.Seed
   * `filter(split(lower(t), charClassRegex(ds)), x -> length(x) > 0)`,
   * kept here as the oracle: random byte strings (valid and invalid UTF-8)
   * under random delimiter sets, with ICU case mapping on and off, in
-  * generated and interpreted evaluation.
+  * generated and interpreted evaluation. The property also holds
+  * [[graft.ops.TextAnalysis.normalize]], built on `lower_tokens`, to the
+  * regex form it replaced.
   */
 class LowerTokensSpec extends SparkSpec {
   import spark.implicits._
@@ -75,11 +77,22 @@ class LowerTokensSpec extends SparkSpec {
     }
   }
 
+  /** Rows where `TextAnalysis.normalize` differs from
+    * `trim(regexp_replace(lower(t), DefaultSplitRegex, " "))`. */
+  private def normalizeMismatches(batch: Batch): Seq[String] = {
+    val t = col("b").cast("string")
+    (batch.rows :+ null).toDF("b")
+      .select(graft.ops.TextAnalysis.normalize(t).as("got"),
+        trim(regexp_replace(lower(t), Tokenizer.DefaultSplitRegex, " ")).as("old"))
+      .where(!(col("got") <=> col("old")))
+      .collect().toSeq.map(r => s"normalize=${r.get(0)} old form=${r.get(1)}")
+  }
+
   for (icu <- Seq(true, false); codegen <- Seq(true, false))
     test(s"property: lower_tokens == filter(split(lower)) (icu=$icu, codegen=$codegen)") {
       withConf(("spark.sql.icu.caseMappings.enabled" -> icu.toString) +: evalModes(codegen): _*) {
         val prop = Prop.forAllNoShrink(genBatch) { batch =>
-          val bad = mismatches(batch, codegen)
+          val bad = mismatches(batch, codegen) ++ normalizeMismatches(batch)
           Prop(bad.isEmpty) :| bad.take(5).mkString("\n")
         }
         val res = Test.check(

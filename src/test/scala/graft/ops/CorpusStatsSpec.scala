@@ -314,7 +314,7 @@ class CorpusStatsSpec extends SparkSpec {
     val tok = (Seq.fill(3)("aaab") ++ Seq.fill(2)("ab"))
       .zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("doc_id", "tok")
-    val got = CorpusStats.bpeCompressionCurve(tok, k = 3, checkpointEvery = 2)
+    val got = CorpusStats.bpeCompressionCurve(tok, k = 3)
       .orderBy("step")
       .as[(Int, Long, Long, Double)].collect().toSeq
     // step 1 (a,a): "aaab"→[aa,a,b] 3 units ×3 + "ab" 2 units ×2 = 13
@@ -324,7 +324,7 @@ class CorpusStatsSpec extends SparkSpec {
       (1, 13L, 16L, 13.0 / 16), (2, 8L, 16L, 0.5), (3, 5L, 16L, 5.0 / 16)))
     // and equals the per-k re-derivation (old form) at every step
     val old = (1 to 3).map { k =>
-      val r = CorpusStats.bpeVocab(tok, k, checkpointEvery = 2)
+      val r = CorpusStats.bpeVocab(tok, k)
         .select(col("wc"),
           size(split(col("sym"), "  ")).cast("long").as("nu"),
           length(regexp_replace(col("sym"), "  ", "")).cast("long").as("nc"))
@@ -427,33 +427,30 @@ class CorpusStatsSpec extends SparkSpec {
     val w1 = (('a' to 'z') ++ ('0' to '9')).mkString       // 36 symbols
     val w2 = w1.reverse
     val tok = Seq((0L, w1), (1L, w2)).toDF("doc_id", "tok")
-    // Semantics are unchanged by the cut cadence: the hand-traced corpus
-    // must produce the same merges whether the lineage is cut every
-    // round, every other round, or never within k=3.
+    // Semantics are unchanged by the lineage cuts: the hand-traced
+    // corpus at k=3 crosses the cut after round 2 and must still produce
+    // the hand-traced merges.
     val traced = (Seq.fill(3)("aaab") ++ Seq.fill(2)("ab"))
       .zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("doc_id", "tok")
-    val expect = Seq((1, "a", "a", 6L), (2, "a", "b", 5L), (3, "aa", "ab", 3L))
-    for (every <- Seq(1, 2, 8)) {
-      val got = CorpusStats.bpeTrain(traced, 3, checkpointEvery = every)
-        .orderBy("step").as[(Int, String, String, Long)].collect().toSeq
-      assert(got === expect, s"checkpointEvery=$every")
-      spark.catalog.clearCache()
-    }
-    // Flat-in-k plan: with checkpointEvery=4, k=62 and k=14 both sit 2
-    // lazy rounds past their last checkpoint — the analyzed plan of the
+    val got = CorpusStats.bpeTrain(traced, 3)
+      .orderBy("step").as[(Int, String, String, Long)].collect().toSeq
+    assert(got === Seq((1, "a", "a", 6L), (2, "a", "b", 5L), (3, "aa", "ab", 3L)))
+    spark.catalog.clearCache()
+    // Flat-in-k plan: with a cut every 2 rounds, k=61 and k=13 both sit
+    // 1 lazy round past their last checkpoint — the analyzed plan of the
     // final vocabulary must be the SAME SIZE (no O(k) lineage growth,
     // no O(k) Catalyst analysis cost per round).
     def planNodes(k: Int): Int = {
-      val n = CorpusStats.bpeVocab(tok, k, checkpointEvery = 4)
+      val n = CorpusStats.bpeVocab(tok, k)
         .queryExecution.analyzed.collect { case p => p }.size
       spark.catalog.clearCache()
       n
     }
-    assert(planNodes(62) === planNodes(14),
+    assert(planNodes(61) === planNodes(13),
       "final-vocab plan size must not grow with k past a lineage cut")
     // and a 64-round train actually completes, emitting one row per merge
-    val merges = CorpusStats.bpeTrain(tok, 64, checkpointEvery = 4)
+    val merges = CorpusStats.bpeTrain(tok, 64)
       .orderBy("step")
       .as[(Int, String, String, Long)].collect().toSeq
     assert(merges.size === 64 && merges.map(_._1) === (1 to 64))
@@ -507,7 +504,7 @@ class CorpusStatsSpec extends SparkSpec {
     // corpus "aa aa" + "zq": merge 1 = (a,a) → units 4/6 chars;
     // merge 2 = (z,q) → units 3; chars constant
     val tok = tokStream(Seq((1L, "aa aa"), (2L, "zq")))
-    def stats(k: Int) = CorpusStats.bpeVocab(tok, k, checkpointEvery = 2)
+    def stats(k: Int) = CorpusStats.bpeVocab(tok, k)
       .select(col("wc"),
         size(split(col("sym"), "  ")).cast("long").as("nu"),
         length(call_function("replace", trim(col("sym")), lit("  "), lit("")))

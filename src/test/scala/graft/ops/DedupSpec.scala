@@ -620,10 +620,10 @@ class DedupSpec extends SparkSpec {
       rows.toDF("doc_id", "text")
         .withColumn("toks", TextAnalysis.tokens(col("text"))),
       "doc_id", "toks", 3)
-    val pairJ = Dedup.jaccardNearDups(hashed, 0.1, persistIndex = false)
+    val pairJ = Dedup.jaccardNearDups(hashed, 0.1)
       .select("jaccard").as[Double].collect().toSeq
     assert(pairJ.sorted === Seq(0.25, 1.0), "the planted pair relation")
-    val got = Dedup.similarityHistogram(hashed, 0.1, persistIndex = false)
+    val got = Dedup.similarityHistogram(hashed, 0.1)
       .orderBy("band")
       .select("band", "sim_lo", "n_pairs", "avg_jaccard")
       .as[(Int, Double, Long, Double)].collect().toSeq

@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 /** [[Ranks.globalRank]]: the range-partitioned distributed ranking kernel
   * must equal a local sort's ranks exactly — including duplicate sort
   * keys (tie column makes the order total) — at any input partitioning
-  * and any range-partition count.
+  * and any range-partition count (the session's
+  * `spark.sql.shuffle.partitions`, varied here with `withConf`).
   */
 class RanksSpec extends SparkSpec {
   import spark.implicits._
@@ -21,9 +22,13 @@ class RanksSpec extends SparkSpec {
         x -> g.map(_._2 + 1L).toSet
       }
 
+  /** Runs `body` with `n` range partitions. */
+  private def parts[T](n: Int)(body: => T): T =
+    withConf("spark.sql.shuffle.partitions" -> n.toString)(body)
+
   test("globalRank equals the local sort's ranks, ties made total by the tie column") {
     val df = rows.toDF("id", "x").repartition(7) // scrambled input
-    val got = Ranks.globalRank(df, col("x"), col("id"), numParts = 4)
+    val got = Ranks.globalRank(df, col("x"), col("id"))
       .select("x", "r", "n").as[(Double, Long, Long)].collect()
     assert(got.length === rows.length)
     assert(got.forall(_._3 === rows.length), "n carries the exact total")
@@ -45,8 +50,7 @@ class RanksSpec extends SparkSpec {
       (0 until 5).map(i => ("b", 200L + i, (9 - i).toDouble)) ++
       Seq(("c", 300L, 1.0))
     val df = grows.toDF("g", "id", "x").repartition(9)
-    val got = Ranks.groupedRank(df, col("g"), col("x"), col("id"),
-        numParts = 4)
+    val got = Ranks.groupedRank(df, col("g"), col("x"), col("id"))
       .select("g", "tie", "r", "n").as[(String, Long, Long, Long)]
       .collect()
     val local = grows.groupBy(_._1).flatMap { case (g, rs) =>
@@ -58,24 +62,29 @@ class RanksSpec extends SparkSpec {
       assert((r, n) === local((g, id)), s"($g,$id)")
     }
     // invariance to the range-partition count (incl. the 1-slice case)
-    val r1 = Ranks.groupedRank(df, col("g"), col("x"), col("id"),
-        numParts = 1)
-      .select("g", "tie", "r").as[(String, Long, Long)].collect().toSet
+    val r1 = parts(1) {
+      Ranks.groupedRank(df, col("g"), col("x"), col("id"))
+        .select("g", "tie", "r").as[(String, Long, Long)].collect().toSet
+    }
     assert(r1 === got.map(t => (t._1, t._2, t._3)).toSet)
     spark.catalog.clearCache()
   }
 
   test("rank assignment is invariant to the range-partition count") {
     val df = rows.toDF("id", "x")
-    val r4 = Ranks.globalRank(df, col("x"), col("id"), numParts = 4)
-      .select("x", "tie", "r").as[(Double, Long, Long)].collect()
-      .sortBy(_._3).toSeq
-    val r1 = Ranks.globalRank(df, col("x"), col("id"), numParts = 1)
-      .select("x", "tie", "r").as[(Double, Long, Long)].collect()
-      .sortBy(_._3).toSeq
-    val r32 = Ranks.globalRank(df.repartition(13), col("x"), col("id"),
-      numParts = 32).select("x", "tie", "r").as[(Double, Long, Long)]
-      .collect().sortBy(_._3).toSeq
+    def ranks(n: Int, in: org.apache.spark.sql.DataFrame) = parts(n) {
+      val ranked = Ranks.globalRank(in, col("x"), col("id"))
+      val ranges = ranked.queryExecution.analyzed.collect {
+        case r: org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression =>
+          r.numPartitions
+      }
+      assert(ranges === Seq(n), "range partitions follow the session")
+      ranked.select("x", "tie", "r").as[(Double, Long, Long)].collect()
+        .sortBy(_._3).toSeq
+    }
+    val r4 = ranks(4, df)
+    val r1 = ranks(1, df)
+    val r32 = ranks(32, df.repartition(13))
     assert(r4 === r1)
     assert(r4 === r32)
     spark.catalog.clearCache()

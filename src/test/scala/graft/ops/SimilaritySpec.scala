@@ -160,7 +160,7 @@ class SimilaritySpec extends SparkSpec {
     lsh.foreach { case (p, c, _) =>
       assert(c % 3 === p % 3, s"LSH neighbor $c not in probe $p's cluster")
     }
-    // with multiprobe on near-identical vectors, the top hit matches brute force
+    // with the Hamming-1 probes on near-identical vectors, the top hit matches brute force
     val lshTop = lsh.filter(_._3 == 1).map(t => (t._1, t._2)).toSet
     assert(lshTop.subsetOf(brute))
   }
@@ -273,34 +273,13 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
-  test("embeddingNearDups: AutoBits default + multi-table recall on planted dups") {
+  test("embeddingNearDups: AutoBits default on planted dups") {
     val corpus = planted // 30 vectors, clusters of ~identical directions
     val auto = Similarity.embeddingNearDups(corpus, threshold = 0.9)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(auto.nonEmpty, "planted in-cluster pairs must survive auto-sized LSH")
     auto.foreach { case (a, b) =>
       assert(a % 3 === b % 3, s"cross-cluster pair ($a,$b)")
-    }
-    // table 0 of the multi-table scheme IS the single-table scheme (same
-    // pOffset), so adding tables can only add candidate pairs
-    val multi = Similarity.embeddingNearDups(corpus, threshold = 0.9, nTables = 2)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(auto.subsetOf(multi),
-      s"nTables=2 lost pairs: ${auto.diff(multi)}")
-    multi.foreach { case (a, b) =>
-      assert(a % 3 === b % 3, s"cross-cluster pair ($a,$b)")
-    }
-  }
-
-  test("topKNeighborsLsh: multi-table is a superset path and stays in-cluster") {
-    val corpus = planted
-    val probes = corpus.where(col("vec_id") < 3)
-    val multi = Similarity.topKNeighborsLsh(probes, corpus, k = 5,
-        nBits = 8, nTables = 3)
-      .select("probe_id", "cand_id").as[(Long, Long)].collect().toSeq
-    assert(multi.nonEmpty)
-    multi.foreach { case (p, c) =>
-      assert(c % 3 === p % 3, s"LSH neighbor $c not in probe $p's cluster")
     }
   }
 
