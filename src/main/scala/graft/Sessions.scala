@@ -6,9 +6,10 @@ import org.apache.spark.sql.SparkSession
   * (Verify, Bench, CLI, tests) runs with identical semantics-affecting conf.
   *
   * Scale posture: shuffle partitions default to the local core count here
-  * (local[32] single-JVM); on a real cluster the same builder is used with
-  * AQE coalescing enabled, which right-sizes post-shuffle partitions at
-  * runtime, so the static number only seeds the initial plan.
+  * (`SPARK_GRAFT_CPUS` cores, single JVM); on a real cluster the same
+  * builder is used with AQE coalescing enabled, which right-sizes
+  * post-shuffle partitions at runtime, so the static number only seeds
+  * the initial plan.
   */
 object Sessions {
 
@@ -18,7 +19,7 @@ object Sessions {
     * box /tmp is disk-backed ext4 whose create+commit under 32-way task
     * concurrency sampled at ~8 ms/open (FileOutputStream.open0 +
     * IndexShuffleBlockResolver commit were the dominant frames of the
-    * whole post-shuffle tail after the r18 scan widening); tmpfs creates
+    * whole post-shuffle tail); tmpfs creates
     * are 23× faster single-threaded and lock-free-er concurrent. Env
     * SPARK_GRAFT_LOCAL_DIR overrides; unset + no /dev/shm → Spark's
     * default (java.io.tmpdir). A real cluster sets spark.local.dir to
@@ -78,8 +79,8 @@ object Sessions {
       // file-download RPC → ClassNotFound. jstack'd during a degraded
       // r16 bench sweep: executor threads pinned in
       // NettyRpcEnv$FileDownloadChannel.read under janino findIClass,
-      // whole-JVM ~2.5× slowdown with an idle box and clean cpu probes
-      // (BASELINE.md r16). This engine registers no session artifacts —
+      // whole-JVM ~2.5× slowdown with an idle box and clean cpu probes.
+      // This engine registers no session artifacts —
       // disable the isolation so codegen class resolution stays
       // in-process.
       .config("spark.sql.artifact.isolation.enabled", "false")

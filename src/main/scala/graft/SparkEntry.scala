@@ -41,8 +41,7 @@ object SparkEntry {
 
   /** Queries Bench times — ALL of them, in stable name order. A full sweep
     * is the only protocol; `graft.tools.QueryProfile` replays its warm-up
-    * and timed run for named queries. BASELINE.md holds the recorded
-    * full-sweep number and how to read the artifact; the count and
-    * seconds are not restated here. */
+    * and timed run for named queries. BASELINE.md says how to read the
+    * artifact; the count and seconds are not restated here. */
   lazy val benchQueries: Seq[String] = registry.map(_.name).sorted
 }

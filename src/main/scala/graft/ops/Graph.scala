@@ -432,7 +432,7 @@ object Graph {
     // Each raw-score relation (ar, hr) is read TWICE per iteration — the
     // 1-row normalization-total aggregate AND the crossJoin main branch —
     // the [[sssp]] 2^rounds re-derivation shape. The remedy is
-    // ITERS-DEPENDENT, measured at sf0.1 (BASELINE.md r15):
+    // ITERS-DEPENDENT, measured at sf0.1:
     //   - iters ≤ 2: stay LAZY and ACCEPT the bounded 2²-shape
     //     re-derivation. Do NOT count on exchange reuse here: AQE's
     //     per-branch replanning defeats canonicalization in this nested

@@ -21,7 +21,7 @@ import OracleSql._
 object AdvancedQueries {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.parTable(s, dir, name)
+    Tables.table(s, dir, name)
 
   val queries: Seq[Query] = Seq(
     // ── Range join: equi key + band predicate ────────────────────────────
@@ -219,10 +219,7 @@ object AdvancedQueries {
       // the emitted value is IEEE-identical to the builtin the oracle
       // mirrors. Tie column (l_orderkey·8+l_linenumber) is total; equal
       // prices interpolate identically whichever tie wins.
-      // plain scan, not the widened one: both legs open with an exchange
-      // (global aggregate; repartitionByRange inside globalRank) — the O4
-      // exchange-first rule (ADVICE r18)
-      val li = Tables.table(s, dir, "lineitem")
+      val li = t(s, dir, "lineitem")
       val approx = li.select(col("l_extendedprice").as("x"))
         .agg(
           expr("approx_percentile(x, 0.99, 100)").as("a100"),
@@ -304,18 +301,14 @@ object AdvancedQueries {
     // regardless of data scale — and a 100× memory cliff when distinct
     // values grow with the data: med_price over l_extendedprice with only
     // 3 groups to spread state across (VERDICT r15 #3; probed cold at
-    // 10×, BASELINE.md r16). So the price median rides the
+    // 10×). So the price median rides the
     // Ranks.groupedRank kernel instead: per-group exact ranks with
     // range-partitioned local sorts, interpolated at ranks
     // (n+1) div 2 and (n+2) div 2 — identical semantics to
     // median()/quantile_cont (odd n: the middle row, even n: the mean of
     // the two middle rows), with nothing group-scale in any one task.
     Query("q_percentiles", ((s, dir) => {
-      // plain scan: both branches (percentile groupBy; Ranks.groupedRank's
-      // range partition) open with an exchange, so the parTable widen is
-      // upstream-redundant here and the r18 sweep pair measured it as pure
-      // overhead (+0.51 s)
-      val li = Tables.table(s, dir, "lineitem")
+      val li = t(s, dir, "lineitem")
       val qty = li.groupBy(col("l_returnflag"))
         .agg(
           round(expr("percentile(l_quantity, 0.5)"), 6).as("p50_qty"),

@@ -21,12 +21,6 @@ import OracleSql._
 object AnalyticQueries {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.parTable(s, dir, name)
-
-  /** Plain (unwidened) scan — see RelationalQueries.tn: for join/window/
-    * agg-first shapes the parTable widen sits upstream of another exchange
-    * and the r18 sweep pair measured it as pure overhead (+0.1–0.6 s). */
-  private def tn(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.table(s, dir, name)
 
   val queries: Seq[Query] = Seq(
@@ -52,7 +46,7 @@ object AnalyticQueries {
     Query("q_window_lag", ((s, dir) => {
       val w = Window.partitionBy(col("o_custkey"))
         .orderBy(asc("o_orderdate"), asc("o_orderkey"))
-      tn(s, dir, "orders")
+      t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"),
           coalesce(lag(col("o_totalprice"), 1).over(w), lit(-1.0)).as("prev_price"))
         .orderBy("o_orderkey")
@@ -66,7 +60,7 @@ object AnalyticQueries {
       val w = Window.partitionBy(col("o_custkey"))
         .orderBy(asc("o_orderdate"), asc("o_orderkey"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      tn(s, dir, "orders")
+      t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"),
           round(sum(col("o_totalprice").cast("decimal(28,10)")).over(w)
             .cast("double"), 4).as("running_total"))
@@ -195,7 +189,7 @@ object AnalyticQueries {
     // when it doesn't (VERDICT r13 #1 — never force-broadcast a relation
     // that grows with the corpus).
     Query("q_new_returning", ((s, dir) => {
-      val ev = Tables.events(s, dir, widen = false)
+      val ev = Tables.events(s, dir)
         .select(col("user_id"),
           expr("unix_micros(cast(ts as timestamp)) div 604800000000")
             .as("wk"))
@@ -865,7 +859,7 @@ object AnalyticQueries {
     // any corpus size. Revenue sums decimal-exact; the pct chains are one
     // double expression from the exact sums, rounded at the edge.
     Query("q_yoy", ((s, dir) => {
-      val m = tn(s, dir, "orders")
+      val m = t(s, dir, "orders")
         .groupBy((year(col("o_orderdate")) * 12 + month(col("o_orderdate"))
           - 1).as("mix"))
         .agg(sum(col("o_totalprice").cast("decimal(28,10)")).as("rev_dec"))
@@ -1484,13 +1478,9 @@ object AnalyticQueries {
     // ── Math functions ──────────────────────────────────────────────────
     // (l_orderkey, l_linenumber) repeats in the fixtures (11,785 keys at
     // sf0.01), so both engines order by EVERY output column: rows that
-    // tie on all of them are identical, and the order is total. Plain
-    // Tables.table, not the widened parTable scan: the sort's range
-    // exchange right after the cheap projection already spreads the rows
-    // over every core, so a round-robin widen would put a second shuffle
-    // in front of it (the reasoning of Tables.events' widen=false).
+    // tie on all of them are identical, and the order is total.
     Query("q_math_fns", ((s, dir) =>
-      Tables.table(s, dir, "lineitem")
+      t(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_linenumber"),
           round(sqrt(col("l_extendedprice")), 6).as("sqrt_price"),
           round(log(col("l_extendedprice") + lit(1.0)), 6).as("ln_price"),
@@ -2135,7 +2125,7 @@ object AnalyticQueries {
     Query("q_cusum_break", ((s, dir) => {
       val W = org.apache.spark.sql.expressions.Window
       val hourUs = 3600L * 1000000L
-      val perB = Tables.events(s, dir, widen = false)
+      val perB = Tables.events(s, dir)
         .select(expr("unix_micros(cast(ts as timestamp)) div 3600000000")
           .as("b"))
         .groupBy(col("b")).agg(count(lit(1)).as("n"))
@@ -2901,7 +2891,7 @@ object AnalyticQueries {
     // (constant-key window over 2 rows — the q_ab_test shape).
     Query("q_cohend", ((s, dir) => {
       val dec = "decimal(30,10)"
-      val arms = Tables.events(s, dir, widen = false)
+      val arms = Tables.events(s, dir)
         .where(col("event_type") === "purchase")
         .groupBy(col("user_id"))
         .agg(sum(col("value").cast(dec)).cast("double").as("y"))
@@ -3246,7 +3236,7 @@ object AnalyticQueries {
 
     Query("q_week_churn", ((s, dir) => {
       val weekUs = 7L * 86400L * 1000000L
-      val uw = Tables.events(s, dir, widen = false)
+      val uw = Tables.events(s, dir)
         .select(col("user_id"),
           expr(s"unix_micros(cast(ts as timestamp)) div $weekUs").as("w"))
         .distinct()
@@ -3616,19 +3606,19 @@ object AnalyticQueries {
     // customer/supplier grow with sf — VERDICT r13 #1 discipline).
     // Date + region filters push to their scans; revenue folds DECIMAL.
     Query("q_tpch_q5", ((s, dir) => {
-      val asia = tn(s, dir, "nation")
-        .join(tn(s, dir, "region").where(col("r_name") === "ASIA"),
+      val asia = t(s, dir, "nation")
+        .join(t(s, dir, "region").where(col("r_name") === "ASIA"),
           col("n_regionkey") === col("r_regionkey"))
         .select(col("n_nationkey"), col("n_name"))
-      val c = tn(s, dir, "customer").select("c_custkey", "c_nationkey")
-      val o = tn(s, dir, "orders")
+      val c = t(s, dir, "customer").select("c_custkey", "c_nationkey")
+      val o = t(s, dir, "orders")
         .where(col("o_orderdate") >=
             lit("1996-01-01 00:00:00").cast("timestamp") &&
           col("o_orderdate") <
             lit("1997-01-01 00:00:00").cast("timestamp"))
         .select("o_orderkey", "o_custkey")
-      val sup = tn(s, dir, "supplier").select("s_suppkey", "s_nationkey")
-      tn(s, dir, "lineitem")
+      val sup = t(s, dir, "supplier").select("s_suppkey", "s_nationkey")
+      t(s, dir, "lineitem")
         .select("l_orderkey", "l_suppkey", "l_extendedprice", "l_discount")
         .join(o, col("l_orderkey") === col("o_orderkey"))
         .join(c, col("o_custkey") === col("c_custkey"))
@@ -4045,7 +4035,7 @@ object AnalyticQueries {
     // relation with the q_did decimal discipline; the closing constants
     // (γ, π) are fixed literals so both engines run one IEEE chain.
     Query("q_gumbel", ((s, dir) => {
-      val wk = tn(s, dir, "orders")
+      val wk = t(s, dir, "orders")
         .groupBy(expr("unix_micros(cast(o_orderdate as timestamp))" +
           " div 604800000000").as("w"))
         .agg(max(col("o_totalprice")).as("mx"))
@@ -4179,14 +4169,14 @@ object AnalyticQueries {
     // only on orderkey; quantities are integral doubles summed as exact
     // int64 (Exact.longSum). Customer join unhinted (VERDICT r13 #1).
     Query("q_tpch_q18", ((s, dir) => {
-      val li = tn(s, dir, "lineitem").select("l_orderkey", "l_quantity")
+      val li = t(s, dir, "lineitem").select("l_orderkey", "l_quantity")
       val big = li.groupBy(col("l_orderkey"))
         .agg(Exact.longSum(col("l_quantity")).as("qty"))
         .where(col("qty") > 300L)
         .select(col("l_orderkey"))
-      val o = tn(s, dir, "orders")
+      val o = t(s, dir, "orders")
         .join(big, col("o_orderkey") === col("l_orderkey"), "left_semi")
-      o.join(tn(s, dir, "customer")
+      o.join(t(s, dir, "customer")
           .select(col("c_custkey").as("o_custkey"), col("c_name")),
           Seq("o_custkey"))
         .join(li, col("o_orderkey") === col("l_orderkey"))
@@ -4438,7 +4428,7 @@ object AnalyticQueries {
     // final divide. Exactly replayable — no interpolation semantics to
     // disagree on (the q_global_quantiles type-1 discipline).
     Query("q_var_cvar", ((s, dir) => {
-      val daily = tn(s, dir, "orders")
+      val daily = t(s, dir, "orders")
         .groupBy(expr("unix_micros(cast(o_orderdate as timestamp))" +
           " div 86400000000").as("d"))
         .agg(sum(col("o_totalprice").cast("decimal(30,10)")).as("rev"))

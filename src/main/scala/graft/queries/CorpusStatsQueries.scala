@@ -18,7 +18,7 @@ import OracleSql._
 object CorpusStatsQueries {
 
   private def docs(s: SparkSession, dir: String): DataFrame =
-    Tables.parTable(s, dir, "documents")
+    Tables.table(s, dir, "documents")
 
   private def toks = TextAnalysis.tokens(col("text"))
 
@@ -596,7 +596,7 @@ object CorpusStatsQueries {
             .persist(),
           Seq(col("bm25").desc, col("doc_id").asc))
         .select(col("doc_id").as("id"), col("r").cast("int").as("rank"))
-      val e = Tables.parTable(s, dir, "embeddings")
+      val e = Tables.table(s, dir, "embeddings")
       val dense = Similarity.topKNeighbors(e.where(col("vec_id") === 0), e, 50)
         .select(col("cand_id").as("id"), col("rank"))
       Retrieval.rrfFuse(Seq("lex" -> lex, "dense" -> dense),
@@ -672,7 +672,7 @@ object CorpusStatsQueries {
             .persist(),
           Seq(col("bm25").desc, col("doc_id").asc))
         .select(col("doc_id").as("id"), col("r").cast("int").as("rank"))
-      val e = Tables.parTable(s, dir, "embeddings")
+      val e = Tables.table(s, dir, "embeddings")
       val dense = Similarity.topKNeighbors(e.where(col("vec_id") === 0), e, 50)
         .select(col("cand_id").as("id"), col("rank"))
       Retrieval.rankOverlap(lex, dense)

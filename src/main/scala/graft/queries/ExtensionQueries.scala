@@ -13,25 +13,6 @@ import graft.ops.Multimodal
   */
 object ExtensionQueries {
 
-  // Scan posture (VERDICT r18 next #6): the parTable widen was applied to
-  // every payload-synthesis/decode query here and MEASURED OUT again, by
-  // an r19 A/B of the widened and plain plans. Two mechanisms make
-  // the widen a net loss for this module at fixture scale:
-  //   1. sort-terminal synthesis (q_*_meta, q_*_frames): with a 1-partition
-  //      child the final global sort needs NO exchange (a single partition
-  //      satisfies any required distribution), so synthesis runs once;
-  //      widened, the sort's RangePartitioning sampling pass re-executes
-  //      the whole synthesis+codec subtree a second time — A/B at sf0.1:
-  //      q_audio_meta 0.51→0.89 s, q_decode_meta 0.32→0.46 s.
-  //   2. the near-dup pair (q_image/audio_neardup) materializes its dHash
-  //      relation through a persist+count before any exchange, so the
-  //      widen only parallelizes the one count job — measured a wash for
-  //      image (+0.01 s) and a loss for audio (+0.34 s, heavier decode
-  //      re-run under the added exchange).
-  // At 100 TB the widen branch does not exist (single file > 256 MiB), so
-  // reverting costs nothing at scale; the plain scan is the measured
-  // optimum at fixture scale. q_udaf_rms stays on the plain scan (O4
-  // exchange-first exception), as do the doc_id<100 cuts.
   val queries: Seq[Query] = Seq(
     // Typed Aggregator (item-interface analogue) in an untyped agg.
     Query("q_udaf_rms", ((s, dir) =>

@@ -27,16 +27,6 @@ import OracleSql._
 object RelationalQueries {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.parTable(s, dir, name)
-
-  /** Plain (unwidened) scan. For queries whose first post-scan operator is
-    * itself an exchange (join / groupBy / multi-distinct Expand), the
-    * [[Tables.parTable]] round-robin widen sits strictly upstream of
-    * another shuffle and buys nothing — the r18 sweep pair measured it as
-    * pure overhead on exactly these shapes (+0.1–0.5 s each; the widened
-    * form wins only where real per-row compute runs BEFORE the first
-    * exchange). */
-  private def tn(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.table(s, dir, name)
 
   /** Exact-decimal average, the [[OracleSql.oSum]] mirror. */
@@ -52,10 +42,10 @@ object RelationalQueries {
     // shape reads "documents never retrieved" or "users never active" —
     // referential coverage of a dimension by a fact.
     Query("q_catalog_coverage", ((s, dir) => {
-      val ordered = tn(s, dir, "lineitem")
+      val ordered = t(s, dir, "lineitem")
         .select(col("l_partkey").as("p_partkey")).distinct()
         .withColumn("hit", lit(1))
-      tn(s, dir, "part")
+      t(s, dir, "part")
         .join(ordered, Seq("p_partkey"), "left")
         .groupBy(col("p_brand"))
         .agg(count(lit(1)).as("n_parts"),
@@ -81,9 +71,9 @@ object RelationalQueries {
     // ── Join family ──────────────────────────────────────────────────────
     // 4-way inner join: fact⋈fact shuffled on orderkey, dims broadcast.
     Query("q_join_pricing", ((s, dir) => {
-      val li = tn(s, dir, "lineitem"); val o = tn(s, dir, "orders")
-      val c = tn(s, dir, "customer"); val n = tn(s, dir, "nation")
-      val r = tn(s, dir, "region")
+      val li = t(s, dir, "lineitem"); val o = t(s, dir, "orders")
+      val c = t(s, dir, "customer"); val n = t(s, dir, "nation")
+      val r = t(s, dir, "region")
       li.join(o, col("l_orderkey") === col("o_orderkey"))
         .join(c, col("o_custkey") === col("c_custkey"))
         .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
@@ -113,9 +103,9 @@ object RelationalQueries {
     // scan. Revenue per nation for ASIA suppliers serving same-nation
     // customers in 1996.
     Query("q_join_snowflake", ((s, dir) => {
-      val li = tn(s, dir, "lineitem"); val o = tn(s, dir, "orders")
-      val c = tn(s, dir, "customer"); val sup = tn(s, dir, "supplier")
-      val n = tn(s, dir, "nation"); val r = tn(s, dir, "region")
+      val li = t(s, dir, "lineitem"); val o = t(s, dir, "orders")
+      val c = t(s, dir, "customer"); val sup = t(s, dir, "supplier")
+      val n = t(s, dir, "nation"); val r = t(s, dir, "region")
       li.join(o.where(col("o_orderdate") >= lit("1996-01-01").cast("date") &&
             col("o_orderdate") < lit("1997-01-01").cast("date")),
           col("l_orderkey") === col("o_orderkey"))
@@ -154,7 +144,7 @@ object RelationalQueries {
     // documented 100 TB swap (HLL ndv, Expand disappears, one mergeable
     // pass). Timestamps surface as exact micros/1e6 epoch seconds.
     Query("q_profile", ((s, dir) =>
-      graft.ops.Profile.columnStats(tn(s, dir, "lineitem"),
+      graft.ops.Profile.columnStats(t(s, dir, "lineitem"),
           numCols = Seq("l_orderkey", "l_partkey", "l_quantity",
             "l_extendedprice", "l_discount"),
           strCols = Seq("l_returnflag", "l_linestatus"),
@@ -195,7 +185,7 @@ object RelationalQueries {
     // salt factor for Skew.saltedJoin. One count pass + a single-row stats
     // crossJoin + a deterministic top-N cut.
     Query("q_skew_advisor", ((s, dir) =>
-      Skew.advisor(tn(s, dir, "lineitem"), "l_partkey", topN = 10)),
+      Skew.advisor(t(s, dir, "lineitem"), "l_partkey", topN = 10)),
       // skew math mirrored in doubles: CAST(cnt AS DOUBLE) * n_keys / total
       // is the identical IEEE op chain Spark runs (counts ≪ 2^53, exact).
       """WITH counts AS (
@@ -314,7 +304,7 @@ object RelationalQueries {
           FROM lineitem GROUP BY l_returnflag, l_linestatus
           ORDER BY l_returnflag, l_linestatus"""),
     Query("q_agg_distinct", ((s, dir) =>
-      tn(s, dir, "lineitem")
+      t(s, dir, "lineitem")
         .groupBy(col("l_returnflag"))
         .agg(
           count_distinct(col("l_suppkey")).as("n_supp"),
@@ -333,7 +323,7 @@ object RelationalQueries {
     // ── Grouping analytics: cube / rollup / grouping sets ────────────────
     // NULL grouping keys → 'ALL' sentinel (no collision: flags are 1-char).
     Query("q_cube", ((s, dir) =>
-      tn(s, dir, "lineitem")
+      t(s, dir, "lineitem")
         .cube(col("l_returnflag"), col("l_linestatus"))
         .agg(count(lit(1)).as("cnt"), Exact.longSum(col("l_quantity")).as("sum_qty"))
         .select(
@@ -352,7 +342,7 @@ object RelationalQueries {
     // indistinguishable by the value column alone; grouping_id is how
     // engines (and the coalesce-to-'ALL' idiom above) tell them apart.
     Query("q_grouping_id", ((s, dir) =>
-      tn(s, dir, "lineitem")
+      t(s, dir, "lineitem")
         .cube(col("l_returnflag"), col("l_linestatus"))
         .agg(grouping(col("l_returnflag")).cast("int").as("g_rf"),
           grouping(col("l_linestatus")).cast("int").as("g_ls"),
@@ -537,8 +527,8 @@ object RelationalQueries {
     // (est, actual, error ratio). Three aggregates + one keyed join count;
     // at scale the ndv legs swap to approx_count_distinct like q_profile.
     Query("q_join_estimate", ((s, dir) => {
-      val li = tn(s, dir, "lineitem").select(col("l_orderkey"))
-      val ord = tn(s, dir, "orders").select(col("o_orderkey"))
+      val li = t(s, dir, "lineitem").select(col("l_orderkey"))
+      val ord = t(s, dir, "orders").select(col("o_orderkey"))
       val sa = li.agg(count(lit(1)).as("n_a"),
         count_distinct(col("l_orderkey")).as("ndv_a"))
       val sb = ord.agg(count(lit(1)).as("n_b"),
@@ -643,7 +633,7 @@ object RelationalQueries {
     // min/max spans — narrow spans on both dimensions are what lets
     // file-level stats prune either predicate. Pure bit arithmetic.
     Query("q_zorder", ((s, dir) =>
-      graft.ops.Layout.zOrderStats(tn(s, dir, "lineitem"),
+      graft.ops.Layout.zOrderStats(t(s, dir, "lineitem"),
           "l_partkey", "l_suppkey", bits = 16, bucketShift = 14)
         .orderBy("bucket")), {
       val z = (0 until 16).map(i =>
@@ -1226,8 +1216,8 @@ object RelationalQueries {
     // shape a pre-training ingest gate runs nightly: linear scans +
     // map-side-combined aggregates, nothing pair-scale.
     Query("q_dq_checks", ((s, dir) => {
-      val o = tn(s, dir, "orders")
-      val li = tn(s, dir, "lineitem")
+      val o = t(s, dir, "orders")
+      val li = t(s, dir, "lineitem")
       def vio(c: Column) = sum(when(c, 1L).otherwise(0L))
       val oChecks = o.agg(
           count(lit(1)).as("n_total"),
@@ -1257,7 +1247,7 @@ object RelationalQueries {
             AS (check_name, n_violations)"""),
           col("n_total"))
       val fk = o.join(
-          tn(s, dir, "customer").select(col("c_custkey")).distinct()
+          t(s, dir, "customer").select(col("c_custkey")).distinct()
             .withColumn("__hit", lit(1L)),
           col("o_custkey") === col("c_custkey"), "left")
         .agg(count(lit(1)).as("n_total"),

@@ -19,7 +19,7 @@ import graft.ops.{Retrieval, Similarity}
 object SimilarityQueries {
 
   private def emb(s: SparkSession, dir: String): DataFrame =
-    Tables.parTable(s, dir, "embeddings")
+    Tables.table(s, dir, "embeddings")
 
   private val K = 10
   // Gated queries PIN nBits so the DuckDB oracle mirrors the exact bucket
@@ -744,7 +744,7 @@ object SimilarityQueries {
     Query("q_source_centroid", ((s, dir) =>
       Similarity.groupCentroidProfile(
           emb(s, dir).join(
-            Tables.parTable(s, dir, "documents")
+            Tables.table(s, dir, "documents")
               .select(col("doc_id").as("vec_id"), col("source")),
             Seq("vec_id")),
           "source", "embedding")
@@ -1016,8 +1016,8 @@ object SimilarityQueries {
     // ── 1-NN accuracy on the PRODUCTION AutoBits index (scale form) ─────
     // The same per-label agreement relation as q_knn_accuracy, built on
     // the occupancy-bounded `Similarity.AutoBits` bucket sizing — the
-    // form the 100× probes proved sub-linear (2.32× cold at 100× data,
-    // BASELINE.md r17) where the oracle-pinned 8-bit form is ~quadratic.
+    // form the 100× probes proved sub-linear (2.32× cold at 100× data)
+    // where the oracle-pinned 8-bit form is ~quadratic.
     // Deliberately oracle-less (VERDICT r17 #6): the adaptive bit count
     // is ⌈log₂N⌉+2 resolved from a runtime corpus count, which a static
     // DuckDB SQL literal cannot express — the driver records the rows>0
@@ -1258,7 +1258,7 @@ object SimilarityQueries {
     // away.
     Query("q_fuzzy_join", ((s, dir) =>
       graft.ops.StringSim.editDistance1Pairs(
-          Tables.parTable(s, dir, "part"), "p_name")
+          Tables.table(s, dir, "part"), "p_name")
         .orderBy("name_a", "name_b")),
       """WITH n AS (SELECT DISTINCT p_name AS name FROM part
                     WHERE p_name IS NOT NULL)

@@ -26,7 +26,7 @@ import scala.jdk.CollectionConverters._
 object TextPipelineQueries {
 
   private def docs(s: SparkSession, dir: String): DataFrame =
-    Tables.parTable(s, dir, "documents")
+    Tables.table(s, dir, "documents")
 
   /** q_nb_domain_map's trained model per fixture SNAPSHOT — a
     * deterministic corpus artifact (same fixtures → same model), cached so
@@ -1223,7 +1223,7 @@ object TextPipelineQueries {
         .select(explode(array(col("id_a"), col("id_b"))).as("doc_id"))
         .distinct().withColumn("lex", lit(true))
       val sem = graft.ops.Similarity.embeddingNearDups(
-          Tables.parTable(s, dir, "embeddings"), threshold = 0.3, nBits = 8)
+          Tables.table(s, dir, "embeddings"), threshold = 0.3, nBits = 8)
         .select(explode(array(col("id_a"), col("id_b"))).as("doc_id"))
         .distinct().withColumn("sem", lit(true))
       d.select(col("doc_id"))

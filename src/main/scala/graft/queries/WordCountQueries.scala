@@ -12,20 +12,15 @@ import OracleSql._
   */
 object WordCountQueries {
 
-  // documents is read through Tables.parTable (VERDICT r18 next #6): the
-  // tokenize explode + partial count all run BEFORE the groupBy exchange,
-  // so on the one-row-group fixture file the whole wc map side otherwise
-  // runs as ONE task. Above parTable's 256 MiB ceiling the widen does not
-  // exist, so no production plan carries the extra exchange.
   val queries: Seq[Query] = Seq(
     Query("wc_words", ((s, dir) =>
-      WordCount.fromText(Tables.parTable(s, dir, "documents"), "text")),
+      WordCount.fromText(Tables.table(s, dir, "documents"), "text")),
       s"""SELECT word, count(*) AS cnt
           FROM (SELECT unnest(string_split_regex(lower(text), '$Re')) AS word
                 FROM documents)
           WHERE word <> '' GROUP BY word ORDER BY word"""),
     Query("wc_topk", ((s, dir) =>
-      WordCount.fromText(Tables.parTable(s, dir, "documents"), "text")
+      WordCount.fromText(Tables.table(s, dir, "documents"), "text")
         .orderBy(desc("cnt"), asc("word")).limit(20)),
       s"""SELECT word, count(*) AS cnt
           FROM (SELECT unnest(string_split_regex(lower(text), '$Re')) AS word
@@ -33,7 +28,7 @@ object WordCountQueries {
           WHERE word <> '' GROUP BY word
           ORDER BY cnt DESC, word ASC LIMIT 20"""),
     Query("wc_per_lang", ((s, dir) =>
-      Tables.parTable(s, dir, "documents")
+      Tables.table(s, dir, "documents")
         .select(col("lang"),
           explode(Tokenizer.lowerTokens(col("text"))).as("word"))
         .groupBy("lang", "word").agg(count(lit(1)).as("cnt"))

@@ -112,9 +112,7 @@ class AqeSkewJoinSpec extends SparkSpec {
       // 200k fact rows × 20 dim rows per key = 4M joined
       assert(rowOn.head === 4000000L)
       assert(rowOn === rowOff)
-      info(f"skewJoin on: $tOn%.2f s, off: $tOff%.2f s " +
-        "(fixture-scale; the sf0.1 on/off contrast is a dated record in " +
-        "BASELINE.md)")
+      info(f"skewJoin on: $tOn%.2f s, off: $tOff%.2f s (fixture-scale)")
     } finally restore()
   }
 }

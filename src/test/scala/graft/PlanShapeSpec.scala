@@ -149,10 +149,10 @@ class PlanShapeSpec extends SparkSpec {
     * headroom, so routine optimizer drift passes but a lineage deepening
     * — the r15 310k-char plan-string class, or an iterative operator
     * losing its checkpoint cadence — fails a test instead of a sweep.
-    * Census at sf0.001 (10 largest): 106/94/84/78/77/70/68/68/66/65; only
+    * Census at sf0.001 (10 largest): 106/94/84/78/77/70/68/68/66/63; only
     * the first three need more than the ceiling with headroom. The
     * 11th-largest plan is 63 nodes, so 100 catches any quiet ballooning
-    * while staying far from noise. A failure prints the current census of
+    * while staying far from noise. The test prints the current census of
     * the 10 largest plans, which is what re-pinning a bound reads.
     */
   private val nodeBounds: Map[String, Int] = Map(
@@ -168,6 +168,7 @@ class PlanShapeSpec extends SparkSpec {
     val census = planFacts.map { case (name, f) => name -> f.nodeCount }
       .sortBy { case (name, n) => (-n, name) }.take(10)
       .map { case (name, n) => s"$name $n" }.mkString(", ")
+    info(s"10 largest plans (query nodes): $census")
     assert(over.isEmpty,
       s"plans past their node bound (query, nodes, bound): $over — if the " +
         "growth is intended, re-pin the bound from the 10 largest plans " +

@@ -12,7 +12,7 @@ class SessionConfSpec extends SparkSpec {
     // Spark 4's per-session artifact classloader routes janino codegen
     // class probes through a blocking Netty file-download RPC; a bench
     // sweep jstack showed executor threads pinned there with the whole
-    // JVM ~2.5× slow (BASELINE.md r16). This engine registers no session
+    // JVM ~2.5× slow. This engine registers no session
     // artifacts — the flag must stay off.
     assert(spark.conf.get("spark.sql.artifact.isolation.enabled") === "false")
   }

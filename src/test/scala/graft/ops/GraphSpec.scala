@@ -290,7 +290,7 @@ class GraphSpec extends SparkSpec {
   test("hits: lazy iters=2 expansion stays bounded; iters>2 persists per round") {
     // the iters<=2 form deliberately does NOT persist ar/hr: the
     // persisted form's four materialization barriers measured 2.3-2.5 s
-    // vs 0.9-1.4 s lazy at sf0.1 (BASELINE.md r15). Exchange reuse does
+    // vs 0.9-1.4 s lazy at sf0.1. Exchange reuse does
     // NOT cover the double-read (AQE per-branch replanning defeats
     // canonicalization here — measured zero ReusedExchange), so the lazy
     // cost is the FULL 2^iters expansion: bounded and cheap at iters=2,

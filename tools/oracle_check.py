@@ -7,6 +7,8 @@ Usage:  python3 tools/oracle_check.py <verify_out_dir> [sf_dir]
 one parquet dir per query + oracle_sql.json. Runs each oracle SQL in
 DuckDB against the sf parquet tables, then compares column-name-sorted,
 row-sorted values exactly (mirrors the driver's hash compare).
+Each oracle runs once: its result is stored in a temp table that both
+the exact compare and the pandas dtype mirror read.
 A query dir with no oracle entry passes when it holds at least one row.
 """
 import sys, os, json, math
@@ -51,10 +53,13 @@ def main():
             print(f"FAIL {name}: no spark output at {qdir}")
             n_fail += 1
             continue
+        spark_sql = f"SELECT * FROM read_parquet('{qdir}/*.parquet')"
         try:
-            scols, srows = rows_canon(*fetch(
-                con, f"SELECT * FROM read_parquet('{qdir}/*.parquet')"))
-            dcols, drows = rows_canon(*fetch(con, oracle[name]))
+            scols, srows = rows_canon(*fetch(con, spark_sql))
+            con.execute(
+                f"CREATE OR REPLACE TEMP TABLE oracle_result AS {oracle[name]}")
+            dcols, drows = rows_canon(*fetch(
+                con, "SELECT * FROM oracle_result"))
         except Exception as e:
             print(f"FAIL {name}: {e}")
             n_fail += 1
@@ -66,9 +71,8 @@ def main():
         # ndarray, VERDICT r03 #1) — so run both compares.
         pandas_err = None
         try:
-            sdf = con.execute(
-                f"SELECT * FROM read_parquet('{qdir}/*.parquet')").fetchdf()
-            ddf = con.execute(oracle[name]).fetchdf()
+            sdf = con.execute(spark_sql).fetchdf()
+            ddf = con.execute("SELECT * FROM oracle_result").fetchdf()
             for df in (sdf, ddf):
                 df.sort_values(by=list(df.columns), inplace=True)
             # kind, not exact width: the driver's value hash goes through
