@@ -26,7 +26,7 @@ object Sessions {
     * NVMe/ramdisk the same way.
     */
   /** Minimum usable /dev/shm bytes before the tmpfs shuffle default is
-    * taken (VERDICT r18 #4): tmpfs pages ARE memory, so on a small or
+    * taken: tmpfs pages ARE memory, so on a small or
     * already-pressured box routing spill-heavy shuffle writes there turns
     * disk pressure into memory pressure. 4 GiB covers the fixture sweeps
     * (shuffle volume ≪ 1 GiB) with wide margin while refusing boxes where
@@ -56,7 +56,8 @@ object Sessions {
       .config("spark.sql.extensions", "graft.expr.GraftExtensions")
       // events.parquet carries ns timestamps; read them as raw longs
       // session-wide (Tables.events does the µs truncation). Set once here,
-      // never mutated mid-session (ADVICE r01).
+      // never mutated mid-session: a flip would change the type of `ts`
+      // between two reads of the same table in one query.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       // the SQL-listener plan description is generated EAGERLY for every
@@ -106,6 +107,15 @@ object Sessions {
       // above halve; dedup-family wins keep).
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
         "256k")
+      // Keep every generated class a session reuses (static conf: it sizes
+      // the JVM-wide Janino cache when CodeGenerator first loads). At the
+      // default 100 entries LRU evicts nearly all of them: one query_mix
+      // round of 32 queries compiles ~660 distinct classes and a whole
+      // 312-query sf0.01 Bench sweep 4,580, so its warm round recompiled
+      // 7,959 classes (139.9 s wall) where a cache that holds the sweep
+      // recompiles 282 (106.8 s). A cold sf0.1 sweep compiles 4,809;
+      // 10,000 is about twice that.
+      .config("spark.sql.codegen.cache.maxEntries", "10000")
     localDir.fold(b)(d => b.config("spark.local.dir", d))
   }
 

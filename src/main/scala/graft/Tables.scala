@@ -1,7 +1,10 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Fixture-table readers (TESTDATA.md / FIXTURES.md §B).
   *
@@ -11,8 +14,54 @@ import org.apache.spark.sql.functions._
   */
 object Tables {
 
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** The SQL confs parquet schema inference reads: how footer types
+    * convert (ns timestamps, binary, INT96, NTZ) and which footers merge. */
+  private val SchemaConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema")
+
+  /** Everything an inferred schema depends on: each data file's (path,
+    * length, modification time) and the values of [[SchemaConfs]]. */
+  private final case class Stamp(files: Seq[(String, Long, Long)],
+                                 confs: Seq[Option[String]])
+
+  /** Per session, qualified table path → the stamp its schema was inferred
+    * under, and that schema. Weak keys: the cache keeps no session alive. */
+  private val schemas = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession,
+      ConcurrentHashMap[String, (Stamp, StructType)]]())
+
+  /** Opens `dir/name.parquet`. Inferring a parquet schema is a Spark job
+    * that reads footers, so each session infers a table's schema once and
+    * opens it with that schema until a data file or a [[SchemaConfs]]
+    * value changes; listing the files is local metadata work. This is the
+    * schema a metastore would hold, not a cached result. */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val p = s"$dir/$name.parquet"
+    val path = new Path(p)
+    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
+    // a missing path takes Spark's own error
+    if (!fs.exists(path)) return spark.read.parquet(p)
+    val qualified = fs.makeQualified(path).toString
+    val files = fs.listFiles(path, true)
+    val stamp = Stamp(
+      Iterator.continually(files).takeWhile(_.hasNext).map(_.next())
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+        .toVector.sorted,
+      SchemaConfs.map(spark.conf.getOption))
+    val cache = schemas.computeIfAbsent(spark, _ => new ConcurrentHashMap())
+    val schema = Option(cache.get(qualified)).collect {
+      case (s, known) if s == stamp => known
+    }.getOrElse {
+      val inferred = spark.read.parquet(p).schema
+      cache.put(qualified, (stamp, inferred))
+      inferred
+    }
+    spark.read.schema(schema).parquet(p)
+  }
 
   /** `events.parquet` has shipped `ts` two ways across fixture
     * generations, and this reader adapts to both by SCHEMA, not by path:

@@ -2,6 +2,7 @@ package graft.obs
 
 import scala.collection.mutable
 import org.apache.spark.graft.Bus
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
@@ -15,9 +16,11 @@ final case class StageRow(id: Int, name: String, tasks: Int, wallMs: Long,
                           inputBytes: Long, spillBytes: Long)
 
 /** What Spark reported for one traced operation. Stages are in completion
-  * order. */
+  * order. `classesCompiled` counts the Janino compiles during the
+  * operation, that is the generated classes the codegen cache missed;
+  * exact in local mode, where driver and tasks share one JVM. */
 final case class OpRecord(constructS: Double, actionS: Double, jobs: Int,
-                          stages: Seq[StageRow]) {
+                          stages: Seq[StageRow], classesCompiled: Long) {
   def tasks: Int = stages.map(_.tasks).sum
   def shuffleWriteBytes: Long = stages.map(_.shuffleWriteBytes).sum
 }
@@ -69,6 +72,8 @@ final class Collector(spark: SparkSession) extends SparkListener {
     sc.addSparkListener(this)
     sc.setJobGroup(op, op)
     try {
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+      val c0 = compiles.getCount
       val t0 = System.nanoTime()
       val built = construct
       val t1 = System.nanoTime()
@@ -76,7 +81,8 @@ final class Collector(spark: SparkSession) extends SparkListener {
       val t2 = System.nanoTime()
       Bus.drain(sc)
       synchronized {
-        OpRecord((t1 - t0) / 1e9, (t2 - t1) / 1e9, jobs, stages.toVector)
+        OpRecord((t1 - t0) / 1e9, (t2 - t1) / 1e9, jobs, stages.toVector,
+          compiles.getCount - c0)
       }
     } finally {
       sc.clearJobGroup()

@@ -7,8 +7,9 @@ import graft.obs.Collector
   * (warm-up run, then a timed `noop` sink): for every stage of the timed
   * run prints task count, executor run/CPU time, shuffle read/write bytes,
   * spill, and GC — the guide-§1 "where is the time actually going" read
-  * (Stages tab + task metrics) for a UI-less box. Diagnosis tool, not
-  * gated surface.
+  * (Stages tab + task metrics) for a UI-less box — and per run and in
+  * total the generated classes compiled (codegen-cache misses).
+  * Diagnosis tool, not gated surface.
   *
   * Usage: runMain graft.tools.QueryProfile <sfDir> q_a[,q_b,...] [--cold] [--sample]
   */
@@ -64,6 +65,7 @@ object QueryProfile {
     sampler.setDaemon(true)
     if (sample) sampler.start()
 
+    var compiled = 0L
     names.foreach { n =>
       val fn = SparkEntry.queries.getOrElse(n,
         sys.error(s"unknown query: $n (see SparkEntry.queries)"))
@@ -77,6 +79,7 @@ object QueryProfile {
       val r = run()
       sampling = false
       val sec = r.constructS + r.actionS
+      compiled += r.classesCompiled
       println(f"\n════ $n: ${sec}%.3f s (timed run, ${r.stages.size} stages) ════")
       println(f"${"stage"}%5s ${"tasks"}%5s ${"wall_s"}%8s ${"run_s"}%8s " +
         f"${"cpu_s"}%8s ${"gc_s"}%6s ${"shR_MB"}%8s ${"shW_MB"}%8s " +
@@ -93,7 +96,8 @@ object QueryProfile {
       val totCpu = r.stages.map(_.cpuMs).sum / 1000.0
       println(f"TOTAL run ${totRun}%.2f s cpu ${totCpu}%.2f s across " +
         f"${r.tasks} tasks; wall ${sec}%.3f s " +
-        f"(construct ${r.constructS}%.3f s, action ${r.actionS}%.3f s)")
+        f"(construct ${r.constructS}%.3f s, action ${r.actionS}%.3f s); " +
+        s"${r.classesCompiled} classes compiled")
       if (sample) {
         import scala.jdk.CollectionConverters._
         println("-- sampled worker frames (25 ms ticks) --")
@@ -103,6 +107,7 @@ object QueryProfile {
       }
       Sessions.releaseCaches(spark)
     }
+    println(s"\nTOTAL ${names.size} timed runs: $compiled classes compiled")
     spark.stop()
   }
 }

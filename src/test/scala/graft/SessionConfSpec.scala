@@ -34,6 +34,12 @@ class SessionConfSpec extends SparkSpec {
       "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning") === "true")
   }
 
+  test("the codegen cache holds a whole sweep's generated classes") {
+    // at the default 100 entries a warm 312-query sf0.01 sweep recompiled
+    // 7,959 of its 8,001 classes; the sweep compiles 4,580 distinct ones
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries").toInt >= 10000)
+  }
+
   test("tmpfs shuffle dir is guarded by a free-space floor (VERDICT r18 #4)") {
     // tmpfs pages are memory: a box whose /dev/shm has less usable space
     // than the floor must fall back to Spark's default local dir instead

@@ -38,4 +38,15 @@ class CollectorSpec extends SparkSpec {
       }
     } finally spark.listenerManager.unregister(lag)
   }
+
+  test("a second traced run of the same build compiles no class") {
+    // literals no other suite uses, so the first run compiles; the codegen
+    // cache then holds what it compiled
+    val collector = new Collector(spark)
+    def run() = collector.traced("compile")(
+      spark.range(0, 1000, 1, 4).selectExpr("id % 7919 AS k", "id * 104729 AS v")
+        .groupBy("k").sum("v"))(_.write.mode("overwrite").format("noop").save())
+    assert(run().classesCompiled > 0)
+    assert(run().classesCompiled === 0)
+  }
 }
